@@ -593,64 +593,25 @@ object Soak {
     println(s"  seq length frame: ${in.readLine()}")
     s.close(); srv.close()
 
-    // binary framing + encrypted channel: the full-fidelity path's cost
-    import graft.server.{SecureChannel, ZestWireServer, ZestCodec}
-    val keys = SecureChannel.generateKeyPair()
-    val bsrv = new ZestWireServer(engine, serverKeys = Some(keys))
-    val bs = new java.net.Socket("127.0.0.1", bsrv.boundPort)
-    bs.setTcpNoDelay(true)
-    val bout = new java.io.DataOutputStream(
-      new java.io.BufferedOutputStream(bs.getOutputStream))
-    val bin = new java.io.DataInputStream(bs.getInputStream)
-    def wr(b: Array[Byte]): Unit = { bout.writeInt(b.length); bout.write(b); bout.flush() }
-    def rd(): Array[Byte] = { val l = bin.readInt(); val b = new Array[Byte](l); bin.readFully(b); b }
-    val (eph, cont) = SecureChannel.clientHandshake(SecureChannel.rawPublic(keys))
-    wr(eph)
-    val session = cont(rd())
-    require(java.util.Arrays.equals(session.open(rd()), SecureChannel.ReadyFrame))
-    t0 = System.nanoTime()
-    var i = 0
-    while (i < n) {
-      wr(session.seal(ZestCodec.encode(ZestCodec.request(2,
-        s"/ts/binseq/at/${i * 1000}", payload = s"""{"value": ${i % 100}}"""))))
-      require(ZestCodec.decode(session.open(rd())).code == 65)
-      i += 1
+    // the binary port: zest frames over ZMTP REQ, once per security
+    // mechanism — NULL, then CURVE (the sealed path's cost)
+    import graft.server.{SecureChannel, ZestCodec, ZestWireServer, ZmtpClient}
+    Seq("NULL" -> None, "CURVE" -> Some(SecureChannel.generateKeyPair())).foreach {
+      case (mech, keys) =>
+        val bsrv = new ZestWireServer(engine, serverKeys = keys)
+        val c = new ZmtpClient(bsrv.boundPort, keys.map(SecureChannel.rawPublic))
+        t0 = System.nanoTime()
+        var i = 0
+        while (i < n) {
+          require(c.call(ZestCodec.request(2, s"/ts/${mech.toLowerCase}seq/at/${i * 1000}",
+            payload = s"""{"value": ${i % 100}}""")).code == 65)
+          i += 1
+        }
+        val secs = (System.nanoTime() - t0) / 1e9
+        println(f"wire ingest, ZMTP $mech REQ, 1 client x $n posts: $secs%.2f s " +
+          f"(${n / secs}%.0f posts/s)")
+        c.close(); bsrv.close()
     }
-    val binS = (System.nanoTime() - t0) / 1e9
-    println(f"wire ingest, BINARY+sealed channel, 1 client x $n posts: $binS%.2f s " +
-      f"(${n / binS}%.0f posts/s)")
-    bs.close(); bsrv.close()
-
-    // ZMTP transport mode (r13): same zest frames, ZMTP REQ framing —
-    // the new wire path measured before being called done
-    import graft.server.ZmtpCodec
-    val zsrv = new ZestWireServer(engine)
-    val zs = new java.net.Socket("127.0.0.1", zsrv.boundPort)
-    zs.setSoTimeout(30000); zs.setTcpNoDelay(true)
-    val zout = new java.io.DataOutputStream(
-      new java.io.BufferedOutputStream(zs.getOutputStream))
-    val zin = new java.io.DataInputStream(zs.getInputStream)
-    zout.write(ZmtpCodec.greeting(asServer = false)); zout.flush()
-    val zg = new Array[Byte](64); zin.readFully(zg)
-    ZmtpCodec.writeFrame(zout, ZmtpCodec.FlagCommand, ZmtpCodec.ready("REQ"))
-    zout.flush()
-    ZmtpCodec.readFrame(zin) // server READY
-    t0 = System.nanoTime()
-    i = 0
-    while (i < n) {
-      ZmtpCodec.writeFrame(zout, ZmtpCodec.FlagMore, Array.emptyByteArray)
-      ZmtpCodec.writeFrame(zout, 0, ZestCodec.encode(ZestCodec.request(2,
-        s"/ts/zmtpseq/at/${i * 1000}", payload = s"""{"value": ${i % 100}}""")))
-      zout.flush()
-      ZmtpCodec.readFrame(zin) // envelope
-      val (_, zb) = ZmtpCodec.readFrame(zin)
-      require(ZestCodec.decode(zb).code == 65)
-      i += 1
-    }
-    val zmtpS = (System.nanoTime() - t0) / 1e9
-    println(f"wire ingest, ZMTP REQ framing, 1 client x $n posts: $zmtpS%.2f s " +
-      f"(${n / zmtpS}%.0f posts/s)")
-    zs.close(); zsrv.close()
   }
 
   /** KV serving rate over the wire (r12 verdict, What's wrong #1): point

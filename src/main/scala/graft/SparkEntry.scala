@@ -114,6 +114,52 @@ object SparkEntry {
       .agg(round(max(col("value")), 4).as("result"))
   }
 
+  /** The wire-ingest gates' body: the first `n` events POSTed over the
+    * binary port (CURVE or NULL), then the stored per-series census.
+    */
+  private def wireIngest(s: SparkSession, d: String, tag: String, n: Int,
+                         curve: Boolean): DataFrame = {
+    import graft.server.{SecureChannel, ZestCodec, ZestWireServer, ZmtpClient}
+    val dir = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft-gate-$tag-${ProcessHandle.current().pid()}_" +
+        d.replaceAll("[^a-zA-Z0-9]", "_")).getAbsolutePath
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val key = s"gate-$tag-key"
+    val engine = new GraftEngine(s, tsStoragePath = Some(dir),
+      tokenSecretKey = Some(key), flushEveryRows = 512)
+    val keys = if (curve) Some(SecureChannel.generateKeyPair()) else None
+    val srv = new ZestWireServer(engine, serverKeys = keys)
+    try {
+      val ev = Tables.events(s, d)
+      val rows = ev.filter(col("event_id") < n)
+        .select(col("event_type"), graft.model.TimeCols.millis(ev, "ts").as("t"),
+          col("value"),
+          regexp_extract(col("props"), "\"k\"\\s*:\\s*(\\d+)", 1).as("k"),
+          col("event_id"))
+        .orderBy("event_id").collect()
+      val tok = graft.auth.Macaroons.serialize(graft.auth.Macaroons
+        .mint(key, "gate-client").addCaveat("method = POST"))
+      val client = new ZmtpClient(srv.boundPort, keys.map(SecureChannel.rawPublic))
+      try rows.foreach { r =>
+        val k = r.getString(3)
+        val payload =
+          if (k.isEmpty) s"""{"value": ${r.getDouble(2)}}"""
+          else s"""{"value": ${r.getDouble(2)}, "k": "$k"}"""
+        val resp = client.call(ZestCodec.request(2,
+          s"/ts/${r.getString(0)}/at/${r.getLong(1)}", token = tok, payload = payload))
+        require(resp.code == 65, s"POST failed: code ${resp.code}")
+      } finally client.close()
+      engine.flush()
+      graft.sources.TsStorage.read(s, dir)
+        .groupBy("series_id")
+        .agg(count(lit(1)).as("n"),
+          round(sum("value"), 4).cast("double").as("sum_value"),
+          min("t").as("min_t"), max("t").as("max_t"),
+          sum(when(col("tags").getItem("k") === "5", 1L).otherwise(0L))
+            .cast("long").as("k5"))
+    } finally srv.close()
+  }
+
   private def aggQuery(s: SparkSession, d: String, fn: AggFn): DataFrame =
     TsOps.select(ts(s, d), Seq("purchase"), TimeRange(R_FROM, R_TO))
       .agg(round(Aggregates.column(fn), 4).cast("double").as("result"))
@@ -243,143 +289,16 @@ object SparkEntry {
             .cast("long").as("k5"))
     }),
 
-    // the BINARY wire path, oracle-checked end-to-end: 500 events become
-    // CoAP-framed POSTs over a REAL socket through the ENCRYPTED channel
-    // with a macaroon token, land in the durable write-behind store, and
-    // the stored table's per-series census must match DuckDB replaying
-    // the same rows off the events table — framing, crypto, auth, path
-    // grammar, validation, and storage in one hash gate
-    "wire_binary_ingest" -> ((s, d) => {
-      import graft.server.{SecureChannel, ZestWireServer}
-      import graft.server.ZestCodec
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-gate-bwire-" + s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^a-zA-Z0-9]", "_")).getAbsolutePath
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val key = "gate-bwire-key"
-      val engine = new GraftEngine(s, tsStoragePath = Some(dir),
-        tokenSecretKey = Some(key), flushEveryRows = 512)
-      val kp = SecureChannel.generateKeyPair()
-      val srv = new ZestWireServer(engine, serverKeys = Some(kp))
-      try {
-        val ev = Tables.events(s, d)
-        val rows = ev.filter(col("event_id") < 500)
-          .select(col("event_type"), graft.model.TimeCols.millis(ev, "ts").as("t"),
-            col("value"),
-            regexp_extract(col("props"), "\"k\"\\s*:\\s*(\\d+)", 1).as("k"),
-            col("event_id"))
-          .orderBy("event_id").collect()
-        val tok = graft.auth.Macaroons.serialize(graft.auth.Macaroons
-          .mint(key, "gate-client").addCaveat("method = POST"))
-        val sock = new java.net.Socket("127.0.0.1", srv.boundPort)
-        sock.setSoTimeout(30000)
-        sock.setTcpNoDelay(true)
-        val out = new java.io.DataOutputStream(
-          new java.io.BufferedOutputStream(sock.getOutputStream))
-        val in = new java.io.DataInputStream(sock.getInputStream)
-        def writeRaw(b: Array[Byte]): Unit = {
-          out.writeInt(b.length); out.write(b); out.flush()
-        }
-        def readRaw(): Array[Byte] = {
-          val n = in.readInt(); val b = new Array[Byte](n); in.readFully(b); b
-        }
-        val (eph, cont) = SecureChannel.clientHandshake(SecureChannel.rawPublic(kp))
-        writeRaw(eph)
-        val session = cont(readRaw())
-        require(java.util.Arrays.equals(session.open(readRaw()),
-          SecureChannel.ReadyFrame), "channel handshake failed")
-        rows.foreach { r =>
-          val k = r.getString(3)
-          val payload =
-            if (k.isEmpty) s"""{"value": ${r.getDouble(2)}}"""
-            else s"""{"value": ${r.getDouble(2)}, "k": "$k"}"""
-          writeRaw(session.seal(ZestCodec.encode(ZestCodec.request(2,
-            s"/ts/${r.getString(0)}/at/${r.getLong(1)}", token = tok,
-            payload = payload))))
-          val resp = ZestCodec.decode(session.open(readRaw()))
-          require(resp.code == 65, s"POST failed: code ${resp.code}")
-        }
-        sock.close()
-        engine.flush()
-        graft.sources.TsStorage.read(s, dir)
-          .groupBy("series_id")
-          .agg(count(lit(1)).as("n"),
-            round(sum("value"), 4).cast("double").as("sum_value"),
-            min("t").as("min_t"), max("t").as("max_t"),
-            sum(when(col("tags").getItem("k") === "5", 1L).otherwise(0L))
-              .cast("long").as("k5"))
-      } finally srv.close()
-    }),
-
-    // the ZMTP transport oracle-checked end-to-end (r13): 300 events as
-    // zest POSTs from a ZMTP REQ client — real greeting, NULL READY
-    // handshake, envelope-framed messages — through auth into the durable
-    // store; the stored census must match DuckDB replaying the same rows.
-    // With wire_binary_ingest this pins BOTH transports of the binary
-    // port against one oracle family.
-    "wire_zmtp_ingest" -> ((s, d) => {
-      import graft.server.{ZestCodec, ZestWireServer, ZmtpCodec}
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-gate-zmtp-" + s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^a-zA-Z0-9]", "_")).getAbsolutePath
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val key = "gate-zmtp-key"
-      val engine = new GraftEngine(s, tsStoragePath = Some(dir),
-        tokenSecretKey = Some(key), flushEveryRows = 512)
-      val srv = new ZestWireServer(engine)
-      try {
-        val ev = Tables.events(s, d)
-        val rows = ev.filter(col("event_id") < 300)
-          .select(col("event_type"), graft.model.TimeCols.millis(ev, "ts").as("t"),
-            col("value"),
-            regexp_extract(col("props"), "\"k\"\\s*:\\s*(\\d+)", 1).as("k"),
-            col("event_id"))
-          .orderBy("event_id").collect()
-        val tok = graft.auth.Macaroons.serialize(graft.auth.Macaroons
-          .mint(key, "gate-client").addCaveat("method = POST"))
-        val sock = new java.net.Socket("127.0.0.1", srv.boundPort)
-        sock.setSoTimeout(30000)
-        sock.setTcpNoDelay(true)
-        val out = new java.io.DataOutputStream(
-          new java.io.BufferedOutputStream(sock.getOutputStream))
-        val in = new java.io.DataInputStream(sock.getInputStream)
-        // ZMTP NULL handshake, REQ role
-        out.write(ZmtpCodec.greeting(asServer = false)); out.flush()
-        val g = new Array[Byte](64); in.readFully(g)
-        require(g(0) == 0xff.toByte, "no ZMTP greeting from server")
-        ZmtpCodec.writeFrame(out, ZmtpCodec.FlagCommand, ZmtpCodec.ready("REQ"))
-        out.flush()
-        val (cf, cb) = ZmtpCodec.readFrame(in)
-        require((cf & ZmtpCodec.FlagCommand) != 0 &&
-          ZmtpCodec.parseCommand(cb)._1 == "READY", "no READY from server")
-        rows.foreach { r =>
-          val k = r.getString(3)
-          val payload =
-            if (k.isEmpty) s"""{"value": ${r.getDouble(2)}}"""
-            else s"""{"value": ${r.getDouble(2)}, "k": "$k"}"""
-          // REQ message: [empty delimiter][zest frame]
-          ZmtpCodec.writeFrame(out, ZmtpCodec.FlagMore, Array.emptyByteArray)
-          ZmtpCodec.writeFrame(out, 0, ZestCodec.encode(ZestCodec.request(2,
-            s"/ts/${r.getString(0)}/at/${r.getLong(1)}", token = tok,
-            payload = payload)))
-          out.flush()
-          val (_, env) = ZmtpCodec.readFrame(in)
-          require(env.isEmpty, "reply must echo the REQ envelope")
-          val (_, body) = ZmtpCodec.readFrame(in)
-          val resp = ZestCodec.decode(body)
-          require(resp.code == 65, s"POST failed: code ${resp.code}")
-        }
-        sock.close()
-        engine.flush()
-        graft.sources.TsStorage.read(s, dir)
-          .groupBy("series_id")
-          .agg(count(lit(1)).as("n"),
-            round(sum("value"), 4).cast("double").as("sum_value"),
-            min("t").as("min_t"), max("t").as("max_t"),
-            sum(when(col("tags").getItem("k") === "5", 1L).otherwise(0L))
-              .cast("long").as("k5"))
-      } finally srv.close()
-    }),
+    // the binary port oracle-checked end-to-end, once per ZMTP security
+    // mechanism: events become zest POSTs from a ZMTP REQ client over a
+    // REAL socket — greeting, handshake, envelope-framed messages — with a
+    // macaroon token, land in the durable write-behind store, and the
+    // stored table's per-series census must match DuckDB replaying the
+    // same rows off the events table. CURVE over 500 events (framing,
+    // crypto, auth, path grammar, validation and storage in one hash
+    // gate); NULL over 300.
+    "wire_binary_ingest" -> ((s, d) => wireIngest(s, d, "bwire", 500, curve = true)),
+    "wire_zmtp_ingest" -> ((s, d) => wireIngest(s, d, "zmtp", 300, curve = false)),
 
     // ---- TS aggregates (SURVEY §2.3) --------------------------------------
     "ts_agg_sum"    -> ((s, d) => aggQuery(s, d, AggSum)),
@@ -4667,14 +4586,15 @@ object SparkEntry {
          |CAST(sum(event_id) AS BIGINT) AS sum_eid, min(t) AS min_t, max(t) AS max_t,
          |CAST(sum(CASE WHEN k = '5' THEN 1 ELSE 0 END) AS BIGINT) AS k5
          |FROM ts GROUP BY series_id""".stripMargin,
-    // the binary-channel twin: same census over the first 500 events (the
-    // engine assigns its own event ids, so sum_eid is not in the contract)
+    // the binary port's CURVE twin: same census over the first 500 events
+    // (the engine assigns its own event ids, so sum_eid is not in the
+    // contract)
     "wire_binary_ingest" ->
       s"""$tsCte SELECT series_id, count(*) AS n, round(sum(value), 4) AS sum_value,
          |min(t) AS min_t, max(t) AS max_t,
          |CAST(sum(CASE WHEN k = '5' THEN 1 ELSE 0 END) AS BIGINT) AS k5
          |FROM ts WHERE event_id < 500 GROUP BY series_id""".stripMargin,
-    // the ZMTP-transport twin: same census over the first 300 events
+    // the binary port's NULL twin: same census over the first 300 events
     "wire_zmtp_ingest" ->
       s"""$tsCte SELECT series_id, count(*) AS n, round(sum(value), 4) AS sum_value,
          |min(t) AS min_t, max(t) AS max_t,

@@ -12,15 +12,11 @@ import javax.crypto.AEADBadTagException
   * algorithms).
   *
   * Why it exists: the reference's transport security is CurveZMQ
-  * (`/root/reference/src/protocol/zest.re:236-263`), whose record
-  * protection is exactly this suite; the JDK ships ChaCha20-Poly1305 but
-  * NOT XSalsa20, which is why rounds 12's [[SecureChannel]] was a
-  * documented cipher stand-in. This closes the cipher half of that gap —
-  * [[SecureChannel]] records are now sealed with the same construction a
-  * CurveZMQ implementation uses. (The ZMTP-CURVE command grammar —
-  * HELLO/WELCOME/INITIATE cookies and vouches — remains the documented
-  * out-of-scope piece: it cannot be interop-tested here, no libzmq in the
-  * container.)
+  * (reference `src/protocol/zest.re:236-263`), whose boxes are
+  * exactly this suite, and the JDK ships ChaCha20-Poly1305 but NOT
+  * XSalsa20. [[ZmtpCurve]] builds the full ZMTP-CURVE mechanism on it —
+  * the HELLO/WELCOME/INITIATE/READY commands and the MESSAGE boxes of the
+  * binary port.
   *
   * Correctness: every primitive is pinned in NaclCryptoSpec against
   * GOLDEN VECTORS generated from this machine's system libsodium
@@ -212,7 +208,7 @@ object NaclCrypto {
   }
 
   /** Open a secretbox; throws [[AEADBadTagException]] on tamper/wrong
-    * key/wrong nonce (the [[SecureChannel]] caller contract).
+    * key/wrong nonce (the [[ZmtpCurve]] caller contract).
     */
   def secretboxOpen(key: Array[Byte], nonce24: Array[Byte],
                     box: Array[Byte]): Array[Byte] = {

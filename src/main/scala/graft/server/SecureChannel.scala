@@ -4,42 +4,13 @@ import java.math.BigInteger
 import java.security.{KeyFactory, KeyPair, KeyPairGenerator, SecureRandom}
 import java.security.interfaces.XECPublicKey
 import java.security.spec.{NamedParameterSpec, XECPublicKeySpec}
-import javax.crypto.{KeyAgreement, Mac}
-import javax.crypto.spec.SecretKeySpec
 
-/** Channel encryption for the binary wire server — the JVM-native
-  * equivalent of the reference's CurveZMQ transport security
+/** X25519 key helpers for the binary port's CURVE mechanism
+  * ([[ZmtpCurve]]): the server's long-term keypair and its 32-byte wire
+  * form. Clients are configured with that public key out of band —
+  * exactly how zest clients get `--server-key`
   * (`/root/reference/src/protocol/zest.re:236-263`: curve server keys on
-  * both sockets; clients dial with the server's published public key).
-  *
-  *  - identity: a long-term X25519 keypair on the server; clients are
-  *    configured with the server's 32-byte public key out of band
-  *    (exactly how zest clients get `--server-key`);
-  *  - handshake (Noise-NK shape): the client sends a fresh ephemeral
-  *    public key; the server replies with its own ephemeral key; both
-  *    sides derive `HKDF-SHA256( DH(c_eph, s_static) || DH(c_eph,
-  *    s_eph) )` into the record key. Only the holder of the server's
-  *    static secret can compute the first term, so decrypting the
-  *    server's READY frame authenticates it — a MITM with a substituted
-  *    key produces garbage that fails the tag;
-  *  - record protection (r13): CurveZMQ's ACTUAL construction — the
-  *    NaCl secretbox (XSalsa20-Poly1305, [[NaclCrypto]], every primitive
-  *    golden-vector-pinned against this machine's libsodium) under
-  *    CurveZMQ's own MESSAGE nonce discipline: 24-byte nonces =
-  *    `"CurveZMQMESSAGEC"`/`"...S"` direction prefix || 8-byte frame
-  *    counter, so reorder/replay breaks the tag. (Rounds < 13 used JDK
-  *    ChaCha20-Poly1305 here — the cipher was the documented stand-in
-  *    piece; that gap is closed.) Forward secrecy comes from the
-  *    ephemeral pair — CurveZMQ's property as well.
-  *
-  * This class is the record layer for the LEGACY u32-framed transport
-  * only: the ZMTP transport implements CurveZMQ PROPER — the full
-  * HELLO/WELCOME-cookie/INITIATE-vouch/READY mechanism — in
-  * [[ZmtpCurve]] (interop-validated against a stock libzmq CURVE
-  * client, PERF.md r13). Both ride the same [[NaclCrypto]] suite.
-  *
-  * Like the reference, client authentication is not part of the channel
-  * (requests authenticate via macaroon tokens inside it).
+  * both sockets).
   */
 object SecureChannel {
 
@@ -67,91 +38,4 @@ object SecureChannel {
     KeyFactory.getInstance("XDH")
       .generatePublic(new XECPublicKeySpec(X25519, new BigInteger(1, be)))
   }
-
-  private def dh(priv: java.security.PrivateKey, peerRaw: Array[Byte]): Array[Byte] = {
-    val ka = KeyAgreement.getInstance("XDH")
-    ka.init(priv)
-    ka.doPhase(publicFromRaw(peerRaw), true)
-    ka.generateSecret()
-  }
-
-  private def hmac(key: Array[Byte], data: Array[Byte]): Array[Byte] = {
-    val m = Mac.getInstance("HmacSHA256")
-    m.init(new SecretKeySpec(key, "HmacSHA256"))
-    m.doFinal(data)
-  }
-
-  /** HKDF-SHA256 (RFC 5869), one 32-byte record key (direction
-    * separation rides the CurveZMQ nonce prefixes, not split keys —
-    * CurveZMQ's own model: one precomputed box key, per-direction
-    * `CurveZMQMESSAGEC`/`S` nonces).
-    */
-  private def deriveKey(ikm: Array[Byte]): Array[Byte] = {
-    val prk = hmac("graft-wire-v1".getBytes("UTF-8"), ikm) // extract
-    hmac(prk, "record".getBytes("UTF-8") :+ 1.toByte) // expand
-  }
-
-  /** One AEAD session; counters make nonces unique and
-    * ordering-enforcing; records are CurveZMQ MESSAGE boxes
-    * (XSalsa20-Poly1305 secretbox under the direction-prefixed nonce).
-    */
-  final class Session(key: Array[Byte], isClient: Boolean) {
-    private var sendCount = 0L
-    private var recvCount = 0L
-    private def nonce(fromClient: Boolean, count: Long): Array[Byte] = {
-      val prefix = if (fromClient) "CurveZMQMESSAGEC" else "CurveZMQMESSAGES"
-      java.nio.ByteBuffer.allocate(24)
-        .put(prefix.getBytes("US-ASCII")).putLong(count).array()
-    }
-    def seal(plain: Array[Byte]): Array[Byte] = this.synchronized {
-      val out = NaclCrypto.secretboxSeal(key, nonce(isClient, sendCount), plain)
-      sendCount += 1
-      out
-    }
-    /** Throws `AEADBadTagException` on tamper/reorder/wrong key. The
-      * counter advances only AFTER a successful open: a frame that fails
-      * the tag must not desync the receive sequence, or a caller that
-      * catches and continues (both servers today drop the connection, but
-      * that's their policy, not this class's contract) would garble every
-      * subsequent frame (ADVICE r12).
-      */
-    def open(ct: Array[Byte]): Array[Byte] = this.synchronized {
-      val out = NaclCrypto.secretboxOpen(key, nonce(!isClient, recvCount), ct)
-      recvCount += 1
-      out
-    }
-  }
-
-  /** Server side: given the static keypair and the client's ephemeral
-    * public key, mint an ephemeral pair and the session. Returns
-    * (ephemeral public to send back, session).
-    */
-  def serverHandshake(serverStatic: KeyPair,
-                      clientEphRaw: Array[Byte]): (Array[Byte], Session) = {
-    val eph = generateKeyPair()
-    val ikm = dh(serverStatic.getPrivate, clientEphRaw) ++
-      dh(eph.getPrivate, clientEphRaw)
-    (rawPublic(eph), new Session(deriveKey(ikm), isClient = false))
-  }
-
-  /** Client side: given the server's published static public key, mint
-    * the ephemeral pair. Returns (ephemeral public to send, continuation
-    * that builds the session from the server's ephemeral reply).
-    */
-  def clientHandshake(serverStaticRaw: Array[Byte])
-      : (Array[Byte], Array[Byte] => Session) = {
-    val eph = generateKeyPair()
-    val send = rawPublic(eph)
-    val cont = (serverEphRaw: Array[Byte]) => {
-      val ikm = dh(eph.getPrivate, serverStaticRaw) ++
-        dh(eph.getPrivate, serverEphRaw)
-      new Session(deriveKey(ikm), isClient = true)
-    }
-    (send, cont)
-  }
-
-  /** The server's first sealed frame; a client that opens it successfully
-    * has authenticated the server.
-    */
-  val ReadyFrame: Array[Byte] = "graft-ready".getBytes("UTF-8")
 }

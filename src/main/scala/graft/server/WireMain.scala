@@ -7,10 +7,10 @@ import org.apache.spark.sql.SparkSession
   * CoAP-framing [[ZestWireServer]] — the deployable analogue of the
   * reference's `server` binary. Configuration via env:
   * `GRAFT_WIRE_PORT` (default 5555 — zest's REQ/REP port, JSON lines),
-  * `GRAFT_WIRE_BINARY_PORT` (default 5556 — the binary framing; zest's
-  * router port number),
-  * `GRAFT_WIRE_SECURE=1` (optional: the binary port requires the
-  * [[SecureChannel]] handshake; the startup line publishes the
+  * `GRAFT_WIRE_BINARY_PORT` (default 5556 — zest frames over ZMTP 3.0,
+  * NULL mechanism; zest's router port number),
+  * `GRAFT_WIRE_SECURE=1` (optional: the binary port speaks the ZMTP
+  * CURVE mechanism instead of NULL; the startup line publishes the
   * server's public key, the `--server-key` analogue. Secure mode also
   * DISABLES the plaintext JSON port — the reference encrypts both its
   * sockets — unless `GRAFT_WIRE_PLAINTEXT=1` explicitly opts back in),

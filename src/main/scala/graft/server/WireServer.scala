@@ -17,8 +17,8 @@ import graft.GraftEngine
   * channel that receives every matching write's fan-out frame until the
   * client disconnects (the ROUTER-identity → DEALER-socket delivery,
   * with the subscription uuid playing the router key). For the binary
-  * CoAP-style framing twin of this server see [[ZestWireServer]];
-  * channel encryption rides [[SecureChannel]] there (SURVEY §2.6).
+  * CoAP-style framing twin of this server see [[ZestWireServer]]: zest
+  * frames over ZMTP 3.0, with CURVE channel encryption when keyed.
   *
   * Frames:
   *  - request:  `{"verb":"GET|POST|DELETE|OBSERVE|NOTIFY|NOTIFY-REGISTER",

@@ -1,6 +1,6 @@
 package graft.server
 
-import java.io.{DataInputStream, DataOutputStream, EOFException}
+import java.io.{DataInputStream, DataOutputStream}
 import java.net.{ServerSocket, Socket}
 import java.security.KeyPair
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
@@ -8,30 +8,28 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import graft.GraftEngine
 import graft.server.ZestCodec._
 
-/** The BINARY wire front-end: [[ZestCodec]] frames over TCP — the
-  * faithful-framing twin of the JSON-lines [[WireServer]], closing the
-  * reference-fidelity gap SURVEY §2.6 documented. Request/response and
-  * push frames are the reference's exact byte format
-  * (`/root/reference/src/protocol/zest.re:12-216`); the transport
-  * differences, both documented stand-ins:
+/** The BINARY wire front-end: [[ZestCodec]] frames over ZMTP 3.0
+  * ([[ZmtpCodec]]) — the faithful-framing twin of the JSON-lines
+  * [[WireServer]]. Request/response and push frames are the reference's
+  * exact byte format (reference `src/protocol/zest.re:12-216`), and
+  * the transport is the reference's own: a stock libzmq REQ or DEALER
+  * client connects the way it does to the reference's sockets
+  * (`zest.re:224-263`). One transport, two security mechanisms:
   *
-  *  - ZeroMQ's REQ/REP + ROUTER/DEALER delimited messages ride TWO
-  *    transports on one port, auto-detected from the first byte: the
-  *    repo's u32-length-prefix framing (leads 0x00), and — r13 — real
-  *    ZMTP 3.0 with NULL security ([[ZmtpCodec]]; a greeting leads
-  *    0xFF), so a stock libzmq REQ/DEALER client can connect the way it
-  *    does to the reference's sockets (`zest.re:224-263`). The ROUTER
-  *    identity is carried IN-BAND on both: pushes append option 2048
-  *    (the router-key option number) holding the subscription uuid, and
-  *    flow to the observer's own connection;
-  *  - channel crypto: pass `serverKeys` to require it. On the ZMTP
-  *    transport this is CurveZMQ PROPER — the full ZMTP CURVE mechanism
-  *    ([[ZmtpCurve]]: HELLO/WELCOME cookie/INITIATE vouch/READY +
-  *    XSalsa20-Poly1305 MESSAGE boxes; a stock libzmq client with the
-  *    published server key connects, interop-validated PERF.md r13). On
-  *    the legacy u32 framing it is [[SecureChannel]] (same trust model
-  *    and cipher suite, Noise-NK-shaped exchange): the first frame pair
-  *    is the 32-byte ephemeral handshake, every later frame is sealed.
+  *  - NULL when `serverKeys` is unset (request auth stays the macaroon
+  *    tokens inside the zest frames, exactly where the reference carries
+  *    them);
+  *  - CURVE when `serverKeys` is set — CurveZMQ proper ([[ZmtpCurve]]:
+  *    HELLO/WELCOME cookie/INITIATE vouch/READY + XSalsa20-Poly1305
+  *    MESSAGE boxes; a stock libzmq client with the published server key
+  *    connects, interop-validated PERF.md r13). NULL is refused there, so
+  *    it can never bypass the channel crypto.
+  *
+  * This endpoint plays ROUTER. The ROUTER identity is carried IN-BAND:
+  * pushes append option 2048 (the router-key option number) holding the
+  * subscription uuid, and flow to the observer's own connection as
+  * envelope-free single-frame messages. A peer whose first octet is not
+  * the ZMTP signature is disconnected after the greeting.
   *
   * Verb dispatch is the reference's `handle_msg` tree
   * (`server.re:1042-1060`): code 1 GET (an Observe option upgrades to a
@@ -63,36 +61,29 @@ class ZestWireServer(engine: GraftEngine, port: Int = 0,
     .map(kp => java.util.Base64.getEncoder.encodeToString(SecureChannel.rawPublic(kp)))
     .getOrElse("router-key")
 
-  // one outbound-queue entry; the transport decision (legacy u32 framing,
-  // ZMTP multipart, raw handshake bytes) and the seal decision are both
-  // pinned AT ENQUEUE TIME — reading channel state at dequeue time would
-  // race the handshakes that mutate it (ADVICE r12: the secure handshake
-  // used to dodge this with a second DataOutputStream on the same socket,
-  // safe only while the queue was provably empty)
+  // one outbound-queue entry. Handshake commands leave as raw bytes;
+  // messages are sealed once the CURVE session exists, which is set
+  // before READY enqueues — so no message entry predates it. ONE writer
+  // thread owns the socket's output (ADVICE r12).
   private sealed trait OutEntry
-  private final case class LegacyFrame(b: Array[Byte], sealable: Boolean) extends OutEntry
   private final case class ZmtpMsg(frames: Seq[Array[Byte]]) extends OutEntry
   private final case class RawBytes(b: Array[Byte]) extends OutEntry
+  private case object EndOfOutput extends OutEntry
 
   private final class Channel(sock: Socket) {
     sock.setTcpNoDelay(true)
-    // buffer so the length prefix and body leave as ONE packet — the
-    // unbuffered writeInt+write pair triggers Nagle/delayed-ACK stalls
-    // (~40 ms per frame, measured: 11 posts/s before, wire-rate after)
+    // buffer so a frame's header and body leave as ONE packet — unbuffered
+    // writes trigger Nagle/delayed-ACK stalls (~40 ms per frame, measured:
+    // 11 posts/s before, wire-rate after)
     private val out = new DataOutputStream(
       new java.io.BufferedOutputStream(sock.getOutputStream))
     private val q = new LinkedBlockingQueue[OutEntry](observerQueueSize)
     @volatile private var dead = false
-    @volatile var session: SecureChannel.Session = null
-    /** ZMTP transport mode (set before the greeting is enqueued). */
-    @volatile var zmtp = false
-    /** CURVE record session (set before READY is enqueued — no ZmtpMsg
-      * can exist earlier, so every message entry sees it).
-      */
+    /** CURVE record session (null under NULL). */
     @volatile var curveSession: ZmtpCurve.Session = null
-    /** The in-flight ZMTP request's envelope (leading empty frames) —
-      * replies echo it (the REQ contract); set by the single reader
-      * thread before dispatch, so it is stable while the reply enqueues.
+    /** The in-flight request's envelope (leading empty frames) — replies
+      * echo it (the REQ contract); set by the single reader thread before
+      * dispatch, so it is stable while the reply enqueues.
       */
     @volatile var requestEnvelope: Seq[Array[Byte]] = Nil
     def isDead: Boolean = dead
@@ -101,21 +92,9 @@ class ZestWireServer(engine: GraftEngine, port: Int = 0,
         val e = q.poll(200, TimeUnit.MILLISECONDS)
         if (e != null) {
           try e match {
-            case LegacyFrame(m, sealable) =>
-              val wire = if (sealable && session != null) session.seal(m) else m
-              out.writeInt(wire.length); out.write(wire); out.flush()
-            case ZmtpMsg(frames) =>
-              val cs = curveSession
-              if (cs != null) {
-                // CURVE: each part travels as a sealed MESSAGE command in
-                // a flags-0 ZMTP frame; MORE rides INSIDE the box
-                frames.zipWithIndex.foreach { case (f, i) =>
-                  ZmtpCodec.writeFrame(out, 0,
-                    cs.sealMessage(if (i < frames.length - 1) 1 else 0, f))
-                }
-                out.flush()
-              } else ZmtpCodec.writeMessage(out, frames)
+            case ZmtpMsg(frames) => ZmtpCodec.writeMessage(out, frames, Option(curveSession))
             case RawBytes(b) => out.write(b); out.flush()
+            case EndOfOutput => sock.shutdownOutput()
           } catch { case _: java.io.IOException => dead = true }
         }
       }
@@ -124,18 +103,16 @@ class ZestWireServer(engine: GraftEngine, port: Int = 0,
     writer.start()
     private def offer(e: OutEntry): Boolean =
       !dead && (q.offer(e) || { dead = true; false })
-    /** A REPLY: echoes the request envelope in ZMTP mode. */
-    def send(m: Array[Byte]): Boolean =
-      offer(if (zmtp) ZmtpMsg(requestEnvelope :+ m) else LegacyFrame(m, sealable = true))
-    /** A PUSH (observe fan-out / notify): envelope-free single frame in
-      * ZMTP mode — the ROUTER-to-DEALER delivery shape.
+    /** A REPLY: echoes the request envelope. */
+    def send(m: Array[Byte]): Boolean = offer(ZmtpMsg(requestEnvelope :+ m))
+    /** A PUSH (observe fan-out / notify): an envelope-free single frame —
+      * the ROUTER-to-DEALER delivery shape.
       */
-    def sendPush(m: Array[Byte]): Boolean =
-      offer(if (zmtp) ZmtpMsg(Seq(m)) else LegacyFrame(m, sealable = true))
-    /** Pre-session raw send (secure handshake only): never sealed. */
-    def sendRaw(m: Array[Byte]): Boolean = offer(LegacyFrame(m, sealable = false))
-    /** Pre-encoded transport bytes (ZMTP greeting/handshake commands). */
+    def sendPush(m: Array[Byte]): Boolean = offer(ZmtpMsg(Seq(m)))
+    /** Pre-encoded transport bytes (greeting and handshake commands). */
     def sendBytes(b: Array[Byte]): Boolean = offer(RawBytes(b))
+    /** Half-close once everything queued so far has left. */
+    def endOutput(): Boolean = offer(EndOfOutput)
     def close(): Unit = {
       dead = true
       try sock.close() catch { case _: Exception => () }
@@ -173,9 +150,8 @@ class ZestWireServer(engine: GraftEngine, port: Int = 0,
   private def push(ident: String, base: Frame): Frame =
     base.copy(options = base.options :+ strOption(2048, ident))
 
-  /** This transport's delivery endpoint for one registration: length-
-    * prefixed (sealed) frames; the 163 is the bare ack
-    * (`handle_expire` routes create_ack(163)).
+  /** This transport's delivery endpoint for one registration; the 163
+    * is the bare ack (`handle_expire` routes create_ack(163)).
     */
   private def binSink(ident: String, ch: Channel): rt.Sink = new rt.Sink {
     def push(formatCode: Int, message: String): Boolean =
@@ -184,169 +160,75 @@ class ZestWireServer(engine: GraftEngine, port: Int = 0,
     def owner: AnyRef = ch
   }
 
-  private def readFrame(in: DataInputStream): Array[Byte] = {
-    val len = in.readInt()
-    require(len >= 0 && len <= 16 * 1024 * 1024, s"bad frame length $len")
-    val b = new Array[Byte](len)
-    in.readFully(b)
-    b
-  }
-
+  /** One connection: greeting exchange, then the NULL READY handshake or
+    * the CURVE one ([[ZmtpCurve]]: HELLO -> WELCOME (cookie) -> INITIATE
+    * (vouch) -> READY). After it, each inbound message's body frame is one
+    * zest request; replies echo the request envelope. Any violation —
+    * EOF, a bad frame, a tampered or replayed CURVE box — drops the
+    * connection (libzmq's own behavior on a failed CURVE exchange). Like
+    * the reference, CURVE client permanent keys are not allow-listed —
+    * request auth is the macaroon tokens in the zest frames.
+    */
   private def handle(sock: Socket): Unit = {
-    val pin = new java.io.PushbackInputStream(
-      new java.io.BufferedInputStream(sock.getInputStream), 1)
-    val in = new DataInputStream(pin)
+    val in = new DataInputStream(new java.io.BufferedInputStream(sock.getInputStream))
     val ch = new Channel(sock)
     live.add(ch)
+    // a refusal must actually LEAVE before the socket closes: the writer
+    // drains asynchronously, so queue the half-close behind it and read
+    // until the peer hangs up (closing with unread input would reset the
+    // connection) — bounded by the handshake SoTimeout
+    def refuse(error: Option[String]): Unit = {
+      error.foreach(r => ch.sendBytes(encodeZmtpCommand(ZmtpCodec.error(r))))
+      ch.endOutput()
+      try { while (in.read() >= 0) () } catch { case _: Exception => () }
+    }
     try {
-      // transport auto-detect: a ZMTP greeting leads with 0xFF; the
-      // legacy u32 length prefix of a <=16 MB frame leads with 0x00 (in
-      // secure legacy mode the first frame is the 32-byte ephemeral, so
-      // its prefix also leads 0x00). A ZMTP client on a secure server
-      // gets the CURVE mechanism — the reference's actual transport
-      // security; NULL is refused there so it can never bypass the
-      // channel crypto.
-      val first = pin.read()
-      if (first < 0) return
-      pin.unread(first)
-      if (first == 0xff) { zmtpHandle(sock, ch, in); return }
-      serverKeys.foreach { kp => // required handshake before any frame
-        // a connect-and-say-nothing client must not pin this thread: the
-        // handshake has 30 s; an established session blocks freely
-        sock.setSoTimeout(30000)
-        val clientEph = readFrame(in)
-        val (serverEph, session) = SecureChannel.serverHandshake(kp, clientEph)
-        // the ephemeral reply rides the Channel's own writer (raw mode) —
-        // ONE stream owns the socket; FIFO order guarantees it leaves
-        // before the sealed ReadyFrame
-        ch.sendRaw(serverEph)
-        ch.session = session // writer thread seals sealable frames from here on
-        ch.send(SecureChannel.ReadyFrame)
-        sock.setSoTimeout(0)
+      // a connect-and-stall client must not pin this thread: the
+      // handshake has 30 s; an established session blocks freely
+      sock.setSoTimeout(30000)
+      val myMech = if (serverKeys.isDefined) "CURVE" else "NULL"
+      // send eagerly: libzmq completes its own greeting only after reading
+      // the peer's signature — both sides waiting would deadlock
+      ch.sendBytes(ZmtpCodec.greeting(asServer = serverKeys.isDefined, myMech))
+      val mech = scala.util.Try(ZmtpCodec.readGreeting(in)._2).toOption
+      if (!mech.contains(myMech)) {
+        refuse(mech.map(m => s"mechanism $m not supported"))
+        return
       }
-      var open = true
-      while (open && running && !ch.isDead) {
-        try {
-          val raw = readFrame(in)
-          val plain = if (ch.session != null) ch.session.open(raw) else raw
-          dispatch(plain, ch)
-        } catch {
-          case _: EOFException => open = false
-          case _: java.io.IOException => open = false
-          case _: javax.crypto.AEADBadTagException => open = false // tamper: drop
-        }
+      val session = serverKeys match {
+        case Some(kp) =>
+          val hs = new ZmtpCurve.ServerHandshake(ZmtpCurve.keysFrom(kp))
+          ch.sendBytes(encodeZmtpCommand(hs.onHello(ZmtpCodec.readCommand(in))))
+          val (ready, s, _, _) = hs.onInitiate(ZmtpCodec.readCommand(in))
+          ch.curveSession = s // before READY enqueues: no ZmtpMsg exists yet
+          ch.sendBytes(encodeZmtpCommand(ready))
+          Some(s)
+        case None =>
+          ch.sendBytes(encodeZmtpCommand(ZmtpCodec.ready("ROUTER")))
+          val (name, props) = ZmtpCodec.parseCommand(ZmtpCodec.readCommand(in))
+          require(name == "READY", s"expected READY, got $name")
+          val peerType = props.get("Socket-Type")
+            .map(new String(_, "US-ASCII")).getOrElse("")
+          if (!ZmtpCodec.acceptedPeers(peerType)) {
+            refuse(Some(s"invalid socket type $peerType"))
+            return
+          }
+          None
+      }
+      sock.setSoTimeout(0) // handshake done: idle connections are allowed
+      while (running && !ch.isDead) {
+        val (env, body) = ZmtpCodec.splitEnvelope(ZmtpCodec.readMessage(in, session))
+        ch.requestEnvelope = env
+        // zest requests are SINGLE-frame: a multipart body is a protocol
+        // error, answered 128 rather than silently truncated (r13 review)
+        if (body.lengthIs == 1) dispatch(body.head, ch)
+        else ch.send(encode(ack(128)))
       }
     } catch { case _: Exception => () }
     finally {
       evict(ch)
       ch.close()
       live.remove(ch)
-    }
-  }
-
-  /** ZMTP session (`ZmtpCodec`): greeting exchange, NULL-mechanism READY
-    * handshake (this endpoint plays ROUTER — valid peer for the
-    * reference's REQ clients and for DEALER observers), then each inbound
-    * message's body frame is one zest request dispatched through the SAME
-    * verb tree as the legacy framing; replies echo the request envelope
-    * (the REQ contract), pushes leave as envelope-free single-frame
-    * messages (the ROUTER-to-DEALER shape).
-    */
-  private def zmtpHandle(sock: Socket, ch: Channel, in: DataInputStream): Unit = {
-    ch.zmtp = true
-    // the handshake phase gets the secure branch's guard: a
-    // connect-and-greet-then-stall client must not pin this thread (r13
-    // review); an established session blocks freely
-    sock.setSoTimeout(30000)
-    // a secure server speaks CURVE on this transport (the reference's
-    // actual mechanism, zest.re:236-263); plaintext servers speak NULL
-    val myMech = if (serverKeys.isDefined) "CURVE" else "NULL"
-    // send eagerly: libzmq completes its own greeting only after reading
-    // the peer's signature — both sides waiting would deadlock
-    ch.sendBytes(ZmtpCodec.greeting(asServer = serverKeys.isDefined, myMech))
-    // a handshake reject must actually LEAVE before the socket closes:
-    // the writer thread drains asynchronously, so park until the peer
-    // reads the ERROR and closes — bounded by the handshake SoTimeout, so
-    // a peer that never closes costs 30 s, not a thread forever
-    def rejectAndLinger(reason: String): Unit = {
-      ch.sendBytes(encodeZmtpCommand(ZmtpCodec.error(reason)))
-      try { while (in.read() >= 0) () } catch { case _: Exception => () }
-    }
-    val (_, mech) = ZmtpCodec.readGreeting(in)
-    if (mech != myMech) {
-      rejectAndLinger(s"mechanism $mech not supported")
-      return
-    }
-    if (myMech == "CURVE") { zmtpCurveLoop(sock, ch, in); return }
-    ch.sendBytes(encodeZmtpCommand(ZmtpCodec.ready("ROUTER")))
-    val (flags, body) = ZmtpCodec.readFrame(in)
-    require((flags & ZmtpCodec.FlagCommand) != 0, "expected a ZMTP command")
-    val (name, props) = ZmtpCodec.parseCommand(body)
-    require(name == "READY", s"expected READY, got $name")
-    val peerType = props.get("Socket-Type")
-      .map(new String(_, "US-ASCII")).getOrElse("")
-    if (!ZmtpCodec.acceptedPeers(peerType)) {
-      rejectAndLinger(s"invalid socket type $peerType")
-      return
-    }
-    sock.setSoTimeout(0) // handshake done: idle connections are allowed
-    var open = true
-    while (open && running && !ch.isDead) {
-      try {
-        val (env, bodyFrames) = ZmtpCodec.readMessage(in)
-        ch.requestEnvelope = env
-        // zest requests are SINGLE-frame: a multipart body is a protocol
-        // error, answered 128 rather than silently truncated (r13 review)
-        if (bodyFrames.lengthIs == 1) dispatch(bodyFrames.head, ch)
-        else ch.send(encode(ack(128)))
-      } catch {
-        case _: EOFException => open = false
-        case _: java.io.IOException => open = false
-      }
-    }
-  }
-
-  /** The CURVE side of the ZMTP transport ([[ZmtpCurve]]): HELLO ->
-    * WELCOME (cookie) -> INITIATE (vouch) -> READY, then each inbound
-    * flags-0 frame is a sealed MESSAGE command; multipart (the REQ
-    * envelope) rides the box flags. A handshake violation throws and
-    * drops the connection (libzmq's own behavior on a failed CURVE
-    * exchange). Like the reference, client permanent keys are not
-    * allow-listed — request auth is the macaroon tokens in the zest
-    * frames.
-    */
-  private def zmtpCurveLoop(sock: Socket, ch: Channel, in: DataInputStream): Unit = {
-    val hs = new ZmtpCurve.ServerHandshake(ZmtpCurve.keysFrom(serverKeys.get))
-    val (f1, helloBody) = ZmtpCodec.readFrame(in)
-    require((f1 & ZmtpCodec.FlagCommand) != 0, "expected HELLO command")
-    ch.sendBytes(encodeZmtpCommand(hs.onHello(helloBody)))
-    val (f2, initBody) = ZmtpCodec.readFrame(in)
-    require((f2 & ZmtpCodec.FlagCommand) != 0, "expected INITIATE command")
-    val (ready, session, _, _) = hs.onInitiate(initBody)
-    ch.curveSession = session // before READY enqueues: no ZmtpMsg exists yet
-    ch.sendBytes(encodeZmtpCommand(ready))
-    sock.setSoTimeout(0)
-    val cur = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    var open = true
-    while (open && running && !ch.isDead) {
-      try {
-        val (_, body) = ZmtpCodec.readFrame(in)
-        val (mflags, payload) = session.openMessage(body)
-        cur += payload
-        if ((mflags & 1) == 0) { // final part: one complete message
-          val all = cur.toSeq; cur.clear()
-          val (env, rest) = all.span(_.isEmpty)
-          val (envF, bodyF) =
-            if (rest.isEmpty) (all.dropRight(1), all.takeRight(1)) else (env, rest)
-          ch.requestEnvelope = envF
-          if (bodyF.lengthIs == 1) dispatch(bodyF.head, ch)
-          else ch.send(encode(ack(128)))
-        }
-      } catch {
-        case _: EOFException => open = false
-        case _: java.io.IOException => open = false
-        case _: javax.crypto.AEADBadTagException => open = false // tamper: drop
-      }
     }
   }
 

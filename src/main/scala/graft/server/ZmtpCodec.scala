@@ -3,23 +3,20 @@ package graft.server
 import java.io.{DataInputStream, DataOutputStream}
 
 /** ZMTP 3.0 wire grammar (https://rfc.zeromq.org/spec/23/ — a public
-  * spec, implementable JDK-only) for the binary server's ZeroMQ transport
-  * mode: the reference binds stock libzmq REP/ROUTER sockets
+  * spec, implementable JDK-only), the binary port's only transport: the
+  * reference binds stock libzmq REP/ROUTER sockets
   * (`/root/reference/src/protocol/zest.re:224-263`), so a zest client
-  * links libzmq and speaks ZMTP on the TCP connection — until round 13
-  * the binary port understood only the repo's u32-length-prefix framing,
-  * which no stock client emits (r12 verdict, What's missing #2).
+  * links libzmq and speaks ZMTP on the TCP connection.
   *
-  * Scope: the NULL security mechanism (no credentials — request auth
-  * stays the macaroon tokens INSIDE the zest frames, exactly where the
-  * reference carries them). CurveZMQ remains a documented stand-in
-  * ([[SecureChannel]]): its XSalsa20-Poly1305 has no JDK implementation
-  * (SURVEY §2.6).
+  * Two security mechanisms ride this grammar: NULL (no credentials —
+  * request auth stays the macaroon tokens INSIDE the zest frames, exactly
+  * where the reference carries them) and CURVE ([[ZmtpCurve]], whose
+  * MESSAGE boxes carry each part and its MORE flag).
   *
   * Grammar implemented:
   *  - greeting: 64 octets = signature (%xFF 8*%x00 %x7F), version (3.x —
   *    any minor accepted; 3.1 only ADDS pub-sub commands), mechanism
-  *    ("NULL" zero-padded to 20), as-server, 31 filler octets;
+  *    ("NULL"/"CURVE" zero-padded to 20), as-server, 31 filler octets;
   *  - frame: flags octet (bit0 MORE, bit1 LONG, bit2 COMMAND) + size
   *    (1 octet short / 8 octets big-endian long) + body;
   *  - commands: READY (metadata = name-octet-string +
@@ -48,9 +45,13 @@ object ZmtpCodec {
 
   /** Read and validate the peer greeting; returns (minor, mechanism). */
   def readGreeting(in: DataInputStream): (Int, String) = {
+    // the lead octet first: a peer speaking another protocol is refused at
+    // once, not after blocking on 63 octets it may never send
+    require(in.readUnsignedByte() == 0xff, "not a ZMTP peer")
     val g = new Array[Byte](64)
-    in.readFully(g)
-    require(g(0) == 0xff.toByte && g(9) == 0x7f.toByte, "bad ZMTP signature")
+    g(0) = 0xff.toByte
+    in.readFully(g, 1, 63)
+    require(g(9) == 0x7f.toByte, "bad ZMTP signature")
     require(g(10) == 3, s"unsupported ZMTP version-major ${g(10)}")
     val mech = new String(g.slice(12, 32), "US-ASCII").takeWhile(_ != 0)
     (g(11).toInt, mech)
@@ -67,8 +68,8 @@ object ZmtpCodec {
     out.write(body)
   }
 
-  /** Read one frame; returns (flags, body). Bounded like the legacy path:
-    * a frame past 16 MB is a protocol violation, not a buffer to grow.
+  /** Read one frame; returns (flags, body). A frame past 16 MB is a
+    * protocol violation, not a buffer to grow.
     */
   def readFrame(in: DataInputStream): (Int, Array[Byte]) = {
     val flags = in.readUnsignedByte()
@@ -81,30 +82,62 @@ object ZmtpCodec {
     (flags, b)
   }
 
-  /** Read one complete multipart message: (leading empty-frame envelope,
-    * body frames). A command frame mid-message is a protocol error here —
-    * the NULL handshake is over by the time messages flow.
+  /** Read one command frame's body (handshakes); a peer's ERROR command
+    * ends the handshake as an IOException carrying its reason.
     */
-  def readMessage(in: DataInputStream): (Seq[Array[Byte]], Seq[Array[Byte]]) = {
-    val frames = Seq.newBuilder[Array[Byte]]
+  def readCommand(in: DataInputStream): Array[Byte] = {
+    val (flags, body) = readFrame(in)
+    require((flags & FlagCommand) != 0, "expected a ZMTP command")
+    if (body.length > 6 && body(0) == 5 && new String(body, 1, 5, "US-ASCII") == "ERROR")
+      throw new java.io.IOException("ZMTP handshake refused: " +
+        new String(parseCommand(body)._2("reason"), "US-ASCII"))
+    body
+  }
+
+  /** Read one complete multipart message's parts. Under CURVE (`session`
+    * set) each frame is a sealed MESSAGE whose box carries the MORE flag;
+    * under NULL a command frame mid-message is a protocol error — the
+    * handshake is over by the time messages flow.
+    */
+  def readMessage(in: DataInputStream,
+                  session: Option[ZmtpCurve.Session]): Seq[Array[Byte]] = {
+    val parts = Seq.newBuilder[Array[Byte]]
     var more = true
     while (more) {
       val (flags, body) = readFrame(in)
-      require((flags & FlagCommand) == 0, "unexpected ZMTP command mid-stream")
-      frames += body
-      more = (flags & FlagMore) != 0
+      val (partFlags, part) = session match {
+        case Some(s) => s.openMessage(body)
+        case None =>
+          require((flags & FlagCommand) == 0, "unexpected ZMTP command mid-stream")
+          (flags, body)
+      }
+      parts += part
+      more = (partFlags & FlagMore) != 0
     }
-    val all = frames.result()
-    val (env, rest) = all.span(_.isEmpty)
-    // an all-empty message: treat the last empty frame as the body
-    if (rest.isEmpty) (env.dropRight(1), all.takeRight(1)) else (env, rest)
+    parts.result()
   }
 
-  def writeMessage(out: DataOutputStream, frames: Seq[Array[Byte]]): Unit = {
-    frames.zipWithIndex.foreach { case (f, i) =>
-      writeFrame(out, if (i < frames.length - 1) FlagMore else 0, f)
+  /** Write one multipart message; under CURVE each part travels as a
+    * sealed MESSAGE in a flags-0 frame, MORE riding inside the box.
+    */
+  def writeMessage(out: DataOutputStream, parts: Seq[Array[Byte]],
+                   session: Option[ZmtpCurve.Session]): Unit = {
+    parts.zipWithIndex.foreach { case (p, i) =>
+      val more = if (i < parts.length - 1) FlagMore else 0
+      session match {
+        case Some(s) => writeFrame(out, 0, s.sealMessage(more, p))
+        case None => writeFrame(out, more, p)
+      }
     }
     out.flush()
+  }
+
+  /** Split a message into (leading empty-frame envelope, body parts); an
+    * all-empty message keeps its last empty frame as the body.
+    */
+  def splitEnvelope(parts: Seq[Array[Byte]]): (Seq[Array[Byte]], Seq[Array[Byte]]) = {
+    val (env, rest) = parts.span(_.isEmpty)
+    if (rest.isEmpty) (env.dropRight(1), parts.takeRight(1)) else (env, rest)
   }
 
   /** READY command body: name + metadata properties. */

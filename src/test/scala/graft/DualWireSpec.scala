@@ -1,14 +1,13 @@
 package graft
 
-import java.io.{BufferedReader, DataInputStream, DataOutputStream, InputStreamReader, OutputStreamWriter, PrintWriter}
+import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter, PrintWriter}
 import java.net.Socket
 
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.server.{WireRuntime, WireServer, ZestWireServer}
-import graft.server.ZestCodec
+import graft.server.{WireRuntime, WireServer, ZestWireServer, ZmtpClient}
 import graft.server.ZestCodec._
 
 /** The WireMain deployment shape: BOTH front-ends over ONE engine through
@@ -35,24 +34,6 @@ class DualWireSpec extends AnyFunSuite with SparkTestBase {
     def close(): Unit = sock.close()
   }
 
-  private class BClient(port: Int) {
-    private val sock = new Socket("127.0.0.1", port)
-    sock.setSoTimeout(20000)
-    sock.setTcpNoDelay(true)
-    private val out = new DataOutputStream(
-      new java.io.BufferedOutputStream(sock.getOutputStream))
-    private val in = new DataInputStream(sock.getInputStream)
-    def send(f: Frame): Unit = {
-      val b = encode(f); out.writeInt(b.length); out.write(b); out.flush()
-    }
-    def read(): Frame = {
-      val len = in.readInt(); val b = new Array[Byte](len); in.readFully(b)
-      decode(b)
-    }
-    def call(f: Frame): Frame = { send(f); read() }
-    def close(): Unit = sock.close()
-  }
-
   private def j(s: String): JValue = JString(s)
 
   test("a write on either port pushes to observers registered on the other") {
@@ -63,7 +44,7 @@ class DualWireSpec extends AnyFunSuite with SparkTestBase {
     val binSrv = new ZestWireServer(engine, clockMs = () => now, runtime = Some(rt))
     try {
       // binary-port observer, JSON-port writer
-      val bObs = new BClient(binSrv.boundPort)
+      val bObs = new ZmtpClient(binSrv.boundPort, socketType = "DEALER")
       bObs.call(request(1, "/ts/x/*", observe = Some("data"), maxAgeSec = Some(0L)))
       val jWriter = new JClient(jsonSrv.boundPort)
       jWriter.send("verb" -> j("POST"), "path" -> j("/ts/x/at/1000"),
@@ -76,7 +57,7 @@ class DualWireSpec extends AnyFunSuite with SparkTestBase {
       val sub = jObs.send("verb" -> j("OBSERVE"), "path" -> j("/ts/y/*"),
         "maxAgeSec" -> JLong(0L))
       val uuid = (sub \ "body" \ "uuid").extract[String]
-      val bWriter = new BClient(binSrv.boundPort)
+      val bWriter = new ZmtpClient(binSrv.boundPort)
       assert(bWriter.call(request(2, "/ts/y/at/2000",
         payload = """{"value": 2}""")).code === 65)
       val push2 = jObs.readLine()
@@ -93,7 +74,7 @@ class DualWireSpec extends AnyFunSuite with SparkTestBase {
     val jsonSrv = new WireServer(engine, clockMs = () => now, runtime = Some(rt))
     val binSrv = new ZestWireServer(engine, clockMs = () => now, runtime = Some(rt))
     try {
-      val bObs = new BClient(binSrv.boundPort)
+      val bObs = new ZmtpClient(binSrv.boundPort, socketType = "DEALER")
       val ackF = bObs.call(request(1, "/ts/e/*", observe = Some("data"),
         maxAgeSec = Some(10L)))
       val uuid = ackF.payloadString
@@ -136,9 +117,9 @@ class DualWireSpec extends AnyFunSuite with SparkTestBase {
     val engine = new GraftEngine(spark, () => { now += 1; now })
     val srv = new ZestWireServer(engine, clockMs = () => now)
     try {
-      val registrant = new BClient(srv.boundPort)
+      val registrant = new ZmtpClient(srv.boundPort, socketType = "DEALER")
       assert(registrant.call(request(1, "/notification/response/app/cbX")).code === 65)
-      val responder = new BClient(srv.boundPort)
+      val responder = new ZmtpClient(srv.boundPort)
       assert(responder.call(request(2, "/notification/response/app/cbX",
         payload = "done-42")).code === 65)
       val push = registrant.read()

@@ -7,7 +7,7 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.server.{SecureChannel, WireMain, WireServer}
+import graft.server.{WireMain, WireServer, ZmtpCurve}
 
 /** Round-13 fixes: the r12 ADVICE items (notify-path GC on dead
   * connections, AEAD counter ordering, sweep fast path, secure-mode
@@ -70,19 +70,22 @@ class Round13OpsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("AEAD open failure does not desync the receive counter") {
-    val kp = SecureChannel.generateKeyPair()
-    val (clientEph, cont) = SecureChannel.clientHandshake(SecureChannel.rawPublic(kp))
-    val (serverEph, server) = SecureChannel.serverHandshake(kp, clientEph)
-    val client = cont(serverEph)
-    val sealed1 = client.seal("frame-one".getBytes("UTF-8"))
-    val garbage = sealed1.clone(); garbage(0) = (garbage(0) ^ 0x5a).toByte
-    intercept[javax.crypto.AEADBadTagException] { server.open(garbage) }
-    // the genuine frame still opens at the SAME counter (r12: the failed
-    // open burned the counter, garbling every later frame for any caller
-    // that catches and continues)
-    assert(new String(server.open(sealed1), "UTF-8") === "frame-one")
-    val sealed2 = client.seal("frame-two".getBytes("UTF-8"))
-    assert(new String(server.open(sealed2), "UTF-8") === "frame-two")
+    val serverKeys = ZmtpCurve.generate()
+    val hs = new ZmtpCurve.ServerHandshake(serverKeys)
+    val chs = new ZmtpCurve.ClientHandshake(ZmtpCurve.generate(), serverKeys.publicRaw)
+    val (initiate, cont) = chs.onWelcome(hs.onHello(chs.hello()))
+    val (ready, server, _, _) = hs.onInitiate(initiate)
+    val (client, _) = cont(ready)
+    val sealed1 = client.sealMessage(0, "frame-one".getBytes("UTF-8"))
+    val garbage = sealed1.clone()
+    garbage(garbage.length - 1) = (garbage(garbage.length - 1) ^ 0x5a).toByte
+    intercept[javax.crypto.AEADBadTagException] { server.openMessage(garbage) }
+    // the genuine message still opens at the SAME nonce (r12: a failed
+    // open that advanced the counter garbled every later message for any
+    // caller that catches and continues)
+    assert(new String(server.openMessage(sealed1)._2, "UTF-8") === "frame-one")
+    val sealed2 = client.sealMessage(0, "frame-two".getBytes("UTF-8"))
+    assert(new String(server.openMessage(sealed2)._2, "UTF-8") === "frame-two")
   }
 
   test("sweepDue gates the expiry sweep: exact false, heals after sweep") {

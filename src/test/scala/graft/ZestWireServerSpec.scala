@@ -1,18 +1,16 @@
 package graft
 
-import java.io.{DataInputStream, DataOutputStream}
-import java.net.Socket
-
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.server.{SecureChannel, ZestWireServer}
+import graft.server.{ZestWireServer, ZmtpClient}
 import graft.server.ZestCodec
 import graft.server.ZestCodec._
 
-/** The binary CoAP-style wire framing (ZestCodec) and its TCP server:
-  * byte-exact encode/decode round trips, the reference's verb/ack codes
-  * over real sockets, observe pushes with the in-band router identity,
-  * and the SecureChannel handshake (authentication + tamper detection).
+/** The binary CoAP-style wire framing (ZestCodec) and its server:
+  * byte-exact encode/decode round trips, then the reference's verb/ack
+  * codes and observe pushes with the in-band router identity over real
+  * ZMTP sockets (the transport and CURVE mechanism themselves are pinned
+  * in ZmtpSpec and ZmtpCurveSpec).
   */
 class ZestWireServerSpec extends AnyFunSuite with SparkTestBase {
 
@@ -60,48 +58,17 @@ class ZestWireServerSpec extends AnyFunSuite with SparkTestBase {
     intercept[IllegalArgumentException](decode(bad))
   }
 
-  // ---- plaintext socket end-to-end ------------------------------------------
+  // ---- socket end-to-end (ZMTP NULL) ---------------------------------------
 
-  private class BinClient(port: Int, serverKey: Option[Array[Byte]] = None) {
-    private val sock = new Socket("127.0.0.1", port)
-    sock.setSoTimeout(20000)
-    sock.setTcpNoDelay(true)
-    private val out = new DataOutputStream(
-      new java.io.BufferedOutputStream(sock.getOutputStream))
-    private val in = new DataInputStream(sock.getInputStream)
-    private var session: SecureChannel.Session = null
-    serverKey.foreach { sk =>
-      val (eph, cont) = SecureChannel.clientHandshake(sk)
-      writeRaw(eph)
-      session = cont(readRaw())
-      val ready = session.open(readRaw())
-      require(java.util.Arrays.equals(ready, SecureChannel.ReadyFrame), "bad READY")
-    }
-    private def writeRaw(b: Array[Byte]): Unit = {
-      out.writeInt(b.length); out.write(b); out.flush()
-    }
-    private def readRaw(): Array[Byte] = {
-      val len = in.readInt(); val b = new Array[Byte](len); in.readFully(b); b
-    }
-    def send(f: Frame): Unit =
-      writeRaw(if (session != null) session.seal(encode(f)) else encode(f))
-    def read(): Frame =
-      decode(if (session != null) session.open(readRaw()) else readRaw())
-    def call(f: Frame): Frame = { send(f); read() }
-    def tamper(): Unit = { // corrupt ciphertext of a sealed frame
-      val ct = session.seal(encode(request(1, "/hello", format = 0)))
-      ct(ct.length / 2) = (ct(ct.length / 2) ^ 0x7f).toByte
-      writeRaw(ct)
-    }
-    def close(): Unit = sock.close()
-  }
+  private def client(port: Int, socketType: String = "REQ") =
+    new ZmtpClient(port, socketType = socketType)
 
   test("binary verbs over the socket: POST 65, GET 69+payload, DELETE 66, errors 128") {
     var now = 1700000000000L
     val engine = new GraftEngine(spark, () => { now += 1; now })
     val srv = new ZestWireServer(engine, clockMs = () => now)
     try {
-      val c = new BinClient(srv.boundPort)
+      val c = client(srv.boundPort)
       assert(c.call(request(2, "/ts/b1/at/1000", payload = """{"value": 4}""")).code === 65)
       val g = c.call(request(1, "/ts/b1/latest"))
       assert(g.code === 69 && g.contentFormat === 50)
@@ -122,12 +89,12 @@ class ZestWireServerSpec extends AnyFunSuite with SparkTestBase {
     val engine = new GraftEngine(spark, () => now)
     val srv = new ZestWireServer(engine, clockMs = () => now)
     try {
-      val obs = new BinClient(srv.boundPort)
+      val obs = client(srv.boundPort, "DEALER")
       val ackF = obs.call(request(1, "/ts/bo/*", observe = Some("data"),
         maxAgeSec = Some(10L)))
       assert(ackF.code === 69)
       val uuid = ackF.payloadString
-      val writer = new BinClient(srv.boundPort)
+      val writer = client(srv.boundPort)
       assert(writer.call(request(2, "/ts/bo/at/1000", payload = """{"value": 1}""")).code === 65)
       val pushF = obs.read()
       assert(pushF.code === 69 && pushF.contentFormat === 50)
@@ -150,10 +117,10 @@ class ZestWireServerSpec extends AnyFunSuite with SparkTestBase {
     val engine = new GraftEngine(spark, () => { now += 1; now })
     val srv = new ZestWireServer(engine, clockMs = () => now)
     try {
-      val obs = new BinClient(srv.boundPort)
+      val obs = client(srv.boundPort, "DEALER")
       obs.call(request(1, "/notification/request/app/*",
         observe = Some("notification"), maxAgeSec = Some(0L)))
-      val caller = new BinClient(srv.boundPort)
+      val caller = client(srv.boundPort)
       val reg = caller.call(request(1, "/notification/response/app/cb"))
       assert(reg.code === 65 && reg.options.exists(_.number === 2048))
       assert(caller.call(request(1, "/notification/response/app/cb")).code === 163)
@@ -173,7 +140,7 @@ class ZestWireServerSpec extends AnyFunSuite with SparkTestBase {
       tokenSecretKey = Some(key))
     val srv = new ZestWireServer(engine, clockMs = () => now)
     try {
-      val c = new BinClient(srv.boundPort)
+      val c = client(srv.boundPort)
       assert(c.call(request(2, "/ts/a/at/1", payload = """{"value": 1}""")).code === 129)
       val tok = graft.auth.Macaroons.serialize(
         graft.auth.Macaroons.mint(key, "bin-client").addCaveat("method = POST"))
@@ -189,10 +156,10 @@ class ZestWireServerSpec extends AnyFunSuite with SparkTestBase {
     val engine = new GraftEngine(spark, () => now)
     val srv = new ZestWireServer(engine, clockMs = () => now)
     try {
-      val aud = new BinClient(srv.boundPort)
+      val aud = client(srv.boundPort, "DEALER")
       aud.call(request(1, "/ts/*", observe = Some("audit"), maxAgeSec = Some(0L)))
       assert(aud.read().payloadString.contains("GET(OBSERVE)")) // own registration
-      val writer = new BinClient(srv.boundPort)
+      val writer = client(srv.boundPort)
       writer.call(request(2, "/ts/h/at/1", host = "sensor-7.lan",
         payload = """{"value": 2}"""))
       assert(aud.read().payloadString
@@ -206,7 +173,7 @@ class ZestWireServerSpec extends AnyFunSuite with SparkTestBase {
     val engine = new GraftEngine(spark, () => { now += 1; now })
     val srv = new ZestWireServer(engine, clockMs = () => now)
     try {
-      val c = new BinClient(srv.boundPort)
+      val c = client(srv.boundPort)
       // same (id, key), three formats -> three stores (server.re:744-760)
       assert(c.call(request(2, "/kv/dev1/cfg", format = 50,
         payload = """{"mode": "fast"}""")).code === 65)
@@ -241,7 +208,7 @@ class ZestWireServerSpec extends AnyFunSuite with SparkTestBase {
     val engine = new GraftEngine(spark, () => { now += 1; now })
     val srv = new ZestWireServer(engine, clockMs = () => now)
     try {
-      val c = new BinClient(srv.boundPort)
+      val c = client(srv.boundPort)
       val item = """{"href": "/ts/room1", "item-metadata": [""" +
         """{"rel": "urn:X-hypercat:rels:hasDescription:en", "val": "room 1"}, """ +
         """{"rel": "urn:X-hypercat:rels:isContentType", "val": "application/json"}]}"""
@@ -250,62 +217,6 @@ class ZestWireServerSpec extends AnyFunSuite with SparkTestBase {
       val cat = c.call(request(1, "/cat"))
       assert(cat.code === 69 && cat.payloadString.contains("/ts/room1"))
       c.close()
-    } finally srv.close()
-  }
-
-  // ---- encrypted channel -----------------------------------------------------
-
-  test("secure channel: handshake authenticates, requests work sealed, tamper drops") {
-    var now = 1700000000000L
-    val engine = new GraftEngine(spark, () => { now += 1; now })
-    val keys = SecureChannel.generateKeyPair()
-    val srv = new ZestWireServer(engine, clockMs = () => now, serverKeys = Some(keys))
-    try {
-      val pub = SecureChannel.rawPublic(keys)
-      val c = new BinClient(srv.boundPort, serverKey = Some(pub))
-      assert(c.call(request(2, "/ts/s1/at/1000", payload = """{"value": 8}""")).code === 65)
-      val g = c.call(request(1, "/ts/s1/latest"))
-      assert(g.code === 69 && g.payloadString.contains("\"value\": 8"))
-      // a tampered ciphertext kills only that connection; a fresh one works
-      c.tamper()
-      val c2 = new BinClient(srv.boundPort, serverKey = Some(pub))
-      assert(c2.call(request(1, "/ts/s1/length")).payloadString === """{"length": 1}""")
-      c.close(); c2.close()
-    } finally srv.close()
-  }
-
-  test("secure channel: a client with the WRONG server key cannot authenticate") {
-    var now = 1700000000000L
-    val engine = new GraftEngine(spark, () => { now += 1; now })
-    val keys = SecureChannel.generateKeyPair()
-    val srv = new ZestWireServer(engine, clockMs = () => now, serverKeys = Some(keys))
-    try {
-      val wrong = SecureChannel.rawPublic(SecureChannel.generateKeyPair())
-      val e = intercept[Exception](new BinClient(srv.boundPort, serverKey = Some(wrong)))
-      // the READY frame fails to open: AEADBadTagException (or the
-      // require) — either way the impostor is detected before any data
-      assert(e.isInstanceOf[javax.crypto.AEADBadTagException] ||
-        e.getMessage.contains("bad READY"))
-    } finally srv.close()
-  }
-
-  test("observe pushes flow sealed over the encrypted channel too") {
-    var now = 1700000000000L
-    val engine = new GraftEngine(spark, () => { now += 1; now })
-    val keys = SecureChannel.generateKeyPair()
-    val srv = new ZestWireServer(engine, clockMs = () => now, serverKeys = Some(keys))
-    try {
-      val pub = SecureChannel.rawPublic(keys)
-      val obs = new BinClient(srv.boundPort, serverKey = Some(pub))
-      val ackF = obs.call(request(1, "/ts/se/*", observe = Some("data"),
-        maxAgeSec = Some(0L)))
-      // the observe ack publishes the channel key as the router key
-      assert(ackF.options.exists(o => o.number === 2048 &&
-        o.string === java.util.Base64.getEncoder.encodeToString(pub)))
-      val writer = new BinClient(srv.boundPort, serverKey = Some(pub))
-      writer.call(request(2, "/ts/se/at/1000", payload = """{"value": 5}"""))
-      assert(obs.read().payloadString.contains("/ts/se/at/1000"))
-      obs.close(); writer.close()
     } finally srv.close()
   }
 }

@@ -1,82 +1,27 @@
 package graft
 
-import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{DataInputStream, DataOutputStream}
 import java.net.Socket
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.server.{SecureChannel, ZestCodec, ZestWireServer, ZmtpCodec, ZmtpCurve}
+import graft.server.{SecureChannel, ZestCodec, ZestWireServer, ZmtpClient, ZmtpCodec, ZmtpCurve}
 
 /** ZMTP-CURVE over the binary port: full HELLO/WELCOME/INITIATE/READY
   * handshake, sealed REQ round trips, DEALER observe pushes, replay and
   * tamper rejection, wrong-server-key failure. The command layouts were
   * validated against a stock libzmq 4.3.5 CURVE client during
-  * development (PERF.md r13); this spec's client half pins the same
+  * development (PERF.md r13); [[ZmtpClient]]'s CURVE half pins the same
   * grammar as the committed regression anchor.
   */
 class ZmtpCurveSpec extends AnyFunSuite with SparkTestBase {
-
-  private class CurveClient(port: Int, serverPub: Array[Byte],
-                            socketType: String = "REQ") {
-    private val sock = new Socket("127.0.0.1", port)
-    sock.setSoTimeout(20000)
-    sock.setTcpNoDelay(true)
-    private val out = new DataOutputStream(
-      new java.io.BufferedOutputStream(sock.getOutputStream))
-    private val in = new DataInputStream(sock.getInputStream)
-
-    private def sendCommand(body: Array[Byte]): Unit = {
-      ZmtpCodec.writeFrame(out, ZmtpCodec.FlagCommand, body); out.flush()
-    }
-    private def readBody(): Array[Byte] = ZmtpCodec.readFrame(in)._2
-
-    val session: ZmtpCurve.Session = {
-      out.write(ZmtpCodec.greeting(asServer = false, "CURVE")); out.flush()
-      val g = new Array[Byte](64); in.readFully(g)
-      assert(new String(g.slice(12, 32), "US-ASCII").takeWhile(_ != 0) == "CURVE")
-      val hs = new ZmtpCurve.ClientHandshake(ZmtpCurve.generate(), serverPub,
-        socketType)
-      sendCommand(hs.hello())
-      val (initiate, cont) = hs.onWelcome(readBody())
-      sendCommand(initiate)
-      val (s, md) = cont(readBody())
-      assert(md("Socket-Type") == "ROUTER")
-      s
-    }
-
-    /** One multipart message, each part a sealed MESSAGE command. */
-    def sendMessage(frames: Seq[Array[Byte]]): Unit = {
-      frames.zipWithIndex.foreach { case (f, i) =>
-        ZmtpCodec.writeFrame(out, 0,
-          session.sealMessage(if (i < frames.length - 1) 1 else 0, f))
-      }
-      out.flush()
-    }
-
-    def readMessage(): Seq[Array[Byte]] = {
-      val parts = Seq.newBuilder[Array[Byte]]
-      var more = true
-      while (more) {
-        val (mflags, payload) = session.openMessage(readBody())
-        parts += payload
-        more = (mflags & 1) != 0
-      }
-      parts.result()
-    }
-
-    def sendRawFrame(b: Array[Byte]): Unit = {
-      ZmtpCodec.writeFrame(out, 0, b); out.flush()
-    }
-    def readRaw(): Int = in.read()
-    def close(): Unit = sock.close()
-  }
 
   test("CURVE REQ client: handshake, sealed GET/POST round trips, envelope echo") {
     val kp = SecureChannel.generateKeyPair()
     val engine = new GraftEngine(spark, () => 1700000000000L)
     val srv = new ZestWireServer(engine, serverKeys = Some(kp))
     try {
-      val c = new CurveClient(srv.boundPort, SecureChannel.rawPublic(kp))
+      val c = new ZmtpClient(srv.boundPort, Some(SecureChannel.rawPublic(kp)))
       c.sendMessage(Seq(Array.emptyByteArray,
         ZestCodec.encode(ZestCodec.request(1, "/hello"))))
       val reply = c.readMessage()
@@ -101,13 +46,16 @@ class ZmtpCurveSpec extends AnyFunSuite with SparkTestBase {
     val srv = new ZestWireServer(engine, clockMs = () => now,
       serverKeys = Some(kp))
     try {
-      val obs = new CurveClient(srv.boundPort, SecureChannel.rawPublic(kp), "DEALER")
+      val obs = new ZmtpClient(srv.boundPort, Some(SecureChannel.rawPublic(kp)), "DEALER")
       obs.sendMessage(Seq(ZestCodec.encode(ZestCodec.request(1, "/ts/cw/*",
         observe = Some("data"), maxAgeSec = Some(0L)))))
       val ackF = ZestCodec.decode(obs.readMessage().last)
       assert(ackF.code === 69)
+      // the observe ack publishes the server's public key as the router key
+      assert(ackF.options.exists(o => o.number === 2048 &&
+        o.string === java.util.Base64.getEncoder.encodeToString(SecureChannel.rawPublic(kp))))
       val uuid = ackF.payloadString
-      val w = new CurveClient(srv.boundPort, SecureChannel.rawPublic(kp))
+      val w = new ZmtpClient(srv.boundPort, Some(SecureChannel.rawPublic(kp)))
       w.sendMessage(Seq(Array.emptyByteArray,
         ZestCodec.encode(ZestCodec.request(2, "/ts/cw/at/2000",
           payload = """{"value": 3}"""))))
@@ -127,21 +75,21 @@ class ZmtpCurveSpec extends AnyFunSuite with SparkTestBase {
     val srv = new ZestWireServer(engine, serverKeys = Some(kp))
     try {
       // tamper: flip a ciphertext byte
-      val c1 = new CurveClient(srv.boundPort, SecureChannel.rawPublic(kp))
-      val good = c1.session.sealMessage(0,
+      val c1 = new ZmtpClient(srv.boundPort, Some(SecureChannel.rawPublic(kp)))
+      val good = c1.curve.get.sealMessage(0,
         ZestCodec.encode(ZestCodec.request(1, "/hello")))
       val bad = good.clone(); bad(good.length - 1) = (bad(good.length - 1) ^ 1).toByte
       c1.sendRawFrame(bad)
-      assert(c1.readRaw() === -1) // dropped
+      assert(c1.readByte() === -1) // dropped
       c1.close()
       // replay: resend an already-used nonce
-      val c2 = new CurveClient(srv.boundPort, SecureChannel.rawPublic(kp))
-      val frame = c2.session.sealMessage(0,
+      val c2 = new ZmtpClient(srv.boundPort, Some(SecureChannel.rawPublic(kp)))
+      val frame = c2.curve.get.sealMessage(0,
         ZestCodec.encode(ZestCodec.request(1, "/hello")))
       c2.sendRawFrame(frame)
       c2.readMessage() // fine the first time
       c2.sendRawFrame(frame) // identical nonce: must be rejected
-      assert(c2.readRaw() === -1)
+      assert(c2.readByte() === -1)
       c2.close()
     } finally srv.close()
   }

@@ -5,70 +5,33 @@ import java.net.Socket
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.server.{SecureChannel, ZestCodec, ZestWireServer, ZmtpCodec}
+import graft.server.{SecureChannel, ZestCodec, ZestWireServer, ZmtpClient, ZmtpCodec}
 
-/** ZMTP 3.0 transport mode (r12 verdict task 3): golden greeting/frame
-  * bytes against the public spec, a full REQ round trip, DEALER observe
-  * pushes, coexistence with the legacy u32 framing on one port, and the
-  * secure-mode refusal.
+/** ZMTP 3.0, the binary port's transport: golden greeting/frame bytes
+  * against the public spec, a full REQ round trip, DEALER observe pushes,
+  * the handshake refusals (bad socket type, NULL on a secure server) and
+  * the disconnect of a peer that does not speak ZMTP.
   */
 class ZmtpSpec extends AnyFunSuite with SparkTestBase {
 
   private def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
 
-  private class ZClient(port: Int, socketType: String) {
-    private val sock = new Socket("127.0.0.1", port)
-    sock.setSoTimeout(20000)
-    sock.setTcpNoDelay(true)
-    val out = new DataOutputStream(
-      new java.io.BufferedOutputStream(sock.getOutputStream))
-    val in = new DataInputStream(sock.getInputStream)
-
-    /** Full NULL handshake; returns the server's raw greeting + its READY
-      * properties for assertions.
-      */
-    def handshake(): (Array[Byte], Map[String, Array[Byte]]) = {
-      out.write(ZmtpCodec.greeting(asServer = false)); out.flush()
+  /** A raw NULL handshake, for the tests that assert the server's own
+    * bytes: returns the server's greeting and the first `commands`
+    * commands it sends once our READY is out.
+    */
+  private def rawHandshake(port: Int, socketType: String, commands: Int = 1)
+      : (Array[Byte], Seq[(String, Map[String, Array[Byte]])]) = {
+    val sock = new Socket("127.0.0.1", port)
+    try {
+      sock.setSoTimeout(20000)
+      val out = new DataOutputStream(sock.getOutputStream)
+      val in = new DataInputStream(sock.getInputStream)
+      out.write(ZmtpCodec.greeting(asServer = false))
       val g = new Array[Byte](64); in.readFully(g)
-      val bos = new ByteArrayOutputStream()
-      ZmtpCodec.writeFrame(new DataOutputStream(bos), ZmtpCodec.FlagCommand,
-        ZmtpCodec.ready(socketType))
-      out.write(bos.toByteArray); out.flush()
-      val (flags, body) = ZmtpCodec.readFrame(in)
-      assert((flags & ZmtpCodec.FlagCommand) != 0)
-      val (name, props) = ZmtpCodec.parseCommand(body)
-      assert(name === "READY")
-      (g, props)
-    }
-
-    def sendMessage(frames: Seq[Array[Byte]]): Unit = {
-      val bos = new ByteArrayOutputStream()
-      val o = new DataOutputStream(bos)
-      frames.zipWithIndex.foreach { case (f, i) =>
-        ZmtpCodec.writeFrame(o,
-          if (i < frames.length - 1) ZmtpCodec.FlagMore else 0, f)
-      }
-      out.write(bos.toByteArray); out.flush()
-    }
-
-    def readMessage(): Seq[Array[Byte]] = {
-      val frames = Seq.newBuilder[Array[Byte]]
-      var more = true
-      while (more) {
-        val (flags, body) = ZmtpCodec.readFrame(in)
-        frames += body
-        more = (flags & ZmtpCodec.FlagMore) != 0
-      }
-      frames.result()
-    }
-
-    def readCommand(): (String, Map[String, Array[Byte]]) = {
-      val (flags, body) = ZmtpCodec.readFrame(in)
-      assert((flags & ZmtpCodec.FlagCommand) != 0)
-      ZmtpCodec.parseCommand(body)
-    }
-
-    def close(): Unit = sock.close()
+      ZmtpCodec.writeFrame(out, ZmtpCodec.FlagCommand, ZmtpCodec.ready(socketType))
+      (g, Seq.fill(commands)(ZmtpCodec.parseCommand(ZmtpCodec.readFrame(in)._2)))
+    } finally sock.close()
   }
 
   test("golden bytes: greeting, short frame, long frame, READY command") {
@@ -106,12 +69,13 @@ class ZmtpSpec extends AnyFunSuite with SparkTestBase {
     val engine = new GraftEngine(spark, () => 1700000000000L)
     val srv = new ZestWireServer(engine)
     try {
-      val c = new ZClient(srv.boundPort, "REQ")
-      val (g, props) = c.handshake()
+      val (g, Seq((name, props))) = rawHandshake(srv.boundPort, "REQ")
       // the server's greeting, byte-exact (as-server is 0 under NULL —
       // the field is meaningful only for CURVE/PLAIN per the spec)
       assert(hex(g) === hex(ZmtpCodec.greeting(asServer = false)))
+      assert(name === "READY")
       assert(new String(props("Socket-Type"), "US-ASCII") === "ROUTER")
+      val c = new ZmtpClient(srv.boundPort)
       // REQ message: [empty delimiter][zest request frame]
       c.sendMessage(Seq(Array.emptyByteArray,
         ZestCodec.encode(ZestCodec.request(1, "/hello"))))
@@ -121,43 +85,29 @@ class ZmtpSpec extends AnyFunSuite with SparkTestBase {
       val f = ZestCodec.decode(reply(1))
       assert(f.code === 69 && f.payloadString === "hello world!")
       // a POST and a readback through the same connection
-      c.sendMessage(Seq(Array.emptyByteArray,
-        ZestCodec.encode(ZestCodec.request(2, "/ts/z/at/1000",
-          payload = """{"value": 7}"""))))
-      assert(ZestCodec.decode(c.readMessage()(1)).code === 65)
-      c.sendMessage(Seq(Array.emptyByteArray,
-        ZestCodec.encode(ZestCodec.request(1, "/ts/z/latest"))))
-      val latest = ZestCodec.decode(c.readMessage()(1))
-      assert(latest.payloadString.contains("\"value\": 7"))
+      assert(c.call(ZestCodec.request(2, "/ts/z/at/1000",
+        payload = """{"value": 7}""")).code === 65)
+      assert(c.call(ZestCodec.request(1, "/ts/z/latest")).payloadString
+        .contains("\"value\": 7"))
       c.close()
     } finally srv.close()
   }
 
-  test("a DEALER observer gets pushes; legacy and ZMTP clients share the port") {
+  test("a DEALER observer gets pushes from a REQ writer's POST") {
     var now = 1700000000000L
     val engine = new GraftEngine(spark, () => { now += 1; now })
     val srv = new ZestWireServer(engine, clockMs = () => now)
     try {
-      val obs = new ZClient(srv.boundPort, "DEALER")
-      obs.handshake()
+      val obs = new ZmtpClient(srv.boundPort, socketType = "DEALER")
       // DEALER registration: no envelope
-      obs.sendMessage(Seq(ZestCodec.encode(ZestCodec.request(1, "/ts/zz/*",
-        observe = Some("data"), maxAgeSec = Some(0L)))))
-      val ackF = ZestCodec.decode(obs.readMessage().last)
+      val ackF = obs.call(ZestCodec.request(1, "/ts/zz/*",
+        observe = Some("data"), maxAgeSec = Some(0L)))
       assert(ackF.code === 69)
       val uuid = ackF.payloadString
 
-      // writer on the SAME port, LEGACY framing (auto-detect coexistence)
-      val ls = new Socket("127.0.0.1", srv.boundPort)
-      ls.setSoTimeout(20000); ls.setTcpNoDelay(true)
-      val lout = new DataOutputStream(
-        new java.io.BufferedOutputStream(ls.getOutputStream))
-      val lin = new DataInputStream(ls.getInputStream)
-      val req = ZestCodec.encode(ZestCodec.request(2, "/ts/zz/at/1000",
-        payload = """{"value": 3}"""))
-      lout.writeInt(req.length); lout.write(req); lout.flush()
-      val rl = lin.readInt(); val rb = new Array[Byte](rl); lin.readFully(rb)
-      assert(ZestCodec.decode(rb).code === 65)
+      val writer = new ZmtpClient(srv.boundPort)
+      assert(writer.call(ZestCodec.request(2, "/ts/zz/at/1000",
+        payload = """{"value": 3}""")).code === 65)
 
       // the push arrives as an envelope-free single-frame ZMTP message
       val push = obs.readMessage()
@@ -166,7 +116,7 @@ class ZmtpSpec extends AnyFunSuite with SparkTestBase {
       assert(pf.code === 69)
       assert(pf.options.exists(o => o.number === 2048 && o.string === uuid))
       assert(pf.payloadString.contains("/ts/zz/at/1000"))
-      ls.close(); obs.close()
+      writer.close(); obs.close()
     } finally srv.close()
   }
 
@@ -175,28 +125,19 @@ class ZmtpSpec extends AnyFunSuite with SparkTestBase {
     val engine = new GraftEngine(spark, () => now)
     val srv = new ZestWireServer(engine, clockMs = () => now)
     try {
-      val obs = new ZClient(srv.boundPort, "DEALER")
-      obs.handshake()
-      obs.sendMessage(Seq(ZestCodec.encode(ZestCodec.request(1, "/ts/ex/*",
-        observe = Some("data"), maxAgeSec = Some(10L)))))
-      val uuid = ZestCodec.decode(obs.readMessage().last).payloadString
+      val obs = new ZmtpClient(srv.boundPort, socketType = "DEALER")
+      val uuid = obs.call(ZestCodec.request(1, "/ts/ex/*",
+        observe = Some("data"), maxAgeSec = Some(10L))).payloadString
       now += 11000L
-      // any next message triggers the sweep — a legacy client's GET here
-      val ls = new java.net.Socket("127.0.0.1", srv.boundPort)
-      ls.setSoTimeout(20000); ls.setTcpNoDelay(true)
-      val lout = new DataOutputStream(
-        new java.io.BufferedOutputStream(ls.getOutputStream))
-      val lin = new DataInputStream(ls.getInputStream)
-      val req = ZestCodec.encode(ZestCodec.request(1, "/hello"))
-      lout.writeInt(req.length); lout.write(req); lout.flush()
-      val n = lin.readInt(); val b = new Array[Byte](n); lin.readFully(b)
-      assert(ZestCodec.decode(b).code === 69)
+      // any next message triggers the sweep — another client's GET here
+      val other = new ZmtpClient(srv.boundPort)
+      assert(other.call(ZestCodec.request(1, "/hello")).code === 69)
       val end = obs.readMessage()
       assert(end.length === 1)
       val ef = ZestCodec.decode(end.head)
       assert(ef.code === 163)
       assert(ef.options.exists(o => o.number === 2048 && o.string === uuid))
-      ls.close(); obs.close()
+      other.close(); obs.close()
     } finally srv.close()
   }
 
@@ -204,16 +145,14 @@ class ZmtpSpec extends AnyFunSuite with SparkTestBase {
     val engine = new GraftEngine(spark, () => 1700000000000L)
     val srv = new ZestWireServer(engine)
     try {
-      val c = new ZClient(srv.boundPort, "DEALER")
-      c.handshake()
+      val c = new ZmtpClient(srv.boundPort, socketType = "DEALER")
       c.sendMessage(Seq(
         ZestCodec.encode(ZestCodec.request(2, "/ts/m/at/1",
           payload = """{"value":""")),
         "1}".getBytes("UTF-8"))) // request split across two body frames
-      assert(ZestCodec.decode(c.readMessage().last).code === 128)
+      assert(c.read().code === 128)
       // the connection survives and a well-formed request still works
-      c.sendMessage(Seq(ZestCodec.encode(ZestCodec.request(1, "/hello"))))
-      assert(ZestCodec.decode(c.readMessage().last).payloadString === "hello world!")
+      assert(c.call(ZestCodec.request(1, "/hello")).payloadString === "hello world!")
       c.close()
     } finally srv.close()
   }
@@ -222,12 +161,10 @@ class ZmtpSpec extends AnyFunSuite with SparkTestBase {
     val engine = new GraftEngine(spark, () => 1700000000000L)
     val srv = new ZestWireServer(engine)
     try {
-      val c = new ZClient(srv.boundPort, "PUB")
-      c.handshake()
-      val (name, props) = c.readCommand()
-      assert(name === "ERROR")
+      // the server's READY goes out eagerly; the ERROR follows ours
+      val (_, Seq((ready, _), (name, props))) = rawHandshake(srv.boundPort, "PUB", 2)
+      assert(ready === "READY" && name === "ERROR")
       assert(new String(props("reason"), "US-ASCII").contains("invalid socket type"))
-      c.close()
     } finally srv.close()
   }
 
@@ -236,15 +173,35 @@ class ZmtpSpec extends AnyFunSuite with SparkTestBase {
     val srv = new ZestWireServer(engine,
       serverKeys = Some(SecureChannel.generateKeyPair()))
     try {
-      val c = new ZClient(srv.boundPort, "REQ")
-      c.out.write(ZmtpCodec.greeting(asServer = false)); c.out.flush()
-      val g = new Array[Byte](64); c.in.readFully(g)
+      val (g, Seq((name, props))) = rawHandshake(srv.boundPort, "REQ")
       // the server advertises CURVE (NULL can never bypass the crypto)
       assert(new String(g.slice(12, 32), "US-ASCII").takeWhile(_ != 0) === "CURVE")
       assert(g(32) === 1.toByte) // as-server
-      val (name, props) = c.readCommand()
       assert(name === "ERROR")
       assert(new String(props("reason"), "US-ASCII").contains("NULL not supported"))
+    } finally srv.close()
+  }
+
+  test("a client that does not speak ZMTP is disconnected after the greeting") {
+    val engine = new GraftEngine(spark, () => 1700000000000L)
+    val srv = new ZestWireServer(engine)
+    try {
+      // a u32 length prefix (first octet 0x00) and a valid zest POST
+      val sock = new Socket("127.0.0.1", srv.boundPort)
+      sock.setSoTimeout(20000)
+      val out = new DataOutputStream(sock.getOutputStream)
+      val in = new DataInputStream(sock.getInputStream)
+      val post = ZestCodec.encode(ZestCodec.request(2, "/ts/nz/at/1000",
+        payload = """{"value": 1}"""))
+      out.writeInt(post.length); out.write(post); out.flush()
+      val g = new Array[Byte](64); in.readFully(g)
+      assert(hex(g) === hex(ZmtpCodec.greeting(asServer = false)))
+      assert(in.read() === -1) // nothing after the greeting: disconnected
+      sock.close()
+      // and nothing was dispatched
+      val c = new ZmtpClient(srv.boundPort)
+      assert(c.call(ZestCodec.request(1, "/ts/nz/length")).payloadString
+        === """{"length": 0}""")
       c.close()
     } finally srv.close()
   }

@@ -4,8 +4,9 @@
 # benches generated before the last gate commits; this script makes the
 # ordering structural instead of remembered).
 #
-# Usage: tools/round_close.sh <round-number>     (e.g. 9)
-# Runs, in order:
+# Usage: tools/round_close.sh <round-number> [<base-commit>]   (e.g. 9 HEAD~3)
+# First prints the round's net src/main LOC delta against <base-commit>
+# (default HEAD~1). Then runs, in order:
 #   1. full ScalaTest suite
 #   2. full Verify at sf0.01 + DuckDB compare (the driver's t2 shape)
 #   3. oracle output-type sweep (HUGEINT class of bug)
@@ -17,6 +18,12 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 N="${1:?round number, e.g. 9}"
 R=$(printf "r%02d" "$N")
+BASE="${2:-HEAD~1}"
+
+echo "== src/main LOC delta vs $BASE"
+git diff --shortstat "$BASE" -- src/main
+git diff --numstat "$BASE" -- src/main \
+  | awk '{a += $1; d += $2} END {printf "net src/main delta: %+d lines\n", a - d}'
 
 echo "== 1/6 full test suite"
 sbt -batch test | tail -3
