@@ -76,7 +76,7 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
   // deleted key (Round11OpsSpec pins the scenario)
   (tsStoragePath.toSeq ++ blobStoragePath.toSeq).foreach { p =>
     graft.sources.TsStorage.recover(spark, p)
-    if (storageExists(p))
+    if (graft.sources.TsStorage.exists(spark, p))
       graft.sources.TsStorage.maxEventId(spark, p)
         .foreach(m => nextEventId = math.max(nextEventId, m))
   }
@@ -112,11 +112,14 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
   // With `flushEveryRows = 1` (default) every POST commits durably before
   // returning — the reference's every-write-is-a-commit semantics. Raising
   // it turns the in-memory buffers into a write-behind batch: pending rows
-  // land in ONE append job per threshold instead of one Spark job + one
-  // small parquet file PER POST, and every read/delete/compact flushes
-  // first so the caller still reads its own writes. The durability
-  // boundary then moves to the flush (threshold, read, delete, [[flush]],
-  // or [[compact]]) — rows buffered in an abandoned engine are lost, the
+  // land as ONE file per threshold — a TS flush run or a KV log file,
+  // written on the driver with no Spark job — instead of one small parquet
+  // file PER POST, and every read/delete/compact flushes first so the
+  // caller still reads its own writes. A TS flush may also fold the runs
+  // into the partitioned layout once they reach the storage's bound
+  // ([[graft.sources.TsStorage.append]]). The durability boundary then
+  // moves to the flush (threshold, read, delete, [[flush]], or
+  // [[compact]]) — rows buffered in an abandoned engine are lost, the
   // standard write-behind trade.
   private def flushNumeric(): Unit = flushLock.synchronized {
     tsStoragePath.foreach { p =>
@@ -165,7 +168,7 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
       // recover first: a crashed compact's table root is missing until the
       // rewrite rolls in, and this sweep must heal it, not skip it
       graft.sources.TsStorage.recover(spark, p)
-      if (storageExists(p))
+      if (graft.sources.TsStorage.exists(spark, p))
         graft.sources.TsStorage.compact(spark, p, maxFilesPerPartition)
     }
     kvStores.flatMap(kvStoragePath).foreach { p =>
@@ -183,28 +186,18 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
     tsStoragePath match {
       case Some(p) =>
         flushNumeric()
-        if (storageExists(p)) graft.sources.TsStorage.read(spark, p)
+        if (graft.sources.TsStorage.exists(spark, p)) graft.sources.TsStorage.read(spark, p)
         else numericBuf.toSeq.toDF() // nothing ever written
       case _ => numericBuf.toSeq.toDF()
     }
   }
 
-  /** True only when the table has at least one data partition — a root dir
-    * holding just _SUCCESS (every series deleted) must fall back to the
-    * empty frame, not crash schema inference. The filesystem resolves from
-    * the TABLE path, not fs.defaultFS.
-    */
-  private def storageExists(p: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(path) && fs.listStatus(path).exists(_.getPath.getName.startsWith("series_id="))
-  }
   private def blobFrame: DataFrame = {
     import spark.implicits._
     blobStoragePath match {
       case Some(p) =>
         flushBlob()
-        if (storageExists(p)) graft.sources.TsStorage.read(spark, p)
+        if (graft.sources.TsStorage.exists(spark, p)) graft.sources.TsStorage.read(spark, p)
         else blobBuf.toSeq.toDF().withColumnRenamed("payload", "blob")
       case _ => blobBuf.toSeq.toDF().withColumnRenamed("payload", "blob")
     }
@@ -525,7 +518,7 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
               // compact makes this delete a silent no-op
               flushBlob()
               graft.sources.TsStorage.recover(spark, p)
-              if (storageExists(p)) storageDelete(p, q)
+              if (graft.sources.TsStorage.exists(spark, p)) storageDelete(p, q)
             case None =>
               val remaining = TsOps.deleteByQuery(blobFrame, q.ids, q.selector, q.filter)
                 .collect().map(r => BlobRow(r.getAs[String]("series_id"), r.getAs[Long]("t"),
@@ -539,7 +532,7 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
               // crash; recovery precedes the existence check (see blob)
               flushNumeric()
               graft.sources.TsStorage.recover(spark, p)
-              if (storageExists(p)) storageDelete(p, q)
+              if (graft.sources.TsStorage.exists(spark, p)) storageDelete(p, q)
             case None =>
               val remaining = TsOps.deleteByQuery(tsFrame, q.ids, q.selector, q.filter)
                 .collect().map(r => TsRow(r.getAs[String]("series_id"), r.getAs[Long]("t"),

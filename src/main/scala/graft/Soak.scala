@@ -30,6 +30,11 @@ object Soak {
     if (args.contains("hamming")) { hammingSoak(spark); spark.stop(); return }
     if (args.contains("kcore")) { kcoreSoak(spark); spark.stop(); return }
     if (args.contains("blocked")) { blockedSoak(spark); spark.stop(); return }
+    if (args.contains("flush")) {
+      flushSoak(spark, args.drop(args.indexOf("flush") + 1).headOption
+        .flatMap(_.toIntOption).getOrElse(256))
+      spark.stop(); return
+    }
     // drop ts_raw: the inflated copies shift `t` directly, and the soak
     // exercises topN/storage paths which never touch the raw scan column
     val ts = TsModel.ts(spark, "/root/testdata/sf0.1").drop("ts_raw")
@@ -1092,6 +1097,60 @@ object Soak {
     spark.sql("DROP TABLE IF EXISTS graft_soak_gidx_byv")
     spark.sql("DROP TABLE IF EXISTS graft_soak_gidxapp_byu")
     spark.sql("DROP TABLE IF EXISTS graft_soak_gidxapp_byv")
+  }
+
+  /** Write-behind flush cost at the wire server's unit, 64 rows per flush
+    * (32 sensors, 2 rows each): `flushes` calls of [[graft.sources.TsStorage.append]]
+    * — a flush run each, and a fold every 64 runs — against a control
+    * timed in the same loop, the clustered partitioned Spark write of the
+    * same 64 rows (the fold's staging write, and the append body before
+    * flush runs). Prints the median run write, the median flush that
+    * folds, the amortized cost per flush and the control's median; the
+    * storage's own slf4j lines (one per run and per fold) go to stderr.
+    * `runMain graft.Soak flush [flushes]`, 256 by default.
+    */
+  private def flushSoak(spark: SparkSession, flushes: Int): Unit = {
+    import spark.implicits._
+    import graft.sources.{TsStorage, WriteLayout}
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "graft.sources", org.apache.logging.log4j.Level.INFO)
+    val base = new java.io.File("target/tmp-soak-flush").getAbsolutePath
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val (runsP, ctlP) = (s"$base/runs", s"$base/control")
+    val day0 = 1704067200000L
+    def batch(k: Int) = (0 until 64).map { i =>
+      GraftEngine.TsRow(s"s${i % 32}", day0 + k * 60000L + i, i.toDouble,
+        Map("room" -> s"r${i % 4}"), k * 64L + i + 1)
+    }.toDF()
+    def nRuns = Option(new java.io.File(runsP + "_runs").listFiles).toSeq.flatten
+      .count(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+    def ms(t0: Long) = (System.nanoTime() - t0) / 1e6
+    val runMs, foldMs, ctlMs = scala.collection.mutable.ArrayBuffer.empty[Double]
+    for (k <- 0 until flushes) {
+      val df = batch(k)
+      val before = nRuns
+      val t0 = System.nanoTime()
+      TsStorage.append(df, runsP)
+      (if (nRuns <= before) foldMs else runMs) += ms(t0)
+      val ctl = batch(k)
+      val t1 = System.nanoTime()
+      WriteLayout.clusterForWrite(
+        ctl.withColumn("day", date_format(timestamp_millis(col("t")), "yyyy-MM-dd")),
+        Seq("series_id", "day"), col("t"))
+        .write.partitionBy("series_id", "day").mode("append").parquet(ctlP)
+      ctlMs += ms(t1)
+    }
+    def med(xs: Seq[Double]) =
+      if (xs.isEmpty) Double.NaN else xs.sorted.apply(xs.size / 2)
+    val n = TsStorage.read(spark, runsP).count()
+    val nCtl = spark.read.parquet(ctlP).count()
+    println(f"flush soak: $flushes flushes of 64 rows, ${foldMs.size} folds, " +
+      f"$n rows read back (control $nCtl)")
+    println(f"  run write       median ${med(runMs.toSeq)}%.1f ms (${runMs.size} flushes)")
+    println(f"  flush that folds median ${med(foldMs.toSeq)}%.1f ms (${foldMs.size} flushes)")
+    println(f"  amortized       ${(runMs.sum + foldMs.sum) / flushes}%.1f ms per flush")
+    println(f"  control write   median ${med(ctlMs.toSeq)}%.1f ms " +
+      f"(clustered partitioned Spark write of the same 64 rows)")
   }
 
   /** Tombstone delete vs partition-rewrite delete at 10M rows: the same

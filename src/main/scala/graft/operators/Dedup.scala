@@ -768,8 +768,8 @@ object Dedup {
       prevSum = sum
       round += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(s"[cc] converged after $round rounds")
+    org.slf4j.LoggerFactory.getLogger(getClass)
+      .debug(s"connectedComponents converged after $round rounds")
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxRounds rounds " +

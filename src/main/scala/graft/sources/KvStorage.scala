@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   * r12 verdict's lead gap.
   *
   * Layout: a flat append-only parquet log
-  * `(id, key, value, write_ts, event_id, deleted)` per store. Appends land
-  * as new files (the TS write-behind discipline — one commit per flush,
-  * never one file per POST); reads resolve last-writer-wins via
+  * `(id, key, value, write_ts, event_id, deleted)` per store. Each flush
+  * lands as ONE new file written on the driver with no Spark job
+  * ([[LocalWrite]], the TS flush-run writer — one commit per flush, never
+  * one file per POST); reads resolve last-writer-wins via
   * [[graft.operators.KvOps]]; deletes are tombstone rows in the same log.
   *
   * Scale: the reference's KV stores are METADATA stores (device catalog,
@@ -33,8 +34,9 @@ import org.apache.spark.sql.functions._
   * monotonic), so the fold is semantics-preserving under any clock. Cost
   * is O(live cells), never O(history).
   *
-  * Crash model: appends are Spark file-sink commits (a kill mid-append
-  * leaves only ignored `_temporary` garbage); [[compact]] is the
+  * Crash model: an append writes its file under a hidden `.inprogress`
+  * name and commits it by rename (a kill mid-append leaves only a hidden
+  * file no reader lists); [[compact]] is the
   * whole-table twin swap of [[TsStorage.compactFull]] — the fold lands
   * fully in `<root>_compacting`, the live log parks in `<root>_old`, the
   * twin renames in, the park drops. The one instant where the root is
@@ -46,6 +48,8 @@ import org.apache.spark.sql.functions._
 object KvStorage {
 
   private val cols = Seq("id", "key", "value", "write_ts", "event_id", "deleted")
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -73,17 +77,17 @@ object KvStorage {
   }
 
   /** Append a batch of change-log rows (the engine's write-behind flush
-    * unit). Heals a crashed swap first — appending around a parked
-    * rewrite would hand the pre-crash log to the swap's GC.
+    * unit) as one file, with no Spark job: `rows` must be driver-local
+    * (optimized plan a `LocalRelation`), else IllegalArgumentException.
+    * One file per flush is already the file-count bound. Heals a crashed
+    * swap first — appending around a parked rewrite would hand the
+    * pre-crash log to the swap's GC.
     */
   def append(rows: DataFrame, path: String): Unit = {
     recover(rows.sparkSession, path)
-    // bound the flush unit's file count (r14, guide §6): a write-behind
-    // buffer arrives as a LocalRelation sliced defaultParallelism ways, so
-    // an unbounded append wrote up to that many near-empty files PER FLUSH
-    // — every later read/recover/maxEventId lists and opens all of them
-    WriteLayout.boundFiles(rows.select(cols.map(col): _*))
-      .write.mode(SaveMode.Append).parquet(path.stripSuffix("/"))
+    val c = LocalWrite.commit(rows.select(cols.map(col): _*), new Path(path.stripSuffix("/")))
+    log.info(f"kv flush ${path.stripSuffix("/")}: ${c.rows} rows, ${c.bytes} bytes, " +
+      f"1 file, ${c.ms}%.1f ms")
   }
 
   /** The full change-log, healed — feed to [[graft.operators.KvOps]]. */

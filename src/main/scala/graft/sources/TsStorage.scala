@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,11 +15,19 @@ import org.apache.spark.sql.functions._
   * zero custom code — and it keeps working at 100 TB where the reference's
   * in-memory index cannot.
   *
-  * Write path (S1): appends land as new files per partition — Spark's file
-  * sink is the LSM-ish buffer+flush (`timeseries.re:133-148`) without the
-  * mutable buffer. Out-of-order/late data simply lands in its (old) day
-  * partition; readers always see buffer+disk merged because a partition is
-  * just a directory listing (T7).
+  * Write path (S1): the reference absorbs writes in an in-memory buffer,
+  * flushes it to a shard and merges shards later (`timeseries.re:133-148`
+  * flush, `:57-111` merge). Here the engine's write-behind buffer is the
+  * membuf, and [[append]] is the flush: the batch lands as ONE parquet
+  * file — a *flush run* in `<root>_runs/` — written on the driver through
+  * Spark's own Parquet writer with no Spark job ([[LocalWrite]]). Every
+  * read sees the table root and the runs together (T7), so read-your-
+  * writes holds from the flush on. A bounded *fold* ([[foldRuns]]) is the
+  * shard merge: once the runs reach [[FoldRuns]] files or [[FoldBytes]]
+  * bytes, it moves them into the `(series_id, day)` layout with the
+  * clustered partitioned write. Out-of-order/late data simply lands in
+  * its (old) day partition at fold time. [[delete]], [[compact]] and
+  * [[compactFull]] fold first; [[write]] drops the runs.
   *
   * Compaction (S2): the reference merges overlapping shards on flush
   * (`timeseries.re:57-111`); here overlap cannot happen (a row belongs to
@@ -32,23 +40,103 @@ import org.apache.spark.sql.functions._
   *
   * Crash model (the reference gets per-write atomicity from Irmin/git
   * commits, `timeseries.re:431-487`): every mutation here is
-  * write-fully-aside-then-rename-swap, and every entry point — [[read]],
-  * [[delete]], [[compact]] — first runs a recovery sweep that completes or
-  * rolls back any swap a previous process died inside, so no reader ever
-  * acts on the mid-swap state. The swap direction is always decided by
-  * durable evidence: a parked partition rolls FORWARD only when its fully
-  * written rewrite ("twin") exists; a missing table root rolls forward only
-  * when the rewrite carries Spark's `_SUCCESS` commit marker. Single
-  * writer assumed (like the reference's single store process); concurrent
-  * readers are safe — their sweep is repair-only, never deletes the live
-  * siblings an in-flight writer is using, and two readers racing the same
-  * healing rename both succeed (the loser checks the desired end state
-  * instead of failing, [[recoveredRename]]).
+  * write-fully-aside-then-rename, and every entry point — [[read]],
+  * [[append]], [[delete]], [[compact]] — first runs a recovery sweep that
+  * completes or rolls back any swap a previous process died inside, so no
+  * reader ever acts on the mid-swap state.
+  *  - a flush run is written under a hidden `.inprogress` name and
+  *    committed by its rename; a kill before that leaves a hidden file
+  *    no reader lists.
+  *  - a fold stages the runs' rows in `<root>_fold_tmp` and commits by
+  *    renaming `<root>_fold_manifest` into place; the manifest lists each
+  *    staged file and each consumed run. Applying it moves every staged
+  *    file into the root, then deletes the consumed runs, then the
+  *    manifest. Readers and writers both apply a committed manifest
+  *    before they scan: it only adds committed files, then retires runs
+  *    whose rows are already in place, so every row is seen exactly once
+  *    whichever step a kill landed in.
+  *  - the swap direction of a delete or compact is always decided by
+  *    durable evidence: a parked partition rolls FORWARD only when its
+  *    fully written rewrite ("twin") exists; a missing table root rolls
+  *    forward only when the rewrite carries Spark's `_SUCCESS` commit
+  *    marker.
+  * Single writer assumed (like the reference's single store process).
+  * Readers racing a delete or compact are safe — their sweep never
+  * deletes the live siblings an in-flight writer is using, and two
+  * readers racing the same healing rename both succeed (the loser checks
+  * the desired end state instead of failing, [[recoveredRename]]). A fold
+  * retires run files, so it must not overlap a scan: the engine facade
+  * flushes (and so folds) under its flush lock before it reads, and the
+  * wire server takes its write lock for every POST.
   */
 object TsStorage {
 
   private def withDay(ts: DataFrame): DataFrame =
     ts.withColumn("day", date_format(timestamp_millis(col("t")), "yyyy-MM-dd"))
+
+  // the fold bound, in run files or bytes (WriteLayout's 64 MB bucket): a
+  // fold costs about one partitioned Spark write, so 64 runs spread it
+  // thin over the flushes, and a read opens at most 64 small run files
+  private val FoldRuns = 64
+  private val FoldBytes = 64L * 1024 * 1024
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  private def runsDir(root: String): Path = new Path(root + "_runs")
+
+  /** The committed flush runs, oldest name first. Hidden `.inprogress`
+    * files (a run killed before its commit rename) never count.
+    */
+  private def listRuns(fs: FileSystem, root: String): Seq[FileStatus] = {
+    val dir = runsDir(root)
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith(".") && !n.startsWith("_")
+    }.sortBy(_.getPath.getName)
+  }
+
+  private def hasPartitions(fs: FileSystem, root: String): Boolean = {
+    val rootP = new Path(root)
+    fs.exists(rootP) &&
+      fs.listStatus(rootP).exists(_.getPath.getName.startsWith("series_id="))
+  }
+
+  /** True when the table has data partitions or committed flush runs — a
+    * root holding just `_SUCCESS` (every series deleted) is no table.
+    * Callers must [[recover]] first: mid-swap the root is legitimately
+    * absent.
+    */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val root = path.stripSuffix("/")
+    val fs = fsFor(spark, root)
+    hasPartitions(fs, root) || listRuns(fs, root).nonEmpty
+  }
+
+  /** The raw table: the root's partitions ∪ the flush runs, unioned by
+    * name, `day` as its `yyyy-MM-dd` string on both sides (a run row gets
+    * it from [[withDay]], the expression the partitioned write uses). The
+    * runs' schema is one run's footer, read on the driver, so scanning
+    * them adds no schema-inference job. With neither present this is
+    * the plain root read, and fails as a missing table does.
+    */
+  private def scan(spark: SparkSession, fs: FileSystem, root: String): DataFrame = {
+    // partition inference types `day` as DATE (and an all-numeric
+    // `series_id` as a number); pin both back to the directory strings so
+    // the union, collects and path building agree
+    val fromRoot =
+      if (hasPartitions(fs, root))
+        Some(spark.read.parquet(root)
+          .withColumn("series_id", col("series_id").cast("string"))
+          .withColumn("day", col("day").cast("string")))
+      else None
+    val fromRuns = listRuns(fs, root).headOption.map { r =>
+      withDay(spark.read.schema(LocalWrite.footerSchema(spark, r.getPath))
+        .parquet(runsDir(root).toString))
+    }
+    (fromRoot ++ fromRuns).reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .getOrElse(spark.read.parquet(root))
+  }
 
   /** Resolve the filesystem OF THE TABLE PATH — `FileSystem.get(conf)`
     * resolves `fs.defaultFS`, which silently targets the wrong filesystem
@@ -97,6 +185,10 @@ object TsStorage {
     // the fresh data's keys
     fs.delete(new Path(root + "_tombstones"), true)
     fs.delete(new Path(root + "_tombstones_tmp"), true)
+    // ...and so must pending flush runs (a committed fold was applied by
+    // the repair above; its staging leftovers are garbage)
+    fs.delete(runsDir(root), true)
+    fs.delete(new Path(root + "_fold_tmp"), true)
     // cluster by target partition before the partitioned write: without
     // this every one of the P input tasks opens a file in every touched
     // (series, day) dir — P × dirs small files per write, the classic
@@ -109,21 +201,112 @@ object TsStorage {
       .mode(SaveMode.Overwrite).parquet(path)
   }
 
-  /** S1 ingest: append a batch (each micro-batch/file lands per partition).
+  /** S1 ingest, the engine's write-behind flush: commit a driver-local
+    * batch as ONE flush run — one parquet file in `<root>_runs/`, written
+    * with no Spark job ([[LocalWrite]]) — then [[foldRuns]] once the runs
+    * reach the bound. The run keeps the frame's own schema: numeric
+    * `(series_id, t, value, tags, event_id)` or blob `(series_id, t, blob,
+    * event_id)`, no `day` column. A frame whose optimized plan is not a
+    * `LocalRelation` fails with IllegalArgumentException, uncollected.
+    *
     * Appending is an entry point like any other: it must repair a crashed
-    * swap FIRST, or it recreates the missing table root / live partition
-    * dir around the parked rewrite — which the next delete/compact would
-    * then garbage-collect, silently dropping the pre-crash table.
+    * swap FIRST, or a later fold recreates the missing table root / live
+    * partition dir around the parked rewrite — which the next
+    * delete/compact would then garbage-collect, silently dropping the
+    * pre-crash table.
     */
   def append(ts: DataFrame, path: String): Unit = {
-    repair(fsFor(ts.sparkSession, path.stripSuffix("/")), path.stripSuffix("/"),
-      destructive = true)
-    // same clustering as [[write]]: an unclustered flush frame with P
-    // partitions writes P files into every touched (series, day) dir —
-    // per FLUSH, so the write-behind path compounds it fastest
-    WriteLayout.clusterForWrite(withDay(ts), Seq("series_id", "day"), col("t"))
+    val root = path.stripSuffix("/")
+    val spark = ts.sparkSession
+    val fs = fsFor(spark, root)
+    repair(fs, root, destructive = true)
+    val run = LocalWrite.commit(ts, runsDir(root))
+    log.info(f"flush run $root: ${run.rows} rows, ${run.bytes} bytes, 1 file, ${run.ms}%.1f ms")
+    val runs = listRuns(fs, root)
+    if (runs.size >= FoldRuns || runs.map(_.getLen).sum >= FoldBytes)
+      foldRuns(spark, fs, root)
+  }
+
+  /** Test seam: called at each step of a fold — "staged" (rows written
+    * aside), "manifest" (committed), "moved" (after each staged file's
+    * move), "applied" (moves done, runs not yet retired). Specs throw from
+    * it to inject a crash; production leaves it a no-op.
+    */
+  private[graft] var onFoldStep: String => Unit = _ => ()
+
+  /** The shard merge (`timeseries.re:57-111`): stage the runs' rows with
+    * the clustered partitioned write into `<root>_fold_tmp`, commit a
+    * manifest listing each staged file and each consumed run, then
+    * [[applyFold]] it. Callers have run the writer repair, so any
+    * committed fold is already applied and the staging dir is garbage.
+    */
+  private def foldRuns(spark: SparkSession, fs: FileSystem, root: String): Unit = {
+    val staged = new Path(root + "_fold_tmp")
+    fs.delete(staged, true)
+    fs.delete(new Path(root + "_fold_manifest.tmp"), false)
+    val runs = listRuns(fs, root)
+    if (runs.isEmpty) return
+    val t0 = System.nanoTime()
+    val fromRuns = spark.read.schema(LocalWrite.footerSchema(spark, runs.head.getPath))
+      .parquet(runsDir(root).toString)
+    // the exact run files the staging write reads: the set this fold retires
+    val consumed = fromRuns.inputFiles.map(f => new Path(f).getName).toSeq
+    // same clustering as [[write]]: without it every scan task opens a
+    // file in every touched (series, day) dir
+    WriteLayout.clusterForWrite(withDay(fromRuns), Seq("series_id", "day"), col("t"))
       .write.partitionBy("series_id", "day")
-      .mode(SaveMode.Append).parquet(path)
+      .mode(SaveMode.Overwrite).parquet(staged.toString)
+    val files = for {
+      sd <- fs.listStatus(staged).toSeq if sd.getPath.getName.startsWith("series_id=")
+      dd <- fs.listStatus(sd.getPath).toSeq if dd.getPath.getName.startsWith("day=")
+      f <- fs.listStatus(dd.getPath).toSeq if f.getPath.getName.endsWith(".parquet")
+    } yield f
+    def rel(f: FileStatus): String = {
+      val dd = f.getPath.getParent
+      s"${dd.getParent.getName}/${dd.getName}/${f.getPath.getName}"
+    }
+    val rows = files.map(f => LocalWrite.footerRows(spark, f.getPath)).sum
+    onFoldStep("staged")
+    // the staging write's `_SUCCESS` moves too (skipped once the root has
+    // one): a root built by folds carries the commit marker a Spark-written
+    // root does, which a copy of it relies on in swap recovery
+    writeManifest(fs, new Path(root + "_fold_manifest"),
+      (files.map(rel) ++ Seq("_SUCCESS").filter(m => fs.exists(new Path(staged, m))))
+        .map("F\t" + _) ++ consumed.map("R\t" + _))
+    onFoldStep("manifest")
+    applyFold(fs, root)
+    fs.delete(staged, true)
+    log.info(f"fold $root: ${consumed.size} runs (${runs.map(_.getLen).sum} bytes) -> " +
+      f"$rows rows, ${files.map(_.getLen).sum} bytes, ${files.size} files, " +
+      f"${(System.nanoTime() - t0) / 1e6}%.1f ms")
+  }
+
+  /** Apply a committed fold manifest — idempotent, so a crashed fold, the
+    * writer's repair and a reader's repair all run this same routine:
+    * move each staged file into `root/<rel>` (skipped once it is there;
+    * end-state-tolerant against a racing reader), then delete the
+    * consumed runs, then the manifest. Safe in READER mode too: it only
+    * adds committed files, then retires runs whose rows are in place.
+    */
+  private def applyFold(fs: FileSystem, root: String): Unit = {
+    val manifest = new Path(root + "_fold_manifest")
+    if (!fs.exists(manifest)) return
+    val entries = readLines(fs, manifest).map { line =>
+      val i = line.indexOf('\t')
+      (line.substring(0, i), line.substring(i + 1))
+    }
+    entries.collect { case ("F", rel) => rel }.foreach { rel =>
+      val live = new Path(s"$root/$rel")
+      if (!fs.exists(live)) {
+        fs.mkdirs(live.getParent)
+        recoveredRename(fs, new Path(s"${root}_fold_tmp/$rel"), live, "fold (move)")
+      }
+      onFoldStep("moved")
+    }
+    onFoldStep("applied")
+    entries.collect { case ("R", run) => run }
+      .foreach(run => fs.delete(new Path(runsDir(root), run), false))
+    fs.delete(manifest, false)
   }
 
   /** Public WRITER-side recovery entry: heal any crashed swap, completing
@@ -140,7 +323,7 @@ object TsStorage {
     repair(fsFor(spark, root), root, destructive = true)
   }
 
-  /** Read back as the canonical TS frame (partition columns restored).
+  /** Read back as the canonical TS frame: root and flush runs together.
     * `ts_raw` is optional (facade-ingested frames carry only epoch-ms
     * `t`); `blob` covers the blob-series layout, which shares this
     * storage.
@@ -148,16 +331,17 @@ object TsStorage {
     * Runs the NON-DESTRUCTIVE recovery sweep first, so a reader arriving
     * between a mid-swap crash and the next write call sees a healed
     * table with no gaps (round-5 verdict item 3): missing partitions get
-    * their committed rewrites rolled in, but live dirs are never parked
-    * or removed by a reader — that mutation belongs to the single writer
-    * (whose entry points complete a committed delete in full). Cost on a
-    * healthy table: a handful of existence checks, no data I/O.
+    * their committed rewrites rolled in and a committed fold is applied,
+    * but live dirs are never parked or removed by a reader — that
+    * mutation belongs to the single writer (whose entry points complete a
+    * committed delete in full). Cost on a healthy table: a handful of
+    * existence checks, no data I/O.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     val root = path.stripSuffix("/")
     val fs = fsFor(spark, root)
     repair(fs, root, destructive = false)
-    val raw = applyTombstones(spark, root, fs, spark.read.parquet(root))
+    val raw = applyTombstones(spark, root, fs, scan(spark, fs, root))
     val cols = Seq("series_id", "t", "value", "tags", "blob", "event_id", "ts_raw")
       .filter(raw.columns.contains)
     raw.select(cols.map(col): _*)
@@ -213,7 +397,8 @@ object TsStorage {
     * the masked view is a correctness trap: delete the newest rows and a
     * restarted engine reissues an id at-or-below the batch's write
     * horizon, so its next append at a deleted (series, t) key is silently
-    * masked. The raw scan covers doomed rows still on disk; the horizon
+    * masked. The raw scan (root and runs) covers doomed rows still on
+    * disk and ids held only in flush runs; the horizon
     * max covers the window where a fold has dropped the rows but not yet
     * cleared the set. None on a table with no `event_id` column.
     */
@@ -221,7 +406,7 @@ object TsStorage {
     val root = path.stripSuffix("/")
     val fs = fsFor(spark, root)
     repair(fs, root, destructive = false)
-    val raw = spark.read.parquet(root)
+    val raw = scan(spark, fs, root)
     if (!raw.columns.contains("event_id")) return None
     val fromRows = Option(raw.agg(max("event_id")).head().get(0))
       .map(_.asInstanceOf[Long])
@@ -300,15 +485,14 @@ object TsStorage {
     fs.delete(new Path(root + "_delete_manifest.tmp"), true)
     fs.delete(new Path(root + "_compacting"), true)
     fs.delete(new Path(root + "_old"), true)
+    // the rewrite is partition-scoped: pending runs join the layout first
+    foldRuns(spark, fs, root)
 
-    // partition-value inference types `day` as DATE; pin it back to the
-    // directory string so collects and path building stay uniform. The
-    // query and the rewrite run over the LIVE view (tombstones applied),
-    // so a rewrite delete composes exactly with prior tombstone deletes —
-    // and incidentally folds the touched partitions' tombstoned rows.
-    val raw  = applyTombstones(spark, root, fs,
-        spark.read.parquet(root))
-      .withColumn("day", col("day").cast("string"))
+    // the query and the rewrite run over the LIVE view (tombstones
+    // applied), so a rewrite delete composes exactly with prior tombstone
+    // deletes — and incidentally folds the touched partitions' tombstoned
+    // rows
+    val raw  = applyTombstones(spark, root, fs, scan(spark, fs, root))
     val base = TsOps.selectSeries(raw, ids)
     val matchedTs = pred.foldLeft(TsOps.select(raw, ids, sel))(TsOps.tagFilter)
       .select(col("t").as("del_t")).distinct()
@@ -340,7 +524,7 @@ object TsStorage {
     // phase 2 — COMMIT: the manifest records each affected partition's
     // desired end state (escaped dir names, so recovery rebuilds paths
     // verbatim); its create-then-rename is the atomic commit point
-    writeManifest(fs, root, affected.map { case (sid, day) =>
+    writeManifest(fs, new Path(root + "_delete_manifest"), affected.map { case (sid, day) =>
       s"series_id=${esc(sid)}/day=$day\t" +
         (if (survivorParts((sid, day))) "S" else "E")
     })
@@ -395,8 +579,8 @@ object TsStorage {
     repair(fs, root, destructive = true)
     val tombTmp = new Path(root + "_tombstones_tmp")
     fs.delete(tombTmp, true) // leftover of a pre-commit crash: garbage
-    val raw = spark.read.parquet(root)
-      .withColumn("day", col("day").cast("string"))
+    // over root and runs alike, no fold: the batch masks run rows too
+    val raw = scan(spark, fs, root)
     val live = applyTombstones(spark, root, fs, raw)
     val matchedTs = pred.foldLeft(TsOps.select(live, ids, sel))(TsOps.tagFilter)
       .select(col("t").as("del_t")).distinct()
@@ -499,28 +683,32 @@ object TsStorage {
     fs.delete(manifest, true)
   }
 
-  private def writeManifest(fs: FileSystem, root: String, lines: Seq[String]): Unit = {
-    val mTmp = new Path(root + "_delete_manifest.tmp")
+  /** Commit a manifest: write it aside, then rename it into place. */
+  private def writeManifest(fs: FileSystem, manifest: Path, lines: Seq[String]): Unit = {
+    val mTmp = manifest.suffix(".tmp")
     val out = fs.create(mTmp, true)
     try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
-    renamed(fs, mTmp, new Path(root + "_delete_manifest"), "delete manifest commit")
+    renamed(fs, mTmp, manifest, s"${manifest.getName} commit")
   }
 
-  private def readManifest(fs: FileSystem, manifest: Path): Seq[(String, Boolean)] = {
+  private def readLines(fs: FileSystem, manifest: Path): Seq[String] = {
     val bytes =
       try {
         val in = fs.open(manifest)
         try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
       } catch {
-        // a concurrent repair completed the delete and dropped the
+        // a concurrent repair completed the call and dropped the
         // manifest between our exists check and the open — nothing to do
         case _: java.io.FileNotFoundException => return Seq.empty
       }
-    new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty).map { line =>
+    new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
+  }
+
+  private def readManifest(fs: FileSystem, manifest: Path): Seq[(String, Boolean)] =
+    readLines(fs, manifest).map { line =>
       val i = line.lastIndexOf('\t')
       (line.substring(0, i), line.substring(i + 1) == "S")
     }
-  }
 
   /** Recovery sweep: completes (or rolls back) any swap a previous
     * process died inside. Never deletes the tmp/trash siblings themselves
@@ -537,6 +725,8 @@ object TsStorage {
     * WRITER mode (single writer assumed): it additionally executes a
     * committed delete manifest to its end state via [[applyManifest]].
     *
+    *  - a committed fold (both modes): [[applyFold]] moves the staged
+    *    files in and retires the consumed runs.
     *  - compact's whole-table swap (both modes): a missing table root
     *    rolls FORWARD to the rewrite when it carries Spark's `_SUCCESS`
     *    commit marker (the kill landed between the two renames), else
@@ -579,6 +769,9 @@ object TsStorage {
   private def repair(fs: FileSystem, root: String, destructive: Boolean): Unit = {
     // -- compact's whole-table swap -----------------------------------------
     healWholeTableSwap(fs, root, "compact")
+    // -- a committed fold (both modes; after the heal, which needs a
+    // missing root to stay missing) --------------------------------------
+    applyFold(fs, root)
     // -- delete's swap, committed (manifest present) --------------------------
     val dTmp = root + "_delete_tmp"
     val manifest = new Path(root + "_delete_manifest")
@@ -671,6 +864,7 @@ object TsStorage {
     fs.delete(new Path(root + "_tombstones_tmp"), true) // pre-commit garbage
     fs.delete(new Path(root + "_compacting"), true)
     fs.delete(new Path(root + "_old"), true)
+    foldRuns(spark, fs, root)
     val rootP = new Path(root)
     if (!fs.exists(rootP)) return
 
@@ -726,7 +920,7 @@ object TsStorage {
     onBeforeSwap()
 
     // -- phase 2: COMMIT, then the shared idempotent swap -------------------
-    writeManifest(fs, root, targets.map { rel =>
+    writeManifest(fs, new Path(root + "_delete_manifest"), targets.map { rel =>
       s"$rel\t" + (if (survivorRels(rel)) "S" else "E")
     })
     onAfterManifest()
@@ -755,6 +949,7 @@ object TsStorage {
     fs.delete(new Path(root + "_delete_old"), true)
     fs.delete(new Path(root + "_delete_tmp"), true)
     fs.delete(new Path(root + "_tombstones_tmp"), true) // pre-commit garbage
+    foldRuns(spark, fs, root)
     val whole = spark.read.parquet(root)
     // fold the tombstone set into the rewrite — after the swap the rows
     // are physically gone and the set is cleared (merge-on-read ends here)

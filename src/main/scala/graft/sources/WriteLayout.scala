@@ -94,7 +94,7 @@ object WriteLayout {
   }
 
   /** Bound an UNPARTITIONED batch write's file count. Narrow inputs
-    * (change-log flush buffers, scans) take a shuffle-free `coalesce` —
+    * (scans, local frames) take a shuffle-free `coalesce` —
     * a no-op when already within the bound. Wide inputs (tombstone sets
     * computed by a join) keep the `repartition`: a coalesce there would
     * collapse the whole final COMPUTE stage to the file-count width

@@ -64,7 +64,10 @@ class EndToEndIngestSpec extends AnyFunSuite with SparkTestBase {
     assert(e.post("/ts/blob/cam/at/2000", """{"frame": "b"}""").isRight)
     assert(e.post("/ts/blob/cam/at/3000", """{"frame": "c"}""").isRight)
     assert(e.post("/ts/blob/mic/at/1500", """{"pcm": "x"}""").isRight)
-    assert(new java.io.File(s"$dir/table_blob/series_id=cam").exists())
+    // one flush run per POST (flushEveryRows = 1), none in the numeric table
+    assert(new java.io.File(s"$dir/table_blob_runs").listFiles
+      .count(_.getName.endsWith(".parquet")) === 4)
+    assert(!new java.io.File(s"$dir/table_runs").exists())
     assert(e.get("/ts/blob/cam/length") === """{"length": 3}""")
     assert(e.get("/ts/blob/cam/latest") ===
       """[{"timestamp": 3000, "data": {"frame": "c"}}]""")

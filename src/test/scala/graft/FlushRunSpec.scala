@@ -1,0 +1,226 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.TimeRange
+import graft.sources.{KvStorage, TsStorage}
+
+/** The S1 write path: an engine flush lands as one flush run with no
+  * Spark job, reads see root ∪ runs, and a bounded fold moves the runs
+  * into the `(series_id, day)` layout crash-atomically.
+  */
+class FlushRunSpec extends AnyFunSuite with SparkTestBase {
+
+  private def freshDir(): String =
+    Files.createTempDirectory("graft-runs-spec").toFile.getAbsolutePath + "/ts"
+
+  private def runFiles(root: String): Seq[java.io.File] =
+    Option(new java.io.File(root + "_runs").listFiles).toSeq.flatten
+      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+
+  private def hasPartitions(root: String): Boolean =
+    Option(new java.io.File(root).listFiles).toSeq.flatten
+      .exists(_.getName.startsWith("series_id="))
+
+  private val day0 = 1704067200000L
+
+  /** 12 rows over two series and two days, as `n` driver-local batches. */
+  private def batches(n: Int): Seq[org.apache.spark.sql.DataFrame] = {
+    val rows = for (i <- 0 until 12) yield
+      (if (i % 2 == 0) "a" else "b", day0 + (i % 3) * 43200000L + i,
+        i.toDouble, Map("k" -> s"v${i % 3}"), i.toLong + 1)
+    rows.grouped(math.ceil(12.0 / n).toInt).map(tsFrame).toSeq
+  }
+
+  private def ids(root: String): Seq[Long] =
+    TsStorage.read(spark, root).select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+
+  test("a run and a Spark-written file of the same rows read back equal") {
+    val s = spark
+    import s.implicits._
+    val numeric = Seq(
+      ("a", 1000L, 1.5, Map("k" -> "v", "x" -> "y"), 1L),
+      ("b", 2000L, -2.0, Map.empty[String, String], 2L),
+      ("a", 3000L, 0.0, Map("k" -> "w"), 3L)).toDF("series_id", "t", "value", "tags", "event_id")
+    val blob = Seq(("cam", 1000L, """{"f": "a"}""", 7L), ("cam", 2000L, "[]", 8L))
+      .toDF("series_id", "t", "blob", "event_id")
+    for ((df, name) <- Seq(numeric -> "numeric", blob -> "blob")) {
+      val root = freshDir()
+      TsStorage.append(df, root)
+      val run = runFiles(root)
+      assert(run.size === 1, name)
+      val sparkDir = root + "_spark"
+      df.coalesce(1).write.parquet(sparkDir)
+      val a = spark.read.parquet(run.head.getAbsolutePath)
+      val b = spark.read.parquet(sparkDir)
+      assert(a.schema === b.schema, name)
+      assert(a.collect().map(_.toString).sorted === b.collect().map(_.toString).sorted, name)
+      // the footers carry the same Spark row metadata
+      def meta(f: String) = {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration))
+        try r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")
+        finally r.close()
+      }
+      val sparkFile = new java.io.File(sparkDir).listFiles
+        .find(_.getName.endsWith(".parquet")).get
+      assert(meta(run.head.getAbsolutePath) === meta(sparkFile.getAbsolutePath), name)
+    }
+  }
+
+  test("append and KV append reject a distributed frame without a side effect") {
+    val root = freshDir()
+    val distributed = spark.range(3).select(col("id").cast("string").as("series_id"),
+      col("id").as("t"), col("id").cast("double").as("value"), col("id").as("event_id"))
+    intercept[IllegalArgumentException](TsStorage.append(distributed, root))
+    assert(!new java.io.File(root + "_runs").exists())
+    intercept[IllegalArgumentException](KvStorage.append(spark.range(3).select(
+      col("id").cast("string").as("id"), col("id").cast("string").as("key"),
+      col("id").cast("string").as("value"), col("id").as("write_ts"),
+      col("id").as("event_id"), (col("id") < 0).as("deleted")), root + "_kv"))
+    assert(!new java.io.File(root + "_kv").exists())
+  }
+
+  test("an engine flush of each table and of a KV store runs no Spark job") {
+    val root = freshDir()
+    var now = 1700000000000L
+    val e = new GraftEngine(spark, () => { now += 1; now }, tsStoragePath = Some(root),
+      flushEveryRows = 1000)
+    // prime class loading and the stores' directories outside the count
+    e.post("/ts/s/at/1", """{"value": 1}"""); e.post("/ts/blob/b/at/1", """{"x": 1}""")
+    e.kvWrite("json", "d", "k", """{"v": 0}"""); e.flush()
+    assert(e.post("/ts/s/at/2", """{"value": 2, "k": "v"}""").isRight)
+    e.post("/ts/blob/b/at/2", """{"x": 2}""")
+    e.kvWrite("json", "d", "k", """{"v": 1}""")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(p => p.getProperty("spark.job.description") == "fence"))
+          fence.countDown()
+        else jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      e.flush()
+      // the listener bus is FIFO: once the fence job's start arrives,
+      // every job the flush could have started has been counted
+      spark.sparkContext.setJobDescription("fence")
+      spark.range(1).count()
+      spark.sparkContext.setJobDescription(null)
+      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get() === 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(runFiles(root).size === 2 && runFiles(root + "_blob").size === 2)
+    assert(e.get("/ts/s/length") === """{"length": 2}""")
+    assert(e.kvRead("json", "d", "k") === """{"v": 1}""")
+  }
+
+  test("flushEveryRows = 1 folds at the 64-run bound; reads are unchanged by the fold") {
+    val root = freshDir()
+    var now = 1700000000000L
+    val e = new GraftEngine(spark, () => { now += 1; now }, tsStoragePath = Some(root))
+    for (i <- 0 until 63) {
+      val tag = if (i % 3 == 0) "hot" else "cold"
+      assert(e.post(s"/ts/${if (i % 2 == 0) "a" else "b"}/at/${day0 + i * 3600000L}",
+        s"""{"value": $i, "room": "$tag"}""").isRight)
+    }
+    val paths = Seq("/ts/a,b/length", "/ts/a/latest", "/ts/b/latest",
+      "/ts/a,b/since/0/mean", "/ts/a,b/since/0/filter/room/equals/hot/count")
+    assert(runFiles(root).size === 63 && !hasPartitions(root))
+    val before = paths.map(e.get(_))
+    // the 64th run reaches the bound: this flush folds
+    e.post(s"/ts/z/at/$day0", """{"value": 99}""")
+    assert(runFiles(root).isEmpty && hasPartitions(root))
+    assert(!new java.io.File(root + "_fold_manifest").exists())
+    assert(!new java.io.File(root + "_fold_tmp").exists())
+    assert(paths.map(e.get(_)) === before)
+    assert(before.head === """{"length": 63}""")
+    assert(e.get("/ts/z/length") === """{"length": 1}""")
+    // and a run written after the fold reads together with the layout
+    e.post(s"/ts/a/at/${day0 + 999L}", """{"value": -1}""")
+    assert(e.get("/ts/a,b/length") === """{"length": 64}""")
+  }
+
+  test("a crash at each fold step recovers every row exactly once, reader or writer") {
+    val steps = Seq("staged", "manifest", "moved", "applied")
+    for (step <- steps; reader <- Seq(true, false)) {
+      val root = freshDir()
+      batches(6).foreach(TsStorage.append(_, root))
+      val expected = ids(root)
+      assert(expected === (1L to 12L))
+      TsStorage.onFoldStep = s => if (s == step) throw new RuntimeException(s"kill@$s")
+      try {
+        val e = intercept[RuntimeException](TsStorage.compact(spark, root))
+        assert(e.getMessage === s"kill@$step")
+      } finally TsStorage.onFoldStep = _ => ()
+      val what = s"$step/${if (reader) "reader" else "writer"}"
+      if (step == "moved")
+        assert(new java.io.File(root + "_fold_manifest").exists() && hasPartitions(root), what)
+      if (reader) assert(ids(root) === expected, what)
+      else {
+        TsStorage.recover(spark, root)
+        assert(ids(root) === expected, what)
+      }
+      // a committed fold is complete after recovery; an uncommitted one
+      // left its runs in place, and the next fold finishes the job
+      if (step != "staged") assert(runFiles(root).isEmpty, what)
+      TsStorage.compact(spark, root)
+      assert(ids(root) === expected, what)
+      assert(runFiles(root).isEmpty && !new java.io.File(root + "_fold_tmp").exists(), what)
+    }
+  }
+
+  test("a merge-on-read tombstone masks a run row; a later append at its key shows") {
+    val root = freshDir()
+    batches(3).foreach(TsStorage.append(_, root))
+    assert(!hasPartitions(root))
+    val doomed = TsStorage.read(spark, root).filter(col("series_id") === "a")
+      .orderBy("t").head()
+    val t = doomed.getAs[Long]("t")
+    TsStorage.tombstoneDelete(spark, root, Seq("a"), TimeRange(t, t), None)
+    assert(TsStorage.read(spark, root).filter(col("t") === t).count() === 0L)
+    assert(ids(root).size === 11)
+    TsStorage.append(tsFrame(Seq(("a", t, 42.0, Map.empty[String, String], 100L))), root)
+    val back = TsStorage.read(spark, root).filter(col("t") === t)
+      .select("value", "event_id").collect().map(r => (r.getDouble(0), r.getLong(1)))
+    assert(back.toSeq === Seq((42.0, 100L)))
+    // the fold keeps that view
+    TsStorage.compact(spark, root)
+    assert(runFiles(root).isEmpty && ids(root).size === 12)
+    assert(TsStorage.read(spark, root).filter(col("t") === t)
+      .select("value").collect().map(_.getDouble(0)).toSeq === Seq(42.0))
+  }
+
+  test("a restarted engine resumes event ids past ids held only in runs") {
+    val root = freshDir()
+    var now = 1700000000000L
+    val clock = () => { now += 1; now }
+    val e1 = new GraftEngine(spark, clock, tsStoragePath = Some(root))
+    for (i <- 1 to 3) e1.post(s"/ts/s/at/${i * 1000}", s"""{"value": $i}""")
+    assert(runFiles(root).size === 3 && !hasPartitions(root))
+    assert(TsStorage.exists(spark, root))
+    val e2 = new GraftEngine(spark, clock, tsStoragePath = Some(root))
+    e2.post("/ts/s/at/4000", """{"value": 4}""")
+    assert(ids(root) === Seq(1L, 2L, 3L, 4L))
+    assert(e2.get("/ts/s/length") === """{"length": 4}""")
+  }
+
+  test("exists: data partitions or committed runs; a hidden in-progress run never counts") {
+    val root = freshDir()
+    assert(!TsStorage.exists(spark, root))
+    val runs = new java.io.File(root + "_runs")
+    assert(runs.mkdirs())
+    assert(new java.io.File(runs, ".part-0.parquet.inprogress").createNewFile())
+    assert(!TsStorage.exists(spark, root))
+    TsStorage.append(batches(1).head, root)
+    assert(TsStorage.exists(spark, root))
+    assert(ids(root).size === 12)
+  }
+}

@@ -9,8 +9,11 @@ import graft.sources.TsStorage
 
 class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
 
+  // wiped per run: a table's sibling dirs (`_runs`, `_tombstones`, ...)
+  // outlive the per-test delete of its root
   private lazy val tmpRoot = {
     val p = new java.io.File("target/tmp-storage")
+    org.apache.commons.io.FileUtils.deleteQuietly(p)
     p.mkdirs()
     p.getAbsolutePath
   }
@@ -37,7 +40,10 @@ class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
     val ts = TsModel.ts(spark, "/root/testdata/sf0.001")
     val path = s"$tmpRoot/ts_append"
     TsStorage.write(ts, path)
-    TsStorage.append(ts.limit(50), path)
+    // append takes a driver-local frame (the engine's flush buffer shape)
+    val extra = ts.limit(50)
+    TsStorage.append(spark.createDataFrame(
+      java.util.Arrays.asList(extra.collect(): _*), extra.schema), path)
     assert(TsStorage.read(spark, path).count() === ts.count() + 50)
     TsStorage.compact(spark, path)
     assert(TsStorage.read(spark, path).count() === ts.count() + 50)
@@ -541,7 +547,7 @@ class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
       .withColumn("event_id", col("event_id") + 1)
     val extraRows = extra.collect() // materialize before the files move
     val extraDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(extraRows.toSeq), extra.schema)
+      java.util.Arrays.asList(extraRows: _*), extra.schema)
     // crash state: the whole table sits in the committed rewrite (root
     // missing). An append that did NOT heal first would create a root
     // holding only the new row — and the next compact would then GC the
@@ -564,10 +570,13 @@ class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
     assert(e.post("/ts/s/at/1000", """{"value": 1}""").isRight)
     assert(e.post("/ts/s/at/2000", """{"value": 2}""").isRight)
     assert(e.post("/ts/s/at/3000", """{"value": 3}""").isRight)
-    assert(!new java.io.File(path).exists())
-    // reads flush first: read-your-writes holds across the buffer
+    def runs() = Option(new java.io.File(s"${path}_runs").listFiles).toSeq.flatten
+      .count(_.getName.endsWith(".parquet"))
+    assert(!new java.io.File(path).exists() && runs() === 0)
+    // reads flush first: read-your-writes holds across the buffer; the
+    // flush lands as one run file (the layout comes with the fold)
     assert(e.get("/ts/s/length") === """{"length": 3}""")
-    assert(new java.io.File(path).exists())
+    assert(runs() === 1)
     assert(e.post("/ts/s/at/4000", """{"value": 4}""").isRight)
     assert(e.post("/ts/s/at/5000", """{"value": 5}""").isRight) // pending
     // blob writes ride the same write-behind; their reads flush too
