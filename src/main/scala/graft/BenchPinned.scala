@@ -96,8 +96,8 @@ object BenchPinned {
     * graph wedge family, a text scorer, an ANN index path, a TS aggregate
     * and an events window — one per cost regime the round bench covers.
     * Round 11 widened coverage to the regimes the r10 drift questions
-    * actually landed in: a full storage round trip (write + tombstone
-    * delete + masked read), the stored bucketed graph layout, real
+    * actually landed in: a full storage round trip (write + partition
+    * rewrite delete + read), the stored bucketed graph layout, real
     * multimodal codec work, a streaming batch replay, the BPE replace
     * chain, and three of r10's same-code drift outliers
     * (ts_trend_robust / events_interval_join / mm_gif_frames).
@@ -105,7 +105,7 @@ object BenchPinned {
   private val gates = Seq("dedup_minhash", "dedup_canonical",
     "dedup_components", "dedup_jaccard", "graph_fof", "graph_linkpred",
     "text_bm25", "ann_ivf", "ts_agg_median", "user_transitions",
-    "ts_delete_tombstone", "graph_edges_indexed", "mm_gif_frames",
+    "ts_storage_delete", "graph_edges_indexed", "mm_gif_frames",
     "stream_sessionize_replay", "text_bpe_compression", "ts_trend_robust",
     "events_interval_join",
     // r12: the coded-index lifecycle (build + delete + masked search +

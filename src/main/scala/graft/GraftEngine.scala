@@ -30,13 +30,6 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
                   tokenSecretKey: Option[String] = None,
                   identity: String = "graft.local",
                   flushEveryRows: Int = 1,
-                  // merge-on-read deletes: S6 lands as a tombstone batch
-                  // (O(matched keys), one-rename commit) instead of the
-                  // partition rewrite; the next facade compact() folds it.
-                  // The 100 TB default for delete-heavy tables — semantics
-                  // identical (both gates share one oracle), write-horizon
-                  // keeps later appends at deleted keys visible.
-                  mergeOnReadDeletes: Boolean = false,
                   // bounded-result contract: a GET whose selection exceeds
                   // this many rows fails with a clean 143-style error
                   // instead of building an unbounded response on the
@@ -68,12 +61,8 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
   // durable mode: resume the event-id sequence from BOTH tables, otherwise
   // a restarted engine would reissue ids and break the event_id tie order
   // every read/top-n relies on. Recovery runs BEFORE the existence check:
-  // after a crashed compact the root is legitimately missing until the
-  // rewrite rolls in, and skipping the table here would reissue ids.
-  // resume from the UNMASKED high-water mark (raw rows + tombstone
-  // horizons): resuming from the masked view reissues ids at-or-below a
-  // delete's write horizon, silently masking the next append at a
-  // deleted key (Round11OpsSpec pins the scenario)
+  // after a crashed delete or compact a parked partition is missing until
+  // its rewrite rolls in, and skipping the table here would reissue ids
   (tsStoragePath.toSeq ++ blobStoragePath.toSeq).foreach { p =>
     graft.sources.TsStorage.recover(spark, p)
     if (graft.sources.TsStorage.exists(spark, p))
@@ -165,8 +154,9 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
   def compact(maxFilesPerPartition: Int = 1): Unit = {
     flush()
     (tsStoragePath.toSeq ++ blobStoragePath.toSeq).foreach { p =>
-      // recover first: a crashed compact's table root is missing until the
-      // rewrite rolls in, and this sweep must heal it, not skip it
+      // recover first: a crashed delete or compact's parked partition is
+      // missing until its rewrite rolls in, and this sweep must heal it,
+      // not skip it
       graft.sources.TsStorage.recover(spark, p)
       if (graft.sources.TsStorage.exists(spark, p))
         graft.sources.TsStorage.compact(spark, p, maxFilesPerPartition)
@@ -481,18 +471,6 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
     sb.append("]").toString
   }
 
-  // the configured S6 storage path: partition rewrite (default) or
-  // merge-on-read tombstone — semantics identical, cost model differs
-  private def storageDelete(p: String, q: graft.zestql.TsQuery): Unit =
-    if (mergeOnReadDeletes)
-      // the facade IS the single writer and has flushed, so its id
-      // sequence equals the table's high-water mark — the write horizon
-      // comes for free instead of costing a column scan per delete
-      graft.sources.TsStorage.tombstoneDelete(spark, p, q.ids, q.selector,
-        q.filter, knownHorizon = Some(nextEventId))
-    else
-      graft.sources.TsStorage.delete(spark, p, q.ids, q.selector, q.filter)
-
   /** DELETE on a TS path (S6 semantics incl. same-timestamp bystanders) or
     * a KV path (tombstone).
     */
@@ -518,7 +496,8 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
               // compact makes this delete a silent no-op
               flushBlob()
               graft.sources.TsStorage.recover(spark, p)
-              if (graft.sources.TsStorage.exists(spark, p)) storageDelete(p, q)
+              if (graft.sources.TsStorage.exists(spark, p))
+                graft.sources.TsStorage.delete(spark, p, q.ids, q.selector, q.filter)
             case None =>
               val remaining = TsOps.deleteByQuery(blobFrame, q.ids, q.selector, q.filter)
                 .collect().map(r => BlobRow(r.getAs[String]("series_id"), r.getAs[Long]("t"),
@@ -532,7 +511,8 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
               // crash; recovery precedes the existence check (see blob)
               flushNumeric()
               graft.sources.TsStorage.recover(spark, p)
-              if (graft.sources.TsStorage.exists(spark, p)) storageDelete(p, q)
+              if (graft.sources.TsStorage.exists(spark, p))
+                graft.sources.TsStorage.delete(spark, p, q.ids, q.selector, q.filter)
             case None =>
               val remaining = TsOps.deleteByQuery(tsFrame, q.ids, q.selector, q.filter)
                 .collect().map(r => TsRow(r.getAs[String]("series_id"), r.getAs[Long]("t"),

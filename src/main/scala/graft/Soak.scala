@@ -21,7 +21,6 @@ object Soak {
     if (args.contains("fof")) { fofSoak(spark); spark.stop(); return }
     if (args.contains("gidx")) { gidxSoak(spark); spark.stop(); return }
     if (args.contains("prank")) { prankSoak(spark); spark.stop(); return }
-    if (args.contains("tomb")) { tombSoak(spark); spark.stop(); return }
     if (args.contains("ivfdel")) { ivfdelSoak(spark); spark.stop(); return }
     if (args.contains("wire")) { wireSoak(spark); spark.stop(); return }
     if (args.contains("kvserve")) { kvserveSoak(spark); spark.stop(); return }
@@ -1151,67 +1150,6 @@ object Soak {
     println(f"  amortized       ${(runMs.sum + foldMs.sum) / flushes}%.1f ms per flush")
     println(f"  control write   median ${med(ctlMs.toSeq)}%.1f ms " +
       f"(clustered partitioned Spark write of the same 64 rows)")
-  }
-
-  /** Tombstone delete vs partition-rewrite delete at 10M rows: the same
-    * 5-day range delete through both S6 paths on twin copies of the
-    * inflated table, plus the merge-on-read tax (read with the tombstone
-    * set live) and the compact fold. The claim under test: the tombstone
-    * write costs O(matched keys) no matter how many resident rows the
-    * touched partitions hold, while the rewrite pays for every resident
-    * row — results hash-equal (checksummed).
-    */
-  private def tombSoak(spark: SparkSession): Unit = {
-    def time(tag: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"$tag: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-    }
-    import graft.sources.TsStorage
-    val ts0 = TsModel.ts(spark, "/root/testdata/sf0.1").drop("ts_raw")
-    val big = ts0.crossJoin(spark.range(100).select(col("id").as("rep")))
-      .select(col("series_id"), (col("t") + col("rep")).as("t"), col("value"),
-        col("tags"), (col("event_id") * 100 + col("rep")).as("event_id"))
-      .repartition(64).cache()
-    println(s"tomb soak rows: ${big.count()}")
-    val pA = new java.io.File("target/tmp-soak-tomb-rewrite").getAbsolutePath
-    val pB = new java.io.File("target/tmp-soak-tomb-mor").getAbsolutePath
-    for (p <- Seq(pA, pB)) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-      TsStorage.write(big, p)
-    }
-    big.unpersist()
-    val range = graft.operators.TimeRange(1704844800000L, 1705276800000L)
-    time("rewrite delete   10M, 1 series x 5 days")(
-      { TsStorage.delete(spark, pA, Seq("error"), range, None); 1L })
-    time("tombstone delete 10M, 1 series x 5 days")(
-      { TsStorage.tombstoneDelete(spark, pB, Seq("error"), range, None); 1L })
-    def ck(p: String): (Long, Long) = {
-      val r = TsStorage.read(spark, p)
-        .agg(count(lit(1)), sum(pmod(col("event_id") + col("t"), lit(1000000007L))))
-        .head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var a = (0L, 0L); var b = (0L, 0L)
-    time("read after rewrite (no mask)")({ a = ck(pA); 1L })
-    time("read under tombstone mask (merge-on-read tax)")({ b = ck(pB); 1L })
-    println(s"  views equal: ${a == b}")
-    // twin pre-fold state: incremental (partition-scoped) fold vs the
-    // forced whole-table rewrite — the r10 verdict's amortization claim
-    val pC = new java.io.File("target/tmp-soak-tomb-full").getAbsolutePath
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(pC))
-    org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(pB), new java.io.File(pC))
-    org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(pB + "_tombstones"), new java.io.File(pC + "_tombstones"))
-    time("compact fold INCREMENTAL (tombstoned partitions only)")(
-      { TsStorage.compact(spark, pB, maxFilesPerPartition = 4); 1L })
-    time("compact fold FULL     (whole-table rewrite)")(
-      { TsStorage.compactFull(spark, pC, maxFilesPerPartition = 4); 1L })
-    time("read after incremental fold")({ b = ck(pB); 1L })
-    println(s"  views equal after fold: ${a == b}")
-    var c = (0L, 0L)
-    time("read after full fold")({ c = ck(pC); 1L })
-    println(s"  full-fold view equal: ${a == c}")
   }
 
   /** PageRank past broadcast-V: a 1M-node, 5M-edge synthetic directed

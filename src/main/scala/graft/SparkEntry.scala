@@ -114,16 +114,51 @@ object SparkEntry {
       .agg(round(max(col("value")), 4).as("result"))
   }
 
+  /** A gate's scratch directory,
+    * `<java.io.tmpdir>/graft-gate-<tag>-<pid>_<sf>`, wiped before use.
+    * Keyed by the JVM and the dataset, so a concurrent Verify and Bench,
+    * or two datasets in one run, never share one. A storage table goes
+    * one level down (`<dir>/table`), so its sibling dirs (`_runs`,
+    * `_blob`, `_kv_*`, ...) are wiped with it.
+    */
+  private def scratchDir(tag: String, d: String): String = {
+    val dir = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft-gate-$tag-${ProcessHandle.current().pid()}_" +
+        d.replaceAll("[^a-zA-Z0-9]", "_"))
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    dir.getAbsolutePath
+  }
+
+  /** ts_compact_incremental's storage steps; returns the table path. The
+    * table is stored in the small-files state a compact exists for: each
+    * "error" partition split over up to 8 files (a `TsStorage.write`
+    * would bound it to its salt width), every other partition in one.
+    * Then the rewrite delete, then a compact to at most 4 files per
+    * partition; `onBeforeSwap` is the compact's hook, reached only when
+    * it rewrites at least one partition.
+    */
+  private[graft] def compactIncremental(s: SparkSession, d: String,
+                                        onBeforeSwap: () => Unit = () => ()): String = {
+    val dir = scratchDir("cinc", d) + "/table"
+    graft.sources.TsStorage.withDay(ts(s, d))
+      .repartition(8, col("series_id"), col("day"),
+        when(col("series_id") === "error", pmod(col("event_id"), lit(8L)))
+          .otherwise(lit(0L)))
+      .write.partitionBy("series_id", "day").parquet(dir)
+    graft.sources.TsStorage.delete(s, dir, Seq("error"),
+      TimeRange(R_FROM, R_TO), Some(TagContains("k", "5")))
+    graft.sources.TsStorage.compact(s, dir, maxFilesPerPartition = 4,
+      onBeforeSwap = onBeforeSwap)
+    dir
+  }
+
   /** The wire-ingest gates' body: the first `n` events POSTed over the
     * binary port (CURVE or NULL), then the stored per-series census.
     */
   private def wireIngest(s: SparkSession, d: String, tag: String, n: Int,
                          curve: Boolean): DataFrame = {
     import graft.server.{SecureChannel, ZestCodec, ZestWireServer, ZmtpClient}
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-gate-$tag-${ProcessHandle.current().pid()}_" +
-        d.replaceAll("[^a-zA-Z0-9]", "_")).getAbsolutePath
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = scratchDir(tag, d) + "/table"
     val key = s"gate-$tag-key"
     val engine = new GraftEngine(s, tsStoragePath = Some(dir),
       tokenSecretKey = Some(key), flushEveryRows = 512)
@@ -211,9 +246,7 @@ object SparkEntry {
     // just the in-memory operator. (Write+delete side effects run eagerly
     // when the closure is invoked; the returned frame reads the result.)
     "ts_storage_delete" -> ((s, d) => {
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-gate-sdel-" + d.replaceAll("[^a-zA-Z0-9]", "_")).getAbsolutePath
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      val dir = scratchDir("sdel", d) + "/table"
       graft.sources.TsStorage.write(ts(s, d), dir)
       graft.sources.TsStorage.delete(s, dir, Seq("error"),
         TimeRange(R_FROM, R_TO), Some(TagContains("k", "5")))
@@ -221,48 +254,16 @@ object SparkEntry {
         .filter(col("series_id") === "error")
         .select(outCols: _*)
     }),
-    // The MERGE-ON-READ S6 path under the same oracle: instead of
-    // rewriting whole (series, day) partitions — the expensive path when
-    // a small delete touches a 100 TB table — append the doomed key set
-    // as a tombstone batch (commit = one rename) and let read anti-join
-    // it. The gate hashes the MASKED view (the new semantics); the
-    // compact fold that clears the set is pinned view-equal and
-    // crash-safe in StorageAndSqlSpec (a full-table rewrite inside the
-    // gate would bench the compactor, not the delete).
-    "ts_delete_tombstone" -> ((s, d) => {
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-gate-tdel-" + d.replaceAll("[^a-zA-Z0-9]", "_")).getAbsolutePath
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      graft.sources.TsStorage.write(ts(s, d), dir)
-      graft.sources.TsStorage.tombstoneDelete(s, dir, Seq("error"),
-        TimeRange(R_FROM, R_TO), Some(TagContains("k", "5")))
-      graft.sources.TsStorage.read(s, dir)
-        .filter(col("series_id") === "error")
-        .select(outCols: _*)
-    }),
     // Partition-scoped INCREMENTAL compaction under the same oracle: the
-    // tombstone delete, then the compact that folds it physically — but
-    // rewrites ONLY partitions holding tombstoned keys or excess files
-    // (the nightly-compact cost model at 100 TB: touched fraction, never
-    // a full-table pass; untouched partitions stay byte-identical,
-    // Round11OpsSpec pins the bytes). Green iff the folded table equals
-    // the masked view equals the rewrite delete — all three S6 paths on
-    // one oracle.
-    "ts_compact_incremental" -> ((s, d) => {
-      // pid-keyed like ann_ivf_delete: two JVMs on the same dataset
-      // (Verify ∥ Bench) must not race on one scratch table
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-gate-cinc-" + s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^a-zA-Z0-9]", "_")).getAbsolutePath
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      graft.sources.TsStorage.write(ts(s, d), dir)
-      graft.sources.TsStorage.tombstoneDelete(s, dir, Seq("error"),
-        TimeRange(R_FROM, R_TO), Some(TagContains("k", "5")))
-      graft.sources.TsStorage.compact(s, dir, maxFilesPerPartition = 4)
-      graft.sources.TsStorage.read(s, dir)
+    // rewrite delete, then a compact that rewrites ONLY partitions over
+    // the file bound (the nightly-compact cost model at 100 TB: touched
+    // fraction, never a full-table pass; untouched partitions stay
+    // byte-identical, Round11OpsSpec pins the bytes). Green iff the
+    // compacted table equals the rewrite delete's view.
+    "ts_compact_incremental" -> ((s, d) =>
+      graft.sources.TsStorage.read(s, compactIncremental(s, d))
         .filter(col("series_id") === "error")
-        .select(outCols: _*)
-    }),
+        .select(outCols: _*)),
     "ts_blob_last" -> ((s, d) =>
       TsOps.select(TsModel.tsBlob(s, d), Seq("purchase", "signup"), LastN(5))
         .select("series_id", "t", "blob", "event_id")),
@@ -273,9 +274,7 @@ object SparkEntry {
     // to the stored micros, values, tag extraction, event ids). Green iff
     // the text round trip is lossless.
     "wire_ingest" -> ((s, d) => {
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-gate-wire-" + d.replaceAll("[^a-zA-Z0-9]", "_")).getAbsolutePath
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      val dir = scratchDir("wire", d)
       graft.sources.EventSources.writeJson(Tables.events(s, d), dir)
       TsModel.fromEvents(graft.sources.EventSources.readJson(s, dir))
         .groupBy("series_id")
@@ -520,10 +519,7 @@ object SparkEntry {
     // persists all three stores in its Irmin repo, keyvalue.re:4,46,88;
     // memory-only KV was the r12 verdict's lead gap).
     "kv_durable_restart" -> ((s, d) => {
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-gate-kvdur-" + s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^a-zA-Z0-9]", "_")).getAbsolutePath
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      val dir = scratchDir("kvdur", d) + "/table"
       val rows = graft.model.KvModel.changeLog(s, d)
         .filter(col("event_id") < 800)
         .orderBy("write_ts", "event_id").collect()
@@ -1299,11 +1295,8 @@ object SparkEntry {
     // partitions. Oracle = the ann_rerank replay with the doomed ids
     // excluded by predicate.
     "ann_rerank_indexed" -> ((s, d) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_rrk_index_" +
-        s"${ProcessHandle.current().pid()}_${d.hashCode & 0x7fffffff}"
-      val (coded, raw) = (base + "_pq", base + "_raw")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(coded))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(raw))
+      val base = scratchDir("rrk", d)
+      val (coded, raw) = (base + "/pq", base + "/raw")
       val emb = Tables.embeddings(s, d).filter(col("vec_id") < 500)
       Similarity.writePqIndex(emb, coded, m = 8, k = 16)
       Similarity.writeIvfIndex(emb, raw)
@@ -1340,10 +1333,7 @@ object SparkEntry {
     // exported cell/probe literals; what this gate adds is the
     // write -> partition-pruned read round trip.
     "ann_ivf_indexed" -> ((s, d) => {
-      // pid-scoped path: two concurrent JVMs over the same fixture must not
-      // overwrite each other's index mid-probe (& mask: abs(MinValue) < 0)
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_" +
-        s"${ProcessHandle.current().pid()}_${d.hashCode & 0x7fffffff}"
+      val idx = scratchDir("ivf", d)
       Similarity.writeIvfIndex(Tables.embeddings(s, d), idx)
       val q = Tables.embeddings(s, d).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding"))
@@ -1358,9 +1348,7 @@ object SparkEntry {
     // probes with the doomed ids excluded by predicate: masked search ==
     // folded search == retained-corpus truth.
     "ann_ivf_delete" -> ((s, d) => {
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivfd_index_" +
-        s"${ProcessHandle.current().pid()}_${d.hashCode & 0x7fffffff}"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
+      val idx = scratchDir("ivfd", d)
       val emb = Tables.embeddings(s, d)
       Similarity.writeIvfIndex(emb, idx)
       Similarity.deleteFromIvf(s, idx,
@@ -1387,9 +1375,7 @@ object SparkEntry {
     // with the doomed ids excluded by predicate; masked == folded rides
     // the exceptAll guard.
     "ann_pq_delete" -> ((s, d) => {
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_pqd_index_" +
-        s"${ProcessHandle.current().pid()}_${d.hashCode & 0x7fffffff}"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
+      val idx = scratchDir("pqd", d)
       val emb = Tables.embeddings(s, d).filter(col("vec_id") < 500)
       Similarity.writePqIndex(emb, idx, m = 8, k = 16)
       Similarity.deleteFromPqIndex(s, idx,
@@ -1407,9 +1393,7 @@ object SparkEntry {
     // and for IVFADC: cell-partitioned residual codes, partition-pruned
     // probes, cell-scoped fold — the billion-scale index's removal path
     "ann_ivfpq_delete" -> ((s, d) => {
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ipqd_index_" +
-        s"${ProcessHandle.current().pid()}_${d.hashCode & 0x7fffffff}"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
+      val idx = scratchDir("ipqd", d)
       val emb = Tables.embeddings(s, d).filter(col("vec_id") < 500)
       Similarity.writeIvfPqIndex(emb, idx, nCells = 8, m = 8, k = 16)
       Similarity.deleteFromIvfPqIndex(s, idx,
@@ -1432,9 +1416,7 @@ object SparkEntry {
     // frozen-centers, the invariant that makes incremental maintenance
     // safe at 100 TB.
     "ann_ivf_append" -> ((s, d) => {
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivfa_index_" +
-        s"${ProcessHandle.current().pid()}_${d.hashCode & 0x7fffffff}"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
+      val idx = scratchDir("ivfa", d)
       val emb = Tables.embeddings(s, d)
       Similarity.writeIvfIndex(emb.filter(col("vec_id") % 2 === 0), idx)
       Similarity.appendIvfIndex(emb.filter(col("vec_id") % 2 === 1), idx)
@@ -2030,11 +2012,10 @@ object SparkEntry {
     // cents so the bucketed result hash-matches the plain-SQL oracle.
     "events_bucketed_join" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      // path AND table names keyed by the dataset (the ts_storage_delete
-      // convention) — interleaved runs against two datasets must not
-      // clobber each other's buckets
+      // table names keyed by the dataset too — interleaved runs against
+      // two datasets must not clobber each other's buckets
       val ds = d.replaceAll("[^a-zA-Z0-9]", "_")
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_bucketed_$ds"
+      val dir = scratchDir("bkt", d)
       ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), round(col("value") * 100).cast("long").as("cents"))
         .write.mode("overwrite").format("parquet")
@@ -3031,7 +3012,7 @@ object SparkEntry {
     // after fof/linkpred (graph_edges_indexed).
     "graph_tri_indexed" -> ((s, d) => {
       val ds = d.replaceAll("[^a-zA-Z0-9]", "_")
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_gidx_tri_$ds"
+      val dir = scratchDir("gidx-tri", d)
       val nBt = Graph.bucketCount(s)
       Graph.orientEdges(coOccEdges(s, d))
         .repartition(nBt, col("u")) // bucket-aligned — see graph_edges_indexed
@@ -3471,7 +3452,7 @@ object SparkEntry {
     // is the entire bench top-5. Hash-identical to graph_fof (same oracle).
     "graph_edges_indexed" -> ((s, d) => {
       val ds = d.replaceAll("[^a-zA-Z0-9]", "_")
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_gidx_$ds"
+      val dir = scratchDir("gidx", d)
       val e = coOccEdges(s, d)
       val und = e.select(col("a").as("u"), col("b").as("v"))
         .unionAll(e.select(col("b").as("u"), col("a").as("v")))
@@ -3506,7 +3487,7 @@ object SparkEntry {
     // this gate's tree too).
     "graph_edges_append" -> ((s, d) => {
       val ds = d.replaceAll("[^a-zA-Z0-9]", "_")
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_gidx_app_$ds"
+      val dir = scratchDir("gidx-app", d)
       val e = coOccEdges(s, d)
       // deterministic 80/20 split: the "resident" graph vs the new batch
       val isBatch = pmod(xxhash64(col("a"), col("b")), lit(5)) === 0
@@ -4570,11 +4551,7 @@ object SparkEntry {
     "ts_storage_delete" ->
       s"""$tsCte SELECT series_id, t, value, event_id FROM ts WHERE series_id = 'error'
          |AND t NOT IN (SELECT t FROM ts WHERE series_id = 'error' AND t BETWEEN $R_FROM AND $R_TO AND k LIKE '%5%')""".stripMargin,
-    // identical semantics through the tombstone + compact-fold path
-    "ts_delete_tombstone" ->
-      s"""$tsCte SELECT series_id, t, value, event_id FROM ts WHERE series_id = 'error'
-         |AND t NOT IN (SELECT t FROM ts WHERE series_id = 'error' AND t BETWEEN $R_FROM AND $R_TO AND k LIKE '%5%')""".stripMargin,
-    // same oracle as ts_delete_tombstone: the fold must not change the view
+    // same oracle as ts_storage_delete: the compact must not change the view
     "ts_compact_incremental" ->
       s"""$tsCte SELECT series_id, t, value, event_id FROM ts WHERE series_id = 'error'
          |AND t NOT IN (SELECT t FROM ts WHERE series_id = 'error' AND t BETWEEN $R_FROM AND $R_TO AND k LIKE '%5%')""".stripMargin,

@@ -942,9 +942,8 @@ object Similarity {
     * documents, takedown/unlearning requests). The doomed ids are keyed
     * to their cells by ONE column-pruned scan of the index's (vec_id,
     * cell) columns, then land as a tombstone batch committed by a single
-    * rename (the [[graft.sources.TsStorage.tombstoneDelete]] pattern);
-    * [[ivfTopKIndexed]] anti-joins the set and [[compactIvfIndex]] folds
-    * it physically, rewriting ONLY the touched cell partitions. Cost is
+    * rename; [[ivfTopKIndexed]] anti-joins the set and [[compactIvfIndex]]
+    * folds it physically, rewriting ONLY the touched cell partitions. Cost is
     * O(index keys) for the cell lookup + O(doomed) for the write — never
     * a vector-data rewrite at delete time.
     */

@@ -36,14 +36,15 @@ import org.apache.spark.sql.functions._
   *
   * Crash model: an append writes its file under a hidden `.inprogress`
   * name and commits it by rename (a kill mid-append leaves only a hidden
-  * file no reader lists); [[compact]] is the
-  * whole-table twin swap of [[TsStorage.compactFull]] — the fold lands
-  * fully in `<root>_compacting`, the live log parks in `<root>_old`, the
-  * twin renames in, the park drops. The one instant where the root is
-  * absent is healed by the recovery sweep every entry point runs:
-  * `_SUCCESS` in the twin proves the fold complete (roll forward), else
-  * roll back to the park. Single writer assumed (the engine facade), like
-  * the reference's single store process.
+  * file no reader lists); [[compact]] is a whole-table twin swap, owned
+  * here (the TS table's delete and compact swap per partition instead) —
+  * the fold lands fully in `<root>_compacting`, the live log parks in
+  * `<root>_old`, the twin renames in, the park drops. The one instant
+  * where the root is absent is healed by the recovery sweep every entry
+  * point runs ([[recover]]): `_SUCCESS` in the twin proves the fold
+  * complete (roll forward), else roll back to the park. Single writer
+  * assumed (the engine facade), like the reference's single store
+  * process.
   */
 object KvStorage {
 
@@ -54,14 +55,28 @@ object KvStorage {
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Heal a crashed compact swap — the [[TsStorage]] whole-table-swap
-    * recovery: a missing root rolls FORWARD to a `_SUCCESS`-carrying
-    * rewrite, else BACK to the parked original. Safe for concurrent
+  /** The table root, the compact's rewrite twin, the parked original. */
+  private def swapPaths(root: String): (Path, Path, Path) =
+    (new Path(root), new Path(root + "_compacting"), new Path(root + "_old"))
+
+  /** Heal a crashed compact swap (`<root>_compacting` / `<root>_old`): a
+    * missing root rolls FORWARD to a rewrite carrying Spark's `_SUCCESS`
+    * commit marker, else BACK to the parked original. Safe for concurrent
     * readers (end-state-tolerant renames; two racing heals both succeed).
     */
   def recover(spark: SparkSession, path: String): Unit = {
     val root = path.stripSuffix("/")
-    TsStorage.healWholeTableSwap(fsFor(spark, root), root, "kv compact")
+    val fs = fsFor(spark, root)
+    val (rootP, tmpP, oldP) = swapPaths(root)
+    if (!fs.exists(rootP)) {
+      if (fs.exists(new Path(tmpP, "_SUCCESS"))) {
+        TsStorage.recoveredRename(fs, tmpP, rootP, "kv compact recovery (roll forward)")
+        fs.delete(oldP, true)
+      } else if (fs.exists(oldP)) {
+        TsStorage.recoveredRename(fs, oldP, rootP, "kv compact recovery (roll back)")
+        fs.delete(tmpP, true)
+      }
+    }
   }
 
   /** True when the log has at least one committed data file. Callers must
@@ -113,8 +128,7 @@ object KvStorage {
     val fs = fsFor(spark, root)
     recover(spark, path)
     if (!exists(spark, path)) return
-    val (rootP, tmpP, oldP) =
-      (new Path(root), new Path(root + "_compacting"), new Path(root + "_old"))
+    val (rootP, tmpP, oldP) = swapPaths(root)
     fs.delete(tmpP, true); fs.delete(oldP, true)
     // O(live cells); 4-way id clustering bounds the file count while
     // keeping a hot id range off a single task

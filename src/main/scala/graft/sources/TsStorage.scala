@@ -26,40 +26,43 @@ import org.apache.spark.sql.functions._
   * shard merge: once the runs reach [[FoldRuns]] files or [[FoldBytes]]
   * bytes, it moves them into the `(series_id, day)` layout with the
   * clustered partitioned write. Out-of-order/late data simply lands in
-  * its (old) day partition at fold time. [[delete]], [[compact]] and
-  * [[compactFull]] fold first; [[write]] drops the runs.
+  * its (old) day partition at fold time. [[delete]] and [[compact]] fold
+  * first; [[write]] drops the runs.
+  *
+  * Delete (S6): one path, the reference's shard rewrite
+  * (`timeseries.re:431-487`): [[delete]] rewrites only the `(series_id,
+  * day)` partitions holding doomed rows.
   *
   * Compaction (S2): the reference merges overlapping shards on flush
   * (`timeseries.re:57-111`); here overlap cannot happen (a row belongs to
   * exactly one partition), so compaction degenerates to coalescing small
-  * files per partition. [[TsStorage.compact]] is the OPTIMIZE analogue
-  * and is PARTITION-SCOPED: only partitions over the file bound or
-  * carrying tombstoned keys are rewritten, so a nightly compact costs
-  * the touched fraction, never a full-table pass ([[compactFull]] is the
-  * forced global re-cluster).
+  * files per partition. [[compact]] is the OPTIMIZE analogue and is
+  * PARTITION-SCOPED: only partitions over the file bound are rewritten,
+  * so a nightly compact costs the touched fraction, never a full-table
+  * pass.
   *
   * Crash model (the reference gets per-write atomicity from Irmin/git
   * commits, `timeseries.re:431-487`): every mutation here is
   * write-fully-aside-then-rename, and every entry point — [[read]],
-  * [[append]], [[delete]], [[compact]] — first runs a recovery sweep that
-  * completes or rolls back any swap a previous process died inside, so no
-  * reader ever acts on the mid-swap state.
-  *  - a flush run is written under a hidden `.inprogress` name and
-  *    committed by its rename; a kill before that leaves a hidden file
-  *    no reader lists.
-  *  - a fold stages the runs' rows in `<root>_fold_tmp` and commits by
-  *    renaming `<root>_fold_manifest` into place; the manifest lists each
-  *    staged file and each consumed run. Applying it moves every staged
-  *    file into the root, then deletes the consumed runs, then the
-  *    manifest. Readers and writers both apply a committed manifest
-  *    before they scan: it only adds committed files, then retires runs
-  *    whose rows are already in place, so every row is seen exactly once
-  *    whichever step a kill landed in.
-  *  - the swap direction of a delete or compact is always decided by
-  *    durable evidence: a parked partition rolls FORWARD only when its
-  *    fully written rewrite ("twin") exists; a missing table root rolls
-  *    forward only when the rewrite carries Spark's `_SUCCESS` commit
-  *    marker.
+  * [[append]], [[delete]], [[compact]] — first runs a recovery sweep
+  * ([[repair]]) that completes any swap a previous process died inside,
+  * so no reader ever acts on the mid-swap state. A flush run is written
+  * under a hidden `.inprogress` name and committed by its rename; a kill
+  * before that leaves a hidden file no reader lists. Beyond that, the
+  * table has two commit protocols:
+  *  - the fold manifest: a fold stages the runs' rows in `<root>_fold_tmp`
+  *    and commits by renaming `<root>_fold_manifest` into place; the
+  *    manifest lists each staged file and each consumed run. Applying it
+  *    moves every staged file into the root, then deletes the consumed
+  *    runs, then the manifest. Readers and writers both apply a committed
+  *    manifest before they scan: it only adds committed files, then
+  *    retires runs whose rows are already in place, so every row is seen
+  *    exactly once whichever step a kill landed in.
+  *  - the delete manifest, shared by [[delete]] and [[compact]]: rewritten
+  *    partitions land in `<root>_delete_tmp`, `<root>_delete_manifest`
+  *    commits by rename, and [[applyManifest]] parks each live partition
+  *    in `<root>_delete_old` and renames its rewrite ("twin") in. A parked
+  *    partition rolls FORWARD only when its fully written twin exists.
   * Single writer assumed (like the reference's single store process).
   * Readers racing a delete or compact are safe — their sweep never
   * deletes the live siblings an in-flight writer is using, and two
@@ -71,7 +74,8 @@ import org.apache.spark.sql.functions._
   */
 object TsStorage {
 
-  private def withDay(ts: DataFrame): DataFrame =
+  /** `ts` with its partition column `day` (`yyyy-MM-dd` of `t`). */
+  private[graft] def withDay(ts: DataFrame): DataFrame =
     ts.withColumn("day", date_format(timestamp_millis(col("t")), "yyyy-MM-dd"))
 
   // the fold bound, in run files or bytes (WriteLayout's 64 MB bucket): a
@@ -104,8 +108,8 @@ object TsStorage {
 
   /** True when the table has data partitions or committed flush runs — a
     * root holding just `_SUCCESS` (every series deleted) is no table.
-    * Callers must [[recover]] first: mid-swap the root is legitimately
-    * absent.
+    * Callers must [[recover]] first: mid-swap a partition dir, the
+    * table's only one included, is legitimately absent.
     */
   def exists(spark: SparkSession, path: String): Boolean = {
     val root = path.stripSuffix("/")
@@ -181,12 +185,9 @@ object TsStorage {
     val root = path.stripSuffix("/")
     val fs = fsFor(ts.sparkSession, root)
     repair(fs, root, destructive = true)
-    // a full rewrite replaces the table: stale tombstones must not mask
-    // the fresh data's keys
-    fs.delete(new Path(root + "_tombstones"), true)
-    fs.delete(new Path(root + "_tombstones_tmp"), true)
-    // ...and so must pending flush runs (a committed fold was applied by
-    // the repair above; its staging leftovers are garbage)
+    // a full rewrite replaces the table, pending flush runs included (a
+    // committed fold was applied by the repair above; its staging
+    // leftovers are garbage)
     fs.delete(runsDir(root), true)
     fs.delete(new Path(root + "_fold_tmp"), true)
     // cluster by target partition before the partitioned write: without
@@ -210,10 +211,10 @@ object TsStorage {
     * `LocalRelation` fails with IllegalArgumentException, uncollected.
     *
     * Appending is an entry point like any other: it must repair a crashed
-    * swap FIRST, or a later fold recreates the missing table root / live
-    * partition dir around the parked rewrite — which the next
-    * delete/compact would then garbage-collect, silently dropping the
-    * pre-crash table.
+    * swap FIRST, or a later fold recreates a parked partition's live dir
+    * ahead of its committed rewrite — which the next delete/compact would
+    * then garbage-collect, silently dropping that partition's pre-crash
+    * rows.
     */
   def append(ts: DataFrame, path: String): Unit = {
     val root = path.stripSuffix("/")
@@ -267,12 +268,8 @@ object TsStorage {
     }
     val rows = files.map(f => LocalWrite.footerRows(spark, f.getPath)).sum
     onFoldStep("staged")
-    // the staging write's `_SUCCESS` moves too (skipped once the root has
-    // one): a root built by folds carries the commit marker a Spark-written
-    // root does, which a copy of it relies on in swap recovery
     writeManifest(fs, new Path(root + "_fold_manifest"),
-      (files.map(rel) ++ Seq("_SUCCESS").filter(m => fs.exists(new Path(staged, m))))
-        .map("F\t" + _) ++ consumed.map("R\t" + _))
+      files.map("F\t" + rel(_)) ++ consumed.map("R\t" + _))
     onFoldStep("manifest")
     applyFold(fs, root)
     fs.delete(staged, true)
@@ -311,12 +308,12 @@ object TsStorage {
 
   /** Public WRITER-side recovery entry: heal any crashed swap, completing
     * a committed delete in full, without garbage-collecting writer
-    * siblings. Callers that gate work on the table root's existence
-    * (e.g. the engine facade's id resume and delete no-op check) must run
-    * this FIRST — in the crashed-compact state the root is legitimately
-    * missing until recovery rolls the rewrite in, and an unhealed
-    * existence check reads the wrong answer. Writer-side because it may
-    * park/remove live partition dirs (single writer assumed).
+    * siblings. Callers that gate work on [[exists]] (e.g. the engine
+    * facade's id resume and delete no-op check) must run this FIRST — in
+    * a crashed delete or compact a parked partition (the table's only
+    * one, say) is missing until recovery rolls its rewrite in, and an
+    * unhealed existence check reads the wrong answer. Writer-side because
+    * it may park/remove live partition dirs (single writer assumed).
     */
   def recover(spark: SparkSession, path: String): Unit = {
     val root = path.stripSuffix("/")
@@ -341,86 +338,23 @@ object TsStorage {
     val root = path.stripSuffix("/")
     val fs = fsFor(spark, root)
     repair(fs, root, destructive = false)
-    val raw = applyTombstones(spark, root, fs, scan(spark, fs, root))
+    val raw = scan(spark, fs, root)
     val cols = Seq("series_id", "t", "value", "tags", "blob", "event_id", "ts_raw")
       .filter(raw.columns.contains)
     raw.select(cols.map(col): _*)
   }
 
-  /** Merge-on-read: anti-join the committed tombstone set (if any) onto a
-    * raw scan of the table — one existence check on a tombstone-free
-    * table, an 8-byte-key anti-join otherwise, folded away entirely by
-    * the next [[compact]].
-    *
-    * Write-horizon semantics: each tombstone batch carries the table's
-    * max `event_id` AT DELETE TIME, and masks only rows at-or-before it —
-    * so a row APPENDED AFTER the delete at the same (series, t) key reads
-    * correctly with no compact in between (event_ids are assigned
-    * monotonically by the ingest facade). Batches without the column
-    * (or tables without `event_id`) fall back to masking the key
-    * unconditionally — the pre-horizon contract.
-    */
-  private def applyTombstones(spark: SparkSession, root: String,
-                              fs: FileSystem, raw: DataFrame): DataFrame = {
-    val tombP = new Path(root + "_tombstones")
-    if (!fs.exists(tombP) || fs.listStatus(tombP).isEmpty) raw
-    else {
-      // mergeSchema: pre-horizon and horizoned batches may coexist in one
-      // set; the union schema (tiny — the set is keys, not data) keeps
-      // the horizon column visible regardless of footer pick order
-      val dead0 = spark.read.option("mergeSchema", "true")
-        .parquet(tombP.toString)
-      val horizoned =
-        dead0.columns.contains("horizon") && raw.columns.contains("event_id")
-      val dead = dead0.select(
-        col("series_id").as("__tb_sid") +: col("t").as("__tb_t") +:
-          (if (horizoned)
-             // old-format batches surface as null under schema merge:
-             // null horizon = unbounded (the pre-horizon contract)
-             Seq(coalesce(col("horizon"), lit(Long.MaxValue)).as("__tb_h"))
-           else Seq.empty): _*)
-      val keyEq =
-        col("series_id") === col("__tb_sid") && col("t") === col("__tb_t")
-      // null event_id rows keep the unconditional key mask (MinValue is
-      // below every horizon): a three-valued `null <= h` would silently
-      // EXEMPT them from the anti-join, narrowing the pre-horizon delete
-      raw.join(dead,
-        if (horizoned)
-          keyEq && coalesce(col("event_id"), lit(Long.MinValue)) <= col("__tb_h")
-        else keyEq,
-        "left_anti")
-    }
-  }
-
-  /** The event-id high-water mark INCLUDING masked rows and tombstone
-    * horizons — what a restarted writer must resume PAST. Resuming from
-    * the masked view is a correctness trap: delete the newest rows and a
-    * restarted engine reissues an id at-or-below the batch's write
-    * horizon, so its next append at a deleted (series, t) key is silently
-    * masked. The raw scan (root and runs) covers doomed rows still on
-    * disk and ids held only in flush runs; the horizon
-    * max covers the window where a fold has dropped the rows but not yet
-    * cleared the set. None on a table with no `event_id` column.
+  /** The event-id high-water mark over root and runs — what a restarted
+    * writer must resume PAST, including ids held only in flush runs.
+    * None on a table with no `event_id` column.
     */
   def maxEventId(spark: SparkSession, path: String): Option[Long] = {
     val root = path.stripSuffix("/")
     val fs = fsFor(spark, root)
     repair(fs, root, destructive = false)
     val raw = scan(spark, fs, root)
-    if (!raw.columns.contains("event_id")) return None
-    val fromRows = Option(raw.agg(max("event_id")).head().get(0))
-      .map(_.asInstanceOf[Long])
-    val tombP = new Path(root + "_tombstones")
-    val fromHorizons =
-      if (!fs.exists(tombP) || fs.listStatus(tombP).isEmpty) None
-      else {
-        val t = spark.read.option("mergeSchema", "true").parquet(tombP.toString)
-        if (!t.columns.contains("horizon")) None
-        else Option(t.agg(max(when(col("horizon") =!= Long.MaxValue,
-            col("horizon")))).head().get(0))
-          .map(_.asInstanceOf[Long])
-      }
-    (fromRows.toSeq ++ fromHorizons.toSeq).reduceOption(_ max _)
+    if (!raw.columns.contains("event_id")) None
+    else Option(raw.agg(max("event_id")).head().get(0)).map(_.asInstanceOf[Long])
   }
 
   /** S6 delete at scale: durable delete-by-query as a PARTITION-scoped
@@ -476,23 +410,15 @@ object TsStorage {
     val trash = root + "_delete_old"   // originals parked here until the end
     val fs = fsFor(spark, root)
     // heal any previous crashed swap BEFORE reading the table, then drop
-    // the healed-over leftovers (the writer, unlike readers, may GC them) —
-    // including a committed compact's parked original, which nothing else
-    // collects if that compact died after its final rename
+    // the healed-over leftovers (the writer, unlike readers, may GC them)
     repair(fs, root, destructive = true)
     fs.delete(new Path(trash), true)
     fs.delete(new Path(tmp), true)
     fs.delete(new Path(root + "_delete_manifest.tmp"), true)
-    fs.delete(new Path(root + "_compacting"), true)
-    fs.delete(new Path(root + "_old"), true)
     // the rewrite is partition-scoped: pending runs join the layout first
     foldRuns(spark, fs, root)
 
-    // the query and the rewrite run over the LIVE view (tombstones
-    // applied), so a rewrite delete composes exactly with prior tombstone
-    // deletes — and incidentally folds the touched partitions' tombstoned
-    // rows
-    val raw  = applyTombstones(spark, root, fs, scan(spark, fs, root))
+    val raw  = scan(spark, fs, root)
     val base = TsOps.selectSeries(raw, ids)
     val matchedTs = pred.foldLeft(TsOps.select(raw, ids, sel))(TsOps.tagFilter)
       .select(col("t").as("del_t")).distinct()
@@ -535,96 +461,6 @@ object TsStorage {
     // state machine, not two hand-kept copies; consumes the manifest
     applyManifest(fs, root)
     fs.delete(new Path(tmp), true); fs.delete(new Path(trash), true)
-  }
-
-  /** S6 delete, merge-on-read variant: instead of rewriting the affected
-    * partitions, APPEND the doomed `(series_id, day, t)` key set as a
-    * tombstone batch; [[read]] anti-joins it and the next [[compact]]
-    * folds it in physically. Same query semantics as [[delete]] (gate
-    * `ts_delete_tombstone` shares `ts_storage_delete`'s oracle): every
-    * record of the queried series sharing a matched timestamp dies,
-    * bystanders included — the matched set is computed over the LIVE view
-    * (prior tombstones applied), so chained tombstone deletes compose
-    * exactly like chained rewrites.
-    *
-    * Why it exists: at 100 TB, [[delete]]'s partition rewrite makes a
-    * small delete pay for every resident row of each touched (series,
-    * day) — the tombstone write costs O(matched keys) regardless of
-    * partition size, moving the rewrite to the next scheduled compaction.
-    * The trade is an anti-join on every read until then.
-    *
-    * Crash atomicity is a single rename: the batch is fully written to a
-    * sibling tmp dir, then renamed into `<root>_tombstones/batch=<uuid>`
-    * — THAT rename is the commit. A kill before it leaves only garbage
-    * tmp (GC'd by the next writer entry); after it, the delete is fully
-    * visible. No manifest machinery needed — the batch is self-contained
-    * and additive. `onBeforeCommit` is the crash-injection test hook.
-    *
-    * Append-after-delete reads correctly WITHOUT a compact: the batch is
-    * stamped with the table's max `event_id` at delete time (its write
-    * horizon), and [[read]] masks only rows at-or-before it — a later
-    * append at a tombstoned (series, t) key carries a larger event_id
-    * (ingest assigns them monotonically) and is visible immediately.
-    * Tables without an `event_id` column keep the coarser contract (the
-    * key is masked until the next [[compact]] clears the set).
-    */
-  def tombstoneDelete(spark: SparkSession, path: String,
-                      ids: Seq[String], sel: graft.operators.Selector,
-                      pred: Option[graft.operators.TagPred],
-                      onBeforeCommit: () => Unit = () => (),
-                      knownHorizon: Option[Long] = None): Unit = {
-    import graft.operators.TsOps
-    val root = path.stripSuffix("/")
-    val fs = fsFor(spark, root)
-    repair(fs, root, destructive = true)
-    val tombTmp = new Path(root + "_tombstones_tmp")
-    fs.delete(tombTmp, true) // leftover of a pre-commit crash: garbage
-    // over root and runs alike, no fold: the batch masks run rows too
-    val raw = scan(spark, fs, root)
-    val live = applyTombstones(spark, root, fs, raw)
-    val matchedTs = pred.foldLeft(TsOps.select(live, ids, sel))(TsOps.tagFilter)
-      .select(col("t").as("del_t")).distinct()
-    val doomed = TsOps.selectSeries(live, ids)
-      .join(matchedTs, col("t") === col("del_t"), "left_semi")
-      .select("series_id", "day", "t").distinct()
-    if (doomed.isEmpty) return
-    // write horizon: the table's max event_id at delete time — rows
-    // appended after this delete carry larger ids and stay visible
-    // through the mask (see applyTombstones). A writer that tracks its
-    // id sequence (the engine facade does) passes it via `knownHorizon`
-    // for free; standalone callers pay one single-column scan of
-    // event_id (column-pruned — parquet reads one column, not the rows,
-    // but it IS proportional to table length, which is why the facade
-    // path exists).
-    val horizon: Long = knownHorizon.getOrElse {
-      if (raw.columns.contains("event_id"))
-        Option(raw.agg(max("event_id")).head().get(0))
-          .map(_.asInstanceOf[Long]).getOrElse(Long.MaxValue)
-      else {
-        // unconditional mask: without event_id there is no write horizon,
-        // so rows appended at a deleted key AFTER this delete stay hidden
-        // until the next compact folds the set. maxEventId deliberately
-        // ignores MaxValue horizons, so nothing else flags this batch —
-        // say so once, or a standalone caller mixing id-less writes with
-        // later id-bearing appends debugs silent masking (ADVICE r11)
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"tombstoneDelete($root): table has no event_id column; " +
-          "falling back to an unconditional key mask (horizon=MaxValue) — " +
-          "appends at deleted keys stay hidden until the next compact")
-        Long.MaxValue
-      }
-    }
-    // the doomed key set is O(matched): land it as few files, not one per
-    // scan task — every read until the next compact lists this batch dir
-    // (coalesce, not repartition: no shuffle, just merged writer tasks)
-    WriteLayout.boundFiles(doomed.withColumn("horizon", lit(horizon)))
-      .write.mode(SaveMode.Overwrite).parquet(tombTmp.toString)
-    onBeforeCommit()
-    val tombRoot = new Path(root + "_tombstones")
-    fs.mkdirs(tombRoot)
-    val batch = new Path(tombRoot,
-      "batch=" + java.util.UUID.randomUUID.toString)
-    renamed(fs, tombTmp, batch, "tombstone commit")
   }
 
   /** Execute a committed delete manifest to its end state — idempotent
@@ -710,27 +546,22 @@ object TsStorage {
       (line.substring(0, i), line.substring(i + 1) == "S")
     }
 
-  /** Recovery sweep: completes (or rolls back) any swap a previous
-    * process died inside. Never deletes the tmp/trash siblings themselves
-    * — those may belong to an in-flight writer, and cleaning them is the
-    * next writer's job ([[delete]] / [[compact]] GC them after their own
-    * leading repair).
+  /** Recovery sweep: completes any swap a previous process died inside.
+    * Never deletes the tmp/trash siblings themselves — those may belong to
+    * an in-flight writer, and cleaning them is the next writer's job
+    * ([[delete]] / [[compact]] GC them after their own leading repair).
     *
     * `destructive = false` is the READER mode: it only performs heals a
     * reader racing a LIVE writer can never corrupt — rolling a committed
-    * rewrite into a partition dir (or table root) that is MISSING. It
-    * never parks or removes a live dir, so the one state it leaves for
-    * the writer is a committed-but-unswapped partition still showing its
-    * (complete, consistent) pre-delete data. `destructive = true` is the
-    * WRITER mode (single writer assumed): it additionally executes a
-    * committed delete manifest to its end state via [[applyManifest]].
+    * rewrite into a partition dir that is MISSING. It never parks or
+    * removes a live dir, so the one state it leaves for the writer is a
+    * committed-but-unswapped partition still showing its (complete,
+    * consistent) pre-delete data. `destructive = true` is the WRITER mode
+    * (single writer assumed): it additionally executes a committed delete
+    * manifest to its end state via [[applyManifest]].
     *
     *  - a committed fold (both modes): [[applyFold]] moves the staged
     *    files in and retires the consumed runs.
-    *  - compact's whole-table swap (both modes): a missing table root
-    *    rolls FORWARD to the rewrite when it carries Spark's `_SUCCESS`
-    *    commit marker (the kill landed between the two renames), else
-    *    rolls BACK to the parked original (the rewrite never finished).
     *  - delete's swap, manifest present: writer mode completes the ENTIRE
     *    call ([[applyManifest]]); reader mode rolls twins into MISSING
     *    partition dirs only and leaves the manifest for the writer.
@@ -742,35 +573,7 @@ object TsStorage {
     *    is deliberately left dead: restoring it would resurrect deleted
     *    data.
     */
-  /** Heal a crashed whole-table twin swap (`<root>_compacting` /
-    * `<root>_old`): a missing root rolls FORWARD to a rewrite carrying
-    * Spark's `_SUCCESS` commit marker, else BACK to the parked original.
-    * ONE routine for every table that uses the swap — TS compactFull and
-    * the KV change-logs — so the crash contract cannot silently diverge
-    * between them (r13 review). Safe for concurrent readers
-    * (end-state-tolerant renames; two racing heals both succeed).
-    */
-  private[sources] def healWholeTableSwap(fs: FileSystem, root: String,
-                                          what: String): Unit = {
-    val rootP = new Path(root)
-    val cTmp = new Path(root + "_compacting")
-    val cOld = new Path(root + "_old")
-    if (!fs.exists(rootP)) {
-      if (fs.exists(new Path(cTmp, "_SUCCESS"))) {
-        recoveredRename(fs, cTmp, rootP, s"$what recovery (roll forward)")
-        fs.delete(cOld, true)
-      } else if (fs.exists(cOld)) {
-        recoveredRename(fs, cOld, rootP, s"$what recovery (roll back)")
-        fs.delete(cTmp, true)
-      }
-    }
-  }
-
   private def repair(fs: FileSystem, root: String, destructive: Boolean): Unit = {
-    // -- compact's whole-table swap -----------------------------------------
-    healWholeTableSwap(fs, root, "compact")
-    // -- a committed fold (both modes; after the heal, which needs a
-    // missing root to stay missing) --------------------------------------
     applyFold(fs, root)
     // -- delete's swap, committed (manifest present) --------------------------
     val dTmp = root + "_delete_tmp"
@@ -805,40 +608,6 @@ object TsStorage {
     }
   }
 
-  /** S2 compaction, PARTITION-SCOPED (the reference's shard merge,
-    * `timeseries.re:57-111`, done right at scale): rewrite ONLY the
-    * `(series_id, day)` partitions that need it — more data files than
-    * `maxFilesPerPartition`, or tombstoned keys to fold — and never touch
-    * the rest. At 100 TB a nightly compact over a table whose appends and
-    * deletes land in a handful of recent partitions costs the touched
-    * fraction, not a full-table pass; untouched partitions' files are
-    * byte-identical afterwards (spec-pinned).
-    *
-    * The target census is FILESYSTEM METADATA (directory listings + the
-    * tombstone set's distinct partitions — both metadata-scale collects,
-    * never data). The file-count bound is honored via an event-id salt in
-    * the repartition key — repartitioning by the partition columns alone
-    * would hash each whole partition to ONE task regardless of the
-    * requested count ("at most" because distinct salts can still hash to
-    * the same task).
-    *
-    * Crash atomicity is WHOLE-CALL, reusing the delete path's manifest
-    * state machine verbatim: survivors land fully in the `_delete_tmp`
-    * sibling (table untouched), the manifest rename is the commit point,
-    * [[applyManifest]] swaps each listed partition idempotently (a
-    * partition whose every row was tombstoned commits as Emptied), and a
-    * kill anywhere is completed by the next writer entry / healed
-    * non-destructively by readers — one recovery routine for delete and
-    * compact both. Only the tombstone batches ENUMERATED BY THIS CALL are
-    * cleared at the end (each was fully folded — every partition it
-    * touches is a target); with the single-writer assumption no batch can
-    * land mid-call, and a kill before the clear leaves batches whose
-    * masks are no-ops (their keys are physically gone and later appends
-    * sit above the write horizon) until the next compact clears them.
-    *
-    * `onBeforeSwap` / `onAfterManifest` are the crash-injection hooks,
-    * same contract as [[delete]]'s.
-    */
   /** Within-partition file salt for a compaction rewrite: `event_id` when
     * the table carries it (the clustered-write invariant, [[write]]), else
     * `xxhash64(t)` — [[read]] treats `event_id` as optional and
@@ -852,6 +621,33 @@ object TsStorage {
       else xxhash64(col("t")),
       lit(maxFilesPerPartition.toLong))
 
+  /** S2 compaction, PARTITION-SCOPED (the reference's shard merge,
+    * `timeseries.re:57-111`, done right at scale): rewrite ONLY the
+    * `(series_id, day)` partitions holding more data files than
+    * `maxFilesPerPartition`, and never touch the rest. At 100 TB a nightly
+    * compact over a table whose appends and deletes land in a handful of
+    * recent partitions costs the touched fraction, not a full-table pass;
+    * untouched partitions' files are byte-identical afterwards
+    * (spec-pinned). Pending flush runs are folded first.
+    *
+    * The target census is FILESYSTEM METADATA (directory listings, never
+    * data). The file-count bound is honored via an event-id salt in the
+    * repartition key — repartitioning by the partition columns alone
+    * would hash each whole partition to ONE task regardless of the
+    * requested count ("at most" because distinct salts can still hash to
+    * the same task).
+    *
+    * Crash atomicity is WHOLE-CALL, reusing the delete path's manifest
+    * state machine verbatim: the rewrites land fully in the `_delete_tmp`
+    * sibling (table untouched), the manifest rename is the commit point,
+    * [[applyManifest]] swaps each listed partition idempotently, and a
+    * kill anywhere is completed by the next writer entry / healed
+    * non-destructively by readers — one recovery routine for delete and
+    * compact both.
+    *
+    * `onBeforeSwap` / `onAfterManifest` are the crash-injection hooks,
+    * same contract as [[delete]]'s.
+    */
   def compact(spark: SparkSession, path: String, maxFilesPerPartition: Int = 1,
               onBeforeSwap: () => Unit = () => (),
               onAfterManifest: () => Unit = () => ()): Unit = {
@@ -861,114 +657,38 @@ object TsStorage {
     fs.delete(new Path(root + "_delete_old"), true)
     fs.delete(new Path(root + "_delete_tmp"), true)
     fs.delete(new Path(root + "_delete_manifest.tmp"), true)
-    fs.delete(new Path(root + "_tombstones_tmp"), true) // pre-commit garbage
-    fs.delete(new Path(root + "_compacting"), true)
-    fs.delete(new Path(root + "_old"), true)
     foldRuns(spark, fs, root)
     val rootP = new Path(root)
     if (!fs.exists(rootP)) return
 
     // -- target census: metadata only ---------------------------------------
-    val partFiles: Seq[(String, Int)] = for {
+    val targets: Seq[String] = for {
       sd <- fs.listStatus(rootP).toSeq if sd.getPath.getName.startsWith("series_id=")
       dd <- fs.listStatus(sd.getPath).toSeq if dd.getPath.getName.startsWith("day=")
-    } yield (s"${sd.getPath.getName}/${dd.getPath.getName}",
-      fs.listStatus(dd.getPath).count(_.getPath.getName.endsWith(".parquet")))
-    val tombRoot = new Path(root + "_tombstones")
-    val tombBatches: Seq[Path] =
-      if (fs.exists(tombRoot)) fs.listStatus(tombRoot).map(_.getPath).toSeq
-      else Seq.empty
-    val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
-    val tombRels: Set[String] =
-      if (tombBatches.isEmpty) Set.empty
-      else spark.read.option("mergeSchema", "true").parquet(tombRoot.toString)
-        .select("series_id", "day").distinct().collect()
-        .map(r => s"series_id=${esc(r.getString(0))}/day=${r.getString(1)}").toSet
-    val existing = partFiles.map(_._1).toSet
-    val targets: Seq[String] =
-      (partFiles.filter(_._2 > maxFilesPerPartition).map(_._1) ++
-        tombRels.filter(existing)).distinct
-    def clearTombstones(): Unit = {
-      tombBatches.foreach(b => fs.delete(b, true))
-      if (fs.exists(tombRoot) && fs.listStatus(tombRoot).isEmpty)
-        fs.delete(tombRoot, true)
-    }
-    if (targets.isEmpty) {
-      // tombstones referencing no existing partition mask nothing: folded
-      clearTombstones()
-      return
-    }
+      if fs.listStatus(dd.getPath).count(_.getPath.getName.endsWith(".parquet")) >
+        maxFilesPerPartition
+    } yield s"${sd.getPath.getName}/${dd.getPath.getName}"
+    if (targets.isEmpty) return
 
     // -- phase 1: rewrite ONLY the targets, fully outside the table ---------
     val tmp = root + "_delete_tmp"
     val scoped = spark.read.option("basePath", root)
       .parquet(targets.map(rel => s"$root/$rel"): _*)
-    applyTombstones(spark, root, fs, scoped)
+    scoped
       .withColumn("day", col("day").cast("string"))
       .withColumn("__salt", saltFor(scoped, maxFilesPerPartition))
       .repartition(col("series_id"), col("day"), col("__salt"))
       .drop("__salt")
       .write.partitionBy("series_id", "day")
       .mode(SaveMode.Overwrite).parquet(tmp)
-    // survivor set read off the written sibling (no second computation):
-    // a target absent here lost its every row to the fold -> Emptied
-    val survivorRels: Set[String] = (for {
-      sd <- fs.listStatus(new Path(tmp)).toSeq
-      if sd.getPath.getName.startsWith("series_id=")
-      dd <- fs.listStatus(sd.getPath).toSeq if dd.getPath.getName.startsWith("day=")
-    } yield s"${sd.getPath.getName}/${dd.getPath.getName}").toSet
     onBeforeSwap()
 
     // -- phase 2: COMMIT, then the shared idempotent swap -------------------
-    writeManifest(fs, new Path(root + "_delete_manifest"), targets.map { rel =>
-      s"$rel\t" + (if (survivorRels(rel)) "S" else "E")
-    })
+    // every target keeps its rows, so each commits as a Survivor rewrite
+    writeManifest(fs, new Path(root + "_delete_manifest"), targets.map(_ + "\tS"))
     onAfterManifest()
     applyManifest(fs, root)
     fs.delete(new Path(tmp), true)
     fs.delete(new Path(root + "_delete_old"), true)
-    clearTombstones()
-  }
-
-  /** Forced GLOBAL re-cluster: rewrite EVERY partition (tombstones folded)
-    * regardless of current file counts — the tool for changing the
-    * physical layout policy wholesale, where [[compact]] deliberately
-    * skips partitions already within bound. Swap order is crash-safe via
-    * the whole-table twin: the rewrite lands fully in `_compacting`, the
-    * live table parks in `_old`, the twin renames in, and only then the
-    * park drops — at every intermediate point a complete copy exists on
-    * disk, and the instant where the root is absent is healed by
-    * [[repair]] (`_SUCCESS` proves the rewrite complete -> roll forward;
-    * else roll back). Renames are CHECKED — a false return aborts with
-    * both copies on disk rather than half-swapping silently.
-    */
-  def compactFull(spark: SparkSession, path: String, maxFilesPerPartition: Int = 1): Unit = {
-    val root = path.stripSuffix("/")
-    val fs = fsFor(spark, root)
-    repair(fs, root, destructive = true)
-    fs.delete(new Path(root + "_delete_old"), true)
-    fs.delete(new Path(root + "_delete_tmp"), true)
-    fs.delete(new Path(root + "_tombstones_tmp"), true) // pre-commit garbage
-    foldRuns(spark, fs, root)
-    val whole = spark.read.parquet(root)
-    // fold the tombstone set into the rewrite — after the swap the rows
-    // are physically gone and the set is cleared (merge-on-read ends here)
-    val cur = applyTombstones(spark, root, fs, whole)
-      .withColumn("__salt", saltFor(whole, maxFilesPerPartition))
-      .repartition(col("series_id"), col("day"), col("__salt"))
-      .drop("__salt")
-    val (rootP, tmpP, oldP) =
-      (new Path(root), new Path(root + "_compacting"), new Path(root + "_old"))
-    fs.delete(tmpP, true); fs.delete(oldP, true)
-    cur.write.partitionBy("series_id", "day").mode(SaveMode.Overwrite).parquet(tmpP.toString)
-    renamed(fs, rootP, oldP, "compact swap")
-    // end-state-tolerant: a reader's recovery sweep may legitimately roll
-    // the committed rewrite in during the instant the root is absent
-    recoveredRename(fs, tmpP, rootP, "compact swap")
-    fs.delete(oldP, true)
-    // the folded keys no longer exist: clearing the set last is safe (a
-    // kill before this line leaves a tombstone set whose anti-join
-    // removes nothing — idempotent; the next compact clears it)
-    fs.delete(new Path(root + "_tombstones"), true)
   }
 }

@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   * The salt WIDTH is size-adaptive rather than a constant: a fixed width
   * multiplies the file count of small tables (4× at gate scale) while
   * still underproviding a truly hot partition at lake scale. One bucket
-  * per ~64 MB of estimated input, floor 1, cap 32; `spark.graft.
-  * writeSaltBuckets` overrides.
+  * per ~64 MB of estimated input, floor 1, cap 32.
   *
   * r14 (r13 verdict item 3): when the input already has no more
   * partitions than the salt width, the file-count bound ALREADY holds —
@@ -65,18 +64,15 @@ object WriteLayout {
       ((bytes + 64L * 1024 * 1024 - 1) / (64L * 1024 * 1024)).toLong)).toInt)
   }
 
-  private def confSalt(df: DataFrame): Option[Int] =
-    df.sparkSession.conf.getOption("spark.graft.writeSaltBuckets").map(_.toInt)
-
-  /** Salt width: conf override, else size estimate, else the r13
-    * conservative 4. The width is deliberately NOT derived from the
-    * input's partition count: the salt is the FILE-COUNT bound, and an
-    * over-split in-memory frame (32 near-empty slices) must still land as
-    * few files — partition count only decides whether the bound already
-    * holds (the no-op check below).
+  /** Salt width: the size estimate, else the r13 conservative 4. The
+    * width is deliberately NOT derived from the input's partition count:
+    * the salt is the FILE-COUNT bound, and an over-split in-memory frame
+    * (32 near-empty slices) must still land as few files — partition
+    * count only decides whether the bound already holds (the no-op check
+    * below).
     */
   def saltBuckets(df: DataFrame): Int =
-    confSalt(df).orElse(sizeSalt(df)).getOrElse(4)
+    sizeSalt(df).getOrElse(4)
 
   /** Cluster `df` by its write-partition columns plus a size-adaptive salt
     * on `saltKey` — the step every `partitionBy` write should run first.

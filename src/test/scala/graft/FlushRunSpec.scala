@@ -177,14 +177,14 @@ class FlushRunSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("a merge-on-read tombstone masks a run row; a later append at its key shows") {
+  test("a rewrite delete drops a row held only in runs; a later append at its key shows") {
     val root = freshDir()
     batches(3).foreach(TsStorage.append(_, root))
     assert(!hasPartitions(root))
     val doomed = TsStorage.read(spark, root).filter(col("series_id") === "a")
       .orderBy("t").head()
     val t = doomed.getAs[Long]("t")
-    TsStorage.tombstoneDelete(spark, root, Seq("a"), TimeRange(t, t), None)
+    TsStorage.delete(spark, root, Seq("a"), TimeRange(t, t), None)
     assert(TsStorage.read(spark, root).filter(col("t") === t).count() === 0L)
     assert(ids(root).size === 11)
     TsStorage.append(tsFrame(Seq(("a", t, 42.0, Map.empty[String, String], 100L))), root)

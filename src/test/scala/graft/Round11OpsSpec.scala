@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-11 pins: the mechanical gate-key-uniqueness guard, the tombstone
-  * write-horizon, partition-scoped incremental compaction, and the
-  * incremental graph-layout append.
+/** Round-11 pins: the mechanical gate-key-uniqueness guard,
+  * partition-scoped incremental compaction, and the incremental
+  * graph-layout append.
   */
 class Round11OpsSpec extends AnyFunSuite with SparkTestBase {
 
@@ -27,7 +27,7 @@ class Round11OpsSpec extends AnyFunSuite with SparkTestBase {
     assert((o -- q).isEmpty, s"oracles without bodies: ${(o -- q).toSeq.sorted}")
   }
 
-  // ---- TS storage: tombstone write-horizon + incremental compact ----------
+  // ---- TS storage: incremental compact -----------------------------------
 
   private val tmpRoot = {
     val d = new java.io.File("target/tmp-round11-storage")
@@ -40,7 +40,6 @@ class Round11OpsSpec extends AnyFunSuite with SparkTestBase {
     * partition, so partition-scoped claims are observable.
     */
   private def fixture: org.apache.spark.sql.DataFrame = {
-    val day0 = 1704067200000L // 2024-01-01
     tsFrame(for {
       (sid, si) <- Seq("alpha", "beta", "gamma").zipWithIndex
       d <- 0 until 3
@@ -59,126 +58,80 @@ class Round11OpsSpec extends AnyFunSuite with SparkTestBase {
     out.toMap
   }
 
-  test("tombstone write-horizon: append after delete is visible without compact") {
+  private val day0 = 1704067200000L // 2024-01-01
+  private val betaDay1 = "/series_id=beta/day=2024-01-02"
+
+  /** The fixture with one row appended into beta/day-1 and folded in by a
+    * compact whose bound nothing exceeds: that partition then holds two
+    * parquet files, every other partition one — the one target of a
+    * `maxFilesPerPartition = 1` compact.
+    */
+  private def overBound(path: String): Unit = {
     import graft.sources.TsStorage
-    import graft.operators.{TimeRange, Since}
-    val path = s"$tmpRoot/horizon"
     TsStorage.write(fixture, path)
-    val day0 = 1704067200000L
-    // kill alpha's day-0 rows (t in [day0, day0+4000))
-    TsStorage.tombstoneDelete(spark, path, Seq("alpha"),
-      TimeRange(day0, day0 + 3000L), None)
-    assert(TsStorage.read(spark, path)
-      .filter(col("series_id") === "alpha" && col("t") < day0 + 86400000L)
-      .count() === 0L)
-    // re-ingest two rows at two of the SAME (series, t) keys, higher ids
     TsStorage.append(tsFrame(Seq(
-      ("alpha", day0, 7.5, Map("k" -> "9"), 100L),
-      ("alpha", day0 + 1000L, 8.5, Map("k" -> "9"), 101L))), path)
-    val back = TsStorage.read(spark, path)
-      .filter(col("series_id") === "alpha" && col("t") < day0 + 86400000L)
-      .select("t", "value", "event_id")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).sorted
-    // the appends are visible IMMEDIATELY (no compact ran); the pre-delete
-    // rows at those keys stay dead (their ids are at/below the horizon)
-    assert(back === Seq((day0, 7.5, 100L), (day0 + 1000L, 8.5, 101L)),
-      s"masked or resurrected: ${back.toSeq}")
-    // and the fold preserves exactly that view
-    TsStorage.compact(spark, path)
-    val after = TsStorage.read(spark, path)
-      .filter(col("series_id") === "alpha" && col("t") < day0 + 86400000L)
-      .select("t", "value", "event_id")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).sorted
-    assert(after === back)
-    assert(!new java.io.File(path + "_tombstones").exists())
+      ("beta", day0 + 86400000L + 500L, 9.5, Map("k" -> "9"), 100L))), path)
+    TsStorage.compact(spark, path, maxFilesPerPartition = Int.MaxValue)
+    assert(parquetFiles(s"$path$betaDay1") === 2)
   }
+
+  private def parquetFiles(dir: String): Int =
+    new java.io.File(dir).listFiles.count(_.getName.endsWith(".parquet"))
+
+  private def view(path: String): Seq[String] =
+    graft.sources.TsStorage.read(spark, path)
+      .select("series_id", "t", "event_id")
+      .collect().map(_.toString).sorted.toSeq
 
   test("incremental compact touches only tombstoned / over-bound partitions") {
     import graft.sources.TsStorage
-    import graft.operators.TimeRange
     val path = s"$tmpRoot/inc"
-    TsStorage.write(fixture, path)
-    val day0 = 1704067200000L
-    // tombstone part of beta's day 1; alpha and gamma are bystanders
-    TsStorage.tombstoneDelete(spark, path, Seq("beta"),
-      TimeRange(day0 + 86400000L, day0 + 86400000L + 1000L), None)
-    val preView = TsStorage.read(spark, path)
-      .select("series_id", "t", "event_id")
-      .collect().map(_.toString).sorted.toSeq
+    overBound(path)
+    val preView = view(path)
     val pre = files(path)
-    TsStorage.compact(spark, path, maxFilesPerPartition = 4)
+    TsStorage.compact(spark, path, maxFilesPerPartition = 1)
     val post = files(path)
     // every file OUTSIDE beta/day-1 is byte-identical (same name, size,
     // mtime — never rewritten, never copied)
-    val touched = "/series_id=beta/day=2024-01-02"
-    for ((rel, sig) <- pre if !rel.startsWith(touched) && !rel.endsWith("_SUCCESS"))
+    for ((rel, sig) <- pre if !rel.startsWith(betaDay1) && !rel.endsWith("_SUCCESS"))
       assert(post.get(rel).contains(sig), s"untouched file changed: $rel")
-    // beta/day-1 WAS rewritten (its old files are gone)
-    assert(pre.keys.exists(_.startsWith(touched)))
-    assert(pre.keys.filter(_.startsWith(touched)).forall(!post.contains(_)),
-      "tombstoned partition not rewritten")
-    // view unchanged, set cleared, rows physically gone
-    val postView = TsStorage.read(spark, path)
-      .select("series_id", "t", "event_id")
-      .collect().map(_.toString).sorted.toSeq
-    assert(postView === preView)
-    assert(!new java.io.File(path + "_tombstones").exists())
+    // beta/day-1 WAS rewritten (its old files are gone) into one file
+    assert(pre.keys.exists(_.startsWith(betaDay1)))
+    assert(pre.keys.filter(_.startsWith(betaDay1)).forall(!post.contains(_)),
+      "over-bound partition not rewritten")
+    assert(parquetFiles(s"$path$betaDay1") === 1)
+    // view unchanged
+    assert(view(path) === preView)
     assert(spark.read.parquet(path).count() === preView.size.toLong)
-  }
-
-  test("incremental compact: fully-tombstoned partition commits as Emptied") {
-    import graft.sources.TsStorage
-    import graft.operators.TimeRange
-    val path = s"$tmpRoot/empt"
-    TsStorage.write(fixture, path)
-    val day0 = 1704067200000L
-    // kill ALL of gamma's day 2
-    TsStorage.tombstoneDelete(spark, path, Seq("gamma"),
-      TimeRange(day0 + 2 * 86400000L, day0 + 2 * 86400000L + 4000L), None)
-    TsStorage.compact(spark, path, maxFilesPerPartition = 4)
-    assert(!new java.io.File(s"$path/series_id=gamma/day=2024-01-03").exists(),
-      "emptied partition dir survived the fold")
-    assert(TsStorage.read(spark, path)
-      .filter(col("series_id") === "gamma").count() === 8L)
   }
 
   test("incremental compact killed at the per-partition swap completes on recovery") {
     import graft.sources.TsStorage
-    import graft.operators.TimeRange
     val path = s"$tmpRoot/crash"
-    TsStorage.write(fixture, path)
-    val day0 = 1704067200000L
-    TsStorage.tombstoneDelete(spark, path, Seq("beta"),
-      TimeRange(day0, day0 + 1000L), None)
-    val want = TsStorage.read(spark, path)
-      .select("series_id", "t", "event_id")
-      .collect().map(_.toString).sorted.toSeq
+    overBound(path)
+    val want = view(path)
     // kill AFTER the manifest commit, BEFORE any partition swaps
     val boom = new RuntimeException("kill: post-commit")
     val thrown = intercept[RuntimeException] {
-      TsStorage.compact(spark, path, maxFilesPerPartition = 4,
+      TsStorage.compact(spark, path, maxFilesPerPartition = 1,
         onAfterManifest = () => throw boom)
     }
     assert(thrown eq boom)
     assert(new java.io.File(path + "_delete_manifest").exists())
     // a READER heals only non-destructively; its view is still correct
-    // (live dirs intact + tombstone set still masking)
-    assert(TsStorage.read(spark, path)
-      .select("series_id", "t", "event_id")
-      .collect().map(_.toString).sorted.toSeq === want)
-    // the next WRITER entry completes the fold in full
+    // (live dirs intact)
+    assert(view(path) === want)
+    assert(parquetFiles(s"$path$betaDay1") === 2)
+    // the next WRITER entry completes the swap in full
     TsStorage.recover(spark, path)
     assert(!new java.io.File(path + "_delete_manifest").exists())
-    assert(TsStorage.read(spark, path)
-      .select("series_id", "t", "event_id")
-      .collect().map(_.toString).sorted.toSeq === want)
-    // a fresh compact clears the (now no-op) tombstone set left by the
-    // crashed call — the documented idempotent tail
-    TsStorage.compact(spark, path, maxFilesPerPartition = 4)
-    assert(!new java.io.File(path + "_tombstones").exists())
-    assert(TsStorage.read(spark, path)
-      .select("series_id", "t", "event_id")
-      .collect().map(_.toString).sorted.toSeq === want)
+    assert(parquetFiles(s"$path$betaDay1") === 1)
+    assert(view(path) === want)
+    // a fresh compact has nothing left to rewrite and GCs the siblings
+    TsStorage.compact(spark, path, maxFilesPerPartition = 1)
+    assert(!new java.io.File(path + "_delete_tmp").exists())
+    assert(!new java.io.File(path + "_delete_old").exists())
+    assert(view(path) === want)
   }
 
   test("pagerank: knownNodeCount skips the probe, output bit-identical") {
@@ -196,73 +149,6 @@ class Round11OpsSpec extends AnyFunSuite with SparkTestBase {
     // known count forcing the shuffle regime — same ranks either way
     assert(rows(Graph.pagerank(edges, maxIters = 4, tolMicros = 0L,
       broadcastNodeLimit = 0L, knownNodeCount = Some(3L))) === auto)
-  }
-
-  // ---- facade merge-on-read deletes ---------------------------------------
-
-  test("facade mergeOnReadDeletes: identical reads to the rewrite engine, fold on compact") {
-    def build(path: String, mor: Boolean): GraftEngine = {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-      val e = new GraftEngine(spark, () => 1700000000000L,
-        tsStoragePath = Some(path), mergeOnReadDeletes = mor)
-      for (i <- 1 to 8)
-        assert(e.post(s"/ts/x/at/${i * 1000}", s"""{"value": $i}""").isRight)
-      assert(e.delete("/ts/x/range/3000/5000").isRight)
-      e
-    }
-    val eRw = build(s"$tmpRoot/facade_rw", mor = false)
-    val eMor = build(s"$tmpRoot/facade_mor", mor = true)
-    for (q <- Seq("/ts/x/length", "/ts/x/latest", "/ts/x/earliest",
-        "/ts/x/since/0"))
-      assert(eMor.get(q) === eRw.get(q), q)
-    // the MOR table still physically holds every row until the fold
-    assert(new java.io.File(s"$tmpRoot/facade_mor_tombstones").exists())
-    eMor.compact()
-    assert(!new java.io.File(s"$tmpRoot/facade_mor_tombstones").exists())
-    for (q <- Seq("/ts/x/length", "/ts/x/since/0"))
-      assert(eMor.get(q) === eRw.get(q), s"post-fold $q")
-    // append at a deleted timestamp AFTER the delete: visible immediately
-    // (write horizon), no compact needed
-    assert(eMor.post("/ts/x/at/4000", """{"value": 44}""").isRight)
-    assert(eMor.get("/ts/x/range/4000/4000")
-      .contains("\"value\": 44"))
-  }
-
-  test("tombstone-masked read keeps partition pruning on the series filter") {
-    import graft.sources.TsStorage
-    import graft.operators.TimeRange
-    val path = s"$tmpRoot/maskpush"
-    TsStorage.write(fixture, path)
-    TsStorage.tombstoneDelete(spark, path, Seq("alpha"),
-      TimeRange(1704067200000L, 1704067201000L), None)
-    // the anti-join must not block the series predicate from reaching the
-    // scan: at 100 TB an unpruned masked read turns every small query
-    // into a table scan
-    val plan = TsStorage.read(spark, path)
-      .filter(col("series_id") === "beta")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("beta"),
-      s"series filter not pruning partitions under the mask:\n${plan.take(3000)}")
-  }
-
-  test("restarted engine resumes ids past a tombstone horizon, not the masked max") {
-    val path = s"$tmpRoot/facade_resume"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-    val e = new GraftEngine(spark, () => 1700000000000L,
-      tsStoragePath = Some(path), mergeOnReadDeletes = true)
-    for (i <- 1 to 8)
-      assert(e.post(s"/ts/x/at/${i * 1000}", s"""{"value": $i}""").isRight)
-    // kill the NEWEST rows: the masked view's max id (5) is now BELOW the
-    // batch's write horizon (8)
-    assert(e.delete("/ts/x/range/6000/8000").isRight)
-    // a restarted engine resuming from the masked max would reissue id 6;
-    // its post at deleted t=7000 would then sit at-or-below the horizon
-    // and be silently masked — the unmasked high-water resume prevents it
-    val e2 = new GraftEngine(spark, () => 1700000000000L,
-      tsStoragePath = Some(path), mergeOnReadDeletes = true)
-    assert(e2.post("/ts/x/at/7000", """{"value": 77}""").isRight)
-    assert(e2.get("/ts/x/range/7000/7000").contains("\"value\": 77"),
-      "append after restart masked by a stale-id reissue")
   }
 
   // ---- IVF index deletion (data removal without a rebuild) ----------------
@@ -433,29 +319,38 @@ class Round11OpsSpec extends AnyFunSuite with SparkTestBase {
 
   test("incremental compact killed before its commit rolls back cleanly") {
     import graft.sources.TsStorage
-    import graft.operators.TimeRange
     val path = s"$tmpRoot/crashpre"
-    TsStorage.write(fixture, path)
-    val day0 = 1704067200000L
-    TsStorage.tombstoneDelete(spark, path, Seq("alpha"),
-      TimeRange(day0, day0 + 1000L), None)
-    val want = TsStorage.read(spark, path)
-      .select("series_id", "t", "event_id")
-      .collect().map(_.toString).sorted.toSeq
+    overBound(path)
+    val want = view(path)
     val pre = files(path)
     intercept[RuntimeException] {
-      TsStorage.compact(spark, path, maxFilesPerPartition = 4,
+      TsStorage.compact(spark, path, maxFilesPerPartition = 1,
         onBeforeSwap = () => throw new RuntimeException("kill: pre-commit"))
     }
-    // no manifest committed: the table bytes are untouched, the masked
-    // view unchanged, and the next compact completes from scratch
+    // no manifest committed: the table bytes are untouched, the view
+    // unchanged, and the next compact completes from scratch
     assert(!new java.io.File(path + "_delete_manifest").exists())
     assert(files(path).filterNot(_._1.endsWith("_SUCCESS")) ===
       pre.filterNot(_._1.endsWith("_SUCCESS")))
-    TsStorage.compact(spark, path, maxFilesPerPartition = 4)
-    assert(TsStorage.read(spark, path)
-      .select("series_id", "t", "event_id")
-      .collect().map(_.toString).sorted.toSeq === want)
-    assert(!new java.io.File(path + "_tombstones").exists())
+    TsStorage.compact(spark, path, maxFilesPerPartition = 1)
+    assert(view(path) === want)
+    assert(parquetFiles(s"$path$betaDay1") === 1)
+  }
+
+  test("ts_compact_incremental's compact rewrites at least one partition at sf0.001") {
+    // the gate's storage steps with a hook on the compact's swap, which
+    // a compact reaches only when some partition is over its bound
+    val d = "/root/testdata/sf0.001"
+    var rewrote = false
+    val dir = SparkEntry.compactIncremental(spark, d, onBeforeSwap = () => rewrote = true)
+    assert(rewrote, "the gate's compact had no partition over its bound")
+    for {
+      sd <- new java.io.File(dir).listFiles if sd.getName.startsWith("series_id=")
+      dd <- sd.listFiles if dd.getName.startsWith("day=")
+    } assert(parquetFiles(dd.getPath) <= 4, s"${sd.getName}/${dd.getName}")
+    // and the gate's view is the rewrite delete's
+    def rows(gate: String) =
+      SparkEntry.queries(gate)(spark, d).collect().map(_.toString).sorted.toSeq
+    assert(rows("ts_compact_incremental") === rows("ts_storage_delete"))
   }
 }

@@ -9,7 +9,7 @@ import graft.sources.TsStorage
 
 class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
 
-  // wiped per run: a table's sibling dirs (`_runs`, `_tombstones`, ...)
+  // wiped per run: a table's sibling dirs (`_runs`, `_delete_tmp`, ...)
   // outlive the per-test delete of its root
   private lazy val tmpRoot = {
     val p = new java.io.File("target/tmp-storage")
@@ -42,8 +42,9 @@ class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
     TsStorage.write(ts, path)
     // append takes a driver-local frame (the engine's flush buffer shape)
     val extra = ts.limit(50)
-    TsStorage.append(spark.createDataFrame(
-      java.util.Arrays.asList(extra.collect(): _*), extra.schema), path)
+    val extraDf = spark.createDataFrame(
+      java.util.Arrays.asList(extra.collect(): _*), extra.schema)
+    TsStorage.append(extraDf, path)
     assert(TsStorage.read(spark, path).count() === ts.count() + 50)
     TsStorage.compact(spark, path)
     assert(TsStorage.read(spark, path).count() === ts.count() + 50)
@@ -56,18 +57,23 @@ class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
       dirs
     }
     assert(filesPerDir(path).forall(_ == 1))
-    // the file-count bound is honored (salted repartition): <= 3 — via the
-    // forced global re-cluster (every dir is at 1 file here, so the
-    // partition-scoped compact would correctly skip them all)
-    TsStorage.compactFull(spark, path, maxFilesPerPartition = 3)
+    // the file-count bound is honored (salted repartition): four more
+    // batches, each folded in by a compact whose bound nothing exceeds,
+    // leave their dirs at 5 files; a compact to <= 3 rewrites them
+    for (_ <- 1 to 4) {
+      TsStorage.append(extraDf, path)
+      TsStorage.compact(spark, path, maxFilesPerPartition = Int.MaxValue)
+    }
+    assert(filesPerDir(path).max === 5)
+    TsStorage.compact(spark, path, maxFilesPerPartition = 3)
     val counts = filesPerDir(path)
     assert(counts.forall(_ <= 3), s"over bound: $counts")
-    assert(TsStorage.read(spark, path).count() === ts.count() + 50)
+    assert(TsStorage.read(spark, path).count() === ts.count() + 250)
     // and the partition-scoped compact squeezes back under a tighter
     // bound, skipping already-single-file dirs
     TsStorage.compact(spark, path)
     assert(filesPerDir(path).forall(_ == 1))
-    assert(TsStorage.read(spark, path).count() === ts.count() + 50)
+    assert(TsStorage.read(spark, path).count() === ts.count() + 250)
   }
 
   test("storage delete rewrites only affected partitions, drops emptied ones (S6 at scale)") {
@@ -98,66 +104,6 @@ class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
       graft.operators.Since(0L), None)
     assert(TsStorage.read(spark, path).filter(col("series_id") === "click").count() === 0)
     assert(!new java.io.File(s"$path/series_id=click").exists())
-  }
-
-  test("tombstone delete: masked read equals the rewrite delete; compact folds it in") {
-    import org.apache.spark.sql.functions.col
-    val ts = TsModel.ts(spark, "/root/testdata/sf0.001")
-    val ids = Seq("error")
-    val range = graft.operators.TimeRange(1704844800000L, 1705276800000L)
-    val pred = Some(graft.operators.TagContains("k", "5"))
-    // twin tables, one per delete mechanism
-    val pRewrite = s"$tmpRoot/ts_tomb_rewrite"
-    val pTomb = s"$tmpRoot/ts_tomb_mor"
-    for (p <- Seq(pRewrite, pTomb)) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-      TsStorage.write(ts, p)
-    }
-    TsStorage.delete(spark, pRewrite, ids, range, pred)
-    TsStorage.tombstoneDelete(spark, pTomb, ids, range, pred)
-    def rows(p: String) = TsStorage.read(spark, p)
-      .select("series_id", "t", "value", "event_id")
-      .collect().map(_.toString).sorted.toSeq
-    // merge-on-read view identical to the physical rewrite
-    assert(rows(pTomb) === rows(pRewrite))
-    // the tombstoned rows are still physically present pre-compact
-    assert(spark.read.parquet(pTomb).count() === ts.count())
-    assert(new java.io.File(pTomb + "_tombstones").exists())
-    // compact folds: set cleared, rows physically gone, view unchanged
-    TsStorage.compact(spark, pTomb)
-    assert(!new java.io.File(pTomb + "_tombstones").exists())
-    assert(spark.read.parquet(pTomb).count() ===
-      TsStorage.read(spark, pRewrite).count())
-    assert(rows(pTomb) === rows(pRewrite))
-    // chained: a second tombstone delete composes over the folded table
-    val range2 = graft.operators.TimeRange(1705276800001L, 1705536000000L)
-    TsStorage.tombstoneDelete(spark, pTomb, ids, range2, None)
-    TsStorage.delete(spark, pRewrite, ids, range2, None)
-    assert(rows(pTomb) === rows(pRewrite))
-  }
-
-  test("tombstone delete killed before its commit rename leaves the view unchanged") {
-    val ts = TsModel.ts(spark, "/root/testdata/sf0.001")
-    val path = s"$tmpRoot/ts_tomb_crash"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-    TsStorage.write(ts, path)
-    val before = TsStorage.read(spark, path).collect().map(_.toString).sorted
-    val range = graft.operators.TimeRange(1704844800000L, 1705276800000L)
-    val boom = intercept[RuntimeException] {
-      TsStorage.tombstoneDelete(spark, path, Seq("error"), range, None,
-        onBeforeCommit = () => throw new RuntimeException("injected crash"))
-    }
-    assert(boom.getMessage === "injected crash")
-    // the batch never committed: full pre-delete view, tmp is garbage
-    val after = TsStorage.read(spark, path).collect().map(_.toString).sorted
-    assert(after.sameElements(before), "view changed across a pre-commit crash")
-    assert(!new java.io.File(path + "_tombstones").exists())
-    // the retry GCs the leftover tmp and commits atomically
-    TsStorage.tombstoneDelete(spark, path, Seq("error"), range, None)
-    assert(!new java.io.File(path + "_tombstones_tmp").exists())
-    import org.apache.spark.sql.functions.col
-    assert(TsStorage.read(spark, path).filter(col("series_id") === "error" &&
-      col("t") >= range.fromMs && col("t") <= range.toMs).count() === 0)
   }
 
   test("delete killed between survivor write and swap leaves the table unchanged") {
@@ -423,77 +369,6 @@ class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
     assert(TsStorage.read(spark, path).count() === total - rowsInDay)
   }
 
-  test("compact killed between its two renames: read rolls forward via _SUCCESS") {
-    val ts = TsModel.ts(spark, "/root/testdata/sf0.001")
-    val path = s"$tmpRoot/ts_compact_fwd"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-    TsStorage.write(ts, path)
-    val total = TsStorage.read(spark, path).count()
-    // crash state: rewrite fully committed (_SUCCESS present), original
-    // renamed aside, table root MISSING — the window the round-5 verdict
-    // flagged as having no healing at all
-    val root = new java.io.File(path)
-    val tmp = new java.io.File(s"${path}_compacting")
-    val old = new java.io.File(s"${path}_old")
-    org.apache.commons.io.FileUtils.copyDirectory(root, tmp)
-    assert(root.renameTo(old))
-    // make the parked original distinguishable: drop one partition from it,
-    // so rolling BACK would lose rows while rolling FORWARD keeps them all
-    val sacrificed = old.listFiles().filter(_.getName.startsWith("series_id=")).head
-    org.apache.commons.io.FileUtils.deleteDirectory(sacrificed)
-    assert(TsStorage.read(spark, path).count() === total) // rolled forward
-    assert(!old.exists(), "forward commit must clear the parked original")
-  }
-
-  test("blob-table compact killed between its two renames: facade heals, blobs intact") {
-    val path = s"$tmpRoot/ts_blob_compact_crash"
-    for (p <- Seq(path, s"${path}_blob", s"${path}_blob_compacting", s"${path}_blob_old"))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-    val e = new GraftEngine(spark, () => 1700000000000L, tsStoragePath = Some(path))
-    assert(e.post("/ts/blob/cam/at/1000", """{"frame": "AAAA"}""").isRight)
-    assert(e.post("/ts/blob/cam/at/2000", """{"frame": "BBBB"}""").isRight)
-    assert(e.post("/ts/blob/mic/at/1500", """{"pcm": "CCCC"}""").isRight)
-    e.compact() // flushes the write-behind buffer and compacts both tables
-    val want = e.get("/ts/blob/cam/last/2")
-    // crash state on the BLOB sibling: rewrite committed (_SUCCESS), original
-    // parked aside, table root missing — the window between compact's two
-    // renames; the numeric table is untouched
-    val root = new java.io.File(s"${path}_blob")
-    val tmp = new java.io.File(s"${path}_blob_compacting")
-    val old = new java.io.File(s"${path}_blob_old")
-    org.apache.commons.io.FileUtils.copyDirectory(root, tmp)
-    assert(root.renameTo(old))
-    // make roll-back distinguishable: the parked original loses a partition
-    val sacrificed = old.listFiles().filter(_.getName.startsWith("series_id=")).head
-    org.apache.commons.io.FileUtils.deleteDirectory(sacrificed)
-    // a FRESH engine over the same path must roll the blob table forward at
-    // construction and serve every blob
-    val e2 = new GraftEngine(spark, () => 1700000000000L, tsStoragePath = Some(path))
-    assert(e2.get("/ts/blob/cam/last/2") === want)
-    assert(e2.get("/ts/blob/mic/length") === """{"length": 1}""")
-    assert(!old.exists(), "forward commit must clear the parked original")
-  }
-
-  test("compact killed mid-rewrite (no _SUCCESS): read rolls back to the original") {
-    val ts = TsModel.ts(spark, "/root/testdata/sf0.001")
-    val path = s"$tmpRoot/ts_compact_back"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-    TsStorage.write(ts, path)
-    val total = TsStorage.read(spark, path).count()
-    val root = new java.io.File(path)
-    val tmp = new java.io.File(s"${path}_compacting")
-    val old = new java.io.File(s"${path}_old")
-    // crash state: incomplete rewrite (no _SUCCESS, partition missing),
-    // original parked, table root missing
-    org.apache.commons.io.FileUtils.copyDirectory(root, tmp)
-    assert(new java.io.File(tmp, "_SUCCESS").delete())
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      tmp.listFiles().filter(_.getName.startsWith("series_id=")).head)
-    assert(root.renameTo(old))
-    assert(TsStorage.read(spark, path).count() === total) // rolled back
-    assert(!tmp.exists(), "rollback must drop the incomplete rewrite")
-  }
-
   test("facade backed by TsStorage: post/read/delete against parquet, no membuf") {
     val path = s"$tmpRoot/ts_facade"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
@@ -542,22 +417,68 @@ class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
     TsStorage.write(ts, path)
     val total = TsStorage.read(spark, path).count()
-    val extra = TsStorage.read(spark, path).orderBy(col("event_id").desc).limit(1)
-      .withColumn("t", col("t") + 999999999L)
-      .withColumn("event_id", col("event_id") + 1)
-    val extraRows = extra.collect() // materialize before the files move
-    val extraDf = spark.createDataFrame(
-      java.util.Arrays.asList(extraRows: _*), extra.schema)
-    // crash state: the whole table sits in the committed rewrite (root
-    // missing). An append that did NOT heal first would create a root
-    // holding only the new row — and the next compact would then GC the
-    // parked rewrite, silently dropping the entire pre-crash table.
-    assert(new java.io.File(path).renameTo(new java.io.File(s"${path}_compacting")))
+    def local(df: org.apache.spark.sql.DataFrame) = // materialized: files move below
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    val newest = TsStorage.read(spark, path).orderBy(col("event_id").desc).limit(1)
+    // a second copy of the newest row, folded in: its dir now holds two
+    // files, the one target of a compact to one file per partition
+    TsStorage.append(local(newest.withColumn("event_id", col("event_id") + 1)), path)
+    TsStorage.compact(spark, path, maxFilesPerPartition = Int.MaxValue)
+    val extraDf = local(newest.withColumn("t", col("t") + 999999999L)
+      .withColumn("event_id", col("event_id") + 2))
+    // crash state: the compact committed its manifest and parked the
+    // target, whose rewrite still sits in the tmp sibling. An append that
+    // did NOT heal first would leave the swap to a later writer.
+    intercept[RuntimeException] {
+      TsStorage.compact(spark, path, maxFilesPerPartition = 1,
+        onAfterManifest = () => throw new RuntimeException("injected crash"))
+    }
+    val manifest = new java.io.File(s"${path}_delete_manifest")
+    val rel = new String(Files.readAllBytes(manifest.toPath), "UTF-8").split("\n") match {
+      case Array(line) => line.split("\t").head
+      case lines => fail(s"expected one target, got ${lines.toSeq}")
+    }
+    val parked = new java.io.File(s"${path}_delete_old/$rel")
+    parked.getParentFile.mkdirs()
+    assert(new java.io.File(s"$path/$rel").renameTo(parked))
     TsStorage.append(extraDf, path)
-    assert(TsStorage.read(spark, path).count() === total + 1)
+    assert(!manifest.exists() && new java.io.File(s"$path/$rel").exists())
+    assert(TsStorage.read(spark, path).count() === total + 2)
     TsStorage.compact(spark, path)
-    assert(TsStorage.read(spark, path).count() === total + 1)
-    assert(!new java.io.File(s"${path}_compacting").exists())
+    assert(TsStorage.read(spark, path).count() === total + 2)
+    assert(!new java.io.File(s"${path}_delete_tmp").exists())
+    assert(!new java.io.File(s"${path}_delete_old").exists())
+  }
+
+  test("blob-table compact killed between its two renames: facade heals, blobs intact") {
+    val path = s"$tmpRoot/ts_blob_compact_crash"
+    val blob = s"${path}_blob"
+    val e = new GraftEngine(spark, () => 1700000000000L, tsStoragePath = Some(path))
+    assert(e.post("/ts/blob/cam/at/1000", """{"frame": "AAAA"}""").isRight)
+    assert(e.post("/ts/blob/mic/at/1500", """{"pcm": "CCCC"}""").isRight)
+    // two folds: cam's (series, day) dir ends up holding two files, the
+    // one target of a compact to one file per partition
+    e.compact(maxFilesPerPartition = Int.MaxValue)
+    assert(e.post("/ts/blob/cam/at/2000", """{"frame": "BBBB"}""").isRight)
+    e.compact(maxFilesPerPartition = Int.MaxValue)
+    val want = e.get("/ts/blob/cam/last/2")
+    // crash state on the BLOB sibling: the compact committed its manifest
+    // and parked cam's partition, whose rewrite was never renamed in; the
+    // numeric table is untouched
+    intercept[RuntimeException] {
+      TsStorage.compact(spark, blob, maxFilesPerPartition = 1,
+        onAfterManifest = () => throw new RuntimeException("injected crash"))
+    }
+    val cam = new java.io.File(blob, "series_id=cam").listFiles.head
+    val parked = new java.io.File(s"${blob}_delete_old/series_id=cam/${cam.getName}")
+    parked.getParentFile.mkdirs()
+    assert(cam.renameTo(parked))
+    // a FRESH engine over the same path must complete the swap at
+    // construction and serve every blob
+    val e2 = new GraftEngine(spark, () => 1700000000000L, tsStoragePath = Some(path))
+    assert(!new java.io.File(s"${blob}_delete_manifest").exists())
+    assert(e2.get("/ts/blob/cam/last/2") === want)
+    assert(e2.get("/ts/blob/mic/length") === """{"length": 1}""")
   }
 
   test("write-behind ingest batches appends; facade compact sweeps numeric AND blob") {
