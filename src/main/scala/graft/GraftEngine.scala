@@ -1,9 +1,9 @@
 package graft
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.model.NumericValidator
 import graft.operators._
@@ -15,15 +15,20 @@ import graft.zestql.{Compiler, ParseError, PathParser, TsQuery}
   * (`docs/README.md:18-226`) routed onto the Spark operators — a ZestDB
   * user can issue the same paths/payloads and get the same JSON shapes.
   *
-  * State lives in write buffers materialized to DataFrames per query — the
-  * API-scale analogue of the reference's in-memory membuf; the 100 TB
-  * deployment swaps the buffers for [[graft.sources.TsStorage]] appends
-  * (same frames, same query code), and — r13 — the three KV change-logs
-  * persist the same way ([[graft.sources.KvStorage]]; the reference keeps
-  * them in its Irmin store, `keyvalue.re:4,46,88`), with point reads
-  * served from an in-process LWW cache. Content formats follow the CoAP
-  * numbering the reference uses (0=text, 42=binary, 50=json —
-  * `src/prov.re:30-36`).
+  * State: without `tsStoragePath` every store lives in driver memory (the
+  * reference's membuf). With it, the TS tables are
+  * [[graft.sources.TsStorage]] tables and the three KV change-logs are
+  * [[graft.sources.KvStorage]] logs (the reference keeps all of them in
+  * its Irmin store, `keyvalue.re:4,46,88`), written behind through
+  * driver-side buffers. Reads are served two ways:
+  *  - job-free from memory: KV and catalogue GETs from an in-process LWW
+  *    cache, and each TS GET its table's unfolded tail covers
+  *    ([[TsTail]]: the buffer plus the committed flush runs, so in membuf
+  *    mode every TS GET) by a driver-side evaluator;
+  *  - through Spark: every other TS GET, [[Compiler.compile]] over the
+  *    table.
+  * Content formats follow the CoAP numbering the reference uses (0=text,
+  * 42=binary, 50=json — `src/prov.re:30-36`).
   */
 class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentTimeMillis(),
                   tsStoragePath: Option[String] = None,
@@ -58,6 +63,14 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
     tsStoragePath.map(_.stripSuffix("/") + s"_kv_$store")
   private val kvStores = Seq("json", "text", "binary")
 
+  // the rows of each TS table the fold has not moved into the layout yet:
+  // its write-behind buffer plus its committed flush runs (in membuf
+  // mode, the whole table, uncapped). Guarded by flushLock, like the KV
+  // cache.
+  private def tailCap = if (tsStoragePath.isDefined) TailBytes else Long.MaxValue
+  private val numericTail = new TsTail[TsRow](tailCap)
+  private val blobTail    = new TsTail[BlobRow](tailCap)
+
   // durable mode: resume the event-id sequence from BOTH tables, otherwise
   // a restarted engine would reissue ids and break the event_id tie order
   // every read/top-n relies on. Recovery runs BEFORE the existence check:
@@ -79,8 +92,26 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
         .foreach(m => nextEventId = math.max(nextEventId, m))
   }
 
-  private val numericBuf = mutable.ArrayBuffer.empty[TsRow]
-  private val blobBuf    = mutable.ArrayBuffer.empty[BlobRow]
+  // ...and the tails: the series the layout holds (off its directory
+  // names) are not whole; the committed runs' rows stream in up to the
+  // tail's cap, and past it every series they hold is not whole either
+  private def loadTail[R <: TailRow](tail: TsTail[R], path: Option[String])(
+      rows: DataFrame => java.util.Iterator[R]): Unit =
+    path.foreach { p =>
+      val runs = graft.sources.TsStorage.unfolded(spark, p)
+      val fit = tail.load(graft.sources.TsStorage.foldedSeries(spark, p),
+        runs.fold(Iterator.empty[R])(rows(_).asScala))
+      if (!fit) {
+        import spark.implicits._
+        tail.evict(runs.get.select("series_id").distinct().as[String].collect())
+      }
+    }
+  locally {
+    import spark.implicits._
+    loadTail(numericTail, tsStoragePath)(_.as[TsRow].toLocalIterator())
+    loadTail(blobTail, blobStoragePath)(_.withColumnRenamed("blob", "payload").as[BlobRow].toLocalIterator())
+  }
+
   // three KV stores: json / text / binary (binary carried base64-encoded)
   private val kvBufs = Map(
     "json" -> mutable.ArrayBuffer.empty[KvRow],
@@ -90,12 +121,10 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
   // connection threads while fan-out snapshots concurrently
   private val subs = mutable.ArrayBuffer.empty[Subscription]
   private val subsLock = new Object
-  // guards the write-behind buffers' flush+clear (and their snapshot
-  // reads): the wire server runs GETs concurrently under a read lock, and
+  // guards the write-behind buffers' flush+clear, the tails and the KV
+  // cache: the wire server runs GETs concurrently under a read lock, and
   // two concurrent flushes of the same buffer would append the rows twice
   private val flushLock = new Object
-
-  // ---- frames --------------------------------------------------------------
 
   // ---- write-behind flush (durable mode) -----------------------------------
   // With `flushEveryRows = 1` (default) every POST commits durably before
@@ -110,24 +139,29 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
   // moves to the flush (threshold, read, delete, [[flush]], or
   // [[compact]]) — rows buffered in an abandoned engine are lost, the
   // standard write-behind trade.
-  private def flushNumeric(): Unit = flushLock.synchronized {
-    tsStoragePath.foreach { p =>
-      if (numericBuf.nonEmpty) {
-        import spark.implicits._
-        graft.sources.TsStorage.append(numericBuf.toSeq.toDF(), p)
-        numericBuf.clear()
+  private def flushTail[R <: TailRow](tail: TsTail[R], path: Option[String])(
+      frame: Seq[R] => DataFrame): Unit = flushLock.synchronized {
+    path.foreach { p =>
+      val rows = tail.pendingRows
+      if (rows.nonEmpty) {
+        // a fold moves every unfolded row into the layout; a failure may
+        // have folded part-way, so it evicts them too (which only narrows
+        // what the tail covers)
+        val folded =
+          try graft.sources.TsStorage.append(frame(rows), p)
+          catch { case e: Throwable => tail.evict(); throw e }
+        tail.flushed()
+        if (folded) tail.evict()
       }
     }
   }
-  private def flushBlob(): Unit = flushLock.synchronized {
-    blobStoragePath.foreach { p =>
-      if (blobBuf.nonEmpty) {
-        import spark.implicits._
-        graft.sources.TsStorage.append(
-          blobBuf.toSeq.toDF().withColumnRenamed("payload", "blob"), p)
-        blobBuf.clear()
-      }
-    }
+  private def flushNumeric(): Unit = flushTail(numericTail, tsStoragePath) { rows =>
+    import spark.implicits._
+    rows.toDF()
+  }
+  private def flushBlob(): Unit = flushTail(blobTail, blobStoragePath) { rows =>
+    import spark.implicits._
+    rows.toDF().withColumnRenamed("payload", "blob")
   }
   private def flushKv(store: String): Unit = flushLock.synchronized {
     kvStoragePath(store).foreach { p =>
@@ -153,6 +187,9 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
     */
   def compact(maxFilesPerPartition: Int = 1): Unit = {
     flush()
+    // the compaction folds the runs first; in membuf mode the tail is the
+    // store, and stays whole
+    if (tsStoragePath.isDefined) flushLock.synchronized { numericTail.evict(); blobTail.evict() }
     (tsStoragePath.toSeq ++ blobStoragePath.toSeq).foreach { p =>
       // recover first: a crashed delete or compact's parked partition is
       // missing until its rewrite rolls in, and this sweep must heal it,
@@ -166,10 +203,9 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
     }
   }
 
-  /** Numeric TS frame: the in-memory buffer, or — when constructed with
+  /** Numeric TS frame: the membuf, or — when constructed with
     * `tsStoragePath` — the durable [[graft.sources.TsStorage]] table (any
-    * pending write-behind rows flushed first), so every read/delete runs
-    * against parquet instead of a membuf.
+    * pending write-behind rows flushed first).
     */
   private def tsFrame: DataFrame = {
     import spark.implicits._
@@ -177,8 +213,8 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
       case Some(p) =>
         flushNumeric()
         if (graft.sources.TsStorage.exists(spark, p)) graft.sources.TsStorage.read(spark, p)
-        else numericBuf.toSeq.toDF() // nothing ever written
-      case _ => numericBuf.toSeq.toDF()
+        else Seq.empty[TsRow].toDF() // nothing ever written
+      case _ => flushLock.synchronized(numericTail.pendingRows).toDF()
     }
   }
 
@@ -188,8 +224,8 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
       case Some(p) =>
         flushBlob()
         if (graft.sources.TsStorage.exists(spark, p)) graft.sources.TsStorage.read(spark, p)
-        else blobBuf.toSeq.toDF().withColumnRenamed("payload", "blob")
-      case _ => blobBuf.toSeq.toDF().withColumnRenamed("payload", "blob")
+        else Seq.empty[BlobRow].toDF().withColumnRenamed("payload", "blob")
+      case _ => flushLock.synchronized(blobTail.pendingRows).toDF().withColumnRenamed("payload", "blob")
     }
   }
   private def kvFrame(store: String): DataFrame = {
@@ -343,22 +379,20 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
         for {
           _ <- tsFormatOk(format)
           t <- atTime(rest)
-        } yield {
-          blobBuf += BlobRow(id, t, payload, eventId())
-          if (blobStoragePath.isDefined && blobBuf.length >= flushEveryRows)
+        } yield flushLock.synchronized {
+          blobTail.add(BlobRow(id, t, payload, eventId()))
+          if (blobStoragePath.isDefined && blobTail.pendingCount >= flushEveryRows)
             flushBlob()
-          ()
         }
       case "ts" :: id :: rest =>
         for {
           _ <- tsFormatOk(format)
           t <- atTime(rest)
           parsed <- NumericValidator.validate(payload)
-        } yield {
-          numericBuf += TsRow(id, t, parsed.value, parsed.tag.toMap, eventId())
-          if (tsStoragePath.isDefined && numericBuf.length >= flushEveryRows)
+        } yield flushLock.synchronized {
+          numericTail.add(TsRow(id, t, parsed.value, parsed.tag.toMap, eventId()))
+          if (tsStoragePath.isDefined && numericTail.pendingCount >= flushEveryRows)
             flushNumeric()
-          ()
         }
       case "kv" :: id :: key :: Nil =>
         kvStoreFor(format).flatMap { store =>
@@ -415,7 +449,7 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
     }
   }
 
-  private def tsGet(q: TsQuery): String = {
+  private def tsGet(q: TsQuery): String = localGet(q).getOrElse {
     val frame = if (q.blob) blobFrame else tsFrame
     val descending = q.selector match {
       case Earliest | FirstN(_) => false
@@ -429,8 +463,31 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
         ResultCodec.aggJson(filtered, q.agg.get)
       case _ =>
         val out = Compiler.compile(frame, q)
-        if (q.blob) blobReadJson(out, descending)
-        else ResultCodec.readJson(out, descending, maxRows = maxResultRows)
+        if (q.blob)
+          ResultCodec.readJson(out, descending, maxResultRows,
+            r => ResultCodec.blobRecordJson(r.getAs[Long]("t"), r.getAs[String]("blob")))
+        else ResultCodec.readJson(out, descending, maxResultRows)
+    }
+  }
+
+  /** A GET its table's tail covers, answered on the driver with no Spark
+    * job — the same reply as the Spark path (TsTailSpec pins it). None
+    * when the tail does not cover it. The pending rows are flushed first,
+    * as every read does, so the durability boundary stays put.
+    */
+  private def localGet(q: TsQuery): Option[String] = flushLock.synchronized {
+    val tail: TsTail[_ <: TailRow] =
+      if (q.blob) { flushBlob(); blobTail } else { flushNumeric(); numericTail }
+    tail.select(q.ids, q.selector).map { rows =>
+      // the parser admits a filter or an aggregate on numeric GETs only
+      def kept = rows.collect { case r: TsRow if q.filter.forall(TsOps.tagHolds(_, r.tags)) => r }
+      (q.selector, q.agg) match {
+        case (Length, _)   => ResultCodec.lengthJson(rows.size.toLong)
+        case (_, Some(fn)) => Aggregates.resultJson(Aggregates.local(fn, kept.map(_.value)))
+        case _ =>
+          ResultCodec.arrayJson((if (q.filter.isEmpty) rows else kept).iterator.map(_.json),
+            maxResultRows)
+      }
     }
   }
 
@@ -449,28 +506,6 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
       Right(())
     } catch { case e: ParseError => Left(e.message) }
 
-  /** Streams partition-by-partition like [[ResultCodec.readJson]] — peak
-    * driver memory is one partition of blobs, not the whole window.
-    */
-  private def blobReadJson(df: DataFrame, descending: Boolean): String = {
-    val ord =
-      if (descending) Seq(col("t").desc, col("event_id").desc)
-      else Seq(col("t").asc, col("event_id").asc)
-    val it = df.orderBy(ord: _*).toLocalIterator()
-    val sb = new StringBuilder("[")
-    var first = true
-    var n = 0L
-    while (it.hasNext) {
-      val r = it.next()
-      if (!first) sb.append(", ")
-      n += 1
-      if (n > maxResultRows) throw new ResultCodec.ResultTooLarge(maxResultRows)
-      sb.append(s"""{"timestamp": ${r.getAs[Long]("t")}, "data": ${r.getAs[String]("blob")}}""")
-      first = false
-    }
-    sb.append("]").toString
-  }
-
   /** DELETE on a TS path (S6 semantics incl. same-timestamp bystanders) or
     * a KV path (tombstone).
     */
@@ -486,39 +521,33 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
       case _ =>
         try {
           val q = PathParser.parseDelete(path)
-          if (q.blob) blobStoragePath match {
+          val (tail, storage): (TsTail[_ <: TailRow], Option[String]) = flushLock.synchronized {
+            if (q.blob) { flushBlob(); (blobTail, blobStoragePath) }
+            else { flushNumeric(); (numericTail, tsStoragePath) }
+          }
+          storage match {
             case Some(p) =>
-              // durable blob delete: same partition-scoped crash-atomic
-              // rewrite as numeric (the reference deletes blob TS through
-              // the identical path, server.re:976-996); pending
-              // write-behind rows must land first or they'd survive, and
+              // durable partition-scoped rewrite — the same crash-atomic
+              // path for blob and numeric (the reference deletes blob TS
+              // through the identical path, server.re:976-996), no
+              // driver-side collect; it folds the runs first. Deleting
+              // from a not-yet-written table is a no-op, not a crash, and
               // recovery must precede the existence check or a crashed
               // compact makes this delete a silent no-op
-              flushBlob()
+              flushLock.synchronized(tail.evict())
               graft.sources.TsStorage.recover(spark, p)
               if (graft.sources.TsStorage.exists(spark, p))
                 graft.sources.TsStorage.delete(spark, p, q.ids, q.selector, q.filter)
-            case None =>
-              val remaining = TsOps.deleteByQuery(blobFrame, q.ids, q.selector, q.filter)
-                .collect().map(r => BlobRow(r.getAs[String]("series_id"), r.getAs[Long]("t"),
-                  r.getAs[String]("blob"), r.getAs[Long]("event_id")))
-              val keep = blobBuf.filterNot(b => q.ids.contains(b.series_id)) ++ remaining
-              blobBuf.clear(); blobBuf ++= keep.sortBy(_.event_id)
-          } else tsStoragePath match {
-            case Some(p) =>
-              // durable partition-scoped rewrite — no driver-side collect;
-              // deleting from a not-yet-written table is a no-op, not a
-              // crash; recovery precedes the existence check (see blob)
-              flushNumeric()
-              graft.sources.TsStorage.recover(spark, p)
-              if (graft.sources.TsStorage.exists(spark, p))
-                graft.sources.TsStorage.delete(spark, p, q.ids, q.selector, q.filter)
-            case None =>
-              val remaining = TsOps.deleteByQuery(tsFrame, q.ids, q.selector, q.filter)
-                .collect().map(r => TsRow(r.getAs[String]("series_id"), r.getAs[Long]("t"),
-                  r.getAs[Double]("value"), r.getAs[Map[String, String]]("tags"), r.getAs[Long]("event_id")))
-              val keep = numericBuf.filterNot(b => q.ids.contains(b.series_id)) ++ remaining
-              numericBuf.clear(); numericBuf ++= keep.sortBy(_.event_id)
+            case None => flushLock.synchronized {
+              // membuf: the tail is the store and covers every selection;
+              // [[TsOps.deleteByQuery]]'s rule — every row of the queried
+              // series at a matched timestamp dies, bystanders included
+              val doomed = tail.select(q.ids, q.selector).getOrElse(
+                throw new IllegalStateException("membuf tail must cover a delete"))
+                .collect { case r: TsRow if q.filter.forall(TsOps.tagHolds(_, r.tags)) => r.t
+                           case r: BlobRow => r.t }
+              tail.deleteAt(q.ids, doomed.toSet)
+            }
           }
           Right(())
         } catch { case e: ParseError => Left(e.message) }
@@ -755,9 +784,26 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
 }
 
 object GraftEngine {
+  /** A durable TS table's tail holds at most this many bytes of rows (by
+    * [[TailRow.heapBytes]]) beyond its pending ones; reads of the series
+    * it evicts at the cap go to Spark.
+    */
+  private val TailBytes = 16L << 20
+
   final case class TsRow(series_id: String, t: Long, value: Double,
-                         tags: Map[String, String], event_id: Long)
-  final case class BlobRow(series_id: String, t: Long, payload: String, event_id: Long)
+                         tags: Map[String, String], event_id: Long) extends TailRow {
+    def json: String = ResultCodec.recordJson(t, value, tags)
+    // the row, its id string and its slots in the tail's buffers; a tag
+    // costs its two strings and its map entry. Sized on rows a restart
+    // reloads, which share no string
+    def heapBytes: Long = 160L + series_id.length +
+      tags.iterator.map { case (k, v) => 160L + k.length + v.length }.sum
+  }
+  final case class BlobRow(series_id: String, t: Long, payload: String,
+                           event_id: Long) extends TailRow {
+    def json: String = ResultCodec.blobRecordJson(t, payload)
+    def heapBytes: Long = 136L + series_id.length + payload.length
+  }
   final case class KvRow(id: String, key: String, value: String,
                          write_ts: Long, event_id: Long, deleted: Boolean)
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -32,25 +34,23 @@ object ResultCodec {
     if (v == v.floor && !v.isInfinite && math.abs(v) < 1e15) v.toLong.toString
     else v.toString
 
-  /** One record: `{"timestamp": t, "data": {...}}`. */
-  private def recordJson(r: Row): String = {
-    val t = r.getAs[Long]("t")
-    val tags = Option(r.getAs[Map[String, String]]("tags")).getOrElse(Map.empty)
-    val fields = (s""""value": ${numJson(r.getAs[Double]("value"))}"""
-      +: tags.filter(_._2.nonEmpty).toSeq.sortBy(_._1)
+  /** One record: `{"timestamp": t, "data": {"value": v, <tags>}}`, the
+    * tags sorted by name and empty ones left out.
+    */
+  def recordJson(t: Long, value: Double, tags: Map[String, String]): String = {
+    val fields = (s""""value": ${numJson(value)}"""
+      +: Option(tags).getOrElse(Map.empty).filter(_._2.nonEmpty).toSeq.sortBy(_._1)
         .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" })
     s"""{"timestamp": $t, "data": {${fields.mkString(", ")}}}"""
   }
 
-  /** Read-result array, sorted by the reference's rule (desc for Last
-    * family). Tie order pinned by event_id (the reference leaves it
-    * unspecified — SURVEY §7.5.2).
-    *
-    * Serialization streams partition-by-partition (`toLocalIterator`): a
-    * `since`/`range` over a wide window no longer materializes every row
-    * on the driver at once — peak driver memory is one partition plus the
-    * output builder, instead of 2x the full result.
-    */
+  private def recordJson(r: Row): String =
+    recordJson(r.getAs[Long]("t"), r.getAs[Double]("value"), r.getAs[Map[String, String]]("tags"))
+
+  /** One blob record: the stored JSON document verbatim as its `data`. */
+  def blobRecordJson(t: Long, blob: String): String =
+    s"""{"timestamp": $t, "data": $blob}"""
+
   /** Thrown when a read selection exceeds the engine's result cap — the
     * bounded-result contract for the whole-result-in-driver-memory wire
     * shape (the reference holds every response in memory too; at 100 TB
@@ -61,30 +61,46 @@ object ResultCodec {
     s"read result exceeds the $cap-row response cap (143); " +
       "use getToParquet for unbounded selections")
 
+  /** A read reply: the rendered records, in order, as one JSON array;
+    * more than `maxRows` of them is [[ResultTooLarge]].
+    */
+  def arrayJson(records: Iterator[String], maxRows: Long): String = {
+    val sb = new StringBuilder("[")
+    var n = 0L
+    records.foreach { r =>
+      n += 1
+      if (n > maxRows) throw new ResultTooLarge(maxRows)
+      if (n > 1) sb.append(", ")
+      sb.append(r)
+    }
+    sb.append("]").toString
+  }
+
+  /** Read-result array, sorted by the reference's rule (desc for Last
+    * family). Tie order pinned by event_id (the reference leaves it
+    * unspecified — SURVEY §7.5.2). `record` renders one row; the default
+    * is the numeric record, [[blobRecordJson]] the blob one.
+    *
+    * Serialization streams partition-by-partition (`toLocalIterator`): a
+    * `since`/`range` over a wide window no longer materializes every row
+    * on the driver at once — peak driver memory is one partition plus the
+    * output builder, instead of 2x the full result.
+    */
   def readJson(df: DataFrame, descending: Boolean = true,
-               maxRows: Long = Long.MaxValue): String = {
+               maxRows: Long = Long.MaxValue,
+               record: Row => String = recordJson): String = {
     val ord =
       if (descending) Seq(col("t").desc, col("event_id").desc)
       else Seq(col("t").asc, col("event_id").asc)
-    val it = df.orderBy(ord: _*).toLocalIterator()
-    val sb = new StringBuilder("[")
-    var first = true
-    var n = 0L
-    while (it.hasNext) {
-      if (!first) sb.append(", ")
-      n += 1
-      if (n > maxRows) throw new ResultTooLarge(maxRows)
-      sb.append(recordJson(it.next())); first = false
-    }
-    sb.append("]").toString
+    arrayJson(df.orderBy(ord: _*).toLocalIterator().asScala.map(record), maxRows)
   }
 
   /** `{"result": x}` / `{}` (delegates to Aggregates for the empty rule). */
   def aggJson(df: DataFrame, fn: AggFn): String = Aggregates.resultJson(df, fn)
 
   /** `{"length": n}` (`timeseries.re:321`). */
-  def lengthJson(df: DataFrame): String =
-    s"""{"length": ${df.head().getAs[Long]("length")}}"""
+  def lengthJson(n: Long): String = s"""{"length": $n}"""
+  def lengthJson(df: DataFrame): String = lengthJson(df.head().getAs[Long]("length"))
 
   /** KV shapes: keys array + count (`keys.re:32-45`, `keyvalue.re:35-36`).
     * The Seq forms serve the engine's in-process cache path; the DataFrame

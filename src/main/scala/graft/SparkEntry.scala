@@ -119,14 +119,26 @@ object SparkEntry {
     * Keyed by the JVM and the dataset, so a concurrent Verify and Bench,
     * or two datasets in one run, never share one. A storage table goes
     * one level down (`<dir>/table`), so its sibling dirs (`_runs`,
-    * `_blob`, `_kv_*`, ...) are wiped with it.
+    * `_blob`, `_kv_*`, ...) are wiped with it. Every dir handed out is
+    * deleted when the JVM exits ([[scratchDirs]]).
     */
   private def scratchDir(tag: String, d: String): String = {
     val dir = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft-gate-$tag-${ProcessHandle.current().pid()}_" +
         d.replaceAll("[^a-zA-Z0-9]", "_"))
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    scratchDirs.synchronized(scratchDirs += dir)
     dir.getAbsolutePath
+  }
+
+  /** The scratch dirs handed out, deleted by one shutdown hook. Not
+    * earlier: a gate returns a lazy frame that still reads its dir after
+    * the gate body is done.
+    */
+  private lazy val scratchDirs: scala.collection.mutable.Set[java.io.File] = {
+    val dirs = scala.collection.mutable.LinkedHashSet.empty[java.io.File]
+    sys.addShutdownHook(dirs.synchronized(dirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)))
+    dirs
   }
 
   /** ts_compact_incremental's storage steps; returns the table path. The

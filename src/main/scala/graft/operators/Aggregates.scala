@@ -19,8 +19,17 @@ import org.apache.spark.sql.functions._
   * All seven are built-in Spark aggregates with map-side partial
   * aggregation, so at 100 TB each is one scan + a 1-row-per-partition
   * shuffle; `median` is exact (Spark >= 3.4) which sorts per group — for
-  * cluster scale swap to `percentile_approx` via [[Aggregates.median]]'s
-  * `approx` flag.
+  * cluster scale swap to `percentile_approx` via [[Aggregates.column]]'s
+  * `approxMedian` flag. [[Aggregates.local]] is the driver-side twin the
+  * engine answers tail-covered GETs with.
+  *
+  * Float results depend on the order the values are added in, which
+  * depends on the layout (how rows split over files and partitions) and
+  * the path (Spark or [[Aggregates.local]]): `sum`, `mean` and `sd` agree
+  * within 1e-9 relative across engine modes and layouts, not bit for bit
+  * (the same 23 rows summed to `1122.549` on a durable engine and to
+  * `1122.5489999999998` on a membuf one). `count`, `min`, `max` and
+  * `median` pick or interpolate stored values and are exact everywhere.
   */
 sealed trait AggFn
 case object AggSum    extends AggFn
@@ -57,16 +66,50 @@ object Aggregates {
                      count(lit(1)).as("n")).head()
     // null covers aggregates undefined on the input (stddev_samp of one
     // row) — emit the empty-result shape rather than NPE
-    if (row.getLong(1) == 0L || row.isNullAt(0)) "{}"
-    else {
-      val r = row.getDouble(0)
-      // NaN/Infinity (e.g. sum over infinite inputs) are not valid JSON
-      // numbers — fold them into the empty-result shape. The integral
-      // fast-path needs the same < 1e15 magnitude guard as
-      // ResultCodec.numJson: toLong would clamp 2^63-and-up silently.
-      if (r.isNaN || r.isInfinite) "{}"
-      else if (r == r.floor && math.abs(r) < 1e15) s"""{"result": ${r.toLong}.0}"""
-      else s"""{"result": $r}"""
-    }
+    resultJson(if (row.getLong(1) == 0L || row.isNullAt(0)) None else Some(row.getDouble(0)))
   }
+
+  /** The shape of one result, None being the empty `{}`. */
+  def resultJson(result: Option[Double]): String = result match {
+    // NaN/Infinity (e.g. sum over infinite inputs) are not valid JSON
+    // numbers — fold them into the empty-result shape. The integral
+    // fast-path needs the same < 1e15 magnitude guard as
+    // ResultCodec.numJson: toLong would clamp 2^63-and-up silently.
+    case Some(r) if !r.isNaN && !r.isInfinite =>
+      if (r == r.floor && math.abs(r) < 1e15) s"""{"result": ${r.toLong}.0}"""
+      else s"""{"result": $r}"""
+    case _ => "{}"
+  }
+
+  /** [[column]]'s value over driver-side values, None where Spark's is
+    * null (no rows; `sd` of one row). `median` is Spark's exact
+    * percentile at 0.5 (interpolating between the two middle values, in
+    * Spark's operation order); `sd` is `stddev_samp` by Spark's running
+    * central-moment update.
+    */
+  def local(fn: AggFn, vs: scala.collection.Seq[Double]): Option[Double] =
+    if (vs.isEmpty) None
+    else fn match {
+      case AggSum    => Some(vs.sum)
+      case AggCount  => Some(vs.size.toDouble)
+      case AggMin    => Some(vs.reduce((a, b) => math.min(a, b)))
+      case AggMax    => Some(vs.reduce((a, b) => math.max(a, b)))
+      case AggMean   => Some(vs.sum / vs.size)
+      case AggMedian =>
+        val sorted = vs.toArray.sorted(Ordering.Double.TotalOrdering)
+        val pos = (vs.size - 1) * 0.5
+        val (lo, hi) = (pos.floor.toLong, pos.ceil.toLong)
+        val (a, b) = (sorted(lo.toInt), sorted(hi.toInt))
+        Some(if (lo == hi || a == b) a else (hi - pos) * a + (pos - lo) * b)
+      case AggSd =>
+        var (n, mean, m2) = (0.0, 0.0, 0.0)
+        vs.foreach { v =>
+          n += 1
+          val delta = v - mean
+          val deltaN = delta / n
+          mean += deltaN
+          m2 += delta * (delta - deltaN)
+        }
+        if (n < 2) None else Some(math.sqrt(m2 / (n - 1)))
+    }
 }

@@ -136,6 +136,17 @@ object TsOps {
     case TagContains(tag, v) => df.filter(col("tags").getItem(tag).contains(v))
   }
 
+  /** [[tagFilter]]'s predicate on one row's tags, for the engine's
+    * driver-side evaluator: an absent (or null) tag fails it.
+    */
+  def tagHolds(pred: TagPred, tags: Map[String, String]): Boolean = {
+    val v = Option(tags).flatMap(_.get(pred.tag)).flatMap(Option(_))
+    pred match {
+      case TagEquals(_, x)   => v.contains(x)
+      case TagContains(_, x) => v.exists(_.contains(x))
+    }
+  }
+
   /** Delete-by-query (S6, `timeseries.re:431-487`): the reference collects
     * the *timestamps* matched by the read query and removes every record
     * sharing one of those timestamps — same-timestamp bystanders die too

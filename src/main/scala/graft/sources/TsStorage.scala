@@ -27,7 +27,10 @@ import org.apache.spark.sql.functions._
   * bytes, it moves them into the `(series_id, day)` layout with the
   * clustered partitioned write. Out-of-order/late data simply lands in
   * its (old) day partition at fold time. [[delete]] and [[compact]] fold
-  * first; [[write]] drops the runs.
+  * first; [[write]] drops the runs. The engine keeps the unfolded rows
+  * in memory too (`graft.TsTail`) and answers the reads they cover from
+  * there; [[unfolded]] and [[foldedSeries]] rebuild that state on a
+  * restart.
   *
   * Delete (S6): one path, the reference's shard rewrite
   * (`timeseries.re:431-487`): [[delete]] rewrites only the `(series_id,
@@ -119,10 +122,9 @@ object TsStorage {
 
   /** The raw table: the root's partitions ∪ the flush runs, unioned by
     * name, `day` as its `yyyy-MM-dd` string on both sides (a run row gets
-    * it from [[withDay]], the expression the partitioned write uses). The
-    * runs' schema is one run's footer, read on the driver, so scanning
-    * them adds no schema-inference job. With neither present this is
-    * the plain root read, and fails as a missing table does.
+    * it from [[withDay]], the expression the partitioned write uses).
+    * With neither present this is the plain root read, and fails as a
+    * missing table does.
     */
   private def scan(spark: SparkSession, fs: FileSystem, root: String): DataFrame = {
     // partition inference types `day` as DATE (and an all-numeric
@@ -134,13 +136,18 @@ object TsStorage {
           .withColumn("series_id", col("series_id").cast("string"))
           .withColumn("day", col("day").cast("string")))
       else None
-    val fromRuns = listRuns(fs, root).headOption.map { r =>
-      withDay(spark.read.schema(LocalWrite.footerSchema(spark, r.getPath))
-        .parquet(runsDir(root).toString))
-    }
-    (fromRoot ++ fromRuns).reduceOption(_.unionByName(_, allowMissingColumns = true))
+    (fromRoot ++ runsFrame(spark, fs, root).map(withDay))
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse(spark.read.parquet(root))
   }
+
+  /** The committed flush runs as one frame in their own schema (no
+    * `day`), None without runs. The schema is one run's footer, read on
+    * the driver, so this adds no schema-inference job.
+    */
+  private def runsFrame(spark: SparkSession, fs: FileSystem, root: String): Option[DataFrame] =
+    listRuns(fs, root).headOption.map(r =>
+      spark.read.schema(LocalWrite.footerSchema(spark, r.getPath)).parquet(runsDir(root).toString))
 
   /** Resolve the filesystem OF THE TABLE PATH — `FileSystem.get(conf)`
     * resolves `fs.defaultFS`, which silently targets the wrong filesystem
@@ -205,7 +212,8 @@ object TsStorage {
   /** S1 ingest, the engine's write-behind flush: commit a driver-local
     * batch as ONE flush run — one parquet file in `<root>_runs/`, written
     * with no Spark job ([[LocalWrite]]) — then [[foldRuns]] once the runs
-    * reach the bound. The run keeps the frame's own schema: numeric
+    * reach the bound; returns whether it folded. The run keeps the
+    * frame's own schema: numeric
     * `(series_id, t, value, tags, event_id)` or blob `(series_id, t, blob,
     * event_id)`, no `day` column. A frame whose optimized plan is not a
     * `LocalRelation` fails with IllegalArgumentException, uncollected.
@@ -216,7 +224,7 @@ object TsStorage {
     * then garbage-collect, silently dropping that partition's pre-crash
     * rows.
     */
-  def append(ts: DataFrame, path: String): Unit = {
+  def append(ts: DataFrame, path: String): Boolean = {
     val root = path.stripSuffix("/")
     val spark = ts.sparkSession
     val fs = fsFor(spark, root)
@@ -224,8 +232,9 @@ object TsStorage {
     val run = LocalWrite.commit(ts, runsDir(root))
     log.info(f"flush run $root: ${run.rows} rows, ${run.bytes} bytes, 1 file, ${run.ms}%.1f ms")
     val runs = listRuns(fs, root)
-    if (runs.size >= FoldRuns || runs.map(_.getLen).sum >= FoldBytes)
-      foldRuns(spark, fs, root)
+    val fold = runs.size >= FoldRuns || runs.map(_.getLen).sum >= FoldBytes
+    if (fold) foldRuns(spark, fs, root)
+    fold
   }
 
   /** Test seam: called at each step of a fold — "staged" (rows written
@@ -248,8 +257,7 @@ object TsStorage {
     val runs = listRuns(fs, root)
     if (runs.isEmpty) return
     val t0 = System.nanoTime()
-    val fromRuns = spark.read.schema(LocalWrite.footerSchema(spark, runs.head.getPath))
-      .parquet(runsDir(root).toString)
+    val fromRuns = runsFrame(spark, fs, root).get
     // the exact run files the staging write reads: the set this fold retires
     val consumed = fromRuns.inputFiles.map(f => new Path(f).getName).toSeq
     // same clustering as [[write]]: without it every scan task opens a
@@ -342,6 +350,29 @@ object TsStorage {
     val cols = Seq("series_id", "t", "value", "tags", "blob", "event_id", "ts_raw")
       .filter(raw.columns.contains)
     raw.select(cols.map(col): _*)
+  }
+
+  /** The rows of the committed flush runs, None without runs — what the
+    * engine's unfolded tail reloads on a restart. Callers have run
+    * [[recover]], so no committed fold is pending.
+    */
+  def unfolded(spark: SparkSession, path: String): Option[DataFrame] = {
+    val root = path.stripSuffix("/")
+    runsFrame(spark, fsFor(spark, root), root)
+  }
+
+  /** The series the layout holds rows of, off its `series_id=`
+    * directory names (the ids as written, not as partition inference
+    * would type them). Reads no data. Callers have run [[recover]].
+    */
+  def foldedSeries(spark: SparkSession, path: String): Seq[String] = {
+    val root = path.stripSuffix("/")
+    val fs = fsFor(spark, root)
+    if (!hasPartitions(fs, root)) Nil
+    else fs.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("series_id="))
+      .map(n => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(n.stripPrefix("series_id=")))
   }
 
   /** The event-id high-water mark over root and runs — what a restarted

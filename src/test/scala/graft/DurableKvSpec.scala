@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.KvOps
@@ -14,10 +12,10 @@ import graft.sources.KvStorage
   * past ids recorded only in KV logs, and serve point reads from the
   * in-process cache without divergence from the DataFrame LWW view.
   */
-class DurableKvSpec extends AnyFunSuite with SparkTestBase {
+class DurableKvSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-kv-spec").toFile.getAbsolutePath + "/ts"
+    tempDir("graft-kv-spec").getAbsolutePath + "/ts"
 
   test("a restarted engine keeps all three KV stores and the catalogue") {
     val dir = freshDir()

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,10 +11,10 @@ import graft.sources.{KvStorage, TsStorage}
   * Spark job, reads see root ∪ runs, and a bounded fold moves the runs
   * into the `(series_id, day)` layout crash-atomically.
   */
-class FlushRunSpec extends AnyFunSuite with SparkTestBase {
+class FlushRunSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-runs-spec").toFile.getAbsolutePath + "/ts"
+    tempDir("graft-runs-spec").getAbsolutePath + "/ts"
 
   private def runFiles(root: String): Seq[java.io.File] =
     Option(new java.io.File(root + "_runs").listFiles).toSeq.flatten

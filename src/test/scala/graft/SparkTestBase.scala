@@ -1,6 +1,9 @@
 package graft
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** One shared local session for all suites (getOrCreate dedups). */
 object SparkTestBase {
@@ -26,4 +29,18 @@ trait SparkTestBase {
     import s.implicits._
     rows.toDF("series_id", "t", "value", "tags", "event_id")
   }
+}
+
+/** Temp dirs a suite makes, deleted in its `afterAll`. */
+trait TempDirs extends BeforeAndAfterAll { this: Suite =>
+  private val made = mutable.ArrayBuffer.empty[java.io.File]
+
+  def tempDir(prefix: String): java.io.File = made.synchronized {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    made += d
+    d
+  }
+
+  override def afterAll(): Unit =
+    try made.foreach(org.apache.commons.io.FileUtils.deleteQuietly) finally super.afterAll()
 }
