@@ -2,8 +2,12 @@ package graft
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.types.StructType
 
 import graft.model.NumericValidator
 import graft.operators._
@@ -130,17 +134,25 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
   // With `flushEveryRows = 1` (default) every POST commits durably before
   // returning — the reference's every-write-is-a-commit semantics. Raising
   // it turns the in-memory buffers into a write-behind batch: pending rows
-  // land as ONE file per threshold — a TS flush run or a KV log file,
-  // written on the driver with no Spark job — instead of one small parquet
-  // file PER POST, and every read/delete/compact flushes first so the
-  // caller still reads its own writes. A TS flush may also fold the runs
-  // into the partitioned layout once they reach the storage's bound
-  // ([[graft.sources.TsStorage.append]]). The durability boundary then
-  // moves to the flush (threshold, read, delete, [[flush]], or
-  // [[compact]]) — rows buffered in an abandoned engine are lost, the
-  // standard write-behind trade.
-  private def flushTail[R <: TailRow](tail: TsTail[R], path: Option[String])(
-      frame: Seq[R] => DataFrame): Unit = flushLock.synchronized {
+  // land as ONE file per threshold — a TS flush run or a KV log file —
+  // instead of one small parquet file PER POST, and every read/delete/
+  // compact flushes first so the caller still reads its own writes. Each
+  // durable table has one serializer, built here once: `TsRow` for the
+  // numeric table, `BlobRow` (its `payload` written as `blob`) for the blob
+  // one, `KvRow` for the KV logs. A flush serializes its pending rows under
+  // flushLock straight into the storage's row-level append, which writes
+  // them on the driver: no DataFrame, plan or Spark job per flush. A TS
+  // flush may also fold the runs into the partitioned layout once they
+  // reach the storage's bound ([[graft.sources.TsStorage.append]]). The
+  // durability boundary then moves to the flush (threshold, read, delete,
+  // [[flush]], or [[compact]]) — rows buffered in an abandoned engine are
+  // lost, the standard write-behind trade.
+  private val tsLayout   = new RowLayout[TsRow]()
+  private val blobLayout = new RowLayout[BlobRow]("payload" -> "blob")
+  private val kvLayout   = new RowLayout[KvRow]()
+
+  private def flushTail[R <: TailRow](tail: TsTail[R], path: Option[String],
+                                      layout: RowLayout[R]): Unit = flushLock.synchronized {
     path.foreach { p =>
       val rows = tail.pendingRows
       if (rows.nonEmpty) {
@@ -148,26 +160,19 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
         // have folded part-way, so it evicts them too (which only narrows
         // what the tail covers)
         val folded =
-          try graft.sources.TsStorage.append(frame(rows), p)
+          try graft.sources.TsStorage.append(spark, layout.schema, layout.rows(rows), p)
           catch { case e: Throwable => tail.evict(); throw e }
         tail.flushed()
         if (folded) tail.evict()
       }
     }
   }
-  private def flushNumeric(): Unit = flushTail(numericTail, tsStoragePath) { rows =>
-    import spark.implicits._
-    rows.toDF()
-  }
-  private def flushBlob(): Unit = flushTail(blobTail, blobStoragePath) { rows =>
-    import spark.implicits._
-    rows.toDF().withColumnRenamed("payload", "blob")
-  }
+  private def flushNumeric(): Unit = flushTail(numericTail, tsStoragePath, tsLayout)
+  private def flushBlob(): Unit = flushTail(blobTail, blobStoragePath, blobLayout)
   private def flushKv(store: String): Unit = flushLock.synchronized {
     kvStoragePath(store).foreach { p =>
       if (kvBufs(store).nonEmpty) {
-        import spark.implicits._
-        graft.sources.KvStorage.append(kvBufs(store).toSeq.toDF(), p)
+        graft.sources.KvStorage.append(spark, kvLayout.schema, kvLayout.rows(kvBufs(store).toSeq), p)
         kvBufs(store).clear()
       }
     }
@@ -784,6 +789,21 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
 }
 
 object GraftEngine {
+  /** A durable table's write layout: its schema and a serializer from the
+    * engine's row class into `InternalRow`s laid out as that schema,
+    * `renames` giving a field its stored name. Built once per table. The
+    * serializer reuses its output row and is not thread-safe: the engine
+    * uses it under its flush lock, and the storage writes each row before
+    * it pulls the next.
+    */
+  private[graft] final class RowLayout[T: TypeTag](renames: (String, String)*) {
+    private val enc = ExpressionEncoder[T]()
+    private val ser = enc.createSerializer()
+    val schema: StructType = StructType(enc.schema.map(f =>
+      f.copy(name = renames.toMap.getOrElse(f.name, f.name))))
+    def rows(xs: Seq[T]): Iterator[InternalRow] = xs.iterator.map(ser)
+  }
+
   /** A durable TS table's tail holds at most this many bytes of rows (by
     * [[TailRow.heapBytes]]) beyond its pending ones; reads of the series
     * it evicts at the cap go to Spark.

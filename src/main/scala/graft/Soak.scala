@@ -1100,12 +1100,13 @@ object Soak {
 
   /** Write-behind flush cost at the wire server's unit, 64 rows per flush
     * (32 sensors, 2 rows each): `flushes` calls of [[graft.sources.TsStorage.append]]
-    * — a flush run each, and a fold every 64 runs — against a control
-    * timed in the same loop, the clustered partitioned Spark write of the
-    * same 64 rows (the fold's staging write, and the append body before
-    * flush runs). Prints the median run write, the median flush that
-    * folds, the amortized cost per flush and the control's median; the
-    * storage's own slf4j lines (one per run and per fold) go to stderr.
+    * with the rows the engine's flush hands it (its `TsRow` serializer) —
+    * a flush run each, and a fold every 64 runs — against a control timed
+    * in the same loop, the clustered partitioned Spark write of the same
+    * 64 rows (the fold's staging write, and the append body before flush
+    * runs). Prints the median run write, the median flush that folds, the
+    * amortized cost per flush and the control's median; the storage's own
+    * slf4j lines (one per run and per fold) go to stderr.
     * `runMain graft.Soak flush [flushes]`, 256 by default.
     */
   private def flushSoak(spark: SparkSession, flushes: Int): Unit = {
@@ -1117,21 +1118,22 @@ object Soak {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val (runsP, ctlP) = (s"$base/runs", s"$base/control")
     val day0 = 1704067200000L
+    val layout = new GraftEngine.RowLayout[GraftEngine.TsRow]()
     def batch(k: Int) = (0 until 64).map { i =>
       GraftEngine.TsRow(s"s${i % 32}", day0 + k * 60000L + i, i.toDouble,
         Map("room" -> s"r${i % 4}"), k * 64L + i + 1)
-    }.toDF()
+    }
     def nRuns = Option(new java.io.File(runsP + "_runs").listFiles).toSeq.flatten
       .count(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
     def ms(t0: Long) = (System.nanoTime() - t0) / 1e6
     val runMs, foldMs, ctlMs = scala.collection.mutable.ArrayBuffer.empty[Double]
     for (k <- 0 until flushes) {
-      val df = batch(k)
+      val rows = batch(k)
       val before = nRuns
       val t0 = System.nanoTime()
-      TsStorage.append(df, runsP)
+      TsStorage.append(spark, layout.schema, layout.rows(rows), runsP)
       (if (nRuns <= before) foldMs else runMs) += ms(t0)
-      val ctl = batch(k)
+      val ctl = rows.toDF()
       val t1 = System.nanoTime()
       WriteLayout.clusterForWrite(
         ctl.withColumn("day", date_format(timestamp_millis(col("t")), "yyyy-MM-dd")),

@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Durable layout for the KV change-logs — the Spark replacement for the
   * reference's Irmin/git-backed LWW registers
@@ -92,17 +94,27 @@ object KvStorage {
   }
 
   /** Append a batch of change-log rows (the engine's write-behind flush
-    * unit) as one file, with no Spark job: `rows` must be driver-local
-    * (optimized plan a `LocalRelation`), else IllegalArgumentException.
+    * unit) as one file, with no Spark job, no plan and no process fork
+    * ([[LocalWrite]]). `rows` are laid out as `schema`, the log's columns.
     * One file per flush is already the file-count bound. Heals a crashed
     * swap first — appending around a parked rewrite would hand the
     * pre-crash log to the swap's GC.
     */
-  def append(rows: DataFrame, path: String): Unit = {
-    recover(rows.sparkSession, path)
-    val c = LocalWrite.commit(rows.select(cols.map(col): _*), new Path(path.stripSuffix("/")))
+  def append(spark: SparkSession, schema: StructType, rows: Iterator[InternalRow],
+             path: String): Unit = {
+    recover(spark, path)
+    val c = LocalWrite.commit(spark, schema, rows, new Path(path.stripSuffix("/")))
     log.info(f"kv flush ${path.stripSuffix("/")}: ${c.rows} rows, ${c.bytes} bytes, " +
       f"1 file, ${c.ms}%.1f ms")
+  }
+
+  /** [[append]] of a driver-local frame's log columns: its optimized plan
+    * must be a `LocalRelation`, else IllegalArgumentException before any
+    * file is touched.
+    */
+  def append(rows: DataFrame, path: String): Unit = {
+    val rel = LocalWrite.localRelation(rows.select(cols.map(col): _*))
+    append(rows.sparkSession, rel.schema, rel.data.iterator, path)
   }
 
   /** The full change-log, healed — feed to [[graft.operators.KvOps]]. */

@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Physical layout + write path for the TS table at cluster scale — the
   * Spark replacement for the reference's shard files + hand-built range
@@ -19,10 +21,13 @@ import org.apache.spark.sql.functions._
   * flushes it to a shard and merges shards later (`timeseries.re:133-148`
   * flush, `:57-111` merge). Here the engine's write-behind buffer is the
   * membuf, and [[append]] is the flush: the batch lands as ONE parquet
-  * file — a *flush run* in `<root>_runs/` — written on the driver through
-  * Spark's own Parquet writer with no Spark job ([[LocalWrite]]). Every
+  * file — a *flush run* in `<root>_runs/` — written on the driver from
+  * the engine's serialized rows through Spark's `ParquetWriteSupport`,
+  * with no Spark job, no plan and no process fork ([[LocalWrite]]). Every
   * read sees the table root and the runs together (T7), so read-your-
-  * writes holds from the flush on. A bounded *fold* ([[foldRuns]]) is the
+  * writes holds from the flush on; the root is read with an explicit
+  * schema, so `series_id` and `day` stay the directory strings
+  * ([[rootSchema]]). A bounded *fold* ([[foldRuns]]) is the
   * shard merge: once the runs reach [[FoldRuns]] files or [[FoldBytes]]
   * bytes, it moves them into the `(series_id, day)` layout with the
   * clustered partitioned write. Out-of-order/late data simply lands in
@@ -126,19 +131,28 @@ object TsStorage {
     * With neither present this is the plain root read, and fails as a
     * missing table does.
     */
-  private def scan(spark: SparkSession, fs: FileSystem, root: String): DataFrame = {
-    // partition inference types `day` as DATE (and an all-numeric
-    // `series_id` as a number); pin both back to the directory strings so
-    // the union, collects and path building agree
-    val fromRoot =
-      if (hasPartitions(fs, root))
-        Some(spark.read.parquet(root)
-          .withColumn("series_id", col("series_id").cast("string"))
-          .withColumn("day", col("day").cast("string")))
-      else None
-    (fromRoot ++ runsFrame(spark, fs, root).map(withDay))
+  private def scan(spark: SparkSession, fs: FileSystem, root: String): DataFrame =
+    (rootSchema(spark, fs, root).map(spark.read.schema(_).parquet(root)) ++
+      runsFrame(spark, fs, root).map(withDay))
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse(spark.read.parquet(root))
+
+  /** The read schema of the root's layout, None without a data file: one
+    * data file's footer schema plus `series_id` and `day` as strings.
+    * Partition inference would type an all-digit id as a number (`007`
+    * reads back as `7`) and `day` as a DATE; the explicit types keep the
+    * directory strings, and the read infers nothing.
+    */
+  private def rootSchema(spark: SparkSession, fs: FileSystem, root: String): Option[StructType] = {
+    def dirs(p: Path, prefix: String) =
+      fs.listStatus(p).iterator.filter(_.getPath.getName.startsWith(prefix)).map(_.getPath)
+    val rootP = new Path(root)
+    if (!fs.exists(rootP)) None
+    else dirs(rootP, "series_id=").flatMap(dirs(_, "day="))
+      .flatMap(fs.listStatus(_).iterator.map(_.getPath).filter(_.getName.endsWith(".parquet")))
+      .nextOption()
+      .map(f => LocalWrite.footerSchema(spark, f)
+        .add("series_id", StringType).add("day", StringType))
   }
 
   /** The committed flush runs as one frame in their own schema (no
@@ -209,14 +223,14 @@ object TsStorage {
       .mode(SaveMode.Overwrite).parquet(path)
   }
 
-  /** S1 ingest, the engine's write-behind flush: commit a driver-local
-    * batch as ONE flush run — one parquet file in `<root>_runs/`, written
-    * with no Spark job ([[LocalWrite]]) — then [[foldRuns]] once the runs
-    * reach the bound; returns whether it folded. The run keeps the
-    * frame's own schema: numeric
+  /** S1 ingest, the engine's write-behind flush: commit driver-side rows
+    * as ONE flush run — one parquet file in `<root>_runs/`, written with
+    * no Spark job, no plan and no process fork ([[LocalWrite]]) — then
+    * [[foldRuns]] once the runs reach the bound; returns whether it
+    * folded. `rows` are laid out as `schema`, which the run keeps: numeric
     * `(series_id, t, value, tags, event_id)` or blob `(series_id, t, blob,
-    * event_id)`, no `day` column. A frame whose optimized plan is not a
-    * `LocalRelation` fails with IllegalArgumentException, uncollected.
+    * event_id)`, no `day` column. The engine hands in its buffered rows
+    * through one serializer per table, built once.
     *
     * Appending is an entry point like any other: it must repair a crashed
     * swap FIRST, or a later fold recreates a parked partition's live dir
@@ -224,17 +238,26 @@ object TsStorage {
     * then garbage-collect, silently dropping that partition's pre-crash
     * rows.
     */
-  def append(ts: DataFrame, path: String): Boolean = {
+  def append(spark: SparkSession, schema: StructType, rows: Iterator[InternalRow],
+             path: String): Boolean = {
     val root = path.stripSuffix("/")
-    val spark = ts.sparkSession
     val fs = fsFor(spark, root)
     repair(fs, root, destructive = true)
-    val run = LocalWrite.commit(ts, runsDir(root))
+    val run = LocalWrite.commit(spark, schema, rows, runsDir(root))
     log.info(f"flush run $root: ${run.rows} rows, ${run.bytes} bytes, 1 file, ${run.ms}%.1f ms")
     val runs = listRuns(fs, root)
     val fold = runs.size >= FoldRuns || runs.map(_.getLen).sum >= FoldBytes
     if (fold) foldRuns(spark, fs, root)
     fold
+  }
+
+  /** [[append]] of a driver-local frame's rows: its optimized plan must be
+    * a `LocalRelation`, else IllegalArgumentException before any file is
+    * touched.
+    */
+  def append(ts: DataFrame, path: String): Boolean = {
+    val rel = LocalWrite.localRelation(ts)
+    append(ts.sparkSession, rel.schema, rel.data.iterator, path)
   }
 
   /** Test seam: called at each step of a fold — "staged" (rows written
@@ -703,10 +726,9 @@ object TsStorage {
 
     // -- phase 1: rewrite ONLY the targets, fully outside the table ---------
     val tmp = root + "_delete_tmp"
-    val scoped = spark.read.option("basePath", root)
+    val scoped = spark.read.schema(rootSchema(spark, fs, root).get).option("basePath", root)
       .parquet(targets.map(rel => s"$root/$rel"): _*)
     scoped
-      .withColumn("day", col("day").cast("string"))
       .withColumn("__salt", saltFor(scoped, maxFilesPerPartition))
       .repartition(col("series_id"), col("day"), col("__salt"))
       .drop("__salt")

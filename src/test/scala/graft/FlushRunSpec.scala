@@ -4,8 +4,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.TimeRange
-import graft.sources.{KvStorage, TsStorage}
+import graft.sources.{KvStorage, LocalWrite, TsStorage}
 
 /** The S1 write path: an engine flush lands as one flush run with no
   * Spark job, reads see root ∪ runs, and a bounded fold moves the runs
@@ -16,9 +18,11 @@ class FlushRunSpec extends AnyFunSuite with SparkTestBase with TempDirs {
   private def freshDir(): String =
     tempDir("graft-runs-spec").getAbsolutePath + "/ts"
 
-  private def runFiles(root: String): Seq[java.io.File] =
-    Option(new java.io.File(root + "_runs").listFiles).toSeq.flatten
+  private def parquetFiles(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles).toSeq.flatten
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+
+  private def runFiles(root: String): Seq[java.io.File] = parquetFiles(root + "_runs")
 
   private def hasPartitions(root: String): Boolean =
     Option(new java.io.File(root).listFiles).toSeq.flatten
@@ -37,6 +41,21 @@ class FlushRunSpec extends AnyFunSuite with SparkTestBase with TempDirs {
   private def ids(root: String): Seq[Long] =
     TsStorage.read(spark, root).select("event_id").collect().map(_.getLong(0)).sorted.toSeq
 
+  /** The footer facts a reader sees of one parquet file: its key-value
+    * metadata, its row count, and each column chunk's codec and encodings.
+    */
+  private def footer(f: java.io.File) = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getAbsolutePath), spark.sparkContext.hadoopConfiguration))
+    try {
+      val m = r.getFooter
+      val chunks = m.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(c =>
+        (c.getPath.toDotString, c.getCodec, c.getEncodings.asScala.toSet)))
+      (m.getFileMetaData.getKeyValueMetaData.asScala.toMap, r.getRecordCount, chunks)
+    } finally r.close()
+  }
+
   test("a run and a Spark-written file of the same rows read back equal") {
     val s = spark
     import s.implicits._
@@ -46,29 +65,42 @@ class FlushRunSpec extends AnyFunSuite with SparkTestBase with TempDirs {
       ("a", 3000L, 0.0, Map("k" -> "w"), 3L)).toDF("series_id", "t", "value", "tags", "event_id")
     val blob = Seq(("cam", 1000L, """{"f": "a"}""", 7L), ("cam", 2000L, "[]", 8L))
       .toDF("series_id", "t", "blob", "event_id")
-    for ((df, name) <- Seq(numeric -> "numeric", blob -> "blob")) {
+    val kv = Seq(("d", "k", """{"v": 1}""", 10L, 4L, false), ("d", "j", "{}", 11L, 5L, true))
+      .toDF("id", "key", "value", "write_ts", "event_id", "deleted")
+    val sparkMeta = Seq("org.apache.spark.version", "org.apache.spark.sql.parquet.row.metadata")
+    for ((df, name) <- Seq(numeric -> "numeric", blob -> "blob", kv -> "kv")) {
       val root = freshDir()
-      TsStorage.append(df, root)
-      val run = runFiles(root)
-      assert(run.size === 1, name)
-      val sparkDir = root + "_spark"
-      df.coalesce(1).write.parquet(sparkDir)
-      val a = spark.read.parquet(run.head.getAbsolutePath)
-      val b = spark.read.parquet(sparkDir)
-      assert(a.schema === b.schema, name)
-      assert(a.collect().map(_.toString).sorted === b.collect().map(_.toString).sorted, name)
-      // the footers carry the same Spark row metadata
-      def meta(f: String) = {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration))
-        try r.getFooter.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata")
-        finally r.close()
+      // the storage's own append, which takes the java.nio branch on a local root
+      val local =
+        if (name == "kv") { KvStorage.append(df, root + "_kv"); parquetFiles(root + "_kv") }
+        else { TsStorage.append(df, root); runFiles(root) }
+      assert(local.size === 1, name)
+      val rel = LocalWrite.localRelation(df)
+      LocalWrite.commit(spark, rel.schema, rel.data.iterator,
+        new org.apache.hadoop.fs.Path(root + "_hadoop"), hadoopOutput = true)
+      val hadoop = parquetFiles(root + "_hadoop")
+      assert(hadoop.size === 1, name)
+      df.coalesce(1).write.parquet(root + "_spark")
+      val sparkFile = parquetFiles(root + "_spark")
+      assert(sparkFile.size === 1, name)
+      // each branch took its own OutputFile: only Hadoop's writes a .crc
+      def crcs(dir: java.io.File) = dir.listFiles.count(_.getName.endsWith(".crc"))
+      assert(crcs(local.head.getParentFile) === 0, name)
+      assert(crcs(hadoop.head.getParentFile) === 1, name)
+      val expect = spark.read.parquet(sparkFile.head.getAbsolutePath)
+      val (expMeta, expRows, expChunks) = footer(sparkFile.head)
+      assert(sparkMeta.forall(expMeta.contains), name)
+      assert(expRows === df.count(), name)
+      for ((file, how) <- Seq(local.head -> "local", hadoop.head -> "hadoop")) {
+        val what = s"$name/$how"
+        val got = spark.read.parquet(file.getAbsolutePath)
+        assert(got.schema === expect.schema, what)
+        assert(got.collect().map(_.toString).sorted === expect.collect().map(_.toString).sorted, what)
+        val (meta, rows, chunks) = footer(file)
+        assert(meta === expMeta, what)
+        assert(rows === expRows, what)
+        assert(chunks === expChunks, what)
       }
-      val sparkFile = new java.io.File(sparkDir).listFiles
-        .find(_.getName.endsWith(".parquet")).get
-      assert(meta(run.head.getAbsolutePath) === meta(sparkFile.getAbsolutePath), name)
     }
   }
 
@@ -144,6 +176,40 @@ class FlushRunSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     // and a run written after the fold reads together with the layout
     e.post(s"/ts/a/at/${day0 + 999L}", """{"value": -1}""")
     assert(e.get("/ts/a,b/length") === """{"length": 64}""")
+  }
+
+  test("all-digit series ids read the same before and after the fold") {
+    val root = freshDir()
+    var now = 1700000000000L
+    val e = new GraftEngine(spark, () => { now += 1; now }, tsStoragePath = Some(root))
+    val series = Seq("007", "1e3")
+    for (i <- 0 until 63)
+      assert(e.post(s"/ts/${series(i % 2)}/at/${day0 + i * 3600000L}", s"""{"value": $i}""").isRight)
+    val paths = series.flatMap(id => Seq(s"/ts/$id/length", s"/ts/$id/latest", s"/ts/$id/since/0"))
+    val before = paths.map(e.get(_))
+    assert(before.head === """{"length": 32}""")
+    // the 64th run folds: every read of these series goes through Spark
+    // now. Its series is all-digit too, so no id makes inference type the
+    // partition column as a string
+    e.post(s"/ts/42/at/$day0", """{"value": 99}""")
+    assert(runFiles(root).isEmpty && hasPartitions(root))
+    assert(paths.map(e.get(_)) === before)
+    assert(TsStorage.read(spark, root).select("series_id").distinct().as[String](
+      org.apache.spark.sql.Encoders.STRING).collect().sorted.toSeq === Seq("007", "1e3", "42"))
+    // a second fold gives each partition a second file, so the
+    // compaction rewrites them; it and the rewrite delete read the layout
+    // the same way
+    for (i <- 0 until 64)
+      e.post(s"/ts/${series(i % 2)}/at/${day0 + i * 3600000L + 1}", s"""{"value": ${-i}}""")
+    assert(runFiles(root).isEmpty)
+    val mid = paths.map(e.get(_))
+    assert(mid.head === """{"length": 64}""")
+    e.compact()
+    val dirs007 = new java.io.File(root, "series_id=007").listFiles.toSeq
+    assert(dirs007.nonEmpty && dirs007.forall(d => parquetFiles(d.getPath).size == 1))
+    assert(paths.map(e.get(_)) === mid)
+    assert(e.delete("/ts/007/latest").isRight)
+    assert(e.get("/ts/007/length") === """{"length": 63}""")
   }
 
   test("a crash at each fold step recovers every row exactly once, reader or writer") {

@@ -10,7 +10,7 @@ import graft.functions.JaroWinklerImpl
   * to the validated String form, and the iterate-to-fixpoint drivers
   * still converge after the per-round checkpoint release.
   */
-class Round10OpsSpec extends AnyFunSuite with SparkTestBase {
+class Round10OpsSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   test("jaro-winkler ASCII byte path is bit-identical to the String path") {
     val rnd = new scala.util.Random(421)
@@ -94,7 +94,7 @@ class Round10OpsSpec extends AnyFunSuite with SparkTestBase {
         val b = a + 1L + rnd.nextInt(20).toLong
         (a, b)
       }).distinct.toDF("a", "b")
-    val dir = java.nio.file.Files.createTempDirectory("graft-gidx-spec").toString
+    val dir = tempDir("graft-gidx-spec").toString
     val und = edges.select(col("a").as("u"), col("b").as("v"))
       .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
     und.write.mode("overwrite").format("parquet").bucketBy(4, "u").sortBy("u")

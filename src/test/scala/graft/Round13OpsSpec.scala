@@ -13,7 +13,7 @@ import graft.server.{WireMain, WireServer, ZmtpCurve}
   * connections, AEAD counter ordering, sweep fast path, secure-mode
   * plaintext-port gating).
   */
-class Round13OpsSpec extends AnyFunSuite with SparkTestBase {
+class Round13OpsSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private implicit val fmts: Formats = DefaultFormats
   private def j(s: String): JValue = JString(s)
@@ -106,8 +106,7 @@ class Round13OpsSpec extends AnyFunSuite with SparkTestBase {
   test("rerankIndexed: a vector deleted from the raw store cannot resurface via a stale shortlist") {
     import org.apache.spark.sql.functions._
     import graft.operators.Similarity
-    val base = java.nio.file.Files.createTempDirectory("graft-rrk-spec")
-      .toFile.getAbsolutePath
+    val base = tempDir("graft-rrk-spec").getAbsolutePath
     val (coded, raw) = (base + "/pq", base + "/raw")
     // 40 deterministic 16-dim vectors with enough structure for PQ
     val emb = spark.range(40L).select(col("id").as("vec_id"),
@@ -136,8 +135,7 @@ class Round13OpsSpec extends AnyFunSuite with SparkTestBase {
   test("rerankIndexed's raw read prunes to the shortlist's cell partitions") {
     import org.apache.spark.sql.functions._
     import graft.operators.Similarity
-    val base = java.nio.file.Files.createTempDirectory("graft-rrkp-spec")
-      .toFile.getAbsolutePath
+    val base = tempDir("graft-rrkp-spec").getAbsolutePath
     val (coded, raw) = (base + "/pq", base + "/raw")
     val emb = spark.range(64L).select(col("id").as("vec_id"),
       transform(sequence(lit(0), lit(15)), j =>

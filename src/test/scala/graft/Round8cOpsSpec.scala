@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * weighted sampling) — model replays plus the plan-shape requirements
   * that make each the right operator at 100 TB.
   */
-class Round8cOpsSpec extends AnyFunSuite with SparkTestBase {
+class Round8cOpsSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -56,7 +56,7 @@ class Round8cOpsSpec extends AnyFunSuite with SparkTestBase {
     val ev = (ref ++ cur).zipWithIndex.map { case ((ts, et, v), i) =>
       (i.toLong, java.sql.Timestamp.valueOf(ts), i.toLong, et, v, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val tmp = java.nio.file.Files.createTempDirectory("psi").toString
+    val tmp = tempDir("psi").toString
     ev.write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val psi = SparkEntry.queries("events_psi_drift")(spark, tmp)
       .agg(sum("psi_term")).head.getDouble(0)
@@ -214,7 +214,7 @@ class Round8cOpsSpec extends AnyFunSuite with SparkTestBase {
     val rows = for { et <- series; h <- 0 until hours } yield
       ((et.hashCode.toLong * 10000 + h), new java.sql.Timestamp(h * 3600000L),
         1L, et, f(et, h), "{}")
-    val tmp = java.nio.file.Files.createTempDirectory(name).toString
+    val tmp = tempDir(name).toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
     tmp
@@ -313,7 +313,7 @@ class Round8cOpsSpec extends AnyFunSuite with SparkTestBase {
   test("data_integrity counts planted orphans exactly") {
     val s = spark
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("integ").toString
+    val tmp = tempDir("integ").toString
     Seq((1L, 10L, 100L), (2L, 10L, 100L), (3L, 99L, 100L), (4L, 10L, 777L))
       .toDF("l_linenumber", "l_orderkey", "l_partkey")
       .withColumn("l_orderkey", col("l_orderkey")).write.parquet(s"$tmp/lineitem.parquet")
