@@ -403,8 +403,8 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
         kvStoreFor(format).flatMap { store =>
           // the binary store's value CONTRACT is base64 text (the engine's
           // stores are string-typed; the binary wire en/decodes at its
-          // edge) — reject garbage here so the two front-ends can never
-          // disagree about what the stored bytes mean (r12 review)
+          // edge) — reject garbage here, so a value that does not decode
+          // is never stored
           if (store == "binary" && !isBase64(payload))
             Left("binary kv payload must be base64 (128)")
           else { kvWrite(store, id, key, payload); Right(()) }

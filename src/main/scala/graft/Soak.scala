@@ -507,110 +507,25 @@ object Soak {
   }
 
   private def wireSoak(spark: SparkSession): Unit = {
-    import java.io.{BufferedReader, InputStreamReader, PrintWriter, OutputStreamWriter}
+    import graft.server.{SecureChannel, ZestCodec, ZestWireServer, ZmtpClient}
     val store = new java.io.File("target/tmp-soak-wire").getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
     val engine = new GraftEngine(spark, tsStoragePath = Some(s"$store/ts"),
       flushEveryRows = 512)
-    val srv = new graft.server.WireServer(engine)
-    def client(): (PrintWriter, BufferedReader, java.net.Socket) = {
-      val s = new java.net.Socket("127.0.0.1", srv.boundPort)
-      (new PrintWriter(new OutputStreamWriter(s.getOutputStream, "UTF-8"), true),
-        new BufferedReader(new InputStreamReader(s.getInputStream, "UTF-8")), s)
-    }
-    def posts(n: Int, offset: Int, series: String): Unit = {
-      val (out, in, s) = client()
-      var i = 0
-      while (i < n) {
-        out.println(s"""{"verb":"POST","path":"/ts/$series/at/${(offset + i) * 1000}","payload":"{\\"value\\": ${i % 100}}"}""")
-        if (in.readLine() == null) sys.error("server closed")
-        i += 1
-      }
-      s.close()
-    }
-    posts(200, 0, "warm") // codegen/reader warmup outside the timing
     val n = 4000
-    var t0 = System.nanoTime()
-    posts(n, 0, "seq")
-    val seqS = (System.nanoTime() - t0) / 1e9
-    println(f"wire ingest, 1 client  x $n posts: $seqS%.2f s (${n / seqS}%.0f posts/s)")
-    t0 = System.nanoTime()
-    val threads = (0 until 4).map { c =>
-      val t = new Thread(() => posts(n / 4, c * n, s"par$c"))
-      t.start(); t
-    }
-    threads.foreach(_.join())
-    val parS = (System.nanoTime() - t0) / 1e9
-    println(f"wire ingest, 4 clients x ${n / 4} posts: $parS%.2f s (${n / parS}%.0f posts/s)")
-    // observed-path ingest (r11 verdict #1): with the in-process fan-out
-    // a connected observer must cost a predicate + queue offer per write,
-    // not two Spark jobs — throughput ≈ unobserved
-    val (oout, oin, osock) = client()
-    oout.println("""{"verb":"OBSERVE","path":"/ts/obs*","maxAgeSec":0}""")
-    oin.readLine() // registration ack
-    val drained = new java.util.concurrent.atomic.AtomicLong
-    val drainer = new Thread(() =>
-      try { while (oin.readLine() != null) drained.incrementAndGet() }
-      catch { case _: Exception => () })
-    drainer.setDaemon(true); drainer.start()
-    t0 = System.nanoTime()
-    posts(n, 0, "obs1")
-    val obsS = (System.nanoTime() - t0) / 1e9
-    println(f"wire ingest, 1 client  x $n posts, 1 live observer: $obsS%.2f s " +
-      f"(${n / obsS}%.0f posts/s, ${drained.get} pushes drained)")
-    osock.close()
-
-    // concurrent reads (r11 verdict #3): GETs share the read lock, so
-    // readers no longer serialize behind a streaming writer's appends
-    @volatile var writing = true
-    val writerT = new Thread(() => {
-      val (wout, win, ws) = client()
-      var i = 0
-      while (writing) {
-        wout.println(s"""{"verb":"POST","path":"/ts/rw/at/${i * 1000}","payload":"{\\"value\\": 1}"}""")
-        win.readLine(); i += 1
-      }
-      ws.close()
-    })
-    writerT.start()
-    val readCounts = new java.util.concurrent.atomic.AtomicLong
-    val readers = (0 until 4).map { _ =>
-      val t = new Thread(() => {
-        val (rout, rin, rs) = client()
-        val until = System.nanoTime() + 5_000_000_000L
-        while (System.nanoTime() < until) {
-          rout.println("""{"verb":"GET","path":"/hello"}""")
-          rin.readLine(); readCounts.incrementAndGet()
-        }
-        rs.close()
-      })
-      t.start(); t
-    }
-    readers.foreach(_.join())
-    writing = false; writerT.join()
-    println(f"wire reads, 4 readers x 5 s under a live writer: " +
-      f"${readCounts.get / 5.0}%.0f reads/s")
-
-    engine.flush()
-    val (out, in, s) = client()
-    out.println("""{"verb":"GET","path":"/ts/seq/length"}""")
-    println(s"  seq length frame: ${in.readLine()}")
-    s.close(); srv.close()
-
-    // the binary port: zest frames over ZMTP REQ, once per security
-    // mechanism — NULL, then CURVE (the sealed path's cost)
-    import graft.server.{SecureChannel, ZestCodec, ZestWireServer, ZmtpClient}
+    // zest frames over ZMTP REQ, once per security mechanism — NULL, then
+    // CURVE (the sealed path's cost)
     Seq("NULL" -> None, "CURVE" -> Some(SecureChannel.generateKeyPair())).foreach {
       case (mech, keys) =>
         val bsrv = new ZestWireServer(engine, serverKeys = keys)
         val c = new ZmtpClient(bsrv.boundPort, keys.map(SecureChannel.rawPublic))
-        t0 = System.nanoTime()
-        var i = 0
-        while (i < n) {
-          require(c.call(ZestCodec.request(2, s"/ts/${mech.toLowerCase}seq/at/${i * 1000}",
-            payload = s"""{"value": ${i % 100}}""")).code == 65)
-          i += 1
-        }
+        def posts(count: Int, series: String): Unit =
+          for (i <- 0 until count)
+            require(c.call(ZestCodec.request(2, s"/ts/$series/at/${i * 1000}",
+              payload = s"""{"value": ${i % 100}}""")).code == 65)
+        posts(200, s"${mech.toLowerCase}warm") // codegen/JIT warmup outside the timing
+        val t0 = System.nanoTime()
+        posts(n, s"${mech.toLowerCase}seq")
         val secs = (System.nanoTime() - t0) / 1e9
         println(f"wire ingest, ZMTP $mech REQ, 1 client x $n posts: $secs%.2f s " +
           f"(${n / secs}%.0f posts/s)")
@@ -624,38 +539,33 @@ object Soak {
     * not the job-scheduling-bound ~60/s the r11 observe path measured.
     */
   private def kvserveSoak(spark: SparkSession): Unit = {
-    import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter, PrintWriter}
+    import graft.server.{ZestCodec, ZestWireServer, ZmtpClient}
     val store = new java.io.File("target/tmp-soak-kvserve").getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
     val engine = new GraftEngine(spark, tsStoragePath = Some(s"$store/ts"),
       flushEveryRows = 512)
-    val srv = new graft.server.WireServer(engine)
-    def client(): (PrintWriter, BufferedReader, java.net.Socket) = {
-      val s = new java.net.Socket("127.0.0.1", srv.boundPort)
-      (new PrintWriter(new OutputStreamWriter(s.getOutputStream, "UTF-8"), true),
-        new BufferedReader(new InputStreamReader(s.getInputStream, "UTF-8")), s)
-    }
+    val srv = new ZestWireServer(engine)
+    def client(): ZmtpClient = new ZmtpClient(srv.boundPort)
+    def post(c: ZmtpClient, path: String, payload: String): Unit =
+      require(c.call(ZestCodec.request(2, path, payload = payload)).code == 65,
+        s"POST $path failed")
     // seed 500 cells across 10 ids, then flush so the cache load path
     // (storage -> LWW fold -> map) is the one a restarted server pays
-    val (sout, sin, ss) = client()
-    for (i <- 0 until 500) {
-      sout.println(s"""{"verb":"POST","path":"/kv/dev${i % 10}/key$i","payload":"{\\"v\\": $i}"}""")
-      sin.readLine()
-    }
-    ss.close()
+    val seeder = client()
+    for (i <- 0 until 500) post(seeder, s"/kv/dev${i % 10}/key$i", s"""{"v": $i}""")
+    seeder.close()
     engine.flush()
     def gets(n: Int, mix: Boolean): Unit = {
-      val (out, in, s) = client()
+      val c = client()
       var i = 0
       while (i < n) {
         val path =
           if (mix && i % 10 == 9) s"/kv/dev${i % 10}/keys"
           else s"/kv/dev${i % 10}/key${i % 500}"
-        out.println(s"""{"verb":"GET","path":"$path"}""")
-        if (in.readLine() == null) sys.error("server closed")
+        require(c.call(ZestCodec.request(1, path)).code == 69, s"GET $path failed")
         i += 1
       }
-      s.close()
+      c.close()
     }
     gets(500, mix = true) // warm: first read loads the cache once
     val n = 8000
@@ -675,13 +585,10 @@ object Soak {
     // starve readers
     @volatile var writing = true
     val wT = new Thread(() => {
-      val (wout, win, ws) = client()
+      val w = client()
       var i = 0
-      while (writing) {
-        wout.println(s"""{"verb":"POST","path":"/kv/devw/k${i % 50}","payload":"{\\"v\\": $i}"}""")
-        win.readLine(); i += 1
-      }
-      ws.close()
+      while (writing) { post(w, s"/kv/devw/k${i % 50}", s"""{"v": $i}"""); i += 1 }
+      w.close()
     })
     wT.start()
     t0 = System.nanoTime()
@@ -702,7 +609,8 @@ object Soak {
     * across BOTH the TS and KV logs.
     */
   private def crashSoak(spark: SparkSession): Unit = {
-    import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter, PrintWriter}
+    import java.io.{BufferedReader, InputStreamReader}
+    import graft.server.{ZestCodec, ZmtpClient}
     val store = new java.io.File("target/tmp-soak-crash").getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
     val javaBin = System.getProperty("java.home") + "/bin/java"
@@ -721,7 +629,6 @@ object Soak {
         "-cp", sys.props("java.class.path"), "graft.server.WireMain")
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("GRAFT_STORE_DIR", store)
-      pb.environment().put("GRAFT_WIRE_PORT", "0")
       pb.environment().put("GRAFT_WIRE_BINARY_PORT", "0")
       pb.environment().put("SPARK_GRAFT_CPUS", "4")
       pb.redirectError(ProcessBuilder.Redirect.DISCARD) // Spark log noise
@@ -731,56 +638,47 @@ object Soak {
       while (line != null && !line.startsWith("""{"wire_server"""))
         line = br.readLine()
       require(line != null, "WireMain never announced itself")
-      val port = """"port":(\d+)""".r.findFirstMatchIn(line).get.group(1).toInt
+      val port = """"binary_port":(\d+)""".r.findFirstMatchIn(line).get.group(1).toInt
       val drain = new Thread(() =>
         try { while (br.readLine() != null) () } catch { case _: Exception => () })
       drain.setDaemon(true); drain.start()
       (p, port)
     }
-    def client(port: Int): (PrintWriter, BufferedReader, java.net.Socket) = {
-      val s = new java.net.Socket("127.0.0.1", port)
-      s.setSoTimeout(60000)
-      (new PrintWriter(new OutputStreamWriter(s.getOutputStream, "UTF-8"), true),
-        new BufferedReader(new InputStreamReader(s.getInputStream, "UTF-8")), s)
-    }
+    def posted(c: ZmtpClient, path: String, payload: String): Boolean =
+      c.call(ZestCodec.request(2, path, payload = payload)).code == 65
 
     println("[crash] starting WireMain #1 ...")
     val (p1, port1) = spawn()
-    val (out1, in1, s1) = client(port1)
+    val c1 = new ZmtpClient(port1)
     var ackedTs = 0; var ackedKv = 0
     // 2000 acked ops, TS/KV interleaved; WireMain's write-behind window is
     // 64 rows per store, and 2000 is not a multiple, so rows are ALWAYS
     // pending at the kill — the loss-bound case, not the lucky-flush one
     for (i <- 0 until 1000) {
-      out1.println(s"""{"verb":"POST","path":"/ts/crash/at/${i * 1000}","payload":"{\\"value\\": ${i % 100}}"}""")
-      if (in1.readLine().contains("\"ok\"")) ackedTs += 1
-      out1.println(s"""{"verb":"POST","path":"/kv/dev0/k${i % 50}","payload":"{\\"v\\": $i}"}""")
-      if (in1.readLine().contains("\"ok\"")) ackedKv += 1
+      if (posted(c1, s"/ts/crash/at/${i * 1000}", s"""{"value": ${i % 100}}""")) ackedTs += 1
+      if (posted(c1, s"/kv/dev0/k${i % 50}", s"""{"v": $i}""")) ackedKv += 1
     }
     println(s"[crash] acked: $ackedTs TS + $ackedKv KV posts; SIGKILL")
     p1.destroyForcibly(); p1.waitFor()
-    try { s1.close() } catch { case _: Exception => () }
+    try { c1.close() } catch { case _: Exception => () }
 
     println("[crash] restarting WireMain #2 on the same store ...")
     val (p2, port2) = spawn()
-    val (out2, in2, s2) = client(port2)
-    def get(path: String): String = {
-      out2.println(s"""{"verb":"GET","path":"$path"}""")
-      in2.readLine()
-    }
+    val c2 = new ZmtpClient(port2)
+    def get(path: String): String = c2.call(ZestCodec.request(1, path)).payloadString
     val lenJson = get("/ts/crash/length")
-    val survivedTs = """\\"length\\": (\d+)""".r.findFirstMatchIn(lenJson)
+    val survivedTs = """"length": (\d+)""".r.findFirstMatchIn(lenJson)
       .map(_.group(1).toInt).getOrElse(-1)
     val cntJson = get("/kv/dev0/count")
-    val survivedKv = """\\"count\\": (\d+)""".r.findFirstMatchIn(cntJson)
+    val survivedKv = """"count": (\d+)""".r.findFirstMatchIn(cntJson)
       .map(_.group(1).toInt).getOrElse(-1)
     // post-restart appends must keep working (and their ids not collide)
     for (i <- 0 until 100) {
-      out2.println(s"""{"verb":"POST","path":"/ts/crash2/at/${i * 1000}","payload":"{\\"value\\": 1}"}""")
-      require(in2.readLine().contains("\"ok\""), "post-restart POST failed")
+      require(posted(c2, s"/ts/crash2/at/${i * 1000}", """{"value": 1}"""),
+        "post-restart POST failed")
     }
     get("/ts/crash2/length") // GET flushes pending numeric rows: state now on disk
-    s2.close()
+    c2.close()
     p2.destroyForcibly(); p2.waitFor()
 
     // verify on the store itself

@@ -4,28 +4,23 @@ import java.util.concurrent.locks.ReentrantReadWriteLock
 
 import graft.GraftEngine
 
-/** The serving-side state SHARED BY EVERY FRONT-END of one engine — the
-  * single-store invariants that broke when each server owned its own
-  * copy (r12 review):
+/** The serving-side state of one engine's wire front-end
+  * ([[ZestWireServer]]), kept apart from the server so that a caller can
+  * hold its lock:
   *
-  *  - ONE reader-writer lock: the engine's buffers/id-sequence are
-  *    mutated by whichever port a write arrives on, so both servers must
-  *    serialize through the same lock or `WireMain`'s dual-port binary
-  *    races `numericBuf += ...` / `nextEventId += 1` across ports;
-  *  - ONE observer registry: subscriptions live in the engine, so a
-  *    write on the JSON port must push to an observer that registered
-  *    on the binary port (and vice versa). Each front-end registers a
-  *    [[WireRuntime.Sink]] per subscription that knows how to frame a
-  *    push for ITS transport; delivery and the expiry sweep route
-  *    through the registry regardless of which port triggered them.
+  *  - ONE reader-writer lock over the engine's buffers and id sequence,
+  *    which every connection thread mutates; [[WireMain]] takes its
+  *    write lock to flush at shutdown;
+  *  - ONE observer registry: each subscription registers a
+  *    [[WireRuntime.Sink]] that frames its pushes onto the owning
+  *    connection; delivery and the expiry sweep route through it.
   *
   * The registry also carries notification-callback idents
   * ([[graft.GraftEngine.notifyRegister]]): a `NOTIFY` response routes to
   * the connection that REGISTERED the callback path, keyed by that path
   * (the reference's ROUTER-identity role, `notify.re:5-17`).
   *
-  * A server constructed without an explicit runtime gets a private one —
-  * single-server deployments and tests are unchanged.
+  * A server constructed without an explicit runtime gets a private one.
   */
 final class WireRuntime(val engine: GraftEngine) {
 
@@ -37,9 +32,9 @@ final class WireRuntime(val engine: GraftEngine) {
   val rw = new ReentrantReadWriteLock()
 
   /** One subscription's (or callback registration's) delivery endpoint:
-    * transport-specific framing over the owning connection's outbound
-    * queue. `push` returns false when the channel is dead/overflowed;
-    * `end` carries the one owed 163 "observation ended" ack.
+    * push framing over the owning connection's outbound queue. `push`
+    * returns false when the channel is dead/overflowed; `end` carries the
+    * one owed 163 "observation ended" ack.
     */
   trait Sink {
     def push(formatCode: Int, message: String): Boolean
@@ -54,7 +49,8 @@ final class WireRuntime(val engine: GraftEngine) {
   def register(ident: String, sink: Sink): Unit = sinks(ident) = sink
 
   /** Route one fan-out delivery set; a dead sink drops its registration
-    * on both sides (the reference GCs gone observers, `server.re:203-206`).
+    * here and in the engine (the reference GCs gone observers,
+    * `server.re:203-206`).
     */
   def deliver(formatCode: Int, out: Seq[(String, String)]): Unit =
     out.foreach { case (ident, message) =>

@@ -8,13 +8,13 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import graft.GraftEngine
 import graft.server.ZestCodec._
 
-/** The BINARY wire front-end: [[ZestCodec]] frames over ZMTP 3.0
-  * ([[ZmtpCodec]]) — the faithful-framing twin of the JSON-lines
-  * [[WireServer]]. Request/response and push frames are the reference's
-  * exact byte format (reference `src/protocol/zest.re:12-216`), and
-  * the transport is the reference's own: a stock libzmq REQ or DEALER
-  * client connects the way it does to the reference's sockets
-  * (`zest.re:224-263`). One transport, two security mechanisms:
+/** The wire front-end of [[graft.GraftEngine]]: [[ZestCodec]] frames over
+  * ZMTP 3.0 ([[ZmtpCodec]]). Request/response and push frames are the
+  * reference's exact byte format (reference
+  * `src/protocol/zest.re:12-216`), and the transport is the reference's
+  * own: a stock libzmq REQ or DEALER client connects the way it does to
+  * the reference's sockets (`zest.re:224-263`). One transport, two
+  * security mechanisms:
   *
   *  - NULL when `serverKeys` is unset (request auth stays the macaroon
   *    tokens inside the zest frames, exactly where the reference carries
@@ -38,8 +38,15 @@ import graft.server.ZestCodec._
   * RPC), 4 DELETE; every request validates the (possibly empty) token;
   * every response routes to observers in-process; the expiry sweep runs
   * before each message and owes each dead observer one bare-163 frame.
-  * Concurrency is [[WireServer]]'s reader-writer split with per-connection
-  * bounded outbound queues.
+  *
+  * Concurrency: mutations, registrations and the sweep take the write lock
+  * of the [[WireRuntime]], GETs its read lock, and fan-out is computed and
+  * enqueued inside the critical section, so observers see writes in store
+  * order. Socket writes never happen under either lock: each connection
+  * owns a bounded outbound queue drained by its writer thread, and on
+  * overflow the channel is marked dead and its registrations dropped
+  * (slow-observer eviction; the reference GCs gone observers the same
+  * way, `server.re:203-206`).
   */
 class ZestWireServer(engine: GraftEngine, port: Int = 0,
                      clockMs: () => Long = () => System.currentTimeMillis(),
@@ -47,7 +54,7 @@ class ZestWireServer(engine: GraftEngine, port: Int = 0,
                      observerQueueSize: Int = 1024,
                      runtime: Option[WireRuntime] = None) {
 
-  // shared with every other front-end of this engine (see WireRuntime)
+  // the lock and observer registry (see WireRuntime)
   private val rt = runtime.getOrElse(new WireRuntime(engine))
 
   private val server = new ServerSocket(port)

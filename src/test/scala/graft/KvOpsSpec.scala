@@ -54,4 +54,14 @@ class KvOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(KvOps.read(resurrect, "u1", "k3").head().getAs[String]("value") === "y2")
     assert(KvOps.count(resurrect, "u1").head().getAs[Long]("count") === 3L)
   }
+
+  test("binary kv values are base64 at the engine boundary: garbage is rejected, base64 round-trips") {
+    val engine = new GraftEngine(spark, () => 1700000000000L)
+    // raw text that is not valid base64 is rejected, not stored-then-garbled
+    assert(engine.post("/kv/d/v", "hello!", "binary").isLeft)
+    assert(engine.get("/kv/d/v", "binary") === "")
+    val b64 = java.util.Base64.getEncoder.encodeToString("hello!".getBytes("UTF-8"))
+    assert(engine.post("/kv/d/v", b64, "binary") === Right(()))
+    assert(engine.get("/kv/d/v", "binary") === b64)
+  }
 }

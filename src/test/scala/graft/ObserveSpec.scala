@@ -175,6 +175,18 @@ class ObserveSpec extends AnyFunSuite with SparkTestBase {
       ObserveService.expiredSubs(subsDf(matrixSubs), 62000L).collect().map(_.getString(0)).toSet)
   }
 
+  test("wire fan-out parity: fanoutLocal equals the DataFrame fanout on the same event") {
+    var now = 1700000000000L
+    val engine = new GraftEngine(spark, () => { now += 1; now })
+    engine.observe("/ts/p/*", "json", "data", 0L)
+    engine.observe("/ts/*", "json", "audit", 3600L)
+    engine.observe("/ts/p/x", "text", "data", 0L) // format mismatch for json events
+    val ts = now + 1
+    val local = engine.fanoutLocal(ts, "/ts/p/x/at/5", "json", """{"value":1}""").toSet
+    val spark2 = engine.fanout(ts, "/ts/p/x/at/5", "json", """{"value":1}""").toSet
+    assert(local === spark2 && local.size === 2)
+  }
+
   test("response-routing gate: error/ack codes and empty payloads never reach data observers") {
     // create_data_payload (server.re:126-141): 66/128/129/143/163 -> None,
     // empty payload -> None; audit always delivers

@@ -1,63 +1,14 @@
 package graft
 
-import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter, PrintWriter}
-import java.net.Socket
-
-import org.json4s._
-import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.server.{WireMain, WireServer, ZmtpCurve}
+import graft.server.ZmtpCurve
 
-/** Round-13 fixes: the r12 ADVICE items (notify-path GC on dead
-  * connections, AEAD counter ordering, sweep fast path, secure-mode
-  * plaintext-port gating).
+/** Round-13 fixes: the r12 ADVICE items (notify-path GC, AEAD counter
+  * ordering, sweep fast path). The dead-connection notify-path case runs
+  * over ZMTP in ZestWireServerSpec.
   */
 class Round13OpsSpec extends AnyFunSuite with SparkTestBase with TempDirs {
-
-  private implicit val fmts: Formats = DefaultFormats
-  private def j(s: String): JValue = JString(s)
-
-  private class JClient(port: Int) {
-    private val sock = new Socket("127.0.0.1", port)
-    sock.setSoTimeout(20000)
-    private val out = new PrintWriter(
-      new OutputStreamWriter(sock.getOutputStream, "UTF-8"), true)
-    private val in = new BufferedReader(
-      new InputStreamReader(sock.getInputStream, "UTF-8"))
-    def send(fields: (String, JValue)*): JValue = {
-      out.println(JsonMethods.compact(JObject(fields.toList)))
-      JsonMethods.parse(in.readLine())
-    }
-    def close(): Unit = sock.close()
-  }
-
-  test("a dead connection's notify-callback path frees for re-registration") {
-    var now = 1700000000000L
-    val engine = new GraftEngine(spark, () => { now += 1; now })
-    val srv = new WireServer(engine, clockMs = () => now)
-    try {
-      val a = new JClient(srv.boundPort)
-      val reg = a.send("verb" -> j("NOTIFY-REGISTER"),
-        "path" -> j("/notification/response/app/cbx"))
-      assert((reg \ "status").extract[String] === "ok")
-      a.close() // connection dies with the registration live
-      // eviction runs in the handler's finally block — poll until the
-      // path frees (the r12 defect: it NEVER freed; re-register got 163
-      // forever and responses were silently dropped)
-      val deadline = System.currentTimeMillis() + 10000
-      var ok = false
-      while (!ok && System.currentTimeMillis() < deadline) {
-        val b = new JClient(srv.boundPort)
-        val r = b.send("verb" -> j("NOTIFY-REGISTER"),
-          "path" -> j("/notification/response/app/cbx"))
-        ok = (r \ "status").extract[String] == "ok"
-        b.close()
-        if (!ok) Thread.sleep(50)
-      }
-      assert(ok, "callback path never freed after its connection died")
-    } finally srv.close()
-  }
 
   test("dropNotify is a no-op for subscription uuids and frees callback paths") {
     val engine = new GraftEngine(spark, () => 1L)
@@ -150,13 +101,5 @@ class Round13OpsSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     assert(plan.contains("PartitionFilters") && plan.contains("cell"),
       s"raw rerank scan reads every cell partition:\n$plan")
     assert(out.count() > 0)
-  }
-
-  test("secure mode disables the plaintext port unless explicitly opted in") {
-    assert(WireMain.plaintextEnabled(Map.empty))
-    assert(WireMain.plaintextEnabled(Map("GRAFT_WIRE_SECURE" -> "0")))
-    assert(!WireMain.plaintextEnabled(Map("GRAFT_WIRE_SECURE" -> "1")))
-    assert(WireMain.plaintextEnabled(
-      Map("GRAFT_WIRE_SECURE" -> "1", "GRAFT_WIRE_PLAINTEXT" -> "1")))
   }
 }

@@ -39,6 +39,28 @@ class ZmtpCurveSpec extends AnyFunSuite with SparkTestBase {
     } finally srv.close()
   }
 
+  test("REQ/REP verbs over CURVE: post, get, delete round-trip; errors reply 128") {
+    var now = 1700000000000L
+    val kp = SecureChannel.generateKeyPair()
+    val engine = new GraftEngine(spark, () => { now += 1; now })
+    val srv = new ZestWireServer(engine, clockMs = () => now, serverKeys = Some(kp))
+    try {
+      val c = new ZmtpClient(srv.boundPort, Some(SecureChannel.rawPublic(kp)))
+      assert(c.call(ZestCodec.request(2, "/ts/s1/at/1000",
+        payload = """{"value": 42}""")).code === 65)
+      val g = c.call(ZestCodec.request(1, "/ts/s1/latest"))
+      assert(g.code === 69 && g.payloadString.contains("\"value\": 42"))
+      assert(c.call(ZestCodec.request(4, "/ts/s1/range/0/2000")).code === 66)
+      assert(c.call(ZestCodec.request(1, "/ts/s1/length")).payloadString
+        === """{"length": 0}""")
+      // a bad path is an error reply, and the sealed session carries on
+      assert(c.call(ZestCodec.request(4, "/ts/s1/last/5")).code === 128)
+      assert(c.call(ZestCodec.request(1, "/hello", format = 0)).payloadString
+        === "hello world!")
+      c.close()
+    } finally srv.close()
+  }
+
   test("CURVE DEALER observer receives sealed pushes") {
     var now = 1700000000000L
     val kp = SecureChannel.generateKeyPair()

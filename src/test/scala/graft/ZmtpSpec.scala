@@ -120,6 +120,42 @@ class ZmtpSpec extends AnyFunSuite with SparkTestBase {
     } finally srv.close()
   }
 
+  test("a DEALER observer gets each matching write until it disconnects, and nothing else") {
+    var now = 1700000000000L
+    val engine = new GraftEngine(spark, () => { now += 1; now })
+    val srv = new ZestWireServer(engine, clockMs = () => now)
+    try {
+      val obs = new ZmtpClient(srv.boundPort, socketType = "DEALER")
+      val uuid = obs.call(ZestCodec.request(1, "/ts/s2/*",
+        observe = Some("data"), maxAgeSec = Some(3600L))).payloadString
+      val writer = new ZmtpClient(srv.boundPort)
+      assert(writer.call(ZestCodec.request(2, "/ts/s2/at/5000",
+        payload = """{"value": 7}""")).code === 65)
+      val push = obs.read()
+      assert(push.options.exists(o => o.number === 2048 && o.string === uuid))
+      // data-mode frame: "ts uri_path format payload"
+      assert(push.payloadString.endsWith("""/ts/s2/at/5000 json {"value": 7}"""))
+      // a non-matching write pushes nothing: the next push is the next
+      // matching write
+      assert(writer.call(ZestCodec.request(2, "/ts/other/at/1",
+        payload = """{"value": 1}""")).code === 65)
+      assert(writer.call(ZestCodec.request(2, "/ts/s2/at/6000",
+        payload = """{"value": 8}""")).code === 65)
+      assert(obs.read().payloadString.contains("/ts/s2/at/6000"))
+      // a disconnected observer is dropped; later matching writes don't hang
+      obs.close()
+      assert(writer.call(ZestCodec.request(2, "/ts/s2/at/7000",
+        payload = """{"value": 9}""")).code === 65)
+      assert(writer.call(ZestCodec.request(1, "/ts/s2/length")).payloadString
+        === """{"length": 3}""")
+      val deadline = System.currentTimeMillis() + 10000
+      while (engine.subsSnapshot.nonEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(engine.subsSnapshot.isEmpty, "closed observer's subscription never dropped")
+      writer.close()
+    } finally srv.close()
+  }
+
   test("an expired ZMTP observer gets its one 163 as an envelope-free push") {
     var now = 1700000000000L
     val engine = new GraftEngine(spark, () => now)
