@@ -66,6 +66,50 @@ object SparkEntry {
       .localCheckpoint()
   }
 
+  /** BM25 top-100 for the fixed query terms — the text_bm25 gate body,
+    * factored so the hybrid-retrieval fusion gate scores the identical
+    * lexical list. Micros-exact per-term score, bounded top-k.
+    *
+    * One pass over the documents: each doc becomes one narrow row, its
+    * length `dl` and one `tf_<term>` count per query term, and one global
+    * aggregate over those rows (doc count, mean length, `df_<term>` as the
+    * docs with that term) is broadcast back to them. A term a doc lacks
+    * scores exactly 0 micros (its tf factor is 0), so the per-doc BIGINT
+    * sum of the per-term scores equals the sum over the doc's (doc, term)
+    * rows that the oracle groups; docs with no query term are dropped, as
+    * they have no such row.
+    */
+  private[graft] def bm25Top100(s: SparkSession, d: String): DataFrame = {
+    val terms = Seq("join", "scan", "filter")
+    val perDoc = Tables.documents(s, d)
+      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("arr"))
+      .select(col("doc_id") +: size(col("arr")).cast("long").as("dl") +:
+        terms.map(t => coalesce(size(filter(col("arr"), _ === t)).cast("long"), lit(0L))
+          .as(s"tf_$t")): _*)
+    val stats = perDoc.agg(
+      count(lit(1)).cast("double").as("n_docs"),
+      terms.map(t => count_if(col(s"tf_$t") > 0).as(s"df_$t")) :+
+        (sum(col("dl")).cast("double") / count(lit(1)).cast("double")).as("avgdl"): _*)
+    def scoreMicros(t: String): org.apache.spark.sql.Column = {
+      val (tf, df) = (col(s"tf_$t"), col(s"df_$t"))
+      val idf = log((col("n_docs") - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0))
+      val denom = tf + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))
+      round(idf * (tf * lit(2.2)) / denom * lit(1000000.0), 0).cast("long")
+    }
+    // The has-a-term test reads `n_docs` (>= 1 wherever a doc exists) so
+    // that it stays the join condition: a test on the doc row alone would
+    // be pushed under the documents' spread exchange, the aggregate side
+    // could no longer reuse that exchange, and the documents would be
+    // scanned and shuffled twice. The tf counts are coalesced to 0 (a
+    // null text has none) for the same reason: on a nullable count the
+    // optimizer infers a not-null filter and pushes it down the same way.
+    val hasTerm = terms.map(t => col(s"tf_$t")).reduce(_ + _) * col("n_docs") > 0
+    perDoc.join(broadcast(stats), hasTerm)
+      .select(col("doc_id"), terms.map(scoreMicros).reduce(_ + _).as("bm25_micros"))
+      .orderBy(col("bm25_micros").desc, col("doc_id").asc)
+      .limit(100)
+  }
+
   /** The fixed-form document quality composite shared by sample_quality /
     * pipeline_filter / dedup_canonical AND their DuckDB oracles — one
     * definition, because every copy must stay bit-identical to its oracle
@@ -73,36 +117,6 @@ object SparkEntry {
     * value has at most 5 decimal digits, so no rounding boundary exists
     * for the engines to disagree on).
     */
-  /** BM25 top-100 for the fixed query terms — the text_bm25 gate body,
-    * factored so the hybrid-retrieval fusion gate scores the identical
-    * lexical list. Micros-exact per-term score, bounded top-k.
-    */
-  private def bm25Top100(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val terms = Seq("join", "scan", "filter")
-    val stats = docs.agg(
-      count(lit(1)).cast("double").as("n_docs"),
-      (sum(TextFunctions.tokenCount(col("text"))).cast("double") /
-        count(lit(1)).cast("double")).as("avgdl"))
-    val toks = docs
-      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("arr"))
-      .select(col("doc_id"), size(col("arr")).cast("long").as("dl"),
-        explode(col("arr")).as("tok"))
-      .filter(col("tok").isInCollection(terms))
-    val tf = toks.groupBy("doc_id", "tok", "dl").agg(count(lit(1)).as("tf"))
-    val dfq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-    val idf = log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0))
-    val denom = col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))
-    val scoreMicros = round(col("idf") * (col("tf") * lit(2.2)) / denom * lit(1000000.0), 0)
-      .cast("long")
-    tf.join(broadcast(dfq), "tok").crossJoin(broadcast(stats))
-      .withColumn("idf", idf)
-      .select(col("doc_id"), scoreMicros.as("m"))
-      .groupBy("doc_id").agg(sum("m").as("bm25_micros"))
-      .orderBy(col("bm25_micros").desc, col("doc_id").asc)
-      .limit(100)
-  }
-
   private[graft] def docQuality: org.apache.spark.sql.Column = round(
     lit(0.4) * least(lit(1.0), TextFunctions.tokenCount(col("text")) / 20.0) +
     lit(0.3) * (lit(1.0) - TextFunctions.punctRatio(col("text"))) +

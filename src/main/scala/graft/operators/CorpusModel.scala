@@ -143,8 +143,8 @@ object CorpusModel {
     * aggregate.
     */
   def scoreLogProb(spark: SparkSession, path: String, docs: DataFrame): DataFrame = {
-    val vocab = spark.read.parquet(s"$path/vocab")
-    val meta = spark.read.parquet(s"$path/meta")
+    val vocab = graft.Tables.parquet(spark, s"$path/vocab")
+    val meta = graft.Tables.parquet(spark, s"$path/meta")
     val toks = docs
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("arr"))
       .select(col("doc_id"), explode(col("arr")).as("tok"))

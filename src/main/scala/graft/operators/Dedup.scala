@@ -67,11 +67,14 @@ object Dedup {
 
   /** Sorted distinct token sets: sortedness lets [[JaccardSorted]] run a
     * merge intersection instead of per-pair hash sets. `private[graft]`
-    * so the streaming twin derives the IDENTICAL token sets.
+    * so the streaming twin derives the IDENTICAL token sets. `sort_array`
+    * is code-generated, where a comparator-free `array_sort` runs an
+    * interpreted lambda per comparison; the two orders differ only in
+    * where nulls go, and a split token is never null.
     */
   private[graft] def withToks(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      array_sort(TextFunctions.distinctTokens(col("text"))).as("toks"))
+      sort_array(TextFunctions.distinctTokens(col("text"))).as("toks"))
 
   /** The `(band, bh)` struct array of a minhash signature — the one band
     * derivation [[minhashBands]] and the streaming screen share, so their
@@ -85,11 +88,6 @@ object Dedup {
     }: _*)
   }
 
-  /** Brute-force token-set Jaccard pairs >= `tau` among doc_id < `idCap`.
-    * Quadratic — the DuckDB-checkable oracle for [[minhashLsh]], capped so
-    * it stays feasible at any SF. Intersection sizes are integers, so the
-    * ratio (and the threshold decision) is bit-identical across engines.
-    */
   /** Size filter (set-similarity-join standard): `jac >= tau` implies
     * `min(|A|,|B|) >= tau * max(|A|,|B|)`, so a join carrying this
     * predicate never runs the expensive merge for pairs the threshold
@@ -99,15 +97,27 @@ object Dedup {
                  szB: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     least(szA, szB).cast("double") >= lit(tau) * greatest(szA, szB)
 
+  /** Brute-force token-set Jaccard pairs >= `tau` among doc_id < `idCap`.
+    * Quadratic — the DuckDB-checkable oracle for [[minhashLsh]], capped so
+    * it stays feasible at any SF. Intersection sizes are integers, so the
+    * ratio (and the threshold decision) is bit-identical across engines.
+    *
+    * The join condition is written cheap-first, and its conjuncts keep
+    * that order in the nested-loop join, which evaluates them left to
+    * right and stops at the first false one: the id order and the
+    * [[sizeFilter]] reject most pairs before the merge runs. A `jac >= tau`
+    * filter over the join would be pushed into the condition AHEAD of
+    * them, running the merge on every pair. The output rows recompute the
+    * merge for their `jaccard` column.
+    */
   def jaccardPairs(docs: DataFrame, tau: Double, idCap: Long): DataFrame = {
     val t = withToks(docs.filter(col("doc_id") < idCap))
       .withColumn("sz", size(col("toks")))
+    val jac = SetSimilarity.jaccard_sorted(col("a.toks"), col("b.toks"))
     t.as("a").join(t.as("b"), col("a.doc_id") < col("b.doc_id") &&
-        sizeFilter(tau, col("a.sz"), col("b.sz")))
-      .withColumn("jac", SetSimilarity.jaccard_sorted(col("a.toks"), col("b.toks")))
-      .filter(col("jac") >= tau)
+        sizeFilter(tau, col("a.sz"), col("b.sz")) && jac >= tau)
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-              round(col("jac"), 6).as("jaccard"))
+              round(jac, 6).as("jaccard"))
   }
 
   /** EXACT set-similarity self-join via prefix filtering (Bayardo, Ma,

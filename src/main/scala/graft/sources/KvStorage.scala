@@ -120,7 +120,7 @@ object KvStorage {
   /** The full change-log, healed — feed to [[graft.operators.KvOps]]. */
   def read(spark: SparkSession, path: String): DataFrame = {
     recover(spark, path)
-    spark.read.parquet(path.stripSuffix("/")).select(cols.map(col): _*)
+    graft.Tables.parquet(spark, path.stripSuffix("/")).select(cols.map(col): _*)
   }
 
   /** The log's event-id high-water mark — what a restarted writer must
@@ -144,7 +144,7 @@ object KvStorage {
     fs.delete(tmpP, true); fs.delete(oldP, true)
     // O(live cells); 4-way id clustering bounds the file count while
     // keeping a hot id range off a single task
-    graft.operators.KvOps.lwwAll(spark.read.parquet(root).select(cols.map(col): _*))
+    graft.operators.KvOps.lwwAll(graft.Tables.parquet(spark, root).select(cols.map(col): _*))
       .repartition(4, col("id"))
       .write.mode(SaveMode.Overwrite).parquet(tmpP.toString)
     TsStorage.renamed(fs, rootP, oldP, "kv compact swap (park)")

@@ -4,15 +4,16 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.Job
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetUtils, ParquetWriteSupport}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions,
+  ParquetToSparkSchemaConverter, ParquetUtils, ParquetWriteSupport}
+import org.apache.spark.sql.types.StructType
 
 /** One parquet file from driver-side rows, with no Spark job, no plan and
   * no process fork — the write-behind flush unit of the durable tables
@@ -119,12 +120,16 @@ private[graft] object LocalWrite {
     try f(r) finally r.close()
   }
 
-  /** The Spark schema a parquet file's footer carries (Spark's row
-    * metadata) — an explicit read schema with no schema-inference job.
+  /** The schema Spark's parquet inference derives from one file's footer
+    * — an explicit read schema with no schema-inference job. It is Spark's
+    * own per-footer step (`ParquetFileFormat.readSchemaFromFooter`, with a
+    * converter built from the session's conf): the footer's Spark row
+    * metadata when the file has it, else the parquet schema converted, as
+    * for a file written by Arrow or DuckDB.
     */
   def footerSchema(spark: SparkSession, file: Path): StructType =
-    withFooter(spark, file)(r => DataType.fromJson(r.getFooter.getFileMetaData
-      .getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType])
+    withFooter(spark, file)(r => ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file, r.getFooter), new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
 
   /** A parquet file's row count, off its footer. */
   def footerRows(spark: SparkSession, file: Path): Long =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -128,25 +127,7 @@ class FlushRunSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     assert(e.post("/ts/s/at/2", """{"value": 2, "k": "v"}""").isRight)
     e.post("/ts/blob/b/at/2", """{"x": 2}""")
     e.kvWrite("json", "d", "k", """{"v": 1}""")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val fence = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(p => p.getProperty("spark.job.description") == "fence"))
-          fence.countDown()
-        else jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      e.flush()
-      // the listener bus is FIFO: once the fence job's start arrives,
-      // every job the flush could have started has been counted
-      spark.sparkContext.setJobDescription("fence")
-      spark.range(1).count()
-      spark.sparkContext.setJobDescription(null)
-      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(jobs.get() === 0)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobsDuring(e.flush()) === 0)
     assert(runFiles(root).size === 2 && runFiles(root + "_blob").size === 2)
     assert(e.get("/ts/s/length") === """{"length": 2}""")
     assert(e.kvRead("json", "d", "k") === """{"v": 1}""")

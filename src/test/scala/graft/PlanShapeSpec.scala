@@ -181,6 +181,20 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       p.take(1500))
   }
 
+  test("text_bm25: one documents scan; the scored side reuses the stats side's spread exchange") {
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val p = plan("text_bm25")
+      assert("FileScan parquet".r.findAllIn(p).size === 1, p.take(3000))
+      assert(p.contains("ReusedExchange"), p.take(3000))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
   test("dedup_exact / pipeline_filter: shuffle keyed on xxhash64, never the document body") {
     for (q <- Seq("dedup_exact", "pipeline_filter")) {
       val p = plan(q)

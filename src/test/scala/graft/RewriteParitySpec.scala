@@ -5,13 +5,16 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.{SetSimilarity, TextFunctions}
+import graft.operators.Dedup
+
 /** Round-5 rewrites replaced three gate plans with scale-safe forms (no
   * per-type single-task ntile sort, no collect_list of a user's history,
   * no per-user quadratic band join). These parity tests pin each rewrite
   * to the straightforward formulation it replaced — the rewrites must be
   * pure plan changes, bit-identical in output, at more than one SF.
   */
-class RewriteParitySpec extends AnyFunSuite with SparkTestBase {
+class RewriteParitySpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private val dirs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
 
@@ -237,5 +240,97 @@ class RewriteParitySpec extends AnyFunSuite with SparkTestBase {
         .agg(count(col("event_id")).as("n_near_clicks"))
       assertSameRows(SparkEntry.queries("events_near_join")(spark, d), direct)
     }
+  }
+
+  /** The explode/groupBy BM25 that `bm25Top100` replaced: one row per
+    * (doc, query term) occurrence, grouped to tf, regrouped to df. */
+  private def bm25Reference(d: String): DataFrame = {
+    val docs = Tables.documents(spark, d)
+    val terms = Seq("join", "scan", "filter")
+    val stats = docs.agg(
+      count(lit(1)).cast("double").as("n_docs"),
+      (sum(TextFunctions.tokenCount(col("text"))).cast("double") /
+        count(lit(1)).cast("double")).as("avgdl"))
+    val toks = docs
+      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("arr"))
+      .select(col("doc_id"), size(col("arr")).cast("long").as("dl"),
+        explode(col("arr")).as("tok"))
+      .filter(col("tok").isInCollection(terms))
+    val tf = toks.groupBy("doc_id", "tok", "dl").agg(count(lit(1)).as("tf"))
+    val dfq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
+    val idf = log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0))
+    val denom = col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))
+    val scoreMicros = round(col("idf") * (col("tf") * lit(2.2)) / denom * lit(1000000.0), 0)
+      .cast("long")
+    tf.join(broadcast(dfq), "tok").crossJoin(broadcast(stats))
+      .withColumn("idf", idf)
+      .select(col("doc_id"), scoreMicros.as("m"))
+      .groupBy("doc_id").agg(sum("m").as("bm25_micros"))
+      .orderBy(col("bm25_micros").desc, col("doc_id").asc)
+      .limit(100)
+  }
+
+  test("one-pass bm25Top100 == explode/groupBy BM25 (testdata, bench fixture, crafted corpus)") {
+    val fixture = tempDir("graft-bm25-fixture").getAbsolutePath
+    BenchPinned.writeFixture(spark, fixture)
+    // no query term, repeated terms, empty and null text, a doc of only
+    // query terms, and 5 matching docs: far fewer than 100
+    val crafted = tempDir("graft-bm25-crafted").getAbsolutePath
+    val s = spark
+    import s.implicits._
+    Seq[(Long, String)]((1L, "a plain row with none of them"), (2L, "join join join scan"),
+      (3L, ""), (4L, null), (5L, "Filter the scan, then JOIN"), (6L, "  scan  "),
+      (7L, "join scan filter"), (8L, "filtered joins scanning"), (9L, "join"),
+      (10L, "the quick brown fox"))
+      .toDF("doc_id", "text").write.parquet(s"$crafted/documents.parquet")
+    for (d <- dirs :+ fixture :+ crafted) {
+      val got = SparkEntry.bm25Top100(spark, d)
+      assertSameRows(got, bm25Reference(d))
+      assert(got.count() > 0, d)
+    }
+    assert(SparkEntry.bm25Top100(spark, crafted).count() === 5)
+  }
+
+  test("jaccardPairs (cheap-first join condition) == filter-after-join Jaccard pairs") {
+    for (d <- dirs; tau <- Seq(0.05, 0.5, 0.8)) {
+      val t = Tables.documents(spark, d).filter(col("doc_id") < 500L)
+        .select(col("doc_id"), array_sort(TextFunctions.distinctTokens(col("text"))).as("toks"))
+        .withColumn("sz", size(col("toks")))
+      val reference = t.as("a").join(t.as("b"), col("a.doc_id") < col("b.doc_id") &&
+          Dedup.sizeFilter(tau, col("a.sz"), col("b.sz")))
+        .withColumn("jac", SetSimilarity.jaccard_sorted(col("a.toks"), col("b.toks")))
+        .filter(col("jac") >= tau)
+        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
+          round(col("jac"), 6).as("jaccard"))
+      val got = Dedup.jaccardPairs(Tables.documents(spark, d), tau, idCap = 500L)
+      assertSameRows(got, reference)
+      assert(got.count() > 0, s"$d tau=$tau")
+    }
+  }
+
+  test("jaccardPairs: the nested-loop join tests jaccard_sorted after doc_id < and the size filter") {
+    import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Expression,
+      GreaterThanOrEqual, Least, LessThan}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val plan = Dedup.jaccardPairs(Tables.documents(spark, dirs.last), tau = 0.8, idCap = 500L)
+      .queryExecution.sparkPlan
+    val joins = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(joins.size === 1, plan.treeString)
+    val cs = conjuncts(joins.head.condition.get)
+    def isJaccard(e: Expression) = e.exists(_.prettyName == "jaccard_sorted")
+    def isIdOrder(e: Expression) = e match {
+      case LessThan(l: Attribute, r: Attribute) => l.name == "doc_id" && r.name == "doc_id"
+      case _ => false
+    }
+    def isSizeFilter(e: Expression) = e match {
+      case GreaterThanOrEqual(l, _) => l.exists(_.isInstanceOf[Least])
+      case _ => false
+    }
+    assert(cs.size === 3, cs)
+    assert(isIdOrder(cs(0)) && isSizeFilter(cs(1)) && isJaccard(cs(2)), cs)
   }
 }

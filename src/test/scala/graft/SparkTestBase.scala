@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.collection.mutable
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
@@ -28,6 +32,30 @@ trait SparkTestBase {
     val s = spark
     import s.implicits._
     rows.toDF("series_id", "t", "value", "tags", "event_id")
+  }
+
+  /** Spark jobs started while `body` runs: a fence job marks the end (the
+    * listener bus is FIFO, so once its start arrives every job `body`
+    * started has been counted).
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val jobs = new AtomicInteger()
+    val fence = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == "fence"))
+          fence.countDown()
+        else jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription("fence")
+      spark.range(1).count()
+      spark.sparkContext.setJobDescription(null)
+      assert(fence.await(60, TimeUnit.SECONDS))
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
 

@@ -1,11 +1,7 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -175,30 +171,6 @@ class TsTailSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     assert(wholeCovered > 0 && covered > wholeCovered && uncovered > 0,
       s"tail-served $covered (unfolded $wholeCovered), Spark $uncovered")
     assert(capped > 0, "a tail-served selection over the cap")
-  }
-
-  /** Spark jobs started while `body` runs: a fence job marks the end (the
-    * listener bus is FIFO, so once its start arrives every job `body`
-    * started has been counted).
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger()
-    val fence = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.job.description") == "fence"))
-          fence.countDown()
-        else jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setJobDescription("fence")
-      spark.range(1).count()
-      spark.sparkContext.setJobDescription(null)
-      assert(fence.await(60, TimeUnit.SECONDS))
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("read-back GETs over unfolded runs run no Spark job; reads of a folded series do") {
