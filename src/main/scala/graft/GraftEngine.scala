@@ -75,13 +75,15 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
   private val numericTail = new TsTail[TsRow](tailCap)
   private val blobTail    = new TsTail[BlobRow](tailCap)
 
-  // durable mode: resume the event-id sequence from BOTH tables, otherwise
-  // a restarted engine would reissue ids and break the event_id tie order
-  // every read/top-n relies on. Recovery runs BEFORE the existence check:
-  // after a crashed delete or compact a parked partition is missing until
-  // its rewrite rolls in, and skipping the table here would reissue ids
+  // durable mode: a store the previous build's crash protocols left
+  // mid-commit is refused, not misread
+  graft.sources.Commit.refuseLegacy(spark, tsStoragePath.toSeq ++ blobStoragePath.toSeq,
+    kvStores.flatMap(kvStoragePath))
+
+  // resume the event-id sequence from BOTH tables, otherwise a restarted
+  // engine would reissue ids and break the event_id tie order every
+  // read/top-n relies on
   (tsStoragePath.toSeq ++ blobStoragePath.toSeq).foreach { p =>
-    graft.sources.TsStorage.recover(spark, p)
     if (graft.sources.TsStorage.exists(spark, p))
       graft.sources.TsStorage.maxEventId(spark, p)
         .foreach(m => nextEventId = math.max(nextEventId, m))
@@ -90,7 +92,6 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
   // reissued either, or a restarted engine's LWW tie-break (event_id desc)
   // could flip a cell whose conflicting writes share a write_ts
   kvStores.flatMap(kvStoragePath).foreach { p =>
-    graft.sources.KvStorage.recover(spark, p)
     if (graft.sources.KvStorage.exists(spark, p))
       graft.sources.KvStorage.maxEventId(spark, p)
         .foreach(m => nextEventId = math.max(nextEventId, m))
@@ -196,12 +197,7 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
     // store, and stays whole
     if (tsStoragePath.isDefined) flushLock.synchronized { numericTail.evict(); blobTail.evict() }
     (tsStoragePath.toSeq ++ blobStoragePath.toSeq).foreach { p =>
-      // recover first: a crashed delete or compact's parked partition is
-      // missing until its rewrite rolls in, and this sweep must heal it,
-      // not skip it
-      graft.sources.TsStorage.recover(spark, p)
-      if (graft.sources.TsStorage.exists(spark, p))
-        graft.sources.TsStorage.compact(spark, p, maxFilesPerPartition)
+      graft.sources.TsStorage.compact(spark, p, maxFilesPerPartition)
     }
     kvStores.flatMap(kvStoragePath).foreach { p =>
       graft.sources.KvStorage.compact(spark, p)
@@ -238,11 +234,6 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
     kvStoragePath(store) match {
       case Some(p) =>
         flushKv(store)
-        // recover BEFORE the existence check: mid-crashed-compact the
-        // root is legitimately absent until the twin rolls in, and an
-        // unhealed check would misread the store as empty (the TS
-        // facade's identical rule)
-        graft.sources.KvStorage.recover(spark, p)
         if (graft.sources.KvStorage.exists(spark, p))
           graft.sources.KvStorage.read(spark, p)
         else kvBufs(store).toSeq.toDF() // nothing ever written
@@ -288,7 +279,6 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
       val m = kvCache(store)
       if (!kvCacheLoaded(store)) {
         kvStoragePath(store).foreach { p =>
-          graft.sources.KvStorage.recover(spark, p)
           if (graft.sources.KvStorage.exists(spark, p))
             KvOps.lwwAll(graft.sources.KvStorage.read(spark, p)).collect()
               .foreach { r =>
@@ -536,11 +526,8 @@ class GraftEngine(spark: SparkSession, clock: () => Long = () => System.currentT
               // path for blob and numeric (the reference deletes blob TS
               // through the identical path, server.re:976-996), no
               // driver-side collect; it folds the runs first. Deleting
-              // from a not-yet-written table is a no-op, not a crash, and
-              // recovery must precede the existence check or a crashed
-              // compact makes this delete a silent no-op
+              // from a not-yet-written table is a no-op, not a crash
               flushLock.synchronized(tail.evict())
-              graft.sources.TsStorage.recover(spark, p)
               if (graft.sources.TsStorage.exists(spark, p))
                 graft.sources.TsStorage.delete(spark, p, q.ids, q.selector, q.filter)
             case None => flushLock.synchronized {

@@ -160,11 +160,9 @@ object SparkEntry {
     * "error" partition split over up to 8 files (a `TsStorage.write`
     * would bound it to its salt width), every other partition in one.
     * Then the rewrite delete, then a compact to at most 4 files per
-    * partition; `onBeforeSwap` is the compact's hook, reached only when
-    * it rewrites at least one partition.
+    * partition.
     */
-  private[graft] def compactIncremental(s: SparkSession, d: String,
-                                        onBeforeSwap: () => Unit = () => ()): String = {
+  private[graft] def compactIncremental(s: SparkSession, d: String): String = {
     val dir = scratchDir("cinc", d) + "/table"
     graft.sources.TsStorage.withDay(ts(s, d))
       .repartition(8, col("series_id"), col("day"),
@@ -173,8 +171,7 @@ object SparkEntry {
       .write.partitionBy("series_id", "day").parquet(dir)
     graft.sources.TsStorage.delete(s, dir, Seq("error"),
       TimeRange(R_FROM, R_TO), Some(TagContains("k", "5")))
-    graft.sources.TsStorage.compact(s, dir, maxFilesPerPartition = 4,
-      onBeforeSwap = onBeforeSwap)
+    graft.sources.TsStorage.compact(s, dir, maxFilesPerPartition = 4)
     dir
   }
 

@@ -975,17 +975,17 @@ object Similarity {
     * untouched cells' files are never read or written), then clear the
     * folded batches.
     *
-    * Crash contract — deliberately LIGHTER than
-    * [[graft.sources.TsStorage.compact]]'s manifest state machine, and
-    * the difference is principled: the index is DERIVED data. The
+    * Crash contract — deliberately LIGHTER than [[graft.sources.Commit]],
+    * the durable stores' commit protocol, and the difference is
+    * principled: the index is DERIVED data. The
     * tombstone set clears last, so a crash anywhere up to the overwrite's
     * commit leaves the mask active and a re-run completes the fold; a
     * crash inside the committer's own partition-replace window can lose
     * retained vectors of a touched cell, and the recovery for derived
     * data is to rebuild from the primary store ([[writeIvfIndex]] /
-    * [[appendIvfIndex]] over the touched cells) — spending the TS store's
-    * per-partition twin/park/manifest machinery to avoid a rebuild that
-    * is already cheap and always available would buy nothing. Run folds
+    * [[appendIvfIndex]] over the touched cells) — spending a staged,
+    * manifest-committed rewrite to avoid a rebuild that is already cheap
+    * and always available would buy nothing. Run folds
     * in the index's single-writer maintenance window.
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,

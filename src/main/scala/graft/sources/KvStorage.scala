@@ -38,13 +38,11 @@ import org.apache.spark.sql.types.StructType
   *
   * Crash model: an append writes its file under a hidden `.inprogress`
   * name and commits it by rename (a kill mid-append leaves only a hidden
-  * file no reader lists); [[compact]] is a whole-table twin swap, owned
-  * here (the TS table's delete and compact swap per partition instead) —
-  * the fold lands fully in `<root>_compacting`, the live log parks in
-  * `<root>_old`, the twin renames in, the park drops. The one instant
-  * where the root is absent is healed by the recovery sweep every entry
-  * point runs ([[recover]]): `_SUCCESS` in the twin proves the fold
-  * complete (roll forward), else roll back to the park. Single writer
+  * file no reader lists); [[compact]] is one [[Commit]], the TS tables'
+  * protocol: its LWW files are staged aside and moved in, and the log
+  * files it read retire. The root never moves. Every entry point —
+  * [[exists]], [[read]], [[maxEventId]], [[append]], [[compact]] — first
+  * applies a committed manifest ([[Commit.repair]]). Single writer
   * assumed (the engine facade), like the reference's single store
   * process.
   */
@@ -57,55 +55,33 @@ object KvStorage {
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The table root, the compact's rewrite twin, the parked original. */
-  private def swapPaths(root: String): (Path, Path, Path) =
-    (new Path(root), new Path(root + "_compacting"), new Path(root + "_old"))
-
-  /** Heal a crashed compact swap (`<root>_compacting` / `<root>_old`): a
-    * missing root rolls FORWARD to a rewrite carrying Spark's `_SUCCESS`
-    * commit marker, else BACK to the parked original. Safe for concurrent
-    * readers (end-state-tolerant renames; two racing heals both succeed).
-    */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val root = path.stripSuffix("/")
-    val fs = fsFor(spark, root)
-    val (rootP, tmpP, oldP) = swapPaths(root)
-    if (!fs.exists(rootP)) {
-      if (fs.exists(new Path(tmpP, "_SUCCESS"))) {
-        TsStorage.recoveredRename(fs, tmpP, rootP, "kv compact recovery (roll forward)")
-        fs.delete(oldP, true)
-      } else if (fs.exists(oldP)) {
-        TsStorage.recoveredRename(fs, oldP, rootP, "kv compact recovery (roll back)")
-        fs.delete(tmpP, true)
-      }
-    }
-  }
-
-  /** True when the log has at least one committed data file. Callers must
-    * [[recover]] first — mid-swap the root is legitimately absent.
-    */
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val rootP = new Path(path.stripSuffix("/"))
-    val fs = fsFor(spark, path)
+  private def hasLog(fs: FileSystem, root: String): Boolean = {
+    val rootP = new Path(root)
     fs.exists(rootP) && fs.listStatus(rootP).exists { f =>
       val n = f.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
     }
   }
 
+  /** True when the log has at least one committed data file. */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val root = path.stripSuffix("/")
+    val fs = fsFor(spark, root)
+    Commit.repair(fs, root)
+    hasLog(fs, root)
+  }
+
   /** Append a batch of change-log rows (the engine's write-behind flush
     * unit) as one file, with no Spark job, no plan and no process fork
     * ([[LocalWrite]]). `rows` are laid out as `schema`, the log's columns.
-    * One file per flush is already the file-count bound. Heals a crashed
-    * swap first — appending around a parked rewrite would hand the
-    * pre-crash log to the swap's GC.
+    * One file per flush is already the file-count bound.
     */
   def append(spark: SparkSession, schema: StructType, rows: Iterator[InternalRow],
              path: String): Unit = {
-    recover(spark, path)
-    val c = LocalWrite.commit(spark, schema, rows, new Path(path.stripSuffix("/")))
-    log.info(f"kv flush ${path.stripSuffix("/")}: ${c.rows} rows, ${c.bytes} bytes, " +
-      f"1 file, ${c.ms}%.1f ms")
+    val root = path.stripSuffix("/")
+    Commit.repair(fsFor(spark, root), root)
+    val c = LocalWrite.commit(spark, schema, rows, new Path(root))
+    log.info(f"kv flush $root: ${c.rows} rows, ${c.bytes} bytes, 1 file, ${c.ms}%.1f ms")
   }
 
   /** [[append]] of a driver-local frame's log columns: its optimized plan
@@ -117,10 +93,11 @@ object KvStorage {
     append(rows.sparkSession, rel.schema, rel.data.iterator, path)
   }
 
-  /** The full change-log, healed — feed to [[graft.operators.KvOps]]. */
+  /** The full change-log — feed to [[graft.operators.KvOps]]. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    recover(spark, path)
-    graft.Tables.parquet(spark, path.stripSuffix("/")).select(cols.map(col): _*)
+    val root = path.stripSuffix("/")
+    Commit.repair(fsFor(spark, root), root)
+    graft.Tables.parquet(spark, root).select(cols.map(col): _*)
   }
 
   /** The log's event-id high-water mark — what a restarted writer must
@@ -133,24 +110,21 @@ object KvStorage {
       .map(_.asInstanceOf[Long])
 
   /** Fold the log to the LWW winner per (id, key), tombstones retained
-    * (see class doc), via the crash-safe whole-table twin swap.
+    * (see class doc), in one [[Commit]]: the winners' files are added and
+    * the log files the fold read retire.
     */
   def compact(spark: SparkSession, path: String): Unit = {
     val root = path.stripSuffix("/")
     val fs = fsFor(spark, root)
-    recover(spark, path)
-    if (!exists(spark, path)) return
-    val (rootP, tmpP, oldP) = swapPaths(root)
-    fs.delete(tmpP, true); fs.delete(oldP, true)
-    // O(live cells); 4-way id clustering bounds the file count while
-    // keeping a hot id range off a single task
-    graft.operators.KvOps.lwwAll(graft.Tables.parquet(spark, root).select(cols.map(col): _*))
-      .repartition(4, col("id"))
-      .write.mode(SaveMode.Overwrite).parquet(tmpP.toString)
-    TsStorage.renamed(fs, rootP, oldP, "kv compact swap (park)")
-    // end-state-tolerant: a concurrent reader's recovery may roll the
-    // committed twin in during the instant the root is absent
-    TsStorage.recoveredRename(fs, tmpP, rootP, "kv compact swap (roll in)")
-    fs.delete(oldP, true)
+    Commit.settle(fs, root)
+    if (hasLog(fs, root)) Commit.commit(fs, root, "kv-compact") { stage =>
+      val logFrame = graft.Tables.parquet(spark, root).select(cols.map(col): _*)
+      // O(live cells); 4-way id clustering bounds the file count while
+      // keeping a hot id range off a single task
+      graft.operators.KvOps.lwwAll(logFrame)
+        .repartition(4, col("id"))
+        .write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      logFrame.inputFiles.toSeq
+    }
   }
 }

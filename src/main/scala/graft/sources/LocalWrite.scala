@@ -102,7 +102,7 @@ private[graft] object LocalWrite {
         .withWriterVersion(ParquetOutputFormat.getWriterVersion(conf))
         .build()
       try rows.foreach { r => w.write(r); n += 1 } finally w.close()
-      TsStorage.renamed(fs, tmp, dst, "local file commit")
+      Commit.renamed(fs, tmp, dst, "local file commit")
     } catch {
       case e: Throwable => fs.delete(tmp, false); throw e
     }
@@ -130,8 +130,4 @@ private[graft] object LocalWrite {
   def footerSchema(spark: SparkSession, file: Path): StructType =
     withFooter(spark, file)(r => ParquetFileFormat.readSchemaFromFooter(
       new Footer(file, r.getFooter), new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
-
-  /** A parquet file's row count, off its footer. */
-  def footerRows(spark: SparkSession, file: Path): Long =
-    withFooter(spark, file)(_.getRecordCount)
 }

@@ -49,36 +49,18 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * so a nightly compact costs the touched fraction, never a full-table
   * pass.
   *
-  * Crash model (the reference gets per-write atomicity from Irmin/git
-  * commits, `timeseries.re:431-487`): every mutation here is
-  * write-fully-aside-then-rename, and every entry point — [[read]],
-  * [[append]], [[delete]], [[compact]] — first runs a recovery sweep
-  * ([[repair]]) that completes any swap a previous process died inside,
-  * so no reader ever acts on the mid-swap state. A flush run is written
-  * under a hidden `.inprogress` name and committed by its rename; a kill
-  * before that leaves a hidden file no reader lists. Beyond that, the
-  * table has two commit protocols:
-  *  - the fold manifest: a fold stages the runs' rows in `<root>_fold_tmp`
-  *    and commits by renaming `<root>_fold_manifest` into place; the
-  *    manifest lists each staged file and each consumed run. Applying it
-  *    moves every staged file into the root, then deletes the consumed
-  *    runs, then the manifest. Readers and writers both apply a committed
-  *    manifest before they scan: it only adds committed files, then
-  *    retires runs whose rows are already in place, so every row is seen
-  *    exactly once whichever step a kill landed in.
-  *  - the delete manifest, shared by [[delete]] and [[compact]]: rewritten
-  *    partitions land in `<root>_delete_tmp`, `<root>_delete_manifest`
-  *    commits by rename, and [[applyManifest]] parks each live partition
-  *    in `<root>_delete_old` and renames its rewrite ("twin") in. A parked
-  *    partition rolls FORWARD only when its fully written twin exists.
-  * Single writer assumed (like the reference's single store process).
-  * Readers racing a delete or compact are safe — their sweep never
-  * deletes the live siblings an in-flight writer is using, and two
-  * readers racing the same healing rename both succeed (the loser checks
-  * the desired end state instead of failing, [[recoveredRename]]). A fold
-  * retires run files, so it must not overlap a scan: the engine facade
-  * flushes (and so folds) under its flush lock before it reads, and the
-  * wire server takes its write lock for every POST.
+  * Crash model: a flush run is written under a hidden `.inprogress` name
+  * and committed by its rename; a kill before that leaves a hidden file no
+  * reader lists. The fold, [[delete]] and [[compact]] each replace
+  * committed files through the one [[Commit]] protocol: new files staged
+  * aside, one manifest committed by rename, then applied. Every entry
+  * point — [[exists]], [[read]], [[maxEventId]], [[append]], [[delete]],
+  * [[compact]] — first applies a committed manifest ([[Commit.repair]]),
+  * so no reader or writer ever acts on a half-applied commit. Single
+  * writer assumed (like the reference's single store process). A commit
+  * retires files, so it must not overlap a scan that listed them: the
+  * engine facade flushes (and so folds) under its flush lock before it
+  * reads, and the wire server takes its write lock for every POST.
   */
 object TsStorage {
 
@@ -116,12 +98,11 @@ object TsStorage {
 
   /** True when the table has data partitions or committed flush runs — a
     * root holding just `_SUCCESS` (every series deleted) is no table.
-    * Callers must [[recover]] first: mid-swap a partition dir, the
-    * table's only one included, is legitimately absent.
     */
   def exists(spark: SparkSession, path: String): Boolean = {
     val root = path.stripSuffix("/")
     val fs = fsFor(spark, root)
+    Commit.repair(fs, root)
     hasPartitions(fs, root) || listRuns(fs, root).nonEmpty
   }
 
@@ -170,47 +151,16 @@ object TsStorage {
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private[sources] def renamed(fs: FileSystem, from: Path, to: Path, what: String): Unit =
-    if (!fs.rename(from, to))
-      throw new java.io.IOException(s"$what rename failed: $from -> $to")
-
-  /** Recovery rename tolerant of benign races: two concurrent readers can
-    * both observe the same crashed swap and attempt the same healing
-    * rename — the loser's rename returns false, but if the DESIRED end
-    * state now holds (source gone, destination present) the repair is
-    * done, not failed. Genuine rename errors still throw.
-    */
-  private[sources] def recoveredRename(fs: FileSystem, from: Path, to: Path, what: String): Unit = {
-    // some FileSystems (local included) THROW FileNotFound for a vanished
-    // source rather than returning false — same benign-race outcome
-    val renamed = try fs.rename(from, to) catch {
-      case _: java.io.FileNotFoundException => false
-    }
-    if (!renamed && !(fs.exists(to) && !fs.exists(from)))
-      throw new java.io.IOException(s"$what rename failed: $from -> $to")
-  }
-
-  /** Test seam: invoked in [[applyManifest]]'s survivor branch between the
-    * twin-existence check and the park decision — the window in which a
-    * concurrent reader's [[repair]] may roll the twin into a missing live
-    * dir. Specs inject that reader rename here to pin the interleaving
-    * deterministically; production leaves it a no-op.
-    */
-  private[graft] var onSurvivorTwinChecked: String => Unit = _ => ()
-
-  /** Full (re)write of the TS table in the partitioned layout. Repairs any
-    * crashed swap first — overwriting a mid-swap state without healing it
-    * would leave a parked rewrite for the next writer's GC to destroy.
+  /** Full (re)write of the TS table in the partitioned layout. Settles
+    * any committed change first — a manifest applied after the overwrite
+    * would move stale files into the new table.
     */
   def write(ts: DataFrame, path: String): Unit = {
     val root = path.stripSuffix("/")
     val fs = fsFor(ts.sparkSession, root)
-    repair(fs, root, destructive = true)
-    // a full rewrite replaces the table, pending flush runs included (a
-    // committed fold was applied by the repair above; its staging
-    // leftovers are garbage)
+    Commit.settle(fs, root)
+    // a full rewrite replaces the table, pending flush runs included
     fs.delete(runsDir(root), true)
-    fs.delete(new Path(root + "_fold_tmp"), true)
     // cluster by target partition before the partitioned write: without
     // this every one of the P input tasks opens a file in every touched
     // (series, day) dir — P × dirs small files per write, the classic
@@ -232,17 +182,14 @@ object TsStorage {
     * event_id)`, no `day` column. The engine hands in its buffered rows
     * through one serializer per table, built once.
     *
-    * Appending is an entry point like any other: it must repair a crashed
-    * swap FIRST, or a later fold recreates a parked partition's live dir
-    * ahead of its committed rewrite — which the next delete/compact would
-    * then garbage-collect, silently dropping that partition's pre-crash
-    * rows.
+    * Appending is an entry point like any other: it applies a committed
+    * manifest first, so a run never lands beside a half-applied commit.
     */
   def append(spark: SparkSession, schema: StructType, rows: Iterator[InternalRow],
              path: String): Boolean = {
     val root = path.stripSuffix("/")
     val fs = fsFor(spark, root)
-    repair(fs, root, destructive = true)
+    Commit.repair(fs, root)
     val run = LocalWrite.commit(spark, schema, rows, runsDir(root))
     log.info(f"flush run $root: ${run.rows} rows, ${run.bytes} bytes, 1 file, ${run.ms}%.1f ms")
     val runs = listRuns(fs, root)
@@ -260,115 +207,33 @@ object TsStorage {
     append(ts.sparkSession, rel.schema, rel.data.iterator, path)
   }
 
-  /** Test seam: called at each step of a fold — "staged" (rows written
-    * aside), "manifest" (committed), "moved" (after each staged file's
-    * move), "applied" (moves done, runs not yet retired). Specs throw from
-    * it to inject a crash; production leaves it a no-op.
+  /** The shard merge (`timeseries.re:57-111`): one [[Commit]] that
+    * stages the runs' rows with the clustered partitioned write and
+    * retires exactly the run files that write read.
     */
-  private[graft] var onFoldStep: String => Unit = _ => ()
-
-  /** The shard merge (`timeseries.re:57-111`): stage the runs' rows with
-    * the clustered partitioned write into `<root>_fold_tmp`, commit a
-    * manifest listing each staged file and each consumed run, then
-    * [[applyFold]] it. Callers have run the writer repair, so any
-    * committed fold is already applied and the staging dir is garbage.
-    */
-  private def foldRuns(spark: SparkSession, fs: FileSystem, root: String): Unit = {
-    val staged = new Path(root + "_fold_tmp")
-    fs.delete(staged, true)
-    fs.delete(new Path(root + "_fold_manifest.tmp"), false)
-    val runs = listRuns(fs, root)
-    if (runs.isEmpty) return
-    val t0 = System.nanoTime()
-    val fromRuns = runsFrame(spark, fs, root).get
-    // the exact run files the staging write reads: the set this fold retires
-    val consumed = fromRuns.inputFiles.map(f => new Path(f).getName).toSeq
-    // same clustering as [[write]]: without it every scan task opens a
-    // file in every touched (series, day) dir
-    WriteLayout.clusterForWrite(withDay(fromRuns), Seq("series_id", "day"), col("t"))
-      .write.partitionBy("series_id", "day")
-      .mode(SaveMode.Overwrite).parquet(staged.toString)
-    val files = for {
-      sd <- fs.listStatus(staged).toSeq if sd.getPath.getName.startsWith("series_id=")
-      dd <- fs.listStatus(sd.getPath).toSeq if dd.getPath.getName.startsWith("day=")
-      f <- fs.listStatus(dd.getPath).toSeq if f.getPath.getName.endsWith(".parquet")
-    } yield f
-    def rel(f: FileStatus): String = {
-      val dd = f.getPath.getParent
-      s"${dd.getParent.getName}/${dd.getName}/${f.getPath.getName}"
-    }
-    val rows = files.map(f => LocalWrite.footerRows(spark, f.getPath)).sum
-    onFoldStep("staged")
-    writeManifest(fs, new Path(root + "_fold_manifest"),
-      files.map("F\t" + rel(_)) ++ consumed.map("R\t" + _))
-    onFoldStep("manifest")
-    applyFold(fs, root)
-    fs.delete(staged, true)
-    log.info(f"fold $root: ${consumed.size} runs (${runs.map(_.getLen).sum} bytes) -> " +
-      f"$rows rows, ${files.map(_.getLen).sum} bytes, ${files.size} files, " +
-      f"${(System.nanoTime() - t0) / 1e6}%.1f ms")
-  }
-
-  /** Apply a committed fold manifest — idempotent, so a crashed fold, the
-    * writer's repair and a reader's repair all run this same routine:
-    * move each staged file into `root/<rel>` (skipped once it is there;
-    * end-state-tolerant against a racing reader), then delete the
-    * consumed runs, then the manifest. Safe in READER mode too: it only
-    * adds committed files, then retires runs whose rows are in place.
-    */
-  private def applyFold(fs: FileSystem, root: String): Unit = {
-    val manifest = new Path(root + "_fold_manifest")
-    if (!fs.exists(manifest)) return
-    val entries = readLines(fs, manifest).map { line =>
-      val i = line.indexOf('\t')
-      (line.substring(0, i), line.substring(i + 1))
-    }
-    entries.collect { case ("F", rel) => rel }.foreach { rel =>
-      val live = new Path(s"$root/$rel")
-      if (!fs.exists(live)) {
-        fs.mkdirs(live.getParent)
-        recoveredRename(fs, new Path(s"${root}_fold_tmp/$rel"), live, "fold (move)")
+  private def foldRuns(spark: SparkSession, fs: FileSystem, root: String): Unit =
+    runsFrame(spark, fs, root).foreach { fromRuns =>
+      Commit.commit(fs, root, "fold") { stage =>
+        // same clustering as [[write]]: without it every scan task opens a
+        // file in every touched (series, day) dir
+        WriteLayout.clusterForWrite(withDay(fromRuns), Seq("series_id", "day"), col("t"))
+          .write.partitionBy("series_id", "day")
+          .mode(SaveMode.Overwrite).parquet(stage.toString)
+        fromRuns.inputFiles.toSeq
       }
-      onFoldStep("moved")
     }
-    onFoldStep("applied")
-    entries.collect { case ("R", run) => run }
-      .foreach(run => fs.delete(new Path(runsDir(root), run), false))
-    fs.delete(manifest, false)
-  }
-
-  /** Public WRITER-side recovery entry: heal any crashed swap, completing
-    * a committed delete in full, without garbage-collecting writer
-    * siblings. Callers that gate work on [[exists]] (e.g. the engine
-    * facade's id resume and delete no-op check) must run this FIRST — in
-    * a crashed delete or compact a parked partition (the table's only
-    * one, say) is missing until recovery rolls its rewrite in, and an
-    * unhealed existence check reads the wrong answer. Writer-side because
-    * it may park/remove live partition dirs (single writer assumed).
-    */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val root = path.stripSuffix("/")
-    repair(fsFor(spark, root), root, destructive = true)
-  }
 
   /** Read back as the canonical TS frame: root and flush runs together.
     * `ts_raw` is optional (facade-ingested frames carry only epoch-ms
     * `t`); `blob` covers the blob-series layout, which shares this
-    * storage.
-    *
-    * Runs the NON-DESTRUCTIVE recovery sweep first, so a reader arriving
-    * between a mid-swap crash and the next write call sees a healed
-    * table with no gaps (round-5 verdict item 3): missing partitions get
-    * their committed rewrites rolled in and a committed fold is applied,
-    * but live dirs are never parked or removed by a reader — that
-    * mutation belongs to the single writer (whose entry points complete a
-    * committed delete in full). Cost on a healthy table: a handful of
-    * existence checks, no data I/O.
+    * storage. A committed change a crash left half-applied is rolled
+    * forward first ([[Commit.repair]]; one existence check on a settled
+    * table).
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     val root = path.stripSuffix("/")
     val fs = fsFor(spark, root)
-    repair(fs, root, destructive = false)
+    Commit.repair(fs, root)
     val raw = scan(spark, fs, root)
     val cols = Seq("series_id", "t", "value", "tags", "blob", "event_id", "ts_raw")
       .filter(raw.columns.contains)
@@ -376,21 +241,23 @@ object TsStorage {
   }
 
   /** The rows of the committed flush runs, None without runs — what the
-    * engine's unfolded tail reloads on a restart. Callers have run
-    * [[recover]], so no committed fold is pending.
+    * engine's unfolded tail reloads on a restart.
     */
   def unfolded(spark: SparkSession, path: String): Option[DataFrame] = {
     val root = path.stripSuffix("/")
-    runsFrame(spark, fsFor(spark, root), root)
+    val fs = fsFor(spark, root)
+    Commit.repair(fs, root)
+    runsFrame(spark, fs, root)
   }
 
   /** The series the layout holds rows of, off its `series_id=`
     * directory names (the ids as written, not as partition inference
-    * would type them). Reads no data. Callers have run [[recover]].
+    * would type them). Reads no data.
     */
   def foldedSeries(spark: SparkSession, path: String): Seq[String] = {
     val root = path.stripSuffix("/")
     val fs = fsFor(spark, root)
+    Commit.repair(fs, root)
     if (!hasPartitions(fs, root)) Nil
     else fs.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("series_id="))
@@ -405,7 +272,7 @@ object TsStorage {
   def maxEventId(spark: SparkSession, path: String): Option[Long] = {
     val root = path.stripSuffix("/")
     val fs = fsFor(spark, root)
-    repair(fs, root, destructive = false)
+    Commit.repair(fs, root)
     val raw = scan(spark, fs, root)
     if (!raw.columns.contains("event_id")) None
     else Option(raw.agg(max("event_id")).head().get(0)).map(_.asInstanceOf[Long])
@@ -424,243 +291,44 @@ object TsStorage {
     * Only partitions that actually contain doomed rows are rewritten;
     * untouched partitions — the vast majority under a time-bounded delete —
     * are never read twice nor rewritten. The affected-partition collect is
-    * partition METADATA (two strings per `(series, day)`), not data.
-    *
-    * Crash atomicity is WHOLE-CALL, committed by a manifest (the
-    * Delta-lite analogue of the reference's every-write-is-a-commit,
-    * `timeseries.re:431-487` via Irmin):
-    *
-    *  1. survivors are FULLY written to a sibling temp dir — the table is
-    *     untouched; a kill here rolls back (siblings are garbage).
-    *  2. a manifest file listing every affected partition and its desired
-    *     end state (Survivor-rewrite | Emptied) lands via write-then-
-    *     rename — THIS rename is the commit point. A kill AT the commit
-    *     point leaves readers on the intact pre-delete table ("none of
-    *     it"); the next writer entry completes the call ("all of it").
-    *  3. the swap itself IS [[applyManifest]] — the same idempotent
-    *     routine the recovery sweep runs, so a crashed call and its
-    *     recovery execute identical state transitions: park each
-    *     partition, rename its twin in (survivors) or leave it absent
-    *     (emptied). Every rename is checked; a kill anywhere here is
-    *     completed in full by the next WRITER entry point
-    *     (delete/append/write/compact/recover), while READERS heal only
-    *     the non-destructive part — rolling committed twins into missing
-    *     partition dirs — so a reader racing a live writer can never
-    *     park or remove a live dir (see [[repair]]).
-    *  4. the manifest is deleted (future repairs are no-ops), then the
-    *     tmp/trash siblings are GC'd.
-    *
-    * `onBeforeSwap` (pre-commit) and `onAfterManifest` (post-commit,
-    * pre-swap) are the crash-injection test hooks.
+    * partition METADATA (two strings per `(series, day)`), not data. The
+    * rewrite is one [[Commit]], so the whole call is atomic; a partition
+    * left without survivors is removed.
     */
   def delete(spark: SparkSession, path: String,
              ids: Seq[String], sel: graft.operators.Selector,
-             pred: Option[graft.operators.TagPred],
-             onBeforeSwap: () => Unit = () => (),
-             onAfterManifest: () => Unit = () => ()): Unit = {
+             pred: Option[graft.operators.TagPred]): Unit = {
     import graft.operators.TsOps
-    val root  = path.stripSuffix("/")
-    val tmp   = root + "_delete_tmp"   // rewritten partitions land here first
-    val trash = root + "_delete_old"   // originals parked here until the end
+    val root = path.stripSuffix("/")
     val fs = fsFor(spark, root)
-    // heal any previous crashed swap BEFORE reading the table, then drop
-    // the healed-over leftovers (the writer, unlike readers, may GC them)
-    repair(fs, root, destructive = true)
-    fs.delete(new Path(trash), true)
-    fs.delete(new Path(tmp), true)
-    fs.delete(new Path(root + "_delete_manifest.tmp"), true)
+    Commit.settle(fs, root)
     // the rewrite is partition-scoped: pending runs join the layout first
     foldRuns(spark, fs, root)
-
-    val raw  = scan(spark, fs, root)
-    val base = TsOps.selectSeries(raw, ids)
+    val raw = scan(spark, fs, root)
     val matchedTs = pred.foldLeft(TsOps.select(raw, ids, sel))(TsOps.tagFilter)
       .select(col("t").as("del_t")).distinct()
-    val doomed = base.join(matchedTs, col("t") === col("del_t"), "left_semi")
-    val affected = doomed.select("series_id", "day").distinct().collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    if (affected.isEmpty) return
-
-    val affectedDf = spark.createDataFrame(affected.toSeq)
-      .toDF("a_sid", "a_day")
-    val survivors = base
-      .join(broadcast(affectedDf),
-        col("series_id") === col("a_sid") && col("day") === col("a_day"), "left_semi")
-      .join(matchedTs, col("t") === col("del_t"), "left_anti")
-
-    val survivorParts = survivors.select("series_id", "day").distinct().collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    val emptied = affected.filterNot(survivorParts)
-
     val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
-
-    // phase 1: materialize every surviving row of the affected partitions
-    // OUTSIDE the table — the table itself is untouched until this commits
-    if (survivorParts.nonEmpty)
-      survivors.write.partitionBy("series_id", "day")
-        .mode(SaveMode.Overwrite).parquet(tmp)
-    onBeforeSwap()
-
-    // phase 2 — COMMIT: the manifest records each affected partition's
-    // desired end state (escaped dir names, so recovery rebuilds paths
-    // verbatim); its create-then-rename is the atomic commit point
-    writeManifest(fs, new Path(root + "_delete_manifest"), affected.map { case (sid, day) =>
-      s"series_id=${esc(sid)}/day=$day\t" +
-        (if (survivorParts((sid, day))) "S" else "E")
-    })
-    onAfterManifest()
-
-    // phase 3: apply the manifest — the SAME idempotent routine recovery
-    // runs, so a crash at any point and its later completion execute one
-    // state machine, not two hand-kept copies; consumes the manifest
-    applyManifest(fs, root)
-    fs.delete(new Path(tmp), true); fs.delete(new Path(trash), true)
+    val affected = TsOps.selectSeries(raw, ids)
+      .join(matchedTs, col("t") === col("del_t"), "left_semi")
+      .select("series_id", "day").distinct().collect()
+      .map(r => s"series_id=${esc(r.getString(0))}/day=${r.getString(1)}")
+    rewrite(spark, fs, root, "delete", affected.toSeq)(
+      _.join(matchedTs, col("t") === col("del_t"), "left_anti"))
   }
 
-  /** Execute a committed delete manifest to its end state — idempotent
-    * (exists-guarded, end-state-tolerant renames), so a crashed writer,
-    * its retry, and the recovery sweep all run this same routine. For
-    * each listed partition: park the live dir in the trash sibling, then
-    * rename the rewritten twin in (Survivor) or leave it absent (Emptied,
-    * dropping a series dir its last partition vacated). Deletes the
-    * manifest once every partition reached its end state. WRITER-side:
-    * parking/removing live dirs must never run concurrently with the
-    * single writer (readers run only the non-destructive heal in
-    * [[repair]]).
+  /** Rewrite the partitions `rels` (`series_id=<escaped>/day=<day>`) in
+    * one [[Commit]]: their rows, through `f`, land in the stage, and every
+    * data file the scoped read consumed retires. No-op without partitions.
     */
-  private def applyManifest(fs: FileSystem, root: String): Unit = {
-    val manifest = new Path(root + "_delete_manifest")
-    if (!fs.exists(manifest)) return
-    val dTmp = root + "_delete_tmp"
-    val dTrash = root + "_delete_old"
-    readManifest(fs, manifest).foreach { case (rel, isSurvivor) =>
-      val live = new Path(s"$root/$rel")
-      val twin = new Path(s"$dTmp/$rel")
-      if (isSurvivor) {
-        // twin present = swap not finished: park the original (if still
-        // live) and rename the rewrite in; twin gone = already swapped
-        if (fs.exists(twin)) {
-          onSurvivorTwinChecked(rel)
-          if (fs.exists(live)) {
-            val park = new Path(s"$dTrash/$rel")
-            // Park only into an EMPTY trash slot. An occupied slot means a
-            // previous pass already parked the original — so a live dir
-            // seen NOW is a reader-healed copy of the twin (readers heal
-            // only missing live dirs, and only from the twin): re-parking
-            // it would nest the survivors inside the occupied trash entry
-            // (HDFS rename-into-dir semantics) and lose them to the
-            // post-swap GC. With the twin rolled in by that reader, the
-            // recoveredRename below sees the end state and is a no-op.
-            if (!fs.exists(park)) {
-              fs.mkdirs(park.getParent)
-              recoveredRename(fs, live, park, "delete swap (park)")
-            }
-          }
-          fs.mkdirs(live.getParent)
-          recoveredRename(fs, twin, live, "delete swap (roll in)")
-        }
-      } else if (fs.exists(live)) {
-        // emptied partition not yet parked: its committed end state is
-        // absence — complete the removal (park; the trash is GC'd after)
-        val park = new Path(s"$dTrash/$rel")
-        fs.mkdirs(park.getParent)
-        recoveredRename(fs, live, park, "delete swap (remove emptied)")
-        val series = live.getParent
-        if (fs.exists(series) && fs.listStatus(series).isEmpty)
-          fs.delete(series, true)
-      }
+  private def rewrite(spark: SparkSession, fs: FileSystem, root: String, kind: String,
+                      rels: Seq[String])(f: DataFrame => DataFrame): Unit =
+    if (rels.nonEmpty) Commit.commit(fs, root, kind) { stage =>
+      val scoped = spark.read.schema(rootSchema(spark, fs, root).get).option("basePath", root)
+        .parquet(rels.map(rel => s"$root/$rel"): _*)
+      f(scoped).write.partitionBy("series_id", "day")
+        .mode(SaveMode.Overwrite).parquet(stage.toString)
+      scoped.inputFiles.toSeq
     }
-    fs.delete(manifest, true)
-  }
-
-  /** Commit a manifest: write it aside, then rename it into place. */
-  private def writeManifest(fs: FileSystem, manifest: Path, lines: Seq[String]): Unit = {
-    val mTmp = manifest.suffix(".tmp")
-    val out = fs.create(mTmp, true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
-    renamed(fs, mTmp, manifest, s"${manifest.getName} commit")
-  }
-
-  private def readLines(fs: FileSystem, manifest: Path): Seq[String] = {
-    val bytes =
-      try {
-        val in = fs.open(manifest)
-        try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-      } catch {
-        // a concurrent repair completed the call and dropped the
-        // manifest between our exists check and the open — nothing to do
-        case _: java.io.FileNotFoundException => return Seq.empty
-      }
-    new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
-  }
-
-  private def readManifest(fs: FileSystem, manifest: Path): Seq[(String, Boolean)] =
-    readLines(fs, manifest).map { line =>
-      val i = line.lastIndexOf('\t')
-      (line.substring(0, i), line.substring(i + 1) == "S")
-    }
-
-  /** Recovery sweep: completes any swap a previous process died inside.
-    * Never deletes the tmp/trash siblings themselves — those may belong to
-    * an in-flight writer, and cleaning them is the next writer's job
-    * ([[delete]] / [[compact]] GC them after their own leading repair).
-    *
-    * `destructive = false` is the READER mode: it only performs heals a
-    * reader racing a LIVE writer can never corrupt — rolling a committed
-    * rewrite into a partition dir that is MISSING. It never parks or
-    * removes a live dir, so the one state it leaves for the writer is a
-    * committed-but-unswapped partition still showing its (complete,
-    * consistent) pre-delete data. `destructive = true` is the WRITER mode
-    * (single writer assumed): it additionally executes a committed delete
-    * manifest to its end state via [[applyManifest]].
-    *
-    *  - a committed fold (both modes): [[applyFold]] moves the staged
-    *    files in and retires the consumed runs.
-    *  - delete's swap, manifest present: writer mode completes the ENTIRE
-    *    call ([[applyManifest]]); reader mode rolls twins into MISSING
-    *    partition dirs only and leaves the manifest for the writer.
-    *  - delete's swap, no manifest (crash between manifest removal and
-    *    sibling GC): a trash-parked partition whose live dir is missing
-    *    rolls FORWARD by renaming its fully-written twin in. A parked
-    *    partition with NO twin is a committed whole-partition delete (the
-    *    emptied-partition case — its absence IS the post-delete state) and
-    *    is deliberately left dead: restoring it would resurrect deleted
-    *    data.
-    */
-  private def repair(fs: FileSystem, root: String, destructive: Boolean): Unit = {
-    applyFold(fs, root)
-    // -- delete's swap, committed (manifest present) --------------------------
-    val dTmp = root + "_delete_tmp"
-    val manifest = new Path(root + "_delete_manifest")
-    if (fs.exists(manifest)) {
-      if (destructive) applyManifest(fs, root)
-      else readManifest(fs, manifest).foreach { case (rel, isSurvivor) =>
-        // reader heal: fill GAPS only (mid-swap kill window) — the rename
-        // is one the crashed/live writer would do next itself, so racing
-        // it is benign (end-state-tolerant); live dirs are never touched
-        val live = new Path(s"$root/$rel")
-        val twin = new Path(s"$dTmp/$rel")
-        if (isSurvivor && fs.exists(twin) && !fs.exists(live)) {
-          fs.mkdirs(live.getParent)
-          recoveredRename(fs, twin, live, "delete recovery (roll forward)")
-        }
-      }
-    }
-    // -- delete's swap, post-commit leftovers (no manifest) ------------------
-    val trashP = new Path(root + "_delete_old")
-    if (fs.exists(trashP)) {
-      for (sd <- fs.listStatus(trashP) if sd.getPath.getName.startsWith("series_id=");
-           dd <- fs.listStatus(sd.getPath) if dd.getPath.getName.startsWith("day=")) {
-        val rel  = s"${sd.getPath.getName}/${dd.getPath.getName}"
-        val live = new Path(s"$root/$rel")
-        val twin = new Path(s"$dTmp/$rel")
-        if (!fs.exists(live) && fs.exists(twin)) {
-          fs.mkdirs(live.getParent)
-          recoveredRename(fs, twin, live, "delete recovery (roll forward)")
-        }
-      }
-    }
-  }
 
   /** Within-partition file salt for a compaction rewrite: `event_id` when
     * the table carries it (the clustered-write invariant, [[write]]), else
@@ -689,59 +357,27 @@ object TsStorage {
     * repartition key — repartitioning by the partition columns alone
     * would hash each whole partition to ONE task regardless of the
     * requested count ("at most" because distinct salts can still hash to
-    * the same task).
-    *
-    * Crash atomicity is WHOLE-CALL, reusing the delete path's manifest
-    * state machine verbatim: the rewrites land fully in the `_delete_tmp`
-    * sibling (table untouched), the manifest rename is the commit point,
-    * [[applyManifest]] swaps each listed partition idempotently, and a
-    * kill anywhere is completed by the next writer entry / healed
-    * non-destructively by readers — one recovery routine for delete and
-    * compact both.
-    *
-    * `onBeforeSwap` / `onAfterManifest` are the crash-injection hooks,
-    * same contract as [[delete]]'s.
+    * the same task). The rewrite is one [[Commit]], the delete's.
     */
-  def compact(spark: SparkSession, path: String, maxFilesPerPartition: Int = 1,
-              onBeforeSwap: () => Unit = () => (),
-              onAfterManifest: () => Unit = () => ()): Unit = {
+  def compact(spark: SparkSession, path: String, maxFilesPerPartition: Int = 1): Unit = {
     val root = path.stripSuffix("/")
     val fs = fsFor(spark, root)
-    repair(fs, root, destructive = true)
-    fs.delete(new Path(root + "_delete_old"), true)
-    fs.delete(new Path(root + "_delete_tmp"), true)
-    fs.delete(new Path(root + "_delete_manifest.tmp"), true)
+    Commit.settle(fs, root)
     foldRuns(spark, fs, root)
     val rootP = new Path(root)
     if (!fs.exists(rootP)) return
-
-    // -- target census: metadata only ---------------------------------------
+    // the target census: metadata only
     val targets: Seq[String] = for {
       sd <- fs.listStatus(rootP).toSeq if sd.getPath.getName.startsWith("series_id=")
       dd <- fs.listStatus(sd.getPath).toSeq if dd.getPath.getName.startsWith("day=")
       if fs.listStatus(dd.getPath).count(_.getPath.getName.endsWith(".parquet")) >
         maxFilesPerPartition
     } yield s"${sd.getPath.getName}/${dd.getPath.getName}"
-    if (targets.isEmpty) return
-
-    // -- phase 1: rewrite ONLY the targets, fully outside the table ---------
-    val tmp = root + "_delete_tmp"
-    val scoped = spark.read.schema(rootSchema(spark, fs, root).get).option("basePath", root)
-      .parquet(targets.map(rel => s"$root/$rel"): _*)
-    scoped
-      .withColumn("__salt", saltFor(scoped, maxFilesPerPartition))
-      .repartition(col("series_id"), col("day"), col("__salt"))
-      .drop("__salt")
-      .write.partitionBy("series_id", "day")
-      .mode(SaveMode.Overwrite).parquet(tmp)
-    onBeforeSwap()
-
-    // -- phase 2: COMMIT, then the shared idempotent swap -------------------
-    // every target keeps its rows, so each commits as a Survivor rewrite
-    writeManifest(fs, new Path(root + "_delete_manifest"), targets.map(_ + "\tS"))
-    onAfterManifest()
-    applyManifest(fs, root)
-    fs.delete(new Path(tmp), true)
-    fs.delete(new Path(root + "_delete_old"), true)
+    rewrite(spark, fs, root, "compact", targets) { scoped =>
+      scoped
+        .withColumn("__salt", saltFor(scoped, maxFilesPerPartition))
+        .repartition(col("series_id"), col("day"), col("__salt"))
+        .drop("__salt")
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.KvOps
-import graft.sources.KvStorage
+import graft.sources.{Commit, KvStorage}
 
 /** Durable KV stores (r12 verdict lead task): the reference persists all
   * three LWW stores — and through the json one the HyperCat catalogue —
@@ -144,22 +144,24 @@ class DurableKvSpec extends AnyFunSuite with SparkTestBase with TempDirs {
       flushEveryRows = 1)
     e.kvWrite("json", "r", "k", "v1")
     e.kvWrite("json", "r", "k", "v2")
-    val fs = new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def killedAt(step: String): Unit = {
+      Commit.onStep = s => if (s == step) throw new RuntimeException(s"kill@$s")
+      try intercept[RuntimeException](KvStorage.compact(spark, p))
+      finally Commit.onStep = _ => ()
+    }
 
-    // forward case: rewrite complete (_SUCCESS present), root renamed away
-    KvOps.lwwAll(KvStorage.read(spark, p))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(p + "_compacting")
-    fs.delete(new org.apache.hadoop.fs.Path(p), true)
+    // rollback case: the LWW fold staged, never committed — the log
+    // reads as it was
+    killedAt("staged")
+    assert(!new java.io.File(p + "_commit").exists())
+    assert(KvStorage.read(spark, p).count() === 2L) // rolled back
+    assert(KvStorage.exists(spark, p))
+
+    // forward case: the fold committed, then the first file moved in
+    // beside the old log — the next read completes it
+    killedAt("added")
     assert(KvStorage.read(spark, p).count() === 1L) // rolled forward
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(p + "_compacting")))
-
-    // rollback case: root parked, rewrite incomplete (no _SUCCESS)
-    fs.rename(new org.apache.hadoop.fs.Path(p),
-      new org.apache.hadoop.fs.Path(p + "_old"))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(p + "_compacting"))
-    assert(KvStorage.read(spark, p).count() === 1L) // rolled back
+    assert(!new java.io.File(p + "_commit").exists())
     assert(KvStorage.exists(spark, p))
   }
 

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 import graft.operators.TimeRange
-import graft.sources.{KvStorage, LocalWrite, TsStorage}
+import graft.sources.{Commit, KvStorage, LocalWrite, TsStorage}
 
 /** The S1 write path: an engine flush lands as one flush run with no
   * Spark job, reads see root ∪ runs, and a bounded fold moves the runs
@@ -149,8 +149,8 @@ class FlushRunSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     // the 64th run reaches the bound: this flush folds
     e.post(s"/ts/z/at/$day0", """{"value": 99}""")
     assert(runFiles(root).isEmpty && hasPartitions(root))
-    assert(!new java.io.File(root + "_fold_manifest").exists())
-    assert(!new java.io.File(root + "_fold_tmp").exists())
+    assert(!new java.io.File(root + "_commit").exists())
+    assert(!new java.io.File(root + "_stage").exists())
     assert(paths.map(e.get(_)) === before)
     assert(before.head === """{"length": 63}""")
     assert(e.get("/ts/z/length") === """{"length": 1}""")
@@ -194,23 +194,24 @@ class FlushRunSpec extends AnyFunSuite with SparkTestBase with TempDirs {
   }
 
   test("a crash at each fold step recovers every row exactly once, reader or writer") {
-    val steps = Seq("staged", "manifest", "moved", "applied")
+    val steps = Seq("staged", "committed", "added", "applied")
     for (step <- steps; reader <- Seq(true, false)) {
       val root = freshDir()
       batches(6).foreach(TsStorage.append(_, root))
       val expected = ids(root)
       assert(expected === (1L to 12L))
-      TsStorage.onFoldStep = s => if (s == step) throw new RuntimeException(s"kill@$s")
+      Commit.onStep = s => if (s == step) throw new RuntimeException(s"kill@$s")
       try {
         val e = intercept[RuntimeException](TsStorage.compact(spark, root))
         assert(e.getMessage === s"kill@$step")
-      } finally TsStorage.onFoldStep = _ => ()
+      } finally Commit.onStep = _ => ()
       val what = s"$step/${if (reader) "reader" else "writer"}"
-      if (step == "moved")
-        assert(new java.io.File(root + "_fold_manifest").exists() && hasPartitions(root), what)
+      if (step == "added")
+        assert(new java.io.File(root + "_commit").exists() && hasPartitions(root), what)
       if (reader) assert(ids(root) === expected, what)
       else {
-        TsStorage.recover(spark, root)
+        // a writer's entry: a compact whose bound nothing exceeds
+        TsStorage.compact(spark, root, maxFilesPerPartition = Int.MaxValue)
         assert(ids(root) === expected, what)
       }
       // a committed fold is complete after recovery; an uncommitted one
@@ -218,7 +219,7 @@ class FlushRunSpec extends AnyFunSuite with SparkTestBase with TempDirs {
       if (step != "staged") assert(runFiles(root).isEmpty, what)
       TsStorage.compact(spark, root)
       assert(ids(root) === expected, what)
-      assert(runFiles(root).isEmpty && !new java.io.File(root + "_fold_tmp").exists(), what)
+      assert(runFiles(root).isEmpty && !new java.io.File(root + "_stage").exists(), what)
     }
   }
 

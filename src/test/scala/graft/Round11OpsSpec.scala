@@ -106,31 +106,27 @@ class Round11OpsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("incremental compact killed at the per-partition swap completes on recovery") {
-    import graft.sources.TsStorage
+    import graft.sources.{Commit, TsStorage}
     val path = s"$tmpRoot/crash"
     overBound(path)
     val want = view(path)
-    // kill AFTER the manifest commit, BEFORE any partition swaps
+    // kill AFTER the manifest commit, BEFORE any file moves
     val boom = new RuntimeException("kill: post-commit")
-    val thrown = intercept[RuntimeException] {
-      TsStorage.compact(spark, path, maxFilesPerPartition = 1,
-        onAfterManifest = () => throw boom)
-    }
+    Commit.onStep = s => if (s == "committed") throw boom
+    val thrown = try intercept[RuntimeException] {
+      TsStorage.compact(spark, path, maxFilesPerPartition = 1)
+    } finally Commit.onStep = _ => ()
     assert(thrown eq boom)
-    assert(new java.io.File(path + "_delete_manifest").exists())
-    // a READER heals only non-destructively; its view is still correct
-    // (live dirs intact)
-    assert(view(path) === want)
+    assert(new java.io.File(path + "_commit").exists())
     assert(parquetFiles(s"$path$betaDay1") === 2)
-    // the next WRITER entry completes the swap in full
-    TsStorage.recover(spark, path)
-    assert(!new java.io.File(path + "_delete_manifest").exists())
-    assert(parquetFiles(s"$path$betaDay1") === 1)
+    // the next entry point, a reader included, completes the commit in
+    // full, and its view is unchanged
     assert(view(path) === want)
-    // a fresh compact has nothing left to rewrite and GCs the siblings
+    assert(!new java.io.File(path + "_commit").exists())
+    assert(parquetFiles(s"$path$betaDay1") === 1)
+    // a fresh compact has nothing left to rewrite and clears the stage
     TsStorage.compact(spark, path, maxFilesPerPartition = 1)
-    assert(!new java.io.File(path + "_delete_tmp").exists())
-    assert(!new java.io.File(path + "_delete_old").exists())
+    assert(!new java.io.File(path + "_stage").exists())
     assert(view(path) === want)
   }
 
@@ -318,18 +314,18 @@ class Round11OpsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("incremental compact killed before its commit rolls back cleanly") {
-    import graft.sources.TsStorage
+    import graft.sources.{Commit, TsStorage}
     val path = s"$tmpRoot/crashpre"
     overBound(path)
     val want = view(path)
     val pre = files(path)
-    intercept[RuntimeException] {
-      TsStorage.compact(spark, path, maxFilesPerPartition = 1,
-        onBeforeSwap = () => throw new RuntimeException("kill: pre-commit"))
-    }
+    Commit.onStep = s => if (s == "staged") throw new RuntimeException("kill: pre-commit")
+    try intercept[RuntimeException] {
+      TsStorage.compact(spark, path, maxFilesPerPartition = 1)
+    } finally Commit.onStep = _ => ()
     // no manifest committed: the table bytes are untouched, the view
     // unchanged, and the next compact completes from scratch
-    assert(!new java.io.File(path + "_delete_manifest").exists())
+    assert(!new java.io.File(path + "_commit").exists())
     assert(files(path).filterNot(_._1.endsWith("_SUCCESS")) ===
       pre.filterNot(_._1.endsWith("_SUCCESS")))
     TsStorage.compact(spark, path, maxFilesPerPartition = 1)
@@ -338,11 +334,15 @@ class Round11OpsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ts_compact_incremental's compact rewrites at least one partition at sf0.001") {
-    // the gate's storage steps with a hook on the compact's swap, which
-    // a compact reaches only when some partition is over its bound
+    // the gate's storage steps, counting commits: the rewrite delete
+    // commits once, and the compact commits only when some partition is
+    // over its bound
     val d = "/root/testdata/sf0.001"
-    var rewrote = false
-    val dir = SparkEntry.compactIncremental(spark, d, onBeforeSwap = () => rewrote = true)
+    var commits = 0
+    graft.sources.Commit.onStep = s => if (s == "committed") commits += 1
+    val dir = try SparkEntry.compactIncremental(spark, d)
+      finally graft.sources.Commit.onStep = _ => ()
+    val rewrote = commits == 2
     assert(rewrote, "the gate's compact had no partition over its bound")
     for {
       sd <- new java.io.File(dir).listFiles if sd.getName.startsWith("series_id=")

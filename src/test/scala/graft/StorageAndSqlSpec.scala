@@ -5,11 +5,11 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.TsModel
-import graft.sources.TsStorage
+import graft.sources.{Commit, TsStorage}
 
 class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
 
-  // wiped per run: a table's sibling dirs (`_runs`, `_delete_tmp`, ...)
+  // wiped per run: a table's sibling dirs (`_runs`, `_stage`, ...)
   // outlive the per-test delete of its root
   private lazy val tmpRoot = {
     val p = new java.io.File("target/tmp-storage")
@@ -114,13 +114,12 @@ class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
     TsStorage.write(ts, path)
     val before = TsStorage.read(spark, path)
       .collect().map(_.toString).sorted
-    // kill the job after phase 1 (survivors fully written to the temp
-    // sibling) but before any partition dir is swapped
-    val boom = intercept[RuntimeException] {
+    // kill the call once the survivors are staged, before its commit
+    Commit.onStep = s => if (s == "staged") throw new RuntimeException("injected crash")
+    val boom = try intercept[RuntimeException] {
       TsStorage.delete(spark, path, Seq("error"),
-        graft.operators.TimeRange(1704844800000L, 1705276800000L), None,
-        onBeforeSwap = () => throw new RuntimeException("injected crash"))
-    }
+        graft.operators.TimeRange(1704844800000L, 1705276800000L), None)
+    } finally Commit.onStep = _ => ()
     assert(boom.getMessage === "injected crash")
     val after = TsStorage.read(spark, path).collect().map(_.toString).sorted
     assert(after.sameElements(before), "table changed across a pre-swap crash")
@@ -129,244 +128,6 @@ class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
       graft.operators.TimeRange(1704844800000L, 1705276800000L), None)
     assert(TsStorage.read(spark, path).filter(col("series_id") === "error" &&
       col("t") >= 1704844800000L && col("t") <= 1705276800000L).count() === 0)
-  }
-
-  test("delete killed mid-swap with the rewrite parked: READ rolls the partition forward") {
-    import org.apache.spark.sql.functions._
-    val ts = TsModel.ts(spark, "/root/testdata/sf0.001")
-    val path = s"$tmpRoot/ts_delete_midswap"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-    TsStorage.write(ts, path)
-    // materialize the pre-delete content locally: the lazy frame would
-    // re-list files the swap below moves out from under it
-    case class R(sid: String, t: Long)
-    val beforeRows = TsStorage.read(spark, path).select("series_id", "t")
-      .collect().map(r => R(r.getString(0), r.getLong(1)))
-    val total = beforeRows.length.toLong
-    def dayOf(t: Long): String = java.time.Instant.ofEpochMilli(t)
-      .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-    // mid-day bounds: the two boundary (series, day) partitions keep
-    // survivors, so the tmp sibling holds rewritten twins to roll forward
-    val from = 1704888000000L; val to = 1705233600000L
-    val matched = beforeRows.filter(r => r.sid == "error" && r.t >= from && r.t <= to)
-      .map(_.t).toSet
-    // phase 1 completes (survivor rewrite fully in the tmp sibling), job
-    // dies before any swap
-    intercept[RuntimeException] {
-      TsStorage.delete(spark, path, Seq("error"),
-        graft.operators.TimeRange(from, to), None,
-        onBeforeSwap = () => throw new RuntimeException("injected crash"))
-    }
-    // now simulate the kill one rename later: one affected partition parked
-    // in the trash, its rewritten twin still in the tmp sibling
-    val sid = new java.io.File(s"${path}_delete_tmp").listFiles()
-      .filter(_.getName.startsWith("series_id=")).head
-    val day = sid.listFiles().filter(_.getName.startsWith("day=")).head
-    val trash = new java.io.File(s"${path}_delete_old/${sid.getName}")
-    trash.mkdirs()
-    assert(new java.io.File(s"$path/${sid.getName}/${day.getName}")
-      .renameTo(new java.io.File(trash, day.getName)))
-    // a plain READ heals: the twin (post-delete state) is renamed in — the
-    // partition's doomed rows are gone, its survivors all present
-    val dayStr = day.getName.stripPrefix("day=")
-    val doomedInDay = beforeRows
-      .count(r => r.sid == "error" && dayOf(r.t) == dayStr && matched(r.t))
-    assert(doomedInDay > 0, "picked a partition the delete never touched")
-    val healed = TsStorage.read(spark, path).select("series_id", "t")
-      .collect().map(r => R(r.getString(0), r.getLong(1)))
-    assert(healed.length.toLong === total - doomedInDay)
-    assert(healed.filter(r => r.sid == "error" && dayOf(r.t) == dayStr)
-      .forall(r => !matched(r.t)))
-    // retrying the delete completes the remaining partitions and GCs the
-    // siblings (idempotent: the healed partition's matched rows stay gone)
-    TsStorage.delete(spark, path, Seq("error"),
-      graft.operators.TimeRange(from, to), None)
-    assert(!new java.io.File(s"${path}_delete_tmp").exists())
-    assert(!new java.io.File(s"${path}_delete_old").exists())
-    val after = TsStorage.read(spark, path)
-    assert(after.filter(col("series_id") === "error" &&
-      col("t") >= from && col("t") <= to).count() === 0)
-    assert(after.count() === total -
-      beforeRows.count(r => r.sid == "error" && matched(r.t)))
-  }
-
-  test("delete killed AT the manifest commit: reads see the intact pre-delete table, the next WRITER applies the whole call") {
-    import org.apache.spark.sql.functions.col
-    val ts = TsModel.ts(spark, "/root/testdata/sf0.001")
-    val path = s"$tmpRoot/ts_delete_manifest"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-    TsStorage.write(ts, path)
-    case class R(sid: String, t: Long)
-    val beforeRows = TsStorage.read(spark, path).select("series_id", "t")
-      .collect().map(r => R(r.getString(0), r.getLong(1)))
-    val total = beforeRows.length.toLong
-    // mid-day bounds again: both survivor and emptied partitions exist, so
-    // the writer's completion must both roll twins in AND remove unparked
-    // emptied dirs
-    val from = 1704888000000L; val to = 1705233600000L
-    val matched = beforeRows.filter(r => r.sid == "error" && r.t >= from && r.t <= to)
-      .map(_.t).toSet
-    val expect = total - beforeRows.count(r => r.sid == "error" && matched(r.t))
-    // kill at the commit point: manifest written, ZERO partitions swapped
-    intercept[RuntimeException] {
-      TsStorage.delete(spark, path, Seq("error"),
-        graft.operators.TimeRange(from, to), None,
-        onAfterManifest = () => throw new RuntimeException("injected crash"))
-    }
-    assert(new java.io.File(s"${path}_delete_manifest").exists())
-    // reader mode is NON-destructive: nothing is missing yet, so reads see
-    // the intact PRE-delete table ("none of it") and leave the manifest
-    // for the single writer — a reader must never park live dirs
-    assert(TsStorage.read(spark, path).count() === total)
-    assert(new java.io.File(s"${path}_delete_manifest").exists())
-    // the next WRITER entry completes the ENTIRE committed call
-    TsStorage.recover(spark, path)
-    assert(!new java.io.File(s"${path}_delete_manifest").exists())
-    val after = TsStorage.read(spark, path)
-    assert(after.count() === expect)
-    assert(after.filter(col("series_id") === "error" &&
-      col("t") >= from && col("t") <= to).count() === 0)
-    // the next delete GCs the leftovers and the table stays settled
-    TsStorage.delete(spark, path, Seq("no-such-series"),
-      graft.operators.Since(Long.MaxValue), None)
-    assert(!new java.io.File(s"${path}_delete_tmp").exists())
-    assert(!new java.io.File(s"${path}_delete_old").exists())
-    assert(TsStorage.read(spark, path).count() === expect)
-  }
-
-  test("delete killed mid-manifest-swap: reads heal the gap; the writer completes the rest") {
-    import org.apache.spark.sql.functions.col
-    val ts = TsModel.ts(spark, "/root/testdata/sf0.001")
-    val path = s"$tmpRoot/ts_delete_manifest_mid"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-    TsStorage.write(ts, path)
-    case class R(sid: String, t: Long)
-    val beforeRows = TsStorage.read(spark, path).select("series_id", "t")
-      .collect().map(r => R(r.getString(0), r.getLong(1)))
-    val total = beforeRows.length.toLong
-    def dayOf(t: Long): String = java.time.Instant.ofEpochMilli(t)
-      .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-    val from = 1704888000000L; val to = 1705233600000L
-    val matched = beforeRows.filter(r => r.sid == "error" && r.t >= from && r.t <= to)
-      .map(_.t).toSet
-    val expect = total - beforeRows.count(r => r.sid == "error" && matched(r.t))
-    intercept[RuntimeException] {
-      TsStorage.delete(spark, path, Seq("error"),
-        graft.operators.TimeRange(from, to), None,
-        onAfterManifest = () => throw new RuntimeException("injected crash"))
-    }
-    // hand-advance the swap one step: one survivor partition parked (the
-    // state after its first rename) — the guard the all-unswapped test
-    // cannot reach
-    val sid = new java.io.File(s"${path}_delete_tmp").listFiles()
-      .filter(_.getName.startsWith("series_id=")).head
-    val day = sid.listFiles().filter(_.getName.startsWith("day=")).head
-    val trash = new java.io.File(s"${path}_delete_old/${sid.getName}")
-    trash.mkdirs()
-    assert(new java.io.File(s"$path/${sid.getName}/${day.getName}")
-      .renameTo(new java.io.File(trash, day.getName)))
-    // a plain read heals the GAP from the twin (that partition shows its
-    // post-delete rewrite; unswapped partitions still show pre-delete)
-    val dayStr = day.getName.stripPrefix("day=")
-    val doomedInDay = beforeRows
-      .count(r => r.sid == "error" && dayOf(r.t) == dayStr && matched(r.t))
-    assert(doomedInDay > 0)
-    assert(TsStorage.read(spark, path).count() === total - doomedInDay)
-    assert(new java.io.File(s"${path}_delete_manifest").exists())
-    // the writer completes the remaining partitions from the manifest —
-    // including re-using the already-healed one without re-parking it
-    TsStorage.recover(spark, path)
-    val after = TsStorage.read(spark, path)
-    assert(after.count() === expect)
-    assert(after.filter(col("series_id") === "error" &&
-      col("t") >= from && col("t") <= to).count() === 0)
-    assert(!new java.io.File(s"${path}_delete_manifest").exists())
-  }
-
-  test("writer park vs reader heal race: survivors never nest into the trash") {
-    import org.apache.spark.sql.functions.col
-    val ts = TsModel.ts(spark, "/root/testdata/sf0.001")
-    val path = s"$tmpRoot/ts_delete_race"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-    TsStorage.write(ts, path)
-    val before = TsStorage.read(spark, path).select("series_id", "t")
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val from = 1704888000000L; val to = 1705233600000L
-    val matched = before.filter(r => r._1 == "error" && r._2 >= from && r._2 <= to)
-      .map(_._2).toSet
-    val expect = before.length - before.count(r => r._1 == "error" && matched(r._2))
-    intercept[RuntimeException] {
-      TsStorage.delete(spark, path, Seq("error"),
-        graft.operators.TimeRange(from, to), None,
-        onAfterManifest = () => throw new RuntimeException("injected crash"))
-    }
-    // hand-advance one survivor partition to the crashed-mid-swap state the
-    // advisory names: original parked in the trash, twin present, live
-    // missing — the writer's next pass must finish the roll-in
-    val sid = new java.io.File(s"${path}_delete_tmp").listFiles()
-      .filter(_.getName.startsWith("series_id=")).head
-    val day = sid.listFiles().filter(_.getName.startsWith("day=")).head
-    val rel = s"${sid.getName}/${day.getName}"
-    val trash = new java.io.File(s"${path}_delete_old/${sid.getName}")
-    trash.mkdirs()
-    assert(new java.io.File(s"$path/$rel").renameTo(new java.io.File(trash, day.getName)))
-    // inject a concurrent reader at the worst instant: AFTER the writer has
-    // seen the twin, the reader's non-destructive repair rolls the twin
-    // into the missing live dir. The unguarded writer then re-parked the
-    // healed dir into the OCCUPIED trash slot and lost the survivors.
-    var fired = 0
-    TsStorage.onSurvivorTwinChecked = { r =>
-      if (r == rel && fired == 0) {
-        fired += 1
-        val live = new java.io.File(s"$path/$r")
-        val twin = new java.io.File(s"${path}_delete_tmp/$r")
-        if (!live.exists() && twin.exists()) {
-          live.getParentFile.mkdirs()
-          assert(twin.renameTo(live))
-        }
-      }
-    }
-    try TsStorage.recover(spark, path)
-    finally TsStorage.onSurvivorTwinChecked = _ => ()
-    assert(fired === 1)
-    // the whole delete completed: manifest consumed, survivors present,
-    // nothing nested inside the occupied trash entry
-    assert(!new java.io.File(s"${path}_delete_manifest").exists())
-    assert(!new java.io.File(s"${path}_delete_old/$rel/${day.getName}").exists())
-    val after = TsStorage.read(spark, path)
-    assert(after.count() === expect)
-    assert(after.filter(col("series_id") === "error" &&
-      col("t") >= from && col("t") <= to).count() === 0)
-  }
-
-  test("parked partition with NO twin is a committed delete — never resurrected") {
-    import org.apache.spark.sql.functions._
-    val ts = TsModel.ts(spark, "/root/testdata/sf0.001")
-    val path = s"$tmpRoot/ts_delete_emptied"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-    TsStorage.write(ts, path)
-    val before = TsStorage.read(spark, path)
-    val total = before.count()
-    // the advisory's window: a whole-partition (emptied) delete crashed
-    // AFTER its swap — partition parked in the trash, no tmp twin, trash
-    // cleanup never ran. The parked bytes are the DELETED rows.
-    val sid = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("series_id=")).head
-    val day = sid.listFiles().filter(_.getName.startsWith("day=")).head
-    val dayStr = day.getName.stripPrefix("day=")
-    val rowsInDay = before
-      .withColumn("day", date_format(timestamp_millis(col("t")), "yyyy-MM-dd"))
-      .filter(col("series_id") === sid.getName.stripPrefix("series_id=") &&
-        col("day") === dayStr).count()
-    val trash = new java.io.File(s"${path}_delete_old/${sid.getName}")
-    trash.mkdirs()
-    assert(day.renameTo(new java.io.File(trash, day.getName)))
-    // neither reads nor the next delete may restore it
-    assert(TsStorage.read(spark, path).count() === total - rowsInDay)
-    TsStorage.delete(spark, path, Seq("no-such-series"),
-      graft.operators.Since(Long.MaxValue), None)
-    assert(!new java.io.File(s"${path}_delete_old").exists())
-    assert(TsStorage.read(spark, path).count() === total - rowsInDay)
   }
 
   test("facade backed by TsStorage: post/read/delete against parquet, no membuf") {
@@ -426,28 +187,28 @@ class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
     TsStorage.compact(spark, path, maxFilesPerPartition = Int.MaxValue)
     val extraDf = local(newest.withColumn("t", col("t") + 999999999L)
       .withColumn("event_id", col("event_id") + 2))
-    // crash state: the compact committed its manifest and parked the
-    // target, whose rewrite still sits in the tmp sibling. An append that
-    // did NOT heal first would leave the swap to a later writer.
-    intercept[RuntimeException] {
-      TsStorage.compact(spark, path, maxFilesPerPartition = 1,
-        onAfterManifest = () => throw new RuntimeException("injected crash"))
+    // crash state: the compact committed its manifest and moved its
+    // rewrite in, but never retired the target's old files — a table
+    // that shows the target's rows twice until the commit is applied
+    Commit.onStep = s => if (s == "added") throw new RuntimeException("injected crash")
+    try intercept[RuntimeException] {
+      TsStorage.compact(spark, path, maxFilesPerPartition = 1)
+    } finally Commit.onStep = _ => ()
+    val manifest = new java.io.File(s"${path}_commit")
+    val dirs = new String(Files.readAllBytes(manifest.toPath), "UTF-8").split("\n").toSeq
+      .map(line => new java.io.File(path).getParentFile.toPath.resolve(line.drop(2)).getParent)
+      .distinct
+    val rel = dirs match {
+      case Seq(dir) => dir
+      case _ => fail(s"expected one target, got $dirs")
     }
-    val manifest = new java.io.File(s"${path}_delete_manifest")
-    val rel = new String(Files.readAllBytes(manifest.toPath), "UTF-8").split("\n") match {
-      case Array(line) => line.split("\t").head
-      case lines => fail(s"expected one target, got ${lines.toSeq}")
-    }
-    val parked = new java.io.File(s"${path}_delete_old/$rel")
-    parked.getParentFile.mkdirs()
-    assert(new java.io.File(s"$path/$rel").renameTo(parked))
+    assert(rel.toFile.listFiles.count(_.getName.endsWith(".parquet")) === 3)
     TsStorage.append(extraDf, path)
-    assert(!manifest.exists() && new java.io.File(s"$path/$rel").exists())
+    assert(!manifest.exists() && rel.toFile.listFiles.count(_.getName.endsWith(".parquet")) === 1)
     assert(TsStorage.read(spark, path).count() === total + 2)
     TsStorage.compact(spark, path)
     assert(TsStorage.read(spark, path).count() === total + 2)
-    assert(!new java.io.File(s"${path}_delete_tmp").exists())
-    assert(!new java.io.File(s"${path}_delete_old").exists())
+    assert(!new java.io.File(s"${path}_stage").exists())
   }
 
   test("blob-table compact killed between its two renames: facade heals, blobs intact") {
@@ -463,20 +224,19 @@ class StorageAndSqlSpec extends AnyFunSuite with SparkTestBase {
     e.compact(maxFilesPerPartition = Int.MaxValue)
     val want = e.get("/ts/blob/cam/last/2")
     // crash state on the BLOB sibling: the compact committed its manifest
-    // and parked cam's partition, whose rewrite was never renamed in; the
-    // numeric table is untouched
-    intercept[RuntimeException] {
-      TsStorage.compact(spark, blob, maxFilesPerPartition = 1,
-        onAfterManifest = () => throw new RuntimeException("injected crash"))
-    }
+    // and moved cam's rewrite in, but its old files were never retired;
+    // the numeric table is untouched
+    Commit.onStep = s => if (s == "added") throw new RuntimeException("injected crash")
+    try intercept[RuntimeException] {
+      TsStorage.compact(spark, blob, maxFilesPerPartition = 1)
+    } finally Commit.onStep = _ => ()
     val cam = new java.io.File(blob, "series_id=cam").listFiles.head
-    val parked = new java.io.File(s"${blob}_delete_old/series_id=cam/${cam.getName}")
-    parked.getParentFile.mkdirs()
-    assert(cam.renameTo(parked))
-    // a FRESH engine over the same path must complete the swap at
-    // construction and serve every blob
+    assert(cam.listFiles.count(_.getName.endsWith(".parquet")) === 3)
+    // a FRESH engine over the same path must complete the commit at
+    // construction and serve every blob once
     val e2 = new GraftEngine(spark, () => 1700000000000L, tsStoragePath = Some(path))
-    assert(!new java.io.File(s"${blob}_delete_manifest").exists())
+    assert(!new java.io.File(s"${blob}_commit").exists())
+    assert(cam.listFiles.count(_.getName.endsWith(".parquet")) === 1)
     assert(e2.get("/ts/blob/cam/last/2") === want)
     assert(e2.get("/ts/blob/mic/length") === """{"length": 1}""")
   }
